@@ -5,10 +5,14 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
-import graft.operators.{MergeIgnore, MergeUpsert}
+import graft.operators.MergeUpsert
 
 /** Parquet-backed warehouse catalog with MANIFEST-POINTER commits.
   *
@@ -52,19 +56,30 @@ import graft.operators.{MergeIgnore, MergeUpsert}
   * Every table is also registered as a temp view so the full
   * `spark.sql` surface works over the warehouse (SURVEY §3.3).
   *
+  * '''One reader, one footer walker, one write tail''': every DataFrame
+  * over commit dirs comes from [[read]], under the schema [[schemaAt]]
+  * resolves (evolved record, else declared, else the first commit's),
+  * so reads, rewrites ([[compact]], [[compactSmall]], [[deleteWhere]])
+  * and pruned reads ([[tableWhere]]) agree on columns and initial
+  * defaults. Every metadata answer (row counts, id resume offsets,
+  * commit pruning, [[stats]], commit sizes) comes from [[footers]] /
+  * [[dataFiles]], which fail loudly on a missing live commit dir.
+  * Every write lands through [[writeCommit]].
+  *
   * Scale: dims stay tiny so their merge anti-joins broadcast; the fact
   * merge anti-joins on `id_hash` and its commits are partitioned by
   * (ano, mes), so month-sliced reads prune whole directories. Many
   * small commits accumulate scan overhead — [[compact]] folds a table
   * back to one commit (same manifest flip, fully atomic).
+  *
+  * @param compactEvery when > 0, [[appendDelta]] auto-folds a table back
+  *                     to one commit whenever its live commit count
+  *                     reaches the threshold — at month-upload cadence,
+  *                     merge commits otherwise accumulate scan overhead
+  *                     (one parquet listing + footer read per commit
+  *                     per query) without bound. 0 = manual [[compact]]
+  *                     only.
   */
-/** @param compactEvery when > 0, [[appendDelta]] auto-folds a table back
-  *                      to one commit whenever its live commit count
-  *                      reaches the threshold — at month-upload cadence,
-  *                      merge commits otherwise accumulate scan overhead
-  *                      (one parquet listing + footer read per commit
-  *                      per query) without bound. 0 = manual [[compact]]
-  *                      only. */
 final class Catalog(val spark: SparkSession, val root: String,
                     val compactEvery: Int = 0) {
 
@@ -195,16 +210,24 @@ final class Catalog(val spark: SparkSession, val root: String,
       latestVersion(t).getOrElse(0)
     else snapshotVersions.getOrElse(t, 0)
 
-  /** Commit dirs (absolute paths) recorded in manifest version `v`. */
+  /** Commit dirs (absolute paths) recorded in manifest version `v`;
+    * version 0 (no table yet) has none. */
   private def commitsAt(t: String, v: Int): Seq[String] =
-    Files.readAllLines(manifestDir(t).resolve(s"v$v"), StandardCharsets.UTF_8)
+    if (v == 0) Seq.empty
+    else Files.readAllLines(manifestDir(t).resolve(s"v$v"), StandardCharsets.UTF_8)
       .asScala.toSeq.filter(_.nonEmpty)
 
   /** Live commit dirs (absolute paths) at the read-resolved version. */
   private def liveCommits(t: String): Seq[String] =
-    readVersion(t) match {
-      case None => Seq.empty
-      case Some(v) => commitsAt(t, v)
+    commitsAt(t, readVersion(t).getOrElse(0))
+
+  /** Entries of a local dir (none when it does not exist); the listing
+    * stream is closed here, it holds a directory fd. */
+  private def children(dir: Path): Seq[Path] =
+    if (!Files.exists(dir)) Seq.empty
+    else {
+      val listing = Files.list(dir)
+      try listing.iterator().asScala.toSeq finally listing.close()
     }
 
   private def atomicWrite(dir: Path, name: String, body: String): Unit = {
@@ -501,12 +524,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     * [[recoverTransaction]] (rollback, not publish) owns. */
   def recover(): Int = {
     def clean(dir: Path, latest: Int, prefix: String): Int = {
-      if (!Files.exists(dir)) return 0
-      val listing = Files.list(dir)
-      val names =
-        try listing.iterator().asScala.map(_.getFileName.toString).toSeq
-        finally listing.close()
-      val orphans = names.filter { n =>
+      val orphans = children(dir).map(_.getFileName.toString).filter { n =>
         // toIntOption (the tags() rationale): an over-long digit run
         // from foreign interference must not brick recovery
         (n.startsWith(prefix) &&
@@ -520,20 +538,9 @@ final class Catalog(val spark: SparkSession, val root: String,
     // schema: registered snapshot-scope tables (exports) and undeclared
     // appendDelta tables crash like any other, and an orphan claim
     // above their LATEST blocks every future commit until cleared
-    val allTables: Seq[String] = {
-      val rootP = Paths.get(root)
-      if (!Files.exists(rootP)) Schemas.tableNames
-      else {
-        val listing = Files.list(rootP)
-        val found =
-          try listing.iterator().asScala
-            .filter(p => Files.isDirectory(p) &&
-              Files.exists(p.resolve("_manifests")))
-            .map(_.getFileName.toString).toSeq
-          finally listing.close()
-        (Schemas.tableNames ++ found).distinct
-      }
-    }
+    val allTables: Seq[String] = (Schemas.tableNames ++ children(Paths.get(root))
+      .filter(p => Files.isDirectory(p) && Files.exists(p.resolve("_manifests")))
+      .map(_.getFileName.toString)).distinct
     val tables = allTables.map(t =>
       clean(manifestDir(t), latestVersion(t).getOrElse(0), "v")).sum
     // rollbackScopedHeads drops tags atop the manifests it rewinds, but
@@ -568,6 +575,30 @@ final class Catalog(val spark: SparkSession, val root: String,
     s"${tableDir(t)}/c${v}_${java.util.UUID.randomUUID().toString.take(8)}"
   }
 
+  /** The shared write tail: `df` into a fresh commit dir of `t`,
+    * hive-partitioned on `partitionBy`, each task's rows sorted by
+    * `partitionBy ++ clusterBy` when `clusterBy` is set (the
+    * partitioned writer requires the partition columns to lead), with
+    * the applied-batch-id marker inside the dir when `batchId` is set.
+    * Returns the dir; nothing is visible until the caller's [[commit]]. */
+  private def writeCommit(t: String, df: DataFrame,
+                          partitionBy: Seq[String] = Seq.empty,
+                          clusterBy: Seq[String] = Seq.empty,
+                          batchId: Option[Long] = None): String = {
+    val dir = newCommitDir(t)
+    val sorted =
+      if (clusterBy.isEmpty) df
+      else df.sortWithinPartitions((partitionBy ++ clusterBy).map(col): _*)
+    val w = sorted.write.mode(SaveMode.Overwrite)
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir)
+    batchId.foreach { id =>
+      val marker = new HPath(dir, AppliedBatchIdMarker)
+      val out = marker.getFileSystem(spark.sessionState.newHadoopConf()).create(marker, true)
+      try out.write(id.toString.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    }
+    dir
+  }
+
   def exists(table: String): Boolean = latestVersion(table).isDefined
 
   // ---------------------------------------------------------------------
@@ -589,10 +620,7 @@ final class Catalog(val spark: SparkSession, val root: String,
                 default: Option[String] = None): Unit = {
     val base = writeBase(table)
     require(base >= 1, s"cannot evolve '$table': table does not exist")
-    val cur = evolvedSchemaAt(table, base) match {
-      case Some((s, _)) => s
-      case None => schemaForRead(table)
-    }
+    val (cur, priorDefaults) = schemaAt(table, base)
     require(!cur.fieldNames.map(_.toLowerCase).contains(column.toLowerCase),
       s"column '$column' already exists on '$table'")
     val md = manifestDir(table)
@@ -601,7 +629,6 @@ final class Catalog(val spark: SparkSession, val root: String,
       s"table $table version $next (add column $column)")
     // prior defaults carry forward; the record is self-contained so a
     // reader never has to walk older schema files
-    val priorDefaults = evolvedSchemaAt(table, base).map(_._2).getOrElse(Map.empty)
     val defaults = priorDefaults ++ default.map(column -> _)
     val body = ("ddl:" + cur.add(column, ddlType, nullable = true).toDDL) +:
       defaults.toSeq.sorted.map { case (c, d) => s"default:$c:$d" }
@@ -614,7 +641,7 @@ final class Catalog(val spark: SparkSession, val root: String,
   /** Newest schema record at-or-below `version`: (evolved schema,
     * per-column initial defaults). None = never evolved. */
   private def evolvedSchemaAt(t: String, version: Int):
-      Option[(org.apache.spark.sql.types.StructType, Map[String, String])] = {
+      Option[(StructType, Map[String, String])] = {
     val md = manifestDir(t)
     (version to 1 by -1).iterator
       .map(v => md.resolve(s"schema_v$v"))
@@ -628,39 +655,149 @@ final class Catalog(val spark: SparkSession, val root: String,
             val rest = l.drop(8); val i = rest.indexOf(':')
             rest.take(i) -> rest.drop(i + 1)
         }.toMap
-        (org.apache.spark.sql.types.StructType.fromDDL(ddl), defaults)
+        (StructType.fromDDL(ddl), defaults)
       }
   }
 
-  /** The schema a non-evolved read would use: declared, else inferred
-    * from the first live commit. */
-  private def schemaForRead(t: String): org.apache.spark.sql.types.StructType =
-    Schemas.schemaOfOpt(t).getOrElse {
-      val commits = liveCommits(t)
-      require(commits.nonEmpty, s"table '$t' has no schema and no data")
-      spark.read.option("basePath", commits.head).parquet(commits.head).schema
+  // ---------------------------------------------------------------------
+  // the commit reader: every DataFrame over commit dirs is built here
+
+  /** Scan one commit dir under `schema` (inferred from its footers when
+    * None). Partition columns (fact: ano/mes) come back through the
+    * per-commit basePath; pruning applies per scan. */
+  private def scan(dir: String, schema: Option[StructType] = None): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).option("basePath", dir).parquet(dir)
+
+  /** The schema a read of `t` at manifest `version` uses, with the
+    * initial defaults of columns [[addColumn]] added: the newest schema
+    * record at-or-below `version`, else the declared schema, else the
+    * schema of the version's first commit. Tables outside the star
+    * contract (rollups, exports) exist only once written, so a missing
+    * one is a loud error, never a guess at a schema this catalog never
+    * declared. */
+  private def schemaAt(t: String, version: Int): (StructType, Map[String, String]) =
+    evolvedSchemaAt(t, version).getOrElse {
+      val schema = Schemas.schemaOfOpt(t).getOrElse {
+        val commits = commitsAt(t, version)
+        require(commits.nonEmpty,
+          s"table '$t' has no declared schema and no committed data")
+        scan(commits.head).schema
+      }
+      (schema, Map.empty[String, String])
     }
 
-  /** Union `commits` under an evolved schema: each commit whose files
-    * pre-date a column gets that column's initial default (checked per
-    * commit via its parquet footer — a NULL written after the column
-    * existed is preserved). */
-  private def readEvolved(commits: Seq[String],
-                          schema: org.apache.spark.sql.types.StructType,
-                          defaults: Map[String, String]): DataFrame = {
+  /** Union of `commits` under [[schemaAt]]`(t, version)`, or an empty
+    * frame of that schema. A commit whose files pre-date an evolved
+    * column gets that column's initial default — checked per commit
+    * through its footers, so a NULL written after the evolution stays
+    * NULL. Only tables with defaults pay that footer read: a declared,
+    * never-evolved table opens no file here. */
+  private def read(t: String, version: Int, commits: Seq[String]): DataFrame = {
+    val (schema, defaults) = schemaAt(t, version)
     if (commits.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     commits.map { c =>
-      val present = spark.read.option("basePath", c).parquet(c)
-        .schema.fieldNames.map(_.toLowerCase).toSet
-      val base = spark.read.schema(schema).option("basePath", c).parquet(c)
-      schema.fieldNames.foldLeft(base) { (df, f) =>
-        if (!present.contains(f.toLowerCase) && defaults.contains(f))
+      val present =
+        if (defaults.isEmpty) Set.empty[String]
+        else scan(c).schema.fieldNames.map(_.toLowerCase).toSet
+      schema.fieldNames
+        .filter(f => defaults.contains(f) && !present(f.toLowerCase))
+        .foldLeft(scan(c, Some(schema))) { (df, f) =>
           df.withColumn(f, expr(defaults(f)).cast(schema(f).dataType))
-        else df
-      }.select(schema.fieldNames.map(col): _*)
+        }.select(schema.fieldNames.map(col): _*)
     }.reduce(_.unionAll(_))
+  }
+
+  /** [[read]] of manifest `version` that first checks its commit dirs
+    * survive: [[vacuum]] keeps only the LATEST version's (and tagged
+    * versions') files, and a missing dir should fail here naming the
+    * cause rather than as FileNotFound deep in the scan. */
+  private def readUnvacuumed(table: String, version: Int): DataFrame = {
+    val commits = commitsAt(table, version)
+    val gone = commits.filterNot(c => Files.exists(Paths.get(c)))
+    if (gone.nonEmpty)
+      throw new IllegalStateException(
+        s"$table version $version was vacuumed: missing commit dirs " +
+          gone.mkString(", "))
+    read(table, version, commits)
+  }
+
+  // ---------------------------------------------------------------------
+  // the footer walker: every metadata answer is read from footers here
+
+  /** Parquet data files under the commit `dirs` (a file-system
+    * listing, no Spark job). A dir that is MISSING is corruption — external deletion
+    * or a vacuum race — never an empty commit: fail loudly, because a
+    * silently skipped commit would under-count rows, lower an id offset
+    * (minting duplicate surrogate ids) or prune rows that exist. */
+  private def dataFiles(dirs: Seq[String],
+                        conf: Configuration = spark.sessionState.newHadoopConf()): Seq[FileStatus] =
+    dirs.flatMap { dir =>
+      val p = new HPath(dir)
+      val fs = p.getFileSystem(conf)
+      if (!fs.exists(p))
+        throw new IllegalStateException(
+          s"live commit dir is missing: $dir — the manifest references " +
+            "files that no longer exist (external deletion or vacuum race)")
+      val it = fs.listFiles(p, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .filter(_.getPath.getName.endsWith(".parquet")).toSeq
+    }
+
+  /** Footers of every data file under `dirs` — what a table format
+    * records at commit time. Opened in parallel (bounded by the common
+    * pool) because a partitioned append writes one file per directory
+    * (80 months = 80 footers) and the opens are independent reads; a
+    * serial loop would charge every append per-directory latency. */
+  private def footers(dirs: Seq[String]): Seq[ParquetMetadata] = {
+    import scala.collection.parallel.CollectionConverters._
+    val conf = spark.sessionState.newHadoopConf()
+    dataFiles(dirs, conf).par.map { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
+      try reader.getFooter finally reader.close()
+    }.seq
+  }
+
+  private def rows(fs: Seq[ParquetMetadata]): Long =
+    fs.iterator.flatMap(_.getBlocks.asScala).map(_.getRowCount).sum
+
+  private def rowCount(dir: String): Long = rows(footers(Seq(dir)))
+
+  /** [min, max] of an integral column over the populated row groups of
+    * `fs`; None when any of them lacks usable stats, which callers
+    * treat as "unknown" (keep the commit, scan instead). Only plain
+    * INT32/INT64 physical columns with a SIGNED int annotation or none
+    * qualify: a logical type over int storage (small decimal, date)
+    * would surface its RAW value as a plausible bound, and an unsigned
+    * int64 above Long.MaxValue a wrapped negative one. A column absent
+    * from a file (e.g. a partition column) is unusable too. All-null or
+    * row-less input yields the empty range (Long.MaxValue,
+    * Long.MinValue), which intersects nothing — correctly prunable for
+    * any value predicate. */
+  private def range(fs: Seq[ParquetMetadata], column: String): Option[(Long, Long)] = {
+    var mn = Long.MaxValue
+    var mx = Long.MinValue
+    for (f <- fs; b <- f.getBlocks.asScala; if b.getRowCount > 0) {
+      val cc = b.getColumns.asScala.find(_.getPath.toDotString == column)
+        .getOrElse(return None)
+      val integral = cc.getPrimitiveType.getLogicalTypeAnnotation match {
+        case null => true
+        case i: org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
+          i.isSigned
+        case _ => false
+      }
+      val st = cc.getStatistics
+      if (!integral || st == null || st.isEmpty) return None
+      if (st.hasNonNullValue) (st.genericGetMin, st.genericGetMax) match {
+        case (a: java.lang.Long, z: java.lang.Long) =>
+          mn = math.min(mn, a.longValue()); mx = math.max(mx, z.longValue())
+        case (a: java.lang.Integer, z: java.lang.Integer) =>
+          mn = math.min(mn, a.longValue()); mx = math.max(mx, z.longValue())
+        case _ => return None
+      }
+    }
+    Some((mn, mx))
   }
 
   /** Committed manifest versions, ascending (1 = first commit). Every
@@ -681,48 +818,7 @@ final class Catalog(val spark: SparkSession, val root: String,
   def tableAt(table: String, version: Int): DataFrame = {
     require(versions(table).contains(version),
       s"$table has no version $version (have: ${versions(table).mkString(",")})")
-    readPinned(table, version)
-  }
-
-  /** Read manifest `version` directly — the shared body of [[tableAt]]
-    * (which gates on read-scoped `versions()`) and [[tableAtTag]]
-    * (which trusts the tag's pin past that gate). */
-  private def readPinned(table: String, version: Int): DataFrame = {
-    // fail here, naming the cause, rather than FileNotFound deep in the
-    // scan: vacuum() keeps only the LATEST version's commit dirs
-    val gone = commitsAt(table, version).filterNot(c => Files.exists(Paths.get(c)))
-    if (gone.nonEmpty)
-      throw new IllegalStateException(
-        s"$table version $version was vacuumed: missing commit dirs " +
-          gone.mkString(", "))
-    // evolved tables read under the schema record as of THIS version —
-    // time travel to a pre-evolution version sees the old shape
-    evolvedSchemaAt(table, version) match {
-      case Some((schema, defaults)) =>
-        return readEvolved(commitsAt(table, version), schema, defaults)
-      case None => ()
-    }
-    Schemas.schemaOfOpt(table) match {
-      case Some(schema) =>
-        commitsAt(table, version).map { c =>
-          spark.read.schema(schema).option("basePath", c).parquet(c)
-            .select(schema.fieldNames.map(col): _*)
-        }.reduceOption(_.unionAll(_)).getOrElse(
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-      case None =>
-        // undeclared (rollup) tables: same inferred-schema read as
-        // [[table]]; a version with zero commits cannot exist for them
-        // (they are only ever created by a replace commit)
-        val commits = commitsAt(table, version)
-        require(commits.nonEmpty,
-          s"table '$table' version $version has no commits and no declared schema")
-        val first = spark.read.option("basePath", commits.head).parquet(commits.head)
-        commits.tail.map { c =>
-          spark.read.option("basePath", c).parquet(c)
-            .select(first.schema.fieldNames.map(col): _*)
-        }.foldLeft(first)(_.unionAll(_))
-    }
+    readUnvacuumed(table, version)
   }
 
   /** Named immutable refs (Iceberg-style tags): pin the table's state
@@ -750,54 +846,37 @@ final class Catalog(val spark: SparkSession, val root: String,
   }
 
   /** All tags on `table` (name → pinned manifest version). */
-  def tags(table: String): Map[String, Int] = {
-    val md = manifestDir(table)
-    if (!Files.exists(md)) return Map.empty
-    val listing = Files.list(md)
-    val names =
-      try listing.iterator().asScala.map(_.getFileName.toString).toSeq
-      finally listing.close()
+  def tags(table: String): Map[String, Int] =
     // skip-and-report unparseable tag files instead of throwing:
     // tags() feeds vacuum(), so one corrupt file (a pre-hard-link
     // crashed claim, or outside interference) must not brick vacuuming
     // and tag listing for the whole table
-    names.filter(_.startsWith("tag."))
-      .flatMap { f =>
-        val raw = new String(
-          Files.readAllBytes(md.resolve(f)), StandardCharsets.UTF_8).trim
-        // toIntOption, not isDigit+toInt: an all-digit value above
-        // Int.MaxValue would pass the digit guard and throw from toInt
-        raw.toIntOption match {
-          case Some(v) => Some(f.stripPrefix("tag.") -> v)
-          case None =>
-            dropUnparseable(md, f, raw)
-        }
-      }.toMap
-  }
+    tagFiles(table).flatMap {
+      case (f, Right(v)) => Some(f.stripPrefix("tag.") -> v)
+      case (f, Left(raw)) =>
+        System.err.println(s"[catalog] skipping unparseable tag file " +
+          s"${manifestDir(table).resolve(f)} (content '$raw') — a crashed or " +
+          "foreign write; delete it (or re-tag) to clear this warning")
+        None
+    }.toMap
 
   /** Tag files whose content does not parse as a version — crashed
     * claims or foreign writes. Listing ([[tags]]) skips them with a
     * warning; the destructive path ([[vacuum]]) must abort on them. */
-  private def unparseableTagFiles(table: String): Seq[String] = {
-    val md = manifestDir(table)
-    if (!Files.exists(md)) return Seq.empty
-    val listing = Files.list(md)
-    val names =
-      try listing.iterator().asScala.map(_.getFileName.toString).toSeq
-      finally listing.close()
-    names.filter(_.startsWith("tag."))
-      .filter { f =>
-        new String(Files.readAllBytes(md.resolve(f)), StandardCharsets.UTF_8)
-          .trim.toIntOption.isEmpty
-      }
-  }
+  private def unparseableTagFiles(table: String): Seq[String] =
+    tagFiles(table).collect { case (f, Left(_)) => f }
 
-  private def dropUnparseable(md: Path, f: String, raw: String): Option[(String, Int)] = {
-    System.err.println(s"[catalog] skipping unparseable tag file " +
-      s"${md.resolve(f)} (content '$raw') — a crashed or foreign " +
-      "write; delete it (or re-tag) to clear this warning")
-    None
-  }
+  /** Every `tag.*` file of `table` with its pinned version, or its raw
+    * content when that does not parse. toIntOption, not isDigit+toInt:
+    * an all-digit value above Int.MaxValue would pass the digit guard
+    * and throw from toInt. */
+  private def tagFiles(table: String): Seq[(String, Either[String, Int])] =
+    children(manifestDir(table)).map(_.getFileName.toString)
+      .filter(_.startsWith("tag.")).map { f =>
+        val raw = new String(Files.readAllBytes(manifestDir(table).resolve(f)),
+          StandardCharsets.UTF_8).trim
+        f -> raw.toIntOption.toRight(raw)
+      }
 
   /** The table exactly as pinned by `name` (see [[tag]]).
     *
@@ -820,7 +899,7 @@ final class Catalog(val spark: SparkSession, val root: String,
         s"tag '$name' on $table pins version $v but manifest v$v no " +
           "longer exists (rolled back by transaction recovery?) — the " +
           "tag is dangling; dropTag and re-tag a live version")
-    readPinned(table, v)
+    readUnvacuumed(table, v)
   }
 
   /** Remove a tag; its version's commit dirs become vacuum-eligible
@@ -830,42 +909,10 @@ final class Catalog(val spark: SparkSession, val root: String,
     Files.deleteIfExists(manifestDir(table).resolve(s"tag.$name"))
 
   /** Read a table (union of live commits), or an empty frame with the
-    * declared schema. Partition columns (fact: ano/mes) come back via
-    * per-commit basePath discovery; pruning applies per scan.
-    *
-    * Tables outside the star contract (e.g. [[maintainAgg]] rollups)
-    * read back with the schema of their own commits — they exist only
-    * once written, so a missing one is a loud error, never an empty
-    * guess at a schema this catalog never declared. */
-  def table(table: String): DataFrame = evolvedSchemaAt(
-      table, readVersion(table).getOrElse(0)) match {
-    case Some((schema, defaults)) =>
-      readEvolved(liveCommits(table), schema, defaults)
-    case None => tableUnevolved(table)
-  }
-
-  private def tableUnevolved(table: String): DataFrame = Schemas.schemaOfOpt(table) match {
-    case Some(schema) =>
-      val commits = liveCommits(table)
-      if (commits.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else
-        commits.map { c =>
-          spark.read.schema(schema).option("basePath", c).parquet(c)
-            .select(schema.fieldNames.map(col): _*)
-        }.reduce(_.unionAll(_))
-    case None =>
-      val commits = liveCommits(table)
-      require(commits.nonEmpty,
-        s"table '$table' has no declared schema and no committed data")
-      val first = spark.read.option("basePath", commits.head).parquet(commits.head)
-      // later commits align to the first's column order — appendDelta'd
-      // undeclared tables must not depend on commit-dir file listing order
-      commits.tail.map { c =>
-        spark.read.option("basePath", c).parquet(c)
-          .select(first.schema.fieldNames.map(col): _*)
-      }.foldLeft(first)(_.unionAll(_))
+    * declared schema — [[read]] at the read-resolved version. */
+  def table(table: String): DataFrame = {
+    val v = readVersion(table).getOrElse(0)
+    read(table, v, commitsAt(table, v))
   }
 
   def register(table: String): Unit =
@@ -877,103 +924,38 @@ final class Catalog(val spark: SparkSession, val root: String,
     * `partitionBy` lays the commit out hive-partitioned on those
     * columns (reads recover them via the per-commit basePath) — the
     * sharded-export layout, where a consumer fetches one shard
-    * directory without listing the rest. */
+    * directory without listing the rest. Returns the written row count
+    * from the commit's footers, like [[appendDelta]]. */
   def replace(table: String, df: DataFrame,
-              partitionBy: Seq[String] = Seq.empty): Unit = {
+              partitionBy: Seq[String] = Seq.empty): Long = {
     val base = writeBase(table)
-    val dir = newCommitDir(table)
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(dir)
+    val dir = writeCommit(table, df, partitionBy)
+    val n = rowCount(dir)
     commit(table, Seq(dir), base)
     register(table)
+    n
   }
 
   /** Current max of an integral column, or 0 on empty/missing table —
     * the surrogate-key offset (SERIAL resume semantics).
     *
     * Answered from the live commits' parquet FOOTER statistics
-    * (column-chunk max, driver-side metadata only — the same reads a
-    * table format serves from its manifest), not a data scan: the old
+    * ([[range]], metadata only, no Spark job — the same reads a table
+    * format serves from its manifest), not a data scan: the old
     * aggregate job re-scanned the whole id column on every load, which
     * at fact scale is a full-table pass just to resume numbering. Falls
     * back to the exact scan if any row group lacks usable stats (never
     * the case for the int/long ids this catalog writes, but correctness
-    * must not depend on a writer's statistics configuration). */
-  def maxId(table: String, idCol: String): Long = {
-    val commits = liveCommits(table)
-    if (commits.isEmpty) return 0L
-    footerMaxId(commits, idCol).getOrElse(
-      this.table(table).agg(coalesce(max(col(idCol).cast("long")), lit(0L)))
-        .head().getLong(0))
-  }
-
-  /** Max of `idCol` across all row groups of all parquet files under
-    * `dirs`, from footer statistics. None if any populated row group
-    * carries no usable stats for the column (triggers the scan
-    * fallback); all-null chunks are skipped (nulls can't be the max).
-    * No-value result floors at 0, matching the scan's coalesce.
-    *
-    * Only plain INT32/INT64 physical columns (optionally int-annotated)
-    * qualify: an INT64-BACKED logical type (small decimal, date) would
-    * surface its raw/unscaled max as a plausible Long — silently wrong,
-    * where the contract is "fall back to the exact scan". A manifest-
-    * listed dir that is MISSING is corruption (external deletion or a
-    * vacuum race), not a stats gap: fail loudly like [[tableAt]] does,
-    * never skip it — a silently lower offset would mint duplicate
-    * surrogate ids. */
-  private def footerMaxId(dirs: Seq[String], idCol: String): Option[Long] = {
-    val conf = spark.sessionState.newHadoopConf()
-    var mx = Long.MinValue
-    var seen = false
-    for (dir <- dirs) {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p))
-        throw new IllegalStateException(
-          s"live commit dir is missing: $dir — the manifest references " +
-            "files that no longer exist (external deletion or vacuum race)")
-      val files = fs.listFiles(p, true)
-      while (files.hasNext) {
-        val f = files.next()
-        if (f.getPath.getName.endsWith(".parquet")) {
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
-          try {
-            val blocks = reader.getFooter.getBlocks.asScala
-            for (b <- blocks; if b.getRowCount > 0) {
-              b.getColumns.asScala.find(_.getPath.toDotString == idCol) match {
-                case Some(cc) =>
-                  val ann = cc.getPrimitiveType.getLogicalTypeAnnotation
-                  // SIGNED int annotations only: an unsigned int64 max
-                  // above Long.MaxValue surfaces as a wrapped NEGATIVE
-                  // long — a silently-too-low offset minting duplicate
-                  // ids, exactly what this guard exists to prevent
-                  val integral = ann match {
-                    case null => true
-                    case i: org.apache.parquet.schema
-                      .LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
-                    case _ => false
-                  }
-                  if (!integral) return None // logical type over int storage
-                  val st = cc.getStatistics
-                  if (st == null || st.isEmpty) return None
-                  if (st.hasNonNullValue) st.genericGetMax match {
-                    case l: java.lang.Long =>
-                      mx = math.max(mx, l.longValue()); seen = true
-                    case i: java.lang.Integer =>
-                      mx = math.max(mx, i.longValue()); seen = true
-                    case _ => return None // non-integral physical type
-                  }
-                case None => return None // column absent from this file
-              }
-            }
-          } finally reader.close()
-        }
-      }
+    * must not depend on a writer's statistics configuration). A missing
+    * live commit dir fails loudly ([[dataFiles]]): a silently lower
+    * offset would mint duplicate surrogate ids. */
+  def maxId(table: String, idCol: String): Long =
+    range(footers(liveCommits(table)), idCol) match {
+      case Some((mn, mx)) => if (mn <= mx) mx else 0L
+      case None =>
+        this.table(table).agg(coalesce(max(col(idCol).cast("long")), lit(0L)))
+          .head().getLong(0)
     }
-    Some(if (seen) mx else 0L)
-  }
 
   /** Commit-pruned range read: rows of `table` with
     * `lo <= column <= hi`, planning ONLY the commits whose footer
@@ -988,34 +970,22 @@ final class Catalog(val spark: SparkSession, val root: String,
     * then applies the exact residual filter on what remains — pruning
     * is a planning optimization, never a semantics change. Commits
     * whose stats are unusable (missing column, non-integral type,
-    * stats disabled by the writer) are conservatively kept.
-    *
-    * Works for declared tables AND undeclared ones (exports, rollups):
-    * an undeclared table's schema comes from its first live commit,
-    * the [[table]] rule — it must have committed data (same loud
-    * requirement as [[table]]; evolution is a declared-table feature,
-    * so the derived schema is exact). */
+    * stats disabled by the writer) are conservatively kept. The kept
+    * commits go through [[read]], so columns and initial defaults are
+    * exactly [[table]]'s. */
   def tableWhere(table: String, column: String, lo: Long, hi: Long): DataFrame = {
-    val schema = Schemas.schemaOfOpt(table).getOrElse {
-      val commits = liveCommits(table)
-      require(commits.nonEmpty,
-        s"table '$table' has no declared schema and no committed data")
-      spark.read.option("basePath", commits.head).parquet(commits.head).schema
-    }
-    require(Seq(org.apache.spark.sql.types.IntegerType,
-      org.apache.spark.sql.types.LongType).contains(schema(column).dataType),
-      s"tableWhere prunes integral columns only; $table.$column is " +
-        schema(column).dataType.simpleString)
-    val kept = commitsInRange(table, column, lo, hi)
-    val base =
-      if (kept.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else kept.map { c =>
-        spark.read.schema(schema).option("basePath", c).parquet(c)
-          .select(schema.fieldNames.map(col): _*)
-      }.reduce(_.unionAll(_))
-    base.filter(col(column) >= lo && col(column) <= hi)
+    val v = readVersion(table).getOrElse(0)
+    requireIntegral(table, v, column, "tableWhere")
+    read(table, v, commitsInRange(table, column, lo, hi))
+      .filter(col(column) >= lo && col(column) <= hi)
+  }
+
+  /** `column` of `t` at `version` must be INT or BIGINT: footer-range
+    * pruning reads integral statistics only. */
+  private def requireIntegral(t: String, version: Int, column: String, op: String): Unit = {
+    val dt = schemaAt(t, version)._1(column).dataType
+    require(dt == IntegerType || dt == LongType,
+      s"$op prunes integral columns only; $t.$column is ${dt.simpleString}")
   }
 
   /** The live commits whose `column` footer range intersects [lo, hi]
@@ -1024,77 +994,13 @@ final class Catalog(val spark: SparkSession, val root: String,
     * absent). */
   private[graft] def commitsInRange(table: String, column: String,
                                     lo: Long, hi: Long): Seq[String] =
-    liveCommits(table).filter { c =>
-      commitRange(c, column) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-    }
+    liveCommits(table).filter(c => intersects(footers(Seq(c)), column, lo, hi))
 
-  /** [min, max] of an integral column across one commit's parquet
-    * footers; None when any populated row group lacks usable stats
-    * (same integral-physical-type rules as [[footerMaxId]] — a
-    * logical type over int storage would surface its RAW value as a
-    * plausible bound). An all-null or row-less commit yields the empty
-    * range (Long.MaxValue, Long.MinValue), which intersects nothing —
-    * correctly prunable for any value predicate. A manifest-listed dir
-    * that is missing is corruption, not a stats gap: fail loudly. */
-  private def commitRange(dir: String, column: String): Option[(Long, Long)] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p))
-      throw new IllegalStateException(
-        s"live commit dir is missing: $dir — the manifest references " +
-          "files that no longer exist (external deletion or vacuum race)")
-    var mn = Long.MaxValue
-    var mx = Long.MinValue
-    val files = fs.listFiles(p, true)
-    while (files.hasNext) {
-      val f = files.next()
-      if (f.getPath.getName.endsWith(".parquet")) {
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
-        try {
-          for (b <- reader.getFooter.getBlocks.asScala; if b.getRowCount > 0) {
-            b.getColumns.asScala.find(_.getPath.toDotString == column) match {
-              case Some(cc) =>
-                val ann = cc.getPrimitiveType.getLogicalTypeAnnotation
-                val integral = ann match {
-                  case null => true
-                  case i: org.apache.parquet.schema
-                    .LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
-                  case _ => false
-                }
-                if (!integral) return None
-                val st = cc.getStatistics
-                if (st == null || st.isEmpty) return None
-                if (st.hasNonNullValue) (st.genericGetMin, st.genericGetMax) match {
-                  case (a: java.lang.Long, b2: java.lang.Long) =>
-                    mn = math.min(mn, a.longValue()); mx = math.max(mx, b2.longValue())
-                  case (a: java.lang.Integer, b2: java.lang.Integer) =>
-                    mn = math.min(mn, a.longValue()); mx = math.max(mx, b2.longValue())
-                  case _ => return None
-                }
-              case None => return None // column absent (e.g. a partition column)
-            }
-          }
-        } finally reader.close()
-      }
-    }
-    Some((mn, mx))
-  }
+  private def intersects(fs: Seq[ParquetMetadata], column: String,
+                         lo: Long, hi: Long): Boolean =
+    range(fs, column).forall { case (mn, mx) => mx >= lo && mn <= hi }
 
-  /** K3: insert-if-absent. Appends `batch` rows whose `keys` are not
-    * already in `table`, deduped per key within the batch. Returns the
-    * number of rows appended. */
-  def mergeIgnore(table: String, batch: DataFrame, keys: Seq[String],
-                  partitionBy: Seq[String] = Seq.empty): Long = {
-    val existing = if (exists(table)) this.table(table) else null
-    appendDelta(table, MergeIgnore.newRows(batch, existing, keys), partitionBy)
-  }
-
-  /** K3's other half: upsert merge (`… ON CONFLICT DO UPDATE` /
+  /** K3 upsert merge (`… ON CONFLICT DO UPDATE` /
     * `MERGE WHEN MATCHED THEN UPDATE`). Matched rows are replaced by
     * the batch's latest version (per `orderBy` desc), new keys
     * inserted, the rest kept. Published as ONE replace commit — the
@@ -1141,15 +1047,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       if (!exists(table)) p
       else graft.operators.IncrementalAgg.merge(this.table(table), p, keys, aggs)
     val base = writeBase(table)
-    val dir = newCommitDir(table)
-    merged.write.mode(SaveMode.Overwrite).parquet(dir)
-    batchId.foreach { id =>
-      val marker = new org.apache.hadoop.fs.Path(dir, AppliedBatchIdMarker)
-      val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-      val out = fs.create(marker, true)
-      try out.write(id.toString.getBytes("UTF-8")) finally out.close()
-    }
-    commit(table, Seq(dir), base)
+    commit(table, Seq(writeCommit(table, merged, batchId = batchId)), base)
     register(table)
   }
 
@@ -1217,15 +1115,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       }
     val merged = merged0.withColumn("kmv_k", lit(k))
     val base = writeBase(table)
-    val dir = newCommitDir(table)
-    merged.write.mode(SaveMode.Overwrite).parquet(dir)
-    batchId.foreach { id =>
-      val marker = new org.apache.hadoop.fs.Path(dir, AppliedBatchIdMarker)
-      val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-      val out = fs.create(marker, true)
-      try out.write(id.toString.getBytes("UTF-8")) finally out.close()
-    }
-    commit(table, Seq(dir), base)
+    commit(table, Seq(writeCommit(table, merged, batchId = batchId)), base)
     register(table)
   }
 
@@ -1268,7 +1158,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     * read from the marker inside the live commit (metadata-only). */
   def appliedBatchId(table: String): Option[Long] =
     liveCommits(table).flatMap { dir =>
-      val marker = new org.apache.hadoop.fs.Path(dir, AppliedBatchIdMarker)
+      val marker = new HPath(dir, AppliedBatchIdMarker)
       val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
       if (!fs.exists(marker)) None
       else {
@@ -1307,15 +1197,13 @@ final class Catalog(val spark: SparkSession, val root: String,
     // same observation, so a concurrent commit makes us fail loudly
     // instead of silently dropping it from the list
     val base = writeBase(table)
-    val baseDirs = if (base == 0) Seq.empty else commitsAt(table, base)
-    val dir = newCommitDir(table)
-    val w = delta.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir)
+    val baseDirs = commitsAt(table, base)
+    val dir = writeCommit(table, delta, partitionBy)
     // exact appended count from the written files' parquet FOOTERS:
     // metadata-only, no second data scan and no extra Spark job (an
     // observed write metric can over-count under stage retries or
     // speculative execution; a read-back count re-scans the data)
-    val n = footerRowCount(dir)
+    val n = rowCount(dir)
     if (n > 0) commit(table, baseDirs :+ dir, base)
     else deleteRecursively(Paths.get(dir))
     register(table)
@@ -1344,35 +1232,6 @@ final class Catalog(val spark: SparkSession, val root: String,
           "empty2null(partition cols), destroying the requested clustering")
     }
 
-  /** Sum of row counts from the parquet footers under `dir` — what a
-    * table format records at commit time. Driver-side metadata reads
-    * only (one footer per data file), fanned across a parallel
-    * collection: a partitioned append writes one file per directory
-    * (80 months = 80 footers), and at ~15 ms per open a serial loop
-    * charges every append a directory-count tax (measured 1.5 s/commit
-    * on the warehouse e2e — the single biggest fixed cost of its fact
-    * append). Footer opens are independent reads; parallelism is
-    * bounded by the common pool. */
-  private def footerRowCount(dir: String): Long = {
-    import scala.collection.parallel.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return 0L
-    val files = fs.listFiles(p, true)
-    val paths = scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.Path]()
-    while (files.hasNext) {
-      val f = files.next()
-      if (f.getPath.getName.endsWith(".parquet")) paths += f.getPath
-    }
-    paths.par.map { fp =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(fp, conf))
-      try reader.getRecordCount
-      finally reader.close()
-    }.sum
-  }
-
   /** Row-level DELETE WHERE with commit-granular file skipping: removes
     * rows whose integral `column` falls in [lo, hi] by rewriting ONLY
     * the commits whose parquet-footer [min, max] intersects the range —
@@ -1394,38 +1253,25 @@ final class Catalog(val spark: SparkSession, val root: String,
   def deleteWhere(table: String, column: String, lo: Long, hi: Long,
                   partitionBy: Seq[String] = Seq.empty,
                   clusterBy: Seq[String] = Seq.empty): Long = {
-    // star-contract tables validate against their declared schema;
-    // catalog-generic tables (quarantine, rollups, sketch tables)
-    // against their live one — the quarantine-correction runbook purges
-    // a media_quarantine row this way (StreamsSpec executes it)
-    val schema = Schemas.schemaOfOpt(table)
-      .getOrElse(this.table(table).schema)
-    require(Seq(org.apache.spark.sql.types.IntegerType,
-      org.apache.spark.sql.types.LongType).contains(schema(column).dataType),
-      s"deleteWhere prunes integral columns only; $table.$column is " +
-        schema(column).dataType.simpleString)
     requireClusterableLayout(table, partitionBy, clusterBy)
     val base = writeBase(table)
-    if (base == 0) return 0L
+    // validated against the schema reads use, so catalog-generic tables
+    // (quarantine, rollups, sketch tables) qualify too — the
+    // quarantine-correction runbook purges a media_quarantine row this
+    // way (StreamsSpec executes it)
+    requireIntegral(table, base, column, "deleteWhere")
     val live = commitsAt(table, base)
-    val affected = commitsInRange(table, column, lo, hi)
+    val affected = live.map(c => c -> footers(Seq(c)))
+      .filter { case (_, fs) => intersects(fs, column, lo, hi) }
     if (affected.isEmpty) return 0L
-    val affectedSet = affected.toSet
+    val affectedSet = affected.map(_._1).toSet
     val kept = live.filterNot(affectedSet)
-    val before = affected.map(footerRowCount).sum
-    val survivors = affected.map { c =>
-      spark.read.schema(schema).option("basePath", c).parquet(c)
-        .select(schema.fieldNames.map(col): _*)
-    }.reduce(_.unionAll(_))
+    val before = affected.map { case (_, fs) => rows(fs) }.sum
+    val survivors = read(table, base, affected.map(_._1))
       // keep NULLs: a negated BETWEEN would null-out and drop them
       .filter(col(column).isNull || col(column) < lo || col(column) > hi)
-    val clustered =
-      if (clusterBy.isEmpty) survivors
-      else survivors.sortWithinPartitions((partitionBy ++ clusterBy).map(col): _*)
-    val dir = newCommitDir(table)
-    val w = clustered.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir)
-    val after = footerRowCount(dir)
+    val dir = writeCommit(table, survivors, partitionBy, clusterBy)
+    val after = rowCount(dir)
     // an empty rewrite dir is noise — EXCEPT when it is the table's
     // only remaining commit: an undeclared table (quarantine, rollup)
     // recovers its schema from commit footers, so a delete that empties
@@ -1476,32 +1322,16 @@ final class Catalog(val spark: SparkSession, val root: String,
     requireClusterableLayout(table, partitionBy, clusterBy)
     val base = writeBase(table)
     if (base == 0) return
-    // same schema resolution as reads: an evolved table compacts under
-    // its evolved schema (initial defaults MATERIALIZE into the
-    // rewrite — afterwards every file carries the column), undeclared
-    // tables under their first commit's shape
-    val df = evolvedSchemaAt(table, base) match {
-      case Some((schema, defaults)) =>
-        readEvolved(commitsAt(table, base), schema, defaults)
-      case None =>
-        val schema = schemaForRead(table)
-        commitsAt(table, base).map { c =>
-          spark.read.schema(schema).option("basePath", c).parquet(c)
-            .select(schema.fieldNames.map(col): _*)
-        }.reduce(_.unionAll(_))
-    }
+    // through the one reader: an evolved table's initial defaults
+    // MATERIALIZE into the rewrite (afterwards every file carries the
+    // column)
+    val df = read(table, base, commitsAt(table, base))
     // numFiles > 0: coalesce before the sort — compaction's point is
     // fewer, larger files (small-file debt is what it repays), and the
     // within-partition sort then clusters across what were separate
     // tiny files
     val folded = if (numFiles > 0) df.coalesce(numFiles) else df
-    val clustered =
-      if (clusterBy.isEmpty) folded
-      else folded.sortWithinPartitions((partitionBy ++ clusterBy).map(col): _*)
-    val dir = newCommitDir(table)
-    val w = clustered.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir)
-    commit(table, Seq(dir), base)
+    commit(table, Seq(writeCommit(table, folded, partitionBy, clusterBy)), base)
     register(table)
   }
 
@@ -1514,19 +1344,10 @@ final class Catalog(val spark: SparkSession, val root: String,
     * serves from its manifest, and the numbers a query planner or
     * data-quality dashboard wants without paying for a 100 TB pass. */
   def stats(table: String, columns: Seq[String] = Seq.empty): Catalog.TableStats = {
-    val live = liveCommits(table)
-    val rows = live.map(footerRowCount).sum
-    val ranges = columns.flatMap { c =>
-      val per = live.map(d => commitRange(d, c))
-      if (per.exists(_.isEmpty)) None
-      else {
-        val defined = per.flatten
-          .filter(r => r._1 != Long.MaxValue || r._2 != Long.MinValue) // drop all-null commits
-        if (defined.isEmpty) None
-        else Some(c -> (defined.map(_._1).min, defined.map(_._2).max))
-      }
-    }.toMap
-    Catalog.TableStats(rows, ranges)
+    val fs = footers(liveCommits(table))
+    // an all-null column yields the empty range, reported as no range
+    Catalog.TableStats(rows(fs), columns.flatMap(c =>
+      range(fs, c).filter { case (mn, mx) => mn <= mx }.map(c -> _)).toMap)
   }
 
   /** Size-aware compaction (the OPTIMIZE shape): fold only the commits
@@ -1544,43 +1365,17 @@ final class Catalog(val spark: SparkSession, val root: String,
   def compactSmall(table: String, smallBytes: Long,
                    partitionBy: Seq[String] = Seq.empty,
                    clusterBy: Seq[String] = Seq.empty): Int = {
-    val schema = Schemas.schemaOf(table)
     requireClusterableLayout(table, partitionBy, clusterBy)
     val base = writeBase(table)
-    if (base == 0) return 0
     val live = commitsAt(table, base)
-    val small = live.filter(c => dirBytes(c) < smallBytes)
+    val small = live.filter(c => dataFiles(Seq(c)).map(_.getLen).sum < smallBytes)
     if (small.size < 2) return 0
-    val df = small.map { c =>
-      spark.read.schema(schema).option("basePath", c).parquet(c)
-        .select(schema.fieldNames.map(col): _*)
-    }.reduce(_.unionAll(_)).coalesce(1)
-    val clustered =
-      if (clusterBy.isEmpty) df
-      else df.sortWithinPartitions((partitionBy ++ clusterBy).map(col): _*)
-    val dir = newCommitDir(table)
-    val w = clustered.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir)
+    val dir = writeCommit(table, read(table, base, small).coalesce(1),
+      partitionBy, clusterBy)
     val smallSet = small.toSet
     commit(table, live.filterNot(smallSet) :+ dir, base)
     register(table)
     small.size
-  }
-
-  /** Total bytes of data files under a commit dir (driver-side FS
-    * listing, the same metadata walk the footer readers do). */
-  private def dirBytes(dir: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return 0L
-    val files = fs.listFiles(p, true)
-    var n = 0L
-    while (files.hasNext) {
-      val f = files.next()
-      if (f.getPath.getName.endsWith(".parquet")) n += f.getLen
-    }
-    n
   }
 
   /** Move every unparseable `tag.*` file (crashed pre-hard-link
@@ -1644,13 +1439,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     val live = (latestVersion(table).map(commitsAt(table, _)).getOrElse(Seq.empty)
         ++ snapRefs ++ tagRefs)
       .map(p => Paths.get(p).getFileName.toString).toSet
-    val td = Paths.get(tableDir(table))
-    if (!Files.exists(td)) return 0
-    val listing = Files.list(td) // close the stream: it holds a directory fd
-    val doomed =
-      try listing.iterator().asScala.toSeq
-      finally listing.close()
-    val dead = doomed
+    val dead = children(Paths.get(tableDir(table)))
       .filter(p => Files.isDirectory(p))
       .filter(p => p.getFileName.toString != "_manifests")
       .filterNot(p => live.contains(p.getFileName.toString))

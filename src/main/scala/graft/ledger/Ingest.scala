@@ -49,7 +49,8 @@ object Ingest {
     * mirroring the reference's hard stop at app/app.py:53-62), transform,
     * overwrite staging. Permissive mode routes offending rows to
     * `rejects_lancamentos` with the violated-column list (SURVEY
-    * §1.4-7) instead of failing the batch. Returns the staged count.
+    * §1.4-7) instead of failing the batch. Returns the staged count,
+    * read from the staging commit's footers (no re-scan of staging).
     */
   def run(catalog: Catalog, csvPath: String, strict: Boolean = true): Long = {
     val raw = readCsv(catalog.spark, csvPath)
@@ -69,6 +70,5 @@ object Ingest {
         normalized.na.drop(Schemas.requiredColumns)
       }
     catalog.replace("staging_lancamentos", toStaging(clean))
-    catalog.table("staging_lancamentos").count()
   }
 }

@@ -224,4 +224,63 @@ class LedgerPipelineSpec extends SparkSpec {
     assert(row.getAs[String]("id_hash") === "9d8982c2aa856902fbfcde2ec2b9fa40")
     assert(row.getAs[java.math.BigDecimal]("Valor").toPlainString === "1500.00")
   }
+
+  test("overlapping uploads keep every dim's business key and surrogate id unique") {
+    val dir = Files.createTempDirectory("ledger_keys").toString
+    val cat = new Catalog(spark, s"$dir/wh")
+    val wh = new Warehouse(cat)
+    // batch3 repeats vocabulary within itself and against both earlier
+    // batches, and adds one new tipo/grupo/categoria/classificacao
+    val batch3 = Seq(
+      """Aluguel Março,Despesa,Moradia,Aluguel,Essencial,03/2024,"1.500,00"""",
+      """Mercado,Despesa,Alimentação,Supermercado,Essencial,03/2024,"700,00"""",
+      """Feira,Despesa,Alimentação,Supermercado,Essencial,03/2024,"80,00"""",
+      """Dividendos,Investimento,Renda,Ações,Variável,02/2024,"300,00"""",
+      """Dividendos,Investimento,Renda,Ações,Variável,03/2024,"310,00"""")
+    Seq(batch1, batch2, batch3).zipWithIndex.foreach { case (b, i) =>
+      Ingest.run(cat, writeCsv(dir, s"b$i.csv", b))
+      wh.run()
+    }
+    val dims = Seq(
+      ("dim_tempo", "id_tempo", Seq("ano", "mes"), 3L),
+      ("dim_tipo", "id_tipo", Seq("nome_tipo"), 3L),
+      ("dim_classificacao", "id_classificacao", Seq("nome_classificacao"), 4L),
+      ("dim_grupo", "id_grupo", Seq("id_tipo", "nome_grupo"), 6L),
+      ("dim_categoria", "id_categoria", Seq("id_grupo", "nome_categoria"), 6L))
+    dims.foreach { case (t, id, keys, expected) =>
+      val df = cat.table(t)
+      assert(df.count() === expected, s"$t row count")
+      assert(df.select(keys.map(col): _*).distinct().count() === expected,
+        s"$t has a duplicate business key ${keys.mkString("(", ", ", ")")}")
+      assert(df.select(id).distinct().count() === expected, s"$t has a duplicate $id")
+    }
+  }
+
+  test("a small batch's fact commit holds one parquet file per ano=/mes= dir") {
+    val dir = Files.createTempDirectory("ledger_files").toString
+    val cat = new Catalog(spark, s"$dir/wh")
+    val wh = new Warehouse(cat)
+    def monthRows(months: Seq[Int]) = for (m <- months; i <- 1 to 4) yield
+      s"""Item $m-$i,Despesa,Moradia,Aluguel,Essencial,0$m/2024,"$i,00""""
+    // the second upload overlaps two months of the first and adds one
+    Seq(monthRows(1 to 3), monthRows(2 to 4).map(_.replace("Item", "Outro")))
+      .zipWithIndex.foreach { case (batch, i) =>
+        assert(batch.size <= Warehouse.singleTaskWriteRows)
+        Ingest.run(cat, writeCsv(dir, s"m$i.csv", batch))
+        assert(wh.run()("fato_lancamento") === batch.size)
+        val md = java.nio.file.Paths.get(s"$dir/wh/fato_lancamento/_manifests")
+        val latest = Files.readString(md.resolve("LATEST")).trim.toInt
+        val commit = Files.readString(md.resolve(s"v$latest"))
+          .split("\n").filter(_.nonEmpty).last
+        import scala.jdk.CollectionConverters._
+        val walk = Files.walk(java.nio.file.Paths.get(commit))
+        val perDir = try walk.iterator().asScala
+            .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+            .groupBy(p => java.nio.file.Paths.get(commit).relativize(p.getParent).toString)
+            .map { case (d, fs) => d -> fs.size }
+          finally walk.close()
+        val months = batch.map(_.split(",")(5).take(2).toInt).distinct
+        assert(perDir === months.map(m => s"ano=2024/mes=$m" -> 1).toMap)
+      }
+  }
 }

@@ -75,4 +75,58 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(rows.toSeq === Seq(
       (1L, "a", Some(9L)), (2L, "b", Some(9L)), (3L, "c", Some(1L))))
   }
+
+  // Rewrites and pruned reads after addColumn must read exactly what
+  // table() reads: the written values of post-evolution commits, and the
+  // initial default for commits that pre-date the column.
+
+  private val tipoCols = Seq("id_tipo", "nome_tipo", "peso")
+
+  /** dim_tipo (declared) evolved with `peso`: one pre-evolution commit,
+    * then one post-evolution commit per batch. */
+  private def evolvedTipo(batches: Seq[(Int, String, Int)]*) = {
+    val cat = freshCat()
+    cat.appendDelta("dim_tipo", Seq((1, "a"), (2, "b")).toDF("id_tipo", "nome_tipo"))
+    cat.addColumn("dim_tipo", "peso", "INT", default = Some("0"))
+    batches.foreach(b => cat.appendDelta("dim_tipo", b.toDF(tipoCols: _*)))
+    cat
+  }
+
+  private def tipoRows(df: org.apache.spark.sql.DataFrame) = {
+    assert(df.columns.toSeq === tipoCols)
+    df.as[(Int, String, Option[Int])].collect().sortBy(_._1).toSeq
+  }
+
+  test("deleteWhere after addColumn keeps a declared table's written values") {
+    val cat = evolvedTipo(Seq((3, "c", 5), (4, "d", 6), (5, "e", 7)))
+    assert(cat.deleteWhere("dim_tipo", "id_tipo", 5, 5) === 1)
+    assert(tipoRows(cat.table("dim_tipo")) === Seq(
+      (1, "a", Some(0)), (2, "b", Some(0)), (3, "c", Some(5)), (4, "d", Some(6))))
+  }
+
+  test("deleteWhere after addColumn keeps an undeclared table's initial default") {
+    val cat = freshCat()
+    cat.replace("t", Seq((1L, "a"), (2L, "b")).toDF("id", "name"))
+    cat.addColumn("t", "score", "BIGINT", default = Some("9"))
+    cat.appendDelta("t", Seq((3L, "c", 1L)).toDF("id", "name", "score"))
+    assert(cat.deleteWhere("t", "id", 2, 2) === 1)
+    val t = cat.table("t")
+    assert(t.columns.toSeq === Seq("id", "name", "score"))
+    assert(t.as[(Long, String, Option[Long])].collect().sortBy(_._1).toSeq === Seq(
+      (1L, "a", Some(9L)), (3L, "c", Some(1L))))
+  }
+
+  test("compactSmall after addColumn keeps written values and defaults") {
+    val cat = evolvedTipo(Seq((3, "c", 5)), Seq((4, "d", 6)))
+    assert(cat.compactSmall("dim_tipo", smallBytes = 1L << 20) === 3)
+    assert(tipoRows(cat.table("dim_tipo")) === Seq(
+      (1, "a", Some(0)), (2, "b", Some(0)), (3, "c", Some(5)), (4, "d", Some(6))))
+  }
+
+  test("tableWhere after addColumn returns table()'s columns and rows") {
+    val cat = evolvedTipo(Seq((3, "c", 5)), Seq((4, "d", 6)))
+    val expected = Seq((2, "b", Some(0)), (3, "c", Some(5)))
+    assert(tipoRows(cat.table("dim_tipo").filter("id_tipo BETWEEN 2 AND 3")) === expected)
+    assert(tipoRows(cat.tableWhere("dim_tipo", "id_tipo", 2, 3)) === expected)
+  }
 }
