@@ -1,9 +1,9 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_ISOLATED=1: artifact mode — a FRESH SparkSession
     // (full SparkContext restart) per query, so no block-manager /
     // shuffle-file / JIT residue from one query is ever charged to the
@@ -18,12 +18,7 @@ object Bench {
     Preflight.check(sfDir) // testdata-drift probe: named diagnostics first
 
     def newSession(): SparkSession = {
-      val s = SparkSession.builder().withExtensions(new GraftExtensions)
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
+      val s = Sessions.local(Sessions.defaultCpus)
       // Warm up scheduler + codegen paths so the first timed query doesn't
       // absorb session startup (~3-4 s). Touches no benchmark data.
       s.range(100000).selectExpr("sum(id)").collect()
@@ -49,13 +44,10 @@ object Bench {
     // neighbor of q146/q148, read 31.4 s in-sweep against a 21.8-22.6 s
     // standalone band — writeback/page-cache residue from the writers,
     // not q149's own cost. Writers measure each other last; read-only
-    // queries measure clean.
-    val writersLast = Set(
-      "q12_merge_ignore", "q88_merge_upsert", "q146_bucketed_join",
-      "q148_dpp_prune", "q68_warehouse_e2e")
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .sortBy(n => (writersLast(n), n == "q68_warehouse_e2e"))
-      .filter(n => only.isEmpty || only(n))
+    // queries measure clean. The single-rep writer (q68) goes very last.
+    val specs = SparkEntry.specs
+      .sortBy(q => (q.writesTables, q.reps.nonEmpty, q.name))
+      .filter(q => only.isEmpty || only(q.name))
     val loadStart = load1()
     // noop sink, not count(): count() lets the optimizer prune the
     // aggregate/projection expressions away, timing a cheaper plan
@@ -66,8 +58,8 @@ object Bench {
     // once — it is ~100 self-averaging jobs, and a second complete
     // warehouse build buys no JIT signal for a third of the run budget.
     // a failing query reports -1, never its fast-fail elapsed time
-    val results = names.map { name =>
-      val fn = SparkEntry.queries(name)
+    val results = specs.map { spec =>
+      val name = spec.name
       if (isolated) { spark.stop(); spark = newSession() }
       // Per-query 1-min load sample, taken right before the first timed
       // rep (round-16 verdict #4): the session-level load1_start/end
@@ -80,14 +72,14 @@ object Bench {
       // after they stop contending), so consumers compare against the
       // sweep's median sample, not an absolute quiet-host number.
       val qLoad = load1()
-      val nReps = repsFor(name, reps)
+      val nReps = spec.reps.getOrElse(reps)
       val times = (1 to nReps).map { _ =>
         steadyState(spark)
         val t0 = System.nanoTime()
         try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          spec.build(spark, sfDir).write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
+        } catch { case NonFatal(_) => -1.0 }
       }
       val best = if (times.exists(_ >= 0)) times.filter(_ >= 0).min else -1.0
       if (sys.env.contains("SPARK_GRAFT_REP_TRACE"))
@@ -116,7 +108,7 @@ object Bench {
     // conditions are complete without a prose footnote (q68 always
     // runs once — ~100 self-averaging jobs; a second full warehouse
     // build buys no JIT signal for a third of the run budget)
-    val overrides = names.map(n => n -> repsFor(n, reps))
+    val overrides = specs.map(q => q.name -> q.reps.getOrElse(reps))
       .filter(_._2 != reps)
       .map { case (n, r) => s"\"" + n + "\":" + r }.mkString("{", ",", "}")
     val json = s"""{"metric":"total","value":$total,"unit":"sec",""" +
@@ -136,22 +128,17 @@ object Bench {
       java.nio.file.Files.write(out,
         (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       System.err.println(s"[bench] artifact mirrored to $out")
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] artifact mirror failed (non-fatal): $e")
     }
     spark.stop()
   }
 
-  /** Rep count for one query: q68 is pinned to a single rep (see the
-    * artifact's reps_overrides note). */
-  private def repsFor(name: String, reps: Int): Int =
-    if (name == "q68_warehouse_e2e") 1 else reps
-
   /** 1-minute host load average (-1 where /proc is unavailable). */
   private def load1(): Double =
     try new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
-    catch { case _: Throwable => -1.0 }
+    catch { case NonFatal(_) => -1.0 }
 
   /** Return the JVM to steady state before each timed run (round-3
     * verdict: the full-run artifact read as a 2.8× regression that

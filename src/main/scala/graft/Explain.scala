@@ -1,17 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump formatted physical plans for plan-quality review (pushdown,
   * broadcast choice, codegen spans). Not part of the driver contract. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder().withExtensions(new GraftExtensions).master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(8)
     names.foreach { n =>
       println(s"\n===== $n =====")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -5,10 +5,9 @@ import org.apache.spark.sql.SparkSessionExtensions
 import graft.expressions.{ArrayPairs, SortedIntersectCount, BloomMightContain, BpeEncode, CmsEstimate, CmsSketch, DeletionVariants, DotProductFloat, MarkupClean, QcFeatures, RepetitionStats, SpanCut, TextStatsExpr, KmvMinima, LangId, Lev1Dist, MinHashSigs, MisraGries, NfcNormalize, SignBucketKeys, SimHashBits, StopHits, TopKStrings, VecSumLong, WinnowFingerprints, WordShingles}
 
 /** Engine extensions, installed via the public extension point:
-  *
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)          // in-process
-  *   // or spark.sql.extensions=graft.GraftExtensions (config/submit)
+  * `withExtensions(new GraftExtensions)` on a session builder (in
+  * process; [[Sessions.local]] does this), or
+  * `spark.sql.extensions=graft.GraftExtensions` (config/submit).
   *
   * Currently registers the native expressions (SQL-callable and used by
   * the operators through `call_function`).

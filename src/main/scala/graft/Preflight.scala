@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.util.zip.CRC32
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -160,7 +161,7 @@ object Preflight {
       case Some(exp) =>
         val diffs =
           try diff(exp, signature(sfDir), sf)
-          catch { case e: Throwable => Seq(s"$sf: probe failed to read footers: ${e.getMessage}") }
+          catch { case NonFatal(e) => Seq(s"$sf: probe failed to read footers: ${e.getMessage}") }
         if (diffs.isEmpty)
           System.err.println(s"[preflight] $sf matches committed expectation")
         else diffs.foreach(d => System.err.println(s"[preflight] TESTDATA DRIFT: $d"))
@@ -172,7 +173,11 @@ object Preflight {
     }
   }
 
-  private def jq(s: String): String = "\"" + s.flatMap {
+  /** JSON string literal: escapes backslash, quote and ALL control chars
+    * (<0x20) — a tab or CR in hand-written oracle SQL would otherwise
+    * make the consumer's json.load fail and silently zero the
+    * correctness check. */
+  private[graft] def jq(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -187,7 +192,7 @@ object Preflight {
       val json = s"""{"sfDir":${jq(sfDir)},"ok":${diffs.isEmpty},""" +
         s""""diffs":[${diffs.map(jq).mkString(",")}]}"""
       Files.writeString(Paths.get("TESTDATA_PROBE.json"), json + "\n")
-    } catch { case _: Throwable => () } // cwd may not be writable; probe stays best-effort
+    } catch { case NonFatal(_) => () } // cwd may not be writable; probe stays best-effort
 
   /** `gen [outPath dirs...]`: regenerate the expectation file from the
     * driver testdata dirs. `check <sfDir>`: run the probe standalone. */

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+
+import graft.queries.CoreQueries
 
 /** Scratch profiler for hot queries (not part of the driver contract).
   *
-  * Round 12: dissects q68_warehouse_e2e (11 s at sf0.1, ~10% of the
+  * Round 12: dissects q68, the warehouse build (11 s at sf0.1, ~10% of the
   * bench sweep, ~100 jobs) into its phases — staging ingest, each dim
   * loader, the fact merge, the rerun, the final read — with wall time
   * AND Spark job counts per phase, so the "is it commit overhead or
@@ -19,12 +19,7 @@ import org.apache.spark.sql.types.DecimalType
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.defaultCpus)
     spark.range(100000).selectExpr("sum(id)").collect()
 
     val jobCount = new java.util.concurrent.atomic.AtomicInteger
@@ -41,24 +36,13 @@ object Profile {
       println(f"PROF $name%-28s $dt%8.2f s  ${jobCount.get() - j0}%4d jobs")
       r
     }
-    def t(name: String) = spark.read.parquet(s"$sfDir/$name.parquet")
 
     for (rep <- 1 to 2) {
       println(s"=== rep $rep (sequential loaders; in-bench run overlaps tempo/cls) ===")
       Bench.steadyState(spark)
-      val src = t("orders").filter(col("o_orderkey") % 17 === 0 &&
-        col("o_orderdate") < lit("1998-01-01").cast("date"))
-      val csvish = src.select(
-        concat(lit("pedido "), col("o_orderkey")).as("Descrição"),
-        col("o_orderpriority").as("Tipo"),
-        col("o_orderstatus").as("Grupo"),
-        concat(lit("c"), col("o_custkey") % 10).as("Categoria"),
-        concat(lit("cl"), col("o_orderkey") % 4).as("Classificação"),
-        date_format(col("o_orderdate"), "MM/yyyy").as("Data"),
-        translate(col("o_totalprice").cast(DecimalType(15, 2)).cast("string"),
-          ".", ",").as("Valor"))
+      val csvish = CoreQueries.ledgerBatch(Tables(spark, sfDir, "orders"))
       val root = java.nio.file.Files.createTempDirectory("graft_prof68")
-      graft.queries.CoreQueries.cleanupAtExit(root)
+      CoreQueries.cleanupAtExit(root)
       val cat = new graft.ledger.Catalog(spark, s"$root/wh")
       phase("staging ingest+replace") {
         cat.replace("staging_lancamentos", graft.ledger.Ingest.toStaging(csvish))
@@ -90,7 +74,7 @@ object Profile {
           .write.format("noop").mode("overwrite").save()
       }
       phase("bench-shape q68 (fresh cat)") {
-        SparkEntry.queries("q68_warehouse_e2e")(spark, sfDir)
+        CoreQueries.warehouseE2e.build(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
       }
     }

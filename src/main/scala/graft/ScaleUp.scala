@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Bench tooling (not part of the driver contract): replicate the
@@ -65,13 +65,8 @@ object ScaleUp {
     val maxN = Vowels.length * Cons.length
     require(n >= 1 && n <= maxN,
       s"replica independence holds only for 1..$maxN replicas, got $n")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.defaultCpus,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
     def t(name: String) = spark.read.parquet(s"$src/$name.parquet")
     def w(df: DataFrame, name: String) =

@@ -1,8 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each registered query's result → parquet, plus
+  * oracle_sql.json for the DuckDB compare (tools/check.py) and
+  * verify_failures.json (query name → error message, `{}` when none). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -13,44 +14,29 @@ object Verify {
     // optional extra args: run only these queries (local iteration aid;
     // the driver always passes exactly two args → full run)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.defaultCpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val failures = SparkEntry.specs.filter(q => only.isEmpty || only(q.name)).flatMap { q =>
+      val failure =
+        try {
+          q.build(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/${q.name}")
+          None
+        } catch { case NonFatal(e) =>
+          System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
+          Some(q.name -> String.valueOf(e.getMessage))
+        }
       // the graph/basket operators persist intermediates and leave
       // them to the session runner to clear (the Bench.steadyState
       // contract) — 140 queries in one JVM would otherwise accumulate
       // corpus-scale cached tables
       Bench.steadyState(spark)
+      failure
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def write(file: String, m: Iterable[(String, String)]): Unit =
+      Files.writeString(Paths.get(s"$outDir/$file"),
+        m.map { case (k, v) => s"${Preflight.jq(k)}: ${Preflight.jq(v)}" }.mkString("{", ",", "}"))
+    write("oracle_sql.json", SparkEntry.oracleSql)
+    write("verify_failures.json", failures)
     spark.stop()
   }
 }

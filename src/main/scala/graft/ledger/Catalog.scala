@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StructType}
 
 import graft.operators.MergeUpsert
 
@@ -1132,9 +1132,9 @@ final class Catalog(val spark: SparkSession, val root: String,
     * grid is O(groups · k) by contract, so the constancy scan costs
     * what the old one-row probe did at any real scale. */
   def kmvK(table: String): Option[Int] =
-    if (!exists(table) || !this.table(table).columns.contains("kmv_k")) None
-    else {
-      val r = this.table(table).agg(
+    Option.when(exists(table))(this.table(table))
+      .filter(_.columns.contains("kmv_k")).flatMap { df =>
+      val r = df.agg(
         count(lit(1)).as("rows"),
         count(col("kmv_k")).as("stamped"),
         countDistinct(col("kmv_k")).as("ks"),
@@ -1191,7 +1191,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     // auto-compaction pass below reuses them, and a require thrown from
     // inside compact() would surface AFTER this append's commit already
     // published — reporting a successful write as a failure
-    requireClusterableLayout(table, partitionBy, clusterBy)
+    requireClusterableLayout(delta.schema, partitionBy, clusterBy)
     // the commit claim is tied to THIS read of LATEST (see commit):
     // the new manifest's dir list and its claimed version come from the
     // same observation, so a concurrent commit makes us fail loudly
@@ -1219,16 +1219,23 @@ final class Catalog(val spark: SparkSession, val root: String,
     * loudly rather than advertise clustering that isn't. Checked at
     * [[appendDelta]] entry too (not just [[compact]]): auto-compaction
     * reuses the append's layout args, and failing after the append
-    * commit published would report a success as a failure. */
-  private def requireClusterableLayout(table: String, partitionBy: Seq[String],
+    * commit published would report a success as a failure. Types come
+    * from the schema of the frame being written (the delta, or the
+    * table as the reader sees it), so undeclared tables qualify too.
+    * Only INT, BIGINT and DATE partition columns pass: an undeclared
+    * table's schema is inferred from its partition directories, which
+    * read some other types back as STRING (BOOLEAN does), so the append
+    * and its auto-compaction must both see a type that round-trips. */
+  private def requireClusterableLayout(schema: => StructType, partitionBy: Seq[String],
                                        clusterBy: Seq[String]): Unit =
     if (clusterBy.nonEmpty) {
-      val schema = Schemas.schemaOf(table)
-      val stringParts = partitionBy.filter(p =>
-        schema(p).dataType == org.apache.spark.sql.types.StringType)
-      require(stringParts.isEmpty,
-        s"clusterBy with STRING partition columns (${stringParts.mkString(",")}) " +
-          "is not supported: Spark's partitioned writer re-sorts by " +
+      val written = schema
+      val bad = partitionBy.map(p => p -> written(p).dataType)
+        .filterNot { case (_, t) => t == IntegerType || t == LongType || t == DateType }
+      require(bad.isEmpty,
+        s"clusterBy needs INT, BIGINT or DATE partition columns, got " +
+          bad.map { case (p, t) => s"$p ${t.sql}" }.mkString(", ") +
+          ": Spark's partitioned writer re-sorts STRING ones by " +
           "empty2null(partition cols), destroying the requested clustering")
     }
 
@@ -1253,8 +1260,8 @@ final class Catalog(val spark: SparkSession, val root: String,
   def deleteWhere(table: String, column: String, lo: Long, hi: Long,
                   partitionBy: Seq[String] = Seq.empty,
                   clusterBy: Seq[String] = Seq.empty): Long = {
-    requireClusterableLayout(table, partitionBy, clusterBy)
     val base = writeBase(table)
+    requireClusterableLayout(schemaAt(table, base)._1, partitionBy, clusterBy)
     // validated against the schema reads use, so catalog-generic tables
     // (quarantine, rollups, sketch tables) qualify too — the
     // quarantine-correction runbook purges a media_quarantine row this
@@ -1319,8 +1326,8 @@ final class Catalog(val spark: SparkSession, val root: String,
               clusterBy: Seq[String] = Seq.empty,
               numFiles: Int = 0): Unit = {
     // argument validation — before the empty-table early return
-    requireClusterableLayout(table, partitionBy, clusterBy)
     val base = writeBase(table)
+    requireClusterableLayout(schemaAt(table, base)._1, partitionBy, clusterBy)
     if (base == 0) return
     // through the one reader: an evolved table's initial defaults
     // MATERIALIZE into the rewrite (afterwards every file carries the
@@ -1365,8 +1372,8 @@ final class Catalog(val spark: SparkSession, val root: String,
   def compactSmall(table: String, smallBytes: Long,
                    partitionBy: Seq[String] = Seq.empty,
                    clusterBy: Seq[String] = Seq.empty): Int = {
-    requireClusterableLayout(table, partitionBy, clusterBy)
     val base = writeBase(table)
+    requireClusterableLayout(schemaAt(table, base)._1, partitionBy, clusterBy)
     val live = commitsAt(table, base)
     val small = live.filter(c => dataFiles(Seq(c)).map(_.getLen).sum < smallBytes)
     if (small.size < 2) return 0

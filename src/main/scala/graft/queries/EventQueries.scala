@@ -86,48 +86,88 @@ object EventQueries {
       .drop("__ns")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def specs: Seq[QuerySpec] = Seq(
 
     // gap-based sessionization via lag + running sum (batch twin of the
     // streaming session_window).
-    "q33_sessions" -> ((s, d) =>
+    QuerySpec("q33_sessions", (s, d) =>
       sessionized(ev(s, d))
         .groupBy(col("user_id"), col("sid").cast("int").as("session_id"))
         .agg(count(lit(1)).as("n_events"),
           min(col("tus")).as("session_start_us"),
-          max(col("tus")).as("session_end_us"))),
+          max(col("tus")).as("session_end_us")),
+      s"""WITH e AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS tus FROM events),
+         |m AS (SELECT user_id, event_id, tus,
+         |        CASE WHEN lag(tus) OVER w IS NULL
+         |               OR tus - lag(tus) OVER w > $SessionGapUs THEN 1 ELSE 0 END AS ns
+         |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
+         |s AS (SELECT user_id, tus,
+         |        CAST(SUM(ns) OVER (PARTITION BY user_id ORDER BY tus, event_id
+         |                           ROWS UNBOUNDED PRECEDING) AS INT) AS session_id
+         |      FROM m)
+         |SELECT user_id, session_id, COUNT(*) AS n_events,
+         |       MIN(tus) AS session_start_us, MAX(tus) AS session_end_us
+         |FROM s GROUP BY 1, 2""".stripMargin),
 
     // JSON property extraction + rollup by event type.
-    "q34_json_extract" -> ((s, d) =>
+    QuerySpec("q34_json_extract", (s, d) =>
       ev(s, d)
         .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(col("k")).cast("bigint").as("sum_k"),
-          max(col("k")).as("max_k"))),
+          max(col("k")).as("max_k")),
+      """SELECT event_type, COUNT(*) AS n,
+        | CAST(SUM(CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT) AS sum_k,
+        | MAX(CAST(json_extract_string(props, '$.k') AS INT)) AS max_k
+        |FROM events GROUP BY 1""".stripMargin),
 
     // ordered funnel view → click → purchase: per user, each stage's
     // first event must follow the previous stage's first event; count
     // users per deepest stage reached. All comparisons on epoch-µs ints.
-    "q60_funnel" -> ((s, d) =>
+    QuerySpec("q60_funnel", (s, d) =>
       funnelStages(s, d).select(
           when(col("st.p").isNotNull, 3)
             .when(col("st.c").isNotNull, 2)
             .when(col("st.v").isNotNull, 1)
             .otherwise(0).as("stage"))
-        .groupBy(col("stage")).agg(count(lit(1)).as("n_users"))),
+        .groupBy(col("stage")).agg(count(lit(1)).as("n_users")),
+      """WITH e AS (SELECT user_id, event_type, epoch_ns(ts) // 1000 AS tus FROM events),
+        |v AS (SELECT user_id, MIN(tus) AS v_t FROM e WHERE event_type = 'view' GROUP BY 1),
+        |c AS (SELECT e.user_id, MIN(tus) AS c_t FROM e JOIN v USING (user_id)
+        |      WHERE event_type = 'click' AND tus > v_t GROUP BY 1),
+        |p AS (SELECT e.user_id, MIN(tus) AS p_t FROM e JOIN c USING (user_id)
+        |      WHERE event_type = 'purchase' AND tus > c_t GROUP BY 1)
+        |SELECT CAST(CASE WHEN p_t IS NOT NULL THEN 3
+        |                 WHEN c_t IS NOT NULL THEN 2
+        |                 WHEN v_t IS NOT NULL THEN 1 ELSE 0 END AS INT) AS stage,
+        |       COUNT(*) AS n_users
+        |FROM (SELECT DISTINCT user_id FROM e) u
+        |LEFT JOIN v USING (user_id)
+        |LEFT JOIN c USING (user_id)
+        |LEFT JOIN p USING (user_id)
+        |GROUP BY 1""".stripMargin),
 
     // funnel conversion latency: for every fully-converted user, the
     // epoch-µs of the qualifying first view and first purchase and the
     // end-to-end latency — all integer arithmetic on the shared
     // one-shuffle funnel fold (q60's plan), no extra exchange.
-    "q105_conversion_latency" -> ((s, d) =>
+    QuerySpec("q105_conversion_latency", (s, d) =>
       funnelStages(s, d)
         .filter(col("st.p").isNotNull)
         .select(col("user_id"),
           col("st.v").as("view_us"),
           col("st.p").as("purchase_us"),
-          (col("st.p") - col("st.v")).as("latency_us"))),
+          (col("st.p") - col("st.v")).as("latency_us")),
+      """WITH e AS (SELECT user_id, event_type, epoch_ns(ts) // 1000 AS tus FROM events),
+        |v AS (SELECT user_id, MIN(tus) AS v_t FROM e WHERE event_type = 'view' GROUP BY 1),
+        |c AS (SELECT e.user_id, MIN(tus) AS c_t FROM e JOIN v USING (user_id)
+        |      WHERE event_type = 'click' AND tus > v_t GROUP BY 1),
+        |p AS (SELECT e.user_id, MIN(tus) AS p_t FROM e JOIN c USING (user_id)
+        |      WHERE event_type = 'purchase' AND tus > c_t GROUP BY 1)
+        |SELECT p.user_id, v.v_t AS view_us, p.p_t AS purchase_us,
+        |       p.p_t - v.v_t AS latency_us
+        |FROM p JOIN v USING (user_id)""".stripMargin),
 
     // event-rate anomaly flags: per (event_type, hour-bucket) counts
     // against the sum of the 24 preceding OBSERVED hour-buckets (rows
@@ -137,7 +177,7 @@ object EventQueries {
     // One shuffle on (event_type, hour); the window partitions by
     // event_type, a handful of series each bounded by the calendar,
     // never by event volume.
-    "q106_rate_anomaly" -> ((s, d) => {
+    QuerySpec("q106_rate_anomaly", (s, d) => {
       val hourly = ev(s, d)
         .groupBy(col("event_type"), expr("tus div 3600000000").as("hus"))
         .agg(count(lit(1)).as("n"))
@@ -148,14 +188,25 @@ object EventQueries {
         .withColumn("prior_hours", count(col("n")).over(w).cast("int"))
         .withColumn("is_burst",
           col("prior_hours") === 24 && col("n") * 24 > col("prior_n") * 2)
-    }),
+    },
+      """WITH h AS (
+        |  SELECT event_type, (epoch_ns(ts) // 1000) // 3600000000 AS hus,
+        |         COUNT(*) AS n
+        |  FROM events GROUP BY 1, 2)
+        |SELECT event_type, hus, n,
+        |  CAST(SUM(n) OVER w AS BIGINT) AS prior_n,
+        |  CAST(COUNT(n) OVER w AS INT) AS prior_hours,
+        |  COALESCE(COUNT(n) OVER w = 24 AND n * 24 > SUM(n) OVER w * 2, FALSE) AS is_burst
+        |FROM h
+        |WINDOW w AS (PARTITION BY event_type ORDER BY hus
+        |             ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)""".stripMargin),
 
     // behavioral diversity per user: Gini impurity of the event-type
     // distribution, 1 − Σ(nᵢ/N)² = (N² − Σnᵢ²)/N² — an exact rational
     // of integer counts (entropy would drag in libm logs and
     // cross-engine drift). Two-level aggregate: (user, type) counts
     // collapse map-side, then one user-sized frame; one shuffle.
-    "q122_event_diversity" -> ((s, d) =>
+    QuerySpec("q122_event_diversity", (s, d) =>
       ev(s, d)
         .groupBy(col("user_id"), col("event_type"))
         .agg(count(lit(1)).as("n"))
@@ -166,7 +217,14 @@ object EventQueries {
         .select(col("user_id"), col("n_events"), col("n_types"),
           ((col("n_events") * col("n_events") - col("__n2")).cast("double") /
             (col("n_events") * col("n_events")).cast("double"))
-            .as("gini_impurity"))),
+            .as("gini_impurity")),
+      """WITH c AS (SELECT user_id, event_type, COUNT(*) AS n
+        |           FROM events GROUP BY 1, 2)
+        |SELECT user_id, CAST(SUM(n) AS BIGINT) AS n_events,
+        |       CAST(COUNT(*) AS BIGINT) AS n_types,
+        |       CAST(SUM(n) * SUM(n) - SUM(n * n) AS DOUBLE)
+        |         / CAST(SUM(n) * SUM(n) AS DOUBLE) AS gini_impurity
+        |FROM c GROUP BY 1""".stripMargin),
 
     // CUSUM-style change-point detection over each event type's hourly
     // series: the running sum of deviations from the series' own mean,
@@ -176,7 +234,7 @@ object EventQueries {
     // total mass (10*|Cum| > total*H), while symmetric noise cancels.
     // Pure BIGINT window arithmetic; one shuffle on (type, hour), then
     // calendar-bounded windows per type.
-    "q116_change_points" -> ((s, d) => {
+    QuerySpec("q116_change_points", (s, d) => {
       val hourly = ev(s, d)
         .groupBy(col("event_type"), expr("tus div 3600000000").as("hus"))
         .agg(count(lit(1)).as("n"))
@@ -191,14 +249,28 @@ object EventQueries {
         .select(col("event_type"), col("hus"), col("n"), col("cum_dev_scaled"),
           (abs(col("cum_dev_scaled")) * 10 > col("total") * col("h"))
             .as("is_shift"))
-    }),
+    },
+      """WITH h AS (
+        |  SELECT event_type, (epoch_ns(ts) // 1000) // 3600000000 AS hus,
+        |         COUNT(*) AS n
+        |  FROM events GROUP BY 1, 2),
+        |g AS (SELECT *,
+        |        SUM(n) OVER (PARTITION BY event_type) AS total,
+        |        COUNT(n) OVER (PARTITION BY event_type) AS hh
+        |      FROM h)
+        |SELECT event_type, hus, n,
+        |  CAST(SUM(n * hh - total) OVER (PARTITION BY event_type ORDER BY hus
+        |       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_dev_scaled,
+        |  abs(CAST(SUM(n * hh - total) OVER (PARTITION BY event_type ORDER BY hus
+        |       ROWS UNBOUNDED PRECEDING) AS BIGINT)) * 10 > total * hh AS is_shift
+        |FROM g""".stripMargin),
 
     // first-order Markov transition matrix over each user's event
     // sequence: lead() within (user_id) ordered by (tus, event_id),
     // transition counts, and each row's probability as ONE division of
     // exact counts (IEEE-identical across engines). One shuffle on
     // user_id for the window, then a tiny |types|² aggregate.
-    "q107_markov_transitions" -> ((s, d) => {
+    QuerySpec("q107_markov_transitions", (s, d) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("tus"), col("event_id"))
       val trans = ev(s, d)
         .select(col("user_id"), col("event_type"), col("tus"), col("event_id"))
@@ -209,11 +281,21 @@ object EventQueries {
       val wt = Window.partitionBy(col("from_type"))
       trans
         .withColumn("p", col("n").cast("double") / sum(col("n")).over(wt))
-    }),
+    },
+      """WITH t AS (
+        |  SELECT event_type AS from_type,
+        |         lead(event_type) OVER (PARTITION BY user_id
+        |           ORDER BY epoch_ns(ts) // 1000, event_id) AS to_type
+        |  FROM events),
+        |c AS (SELECT from_type, to_type, COUNT(*) AS n
+        |      FROM t WHERE to_type IS NOT NULL GROUP BY 1, 2)
+        |SELECT from_type, to_type, n,
+        |       CAST(n AS DOUBLE) / SUM(n) OVER (PARTITION BY from_type) AS p
+        |FROM c""".stripMargin),
 
     // retention cohorts: users bucketed by first-seen month × months in
     // which they were active, distinct-user counts.
-    "q61_cohorts" -> ((s, d) => {
+    QuerySpec("q61_cohorts", (s, d) => {
       // one events shuffle, no join-back: per-user (cohort month,
       // distinct active months) in a single aggregate — collect_set
       // partial-merges map-side, so the exchange carries per-user
@@ -228,7 +310,12 @@ object EventQueries {
           explode(col("ms")).as("active_month"))
         .groupBy(col("cohort_month"), col("active_month"))
         .agg(count(lit(1)).as("n_users"))
-    }),
+    },
+      """WITH e AS (SELECT user_id, CAST(date_trunc('month', ts) AS DATE) AS m FROM events),
+        |ch AS (SELECT user_id, MIN(m) AS cohort_month FROM e GROUP BY 1)
+        |SELECT cohort_month, m AS active_month, COUNT(DISTINCT e.user_id) AS n_users
+        |FROM e JOIN ch USING (user_id)
+        |GROUP BY 1, 2""".stripMargin),
 
     // session path analysis: the top navigation sequences (first 5
     // event types of each gap-defined session, joined with '>') and
@@ -258,7 +345,7 @@ object EventQueries {
     // >1.5× its committed predecessor re-runs isolated-standalone and
     // the artifact records BOTH values (tools/selfheal.py), so future
     // bands live in the JSON, not in prose like this.
-    "q113_session_paths" -> ((s, d) => {
+    QuerySpec("q113_session_paths", (s, d) => {
       sessionized(ev(s, d))
         .groupBy(col("user_id"), col("sid"))
         .agg(sort_array(collect_list(struct(
@@ -267,7 +354,22 @@ object EventQueries {
           slice(transform(col("evs"), x => x.getField("et")), 1, 5)).as("path"))
         .groupBy(col("path")).agg(count(lit(1)).as("n_sessions"))
         .orderBy(col("n_sessions").desc, col("path")).limit(20)
-    }),
+    },
+      s"""WITH e AS (SELECT user_id, event_id, event_type AS et,
+         |                  epoch_ns(ts) // 1000 AS tus FROM events),
+         |m AS (SELECT *, CASE WHEN lag(tus) OVER w IS NULL
+         |                       OR tus - lag(tus) OVER w > $SessionGapUs
+         |                     THEN 1 ELSE 0 END AS ns
+         |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
+         |s AS (SELECT *, SUM(ns) OVER (PARTITION BY user_id ORDER BY tus, event_id
+         |                              ROWS UNBOUNDED PRECEDING) AS sid FROM m),
+         |r AS (SELECT *, row_number() OVER (PARTITION BY user_id, sid
+         |                                   ORDER BY tus, event_id) AS rn FROM s),
+         |p AS (SELECT user_id, sid,
+         |             string_agg(et, '>' ORDER BY tus, event_id) AS path
+         |      FROM r WHERE rn <= 5 GROUP BY 1, 2)
+         |SELECT path, COUNT(*) AS n_sessions FROM p GROUP BY 1
+         |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin),
 
     // sequential-pattern mining (frequent contiguous trigrams within
     // sessions): the ordered-sequence counterpart of q131's unordered
@@ -279,7 +381,7 @@ object EventQueries {
     // never a second shuffle), then ONE vocabulary-bounded aggregate;
     // the top-20 is a distributed TakeOrdered on the unique key
     // (support desc, e1, e2, e3), never a global sort.
-    "q150_session_trigrams" -> ((s, d) => {
+    QuerySpec("q150_session_trigrams", (s, d) => {
       val ws = Window.partitionBy(col("user_id"), col("sid"))
         .orderBy(col("tus"), col("event_id"))
       sessionized(ev(s, d))
@@ -291,7 +393,24 @@ object EventQueries {
         .filter(col("support") >= TrigramMinSupport)
         .orderBy(col("support").desc, col("e1"), col("e2"), col("e3"))
         .limit(20)
-    }),
+    },
+      s"""WITH e AS (SELECT user_id, event_id, event_type,
+         |                  epoch_ns(ts) // 1000 AS tus FROM events),
+         |m AS (SELECT *, CASE WHEN lag(tus) OVER w IS NULL
+         |                       OR tus - lag(tus) OVER w > $SessionGapUs
+         |                     THEN 1 ELSE 0 END AS ns
+         |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
+         |s AS (SELECT *, SUM(ns) OVER (PARTITION BY user_id ORDER BY tus, event_id
+         |                              ROWS UNBOUNDED PRECEDING) AS sid FROM m),
+         |t AS (SELECT event_type AS e1,
+         |             lead(event_type, 1) OVER ws AS e2,
+         |             lead(event_type, 2) OVER ws AS e3
+         |      FROM s WINDOW ws AS (PARTITION BY user_id, sid
+         |                           ORDER BY tus, event_id))
+         |SELECT e1, e2, e3, CAST(COUNT(*) AS BIGINT) AS support
+         |FROM t WHERE e3 IS NOT NULL
+         |GROUP BY 1, 2, 3 HAVING COUNT(*) >= $TrigramMinSupport
+         |ORDER BY support DESC, e1, e2, e3 LIMIT 20""".stripMargin),
 
     // time-weighted average (TWAP): each event's value holds until the
     // user's next event, so the average weights each value by its
@@ -301,7 +420,7 @@ object EventQueries {
     // DECIMAL(38,0) (cents × µs overflows BIGINT at fact scale), and
     // the single final division is IEEE-deterministic. One shuffle on
     // user_id; the lead() rides the same partitioning as the sum.
-    "q118_twap" -> ((s, d) => {
+    QuerySpec("q118_twap", (s, d) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("tus"), col("event_id"))
       ev(s, d)
         .select(col("user_id"), col("tus"), col("event_id"),
@@ -315,7 +434,19 @@ object EventQueries {
         .select(col("user_id"), col("n_events"), col("held_us"),
           (col("__wv").cast("double") / col("held_us").cast("double"))
             .as("twap_cents"))
-    }),
+    },
+      """WITH e AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS tus,
+        |                  CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v_c
+        |           FROM events),
+        |d AS (SELECT user_id, v_c,
+        |        COALESCE(lead(tus) OVER (PARTITION BY user_id
+        |                   ORDER BY tus, event_id) - tus, 0) AS dur
+        |      FROM e)
+        |SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
+        |       CAST(SUM(dur) AS BIGINT) AS held_us,
+        |       CAST(SUM(CAST(v_c AS HUGEINT) * dur) AS DOUBLE)
+        |         / CAST(SUM(dur) AS DOUBLE) AS twap_cents
+        |FROM d GROUP BY 1 HAVING SUM(dur) > 0""".stripMargin),
 
     // nearest-event join: for every event, the user's CLOSEST purchase
     // in either direction (ties break backward). One union, one
@@ -323,7 +454,7 @@ object EventQueries {
     // (operators.AsOfJoin.nearest). The oracle replays it as two
     // DuckDB ASOF joins (>= backward, <= forward) plus the same
     // integer-distance arbitration.
-    "q115_nearest_event" -> ((s, d) => {
+    QuerySpec("q115_nearest_event", (s, d) => {
       val e = ev(s, d).select(col("event_id"), col("user_id"), col("tus"))
       val purchases = ev(s, d)
         .filter(col("event_type") === "purchase")
@@ -335,11 +466,29 @@ object EventQueries {
         .select(col("event_id"), col("user_id"),
           col("ptus").as("nearest_purchase_us"), col("purchase_value"),
           abs(col("tus") - col("ptus")).as("dist_us"))
-    }),
+    },
+      """WITH e AS (SELECT event_id, user_id, epoch_ns(ts) // 1000 AS tus FROM events),
+        |p AS (SELECT user_id, epoch_ns(ts) // 1000 AS ptus, MAX(value) AS purchase_value
+        |      FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
+        |b AS (SELECT e.event_id, e.user_id, e.tus, p.ptus AS b_t, p.purchase_value AS b_v
+        |      FROM e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.tus >= p.ptus),
+        |f AS (SELECT e.event_id, p.ptus AS f_t, p.purchase_value AS f_v
+        |      FROM e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.tus <= p.ptus)
+        |SELECT b.event_id, b.user_id,
+        |  CASE WHEN b_t IS NULL THEN f_t
+        |       WHEN f_t IS NULL THEN b_t
+        |       WHEN f_t - tus < tus - b_t THEN f_t ELSE b_t END AS nearest_purchase_us,
+        |  CASE WHEN b_t IS NULL THEN f_v
+        |       WHEN f_t IS NULL THEN b_v
+        |       WHEN f_t - tus < tus - b_t THEN f_v ELSE b_v END AS purchase_value,
+        |  abs(tus - CASE WHEN b_t IS NULL THEN f_t
+        |                 WHEN f_t IS NULL THEN b_t
+        |                 WHEN f_t - tus < tus - b_t THEN f_t ELSE b_t END) AS dist_us
+        |FROM b JOIN f USING (event_id)""".stripMargin),
 
     // as-of join: for every event, the user's latest purchase at or
     // before that moment (null if none yet).
-    "q35_asof_join" -> ((s, d) => {
+    QuerySpec("q35_asof_join", (s, d) => {
       val e = ev(s, d).select(col("event_id"), col("user_id"), col("tus"))
       val purchases = ev(s, d)
         .filter(col("event_type") === "purchase")
@@ -350,7 +499,12 @@ object EventQueries {
         payload = Seq("ptus", "purchase_value"))
         .select(col("event_id"), col("user_id"),
           col("ptus").as("last_purchase_us"), col("purchase_value"))
-    }),
+    },
+      """WITH e AS (SELECT event_id, user_id, epoch_ns(ts) // 1000 AS tus FROM events),
+        |p AS (SELECT user_id, epoch_ns(ts) // 1000 AS ptus, MAX(value) AS purchase_value
+        |      FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
+        |SELECT e.event_id, e.user_id, p.ptus AS last_purchase_us, p.purchase_value
+        |FROM e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.tus >= p.ptus""".stripMargin),
 
     // linear multi-touch attribution: every purchase's cents are split
     // (floor) equally across that user's clicks in the prior 24 h;
@@ -361,7 +515,7 @@ object EventQueries {
     // bit-identically — the oracle mirrors Spark's trunc-toward-zero
     // `div` with the q136 CASE idiom, so a refund-valued purchase
     // (negative cents) cannot fork the engines on floor-vs-trunc.
-    "q142_attribution" -> ((s, d) => {
+    QuerySpec("q142_attribution", (s, d) => {
       val cents = expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)")
       val p = ev(s, d).filter(col("event_type") === "purchase")
         .select(col("user_id"), col("event_id").as("p_id"),
@@ -379,7 +533,24 @@ object EventQueries {
         .groupBy(col("c_id"), col("user_id"))
         .agg(count(lit(1)).cast("bigint").as("n_credits"),
           sum(col("credit")).cast("bigint").as("credit_cents"))
-    }),
+    },
+      s"""WITH e AS (
+         |  SELECT event_id, user_id, event_type, epoch_ns(ts) // 1000 AS tus,
+         |         CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents
+         |  FROM events),
+         |p AS (SELECT user_id, event_id AS p_id, tus AS p_t, cents
+         |      FROM e WHERE event_type = 'purchase'),
+         |c AS (SELECT user_id, event_id AS c_id, tus AS c_t
+         |      FROM e WHERE event_type = 'click'),
+         |pr AS (SELECT p.user_id, p_id, c_id, cents,
+         |              COUNT(*) OVER (PARTITION BY p_id) AS n_touch
+         |       FROM p JOIN c ON p.user_id = c.user_id
+         |        AND c_t < p_t AND c_t >= p_t - $AttrWindowUs)
+         |SELECT c_id, user_id, CAST(COUNT(*) AS BIGINT) AS n_credits,
+         |       CAST(SUM(CASE WHEN cents >= 0 THEN cents // n_touch
+         |                     ELSE -((-cents) // n_touch) END) AS BIGINT)
+         |         AS credit_cents
+         |FROM pr GROUP BY 1, 2""".stripMargin),
 
     // inter-arrival gap histogram — the empirical basis for the
     // session-gap threshold (SessionGapUs = 2 h, q33) and for
@@ -389,7 +560,7 @@ object EventQueries {
     // x% of consecutive pairs"). The gap is ONE per-user lag window
     // (partition-parallel); only the ≤49-row bucket table crosses a
     // single-partition frame.
-    "q144_gap_histogram" -> ((s, d) => {
+    QuerySpec("q144_gap_histogram", (s, d) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("tus"), col("event_id"))
       val buckets = ev(s, d)
@@ -411,217 +582,7 @@ object EventQueries {
           wAll.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
         .select(col("bucket_h"), col("n").cast("bigint").as("n"),
           expr("cum * 1000000L div total").cast("bigint").as("cum_share_e6"))
-    })
-  )
-
-  /** q142's attribution lookback (24 h in epoch micros; shared by
-    * Spark + oracle SQL). */
-  private val AttrWindowUs: Long = 86400000000L
-
-  def oracleSql: Map[String, String] = Map(
-
-    "q33_sessions" ->
-      s"""WITH e AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS tus FROM events),
-         |m AS (SELECT user_id, event_id, tus,
-         |        CASE WHEN lag(tus) OVER w IS NULL
-         |               OR tus - lag(tus) OVER w > $SessionGapUs THEN 1 ELSE 0 END AS ns
-         |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
-         |s AS (SELECT user_id, tus,
-         |        CAST(SUM(ns) OVER (PARTITION BY user_id ORDER BY tus, event_id
-         |                           ROWS UNBOUNDED PRECEDING) AS INT) AS session_id
-         |      FROM m)
-         |SELECT user_id, session_id, COUNT(*) AS n_events,
-         |       MIN(tus) AS session_start_us, MAX(tus) AS session_end_us
-         |FROM s GROUP BY 1, 2""".stripMargin,
-
-    "q34_json_extract" ->
-      """SELECT event_type, COUNT(*) AS n,
-        | CAST(SUM(CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT) AS sum_k,
-        | MAX(CAST(json_extract_string(props, '$.k') AS INT)) AS max_k
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q60_funnel" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_ns(ts) // 1000 AS tus FROM events),
-        |v AS (SELECT user_id, MIN(tus) AS v_t FROM e WHERE event_type = 'view' GROUP BY 1),
-        |c AS (SELECT e.user_id, MIN(tus) AS c_t FROM e JOIN v USING (user_id)
-        |      WHERE event_type = 'click' AND tus > v_t GROUP BY 1),
-        |p AS (SELECT e.user_id, MIN(tus) AS p_t FROM e JOIN c USING (user_id)
-        |      WHERE event_type = 'purchase' AND tus > c_t GROUP BY 1)
-        |SELECT CAST(CASE WHEN p_t IS NOT NULL THEN 3
-        |                 WHEN c_t IS NOT NULL THEN 2
-        |                 WHEN v_t IS NOT NULL THEN 1 ELSE 0 END AS INT) AS stage,
-        |       COUNT(*) AS n_users
-        |FROM (SELECT DISTINCT user_id FROM e) u
-        |LEFT JOIN v USING (user_id)
-        |LEFT JOIN c USING (user_id)
-        |LEFT JOIN p USING (user_id)
-        |GROUP BY 1""".stripMargin,
-
-    "q61_cohorts" ->
-      """WITH e AS (SELECT user_id, CAST(date_trunc('month', ts) AS DATE) AS m FROM events),
-        |ch AS (SELECT user_id, MIN(m) AS cohort_month FROM e GROUP BY 1)
-        |SELECT cohort_month, m AS active_month, COUNT(DISTINCT e.user_id) AS n_users
-        |FROM e JOIN ch USING (user_id)
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q35_asof_join" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_ns(ts) // 1000 AS tus FROM events),
-        |p AS (SELECT user_id, epoch_ns(ts) // 1000 AS ptus, MAX(value) AS purchase_value
-        |      FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-        |SELECT e.event_id, e.user_id, p.ptus AS last_purchase_us, p.purchase_value
-        |FROM e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.tus >= p.ptus""".stripMargin,
-
-    "q105_conversion_latency" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_ns(ts) // 1000 AS tus FROM events),
-        |v AS (SELECT user_id, MIN(tus) AS v_t FROM e WHERE event_type = 'view' GROUP BY 1),
-        |c AS (SELECT e.user_id, MIN(tus) AS c_t FROM e JOIN v USING (user_id)
-        |      WHERE event_type = 'click' AND tus > v_t GROUP BY 1),
-        |p AS (SELECT e.user_id, MIN(tus) AS p_t FROM e JOIN c USING (user_id)
-        |      WHERE event_type = 'purchase' AND tus > c_t GROUP BY 1)
-        |SELECT p.user_id, v.v_t AS view_us, p.p_t AS purchase_us,
-        |       p.p_t - v.v_t AS latency_us
-        |FROM p JOIN v USING (user_id)""".stripMargin,
-
-    "q106_rate_anomaly" ->
-      """WITH h AS (
-        |  SELECT event_type, (epoch_ns(ts) // 1000) // 3600000000 AS hus,
-        |         COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2)
-        |SELECT event_type, hus, n,
-        |  CAST(SUM(n) OVER w AS BIGINT) AS prior_n,
-        |  CAST(COUNT(n) OVER w AS INT) AS prior_hours,
-        |  COALESCE(COUNT(n) OVER w = 24 AND n * 24 > SUM(n) OVER w * 2, FALSE) AS is_burst
-        |FROM h
-        |WINDOW w AS (PARTITION BY event_type ORDER BY hus
-        |             ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)""".stripMargin,
-
-    "q118_twap" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS tus,
-        |                  CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v_c
-        |           FROM events),
-        |d AS (SELECT user_id, v_c,
-        |        COALESCE(lead(tus) OVER (PARTITION BY user_id
-        |                   ORDER BY tus, event_id) - tus, 0) AS dur
-        |      FROM e)
-        |SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-        |       CAST(SUM(dur) AS BIGINT) AS held_us,
-        |       CAST(SUM(CAST(v_c AS HUGEINT) * dur) AS DOUBLE)
-        |         / CAST(SUM(dur) AS DOUBLE) AS twap_cents
-        |FROM d GROUP BY 1 HAVING SUM(dur) > 0""".stripMargin,
-
-    "q115_nearest_event" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_ns(ts) // 1000 AS tus FROM events),
-        |p AS (SELECT user_id, epoch_ns(ts) // 1000 AS ptus, MAX(value) AS purchase_value
-        |      FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        |b AS (SELECT e.event_id, e.user_id, e.tus, p.ptus AS b_t, p.purchase_value AS b_v
-        |      FROM e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.tus >= p.ptus),
-        |f AS (SELECT e.event_id, p.ptus AS f_t, p.purchase_value AS f_v
-        |      FROM e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.tus <= p.ptus)
-        |SELECT b.event_id, b.user_id,
-        |  CASE WHEN b_t IS NULL THEN f_t
-        |       WHEN f_t IS NULL THEN b_t
-        |       WHEN f_t - tus < tus - b_t THEN f_t ELSE b_t END AS nearest_purchase_us,
-        |  CASE WHEN b_t IS NULL THEN f_v
-        |       WHEN f_t IS NULL THEN b_v
-        |       WHEN f_t - tus < tus - b_t THEN f_v ELSE b_v END AS purchase_value,
-        |  abs(tus - CASE WHEN b_t IS NULL THEN f_t
-        |                 WHEN f_t IS NULL THEN b_t
-        |                 WHEN f_t - tus < tus - b_t THEN f_t ELSE b_t END) AS dist_us
-        |FROM b JOIN f USING (event_id)""".stripMargin,
-
-    "q113_session_paths" ->
-      s"""WITH e AS (SELECT user_id, event_id, event_type AS et,
-         |                  epoch_ns(ts) // 1000 AS tus FROM events),
-         |m AS (SELECT *, CASE WHEN lag(tus) OVER w IS NULL
-         |                       OR tus - lag(tus) OVER w > $SessionGapUs
-         |                     THEN 1 ELSE 0 END AS ns
-         |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
-         |s AS (SELECT *, SUM(ns) OVER (PARTITION BY user_id ORDER BY tus, event_id
-         |                              ROWS UNBOUNDED PRECEDING) AS sid FROM m),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY user_id, sid
-         |                                   ORDER BY tus, event_id) AS rn FROM s),
-         |p AS (SELECT user_id, sid,
-         |             string_agg(et, '>' ORDER BY tus, event_id) AS path
-         |      FROM r WHERE rn <= 5 GROUP BY 1, 2)
-         |SELECT path, COUNT(*) AS n_sessions FROM p GROUP BY 1
-         |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin,
-
-    "q150_session_trigrams" ->
-      s"""WITH e AS (SELECT user_id, event_id, event_type,
-         |                  epoch_ns(ts) // 1000 AS tus FROM events),
-         |m AS (SELECT *, CASE WHEN lag(tus) OVER w IS NULL
-         |                       OR tus - lag(tus) OVER w > $SessionGapUs
-         |                     THEN 1 ELSE 0 END AS ns
-         |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
-         |s AS (SELECT *, SUM(ns) OVER (PARTITION BY user_id ORDER BY tus, event_id
-         |                              ROWS UNBOUNDED PRECEDING) AS sid FROM m),
-         |t AS (SELECT event_type AS e1,
-         |             lead(event_type, 1) OVER ws AS e2,
-         |             lead(event_type, 2) OVER ws AS e3
-         |      FROM s WINDOW ws AS (PARTITION BY user_id, sid
-         |                           ORDER BY tus, event_id))
-         |SELECT e1, e2, e3, CAST(COUNT(*) AS BIGINT) AS support
-         |FROM t WHERE e3 IS NOT NULL
-         |GROUP BY 1, 2, 3 HAVING COUNT(*) >= $TrigramMinSupport
-         |ORDER BY support DESC, e1, e2, e3 LIMIT 20""".stripMargin,
-
-    "q122_event_diversity" ->
-      """WITH c AS (SELECT user_id, event_type, COUNT(*) AS n
-        |           FROM events GROUP BY 1, 2)
-        |SELECT user_id, CAST(SUM(n) AS BIGINT) AS n_events,
-        |       CAST(COUNT(*) AS BIGINT) AS n_types,
-        |       CAST(SUM(n) * SUM(n) - SUM(n * n) AS DOUBLE)
-        |         / CAST(SUM(n) * SUM(n) AS DOUBLE) AS gini_impurity
-        |FROM c GROUP BY 1""".stripMargin,
-
-    "q116_change_points" ->
-      """WITH h AS (
-        |  SELECT event_type, (epoch_ns(ts) // 1000) // 3600000000 AS hus,
-        |         COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |g AS (SELECT *,
-        |        SUM(n) OVER (PARTITION BY event_type) AS total,
-        |        COUNT(n) OVER (PARTITION BY event_type) AS hh
-        |      FROM h)
-        |SELECT event_type, hus, n,
-        |  CAST(SUM(n * hh - total) OVER (PARTITION BY event_type ORDER BY hus
-        |       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_dev_scaled,
-        |  abs(CAST(SUM(n * hh - total) OVER (PARTITION BY event_type ORDER BY hus
-        |       ROWS UNBOUNDED PRECEDING) AS BIGINT)) * 10 > total * hh AS is_shift
-        |FROM g""".stripMargin,
-
-    "q107_markov_transitions" ->
-      """WITH t AS (
-        |  SELECT event_type AS from_type,
-        |         lead(event_type) OVER (PARTITION BY user_id
-        |           ORDER BY epoch_ns(ts) // 1000, event_id) AS to_type
-        |  FROM events),
-        |c AS (SELECT from_type, to_type, COUNT(*) AS n
-        |      FROM t WHERE to_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT from_type, to_type, n,
-        |       CAST(n AS DOUBLE) / SUM(n) OVER (PARTITION BY from_type) AS p
-        |FROM c""".stripMargin,
-
-    "q142_attribution" ->
-      s"""WITH e AS (
-         |  SELECT event_id, user_id, event_type, epoch_ns(ts) // 1000 AS tus,
-         |         CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents
-         |  FROM events),
-         |p AS (SELECT user_id, event_id AS p_id, tus AS p_t, cents
-         |      FROM e WHERE event_type = 'purchase'),
-         |c AS (SELECT user_id, event_id AS c_id, tus AS c_t
-         |      FROM e WHERE event_type = 'click'),
-         |pr AS (SELECT p.user_id, p_id, c_id, cents,
-         |              COUNT(*) OVER (PARTITION BY p_id) AS n_touch
-         |       FROM p JOIN c ON p.user_id = c.user_id
-         |        AND c_t < p_t AND c_t >= p_t - $AttrWindowUs)
-         |SELECT c_id, user_id, CAST(COUNT(*) AS BIGINT) AS n_credits,
-         |       CAST(SUM(CASE WHEN cents >= 0 THEN cents // n_touch
-         |                     ELSE -((-cents) // n_touch) END) AS BIGINT)
-         |         AS credit_cents
-         |FROM pr GROUP BY 1, 2""".stripMargin,
-
-    "q144_gap_histogram" ->
+    },
       """WITH e AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS tus
         |           FROM events),
         |l AS (SELECT tus - lag(tus, 1) OVER (PARTITION BY user_id
@@ -635,6 +596,10 @@ object EventQueries {
         |       CAST(CAST(SUM(n) OVER (ORDER BY bucket_h
         |              ROWS UNBOUNDED PRECEDING) AS BIGINT)
         |            * 1000000 // t.total AS BIGINT) AS cum_share_e6
-        |FROM b, t""".stripMargin
+        |FROM b, t""".stripMargin)
   )
+
+  /** q142's attribution lookback (24 h in epoch micros; shared by
+    * Spark + oracle SQL). */
+  private val AttrWindowUs: Long = 86400000000L
 }

@@ -73,8 +73,8 @@ object PipelineQueries {
   private def docs(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "documents")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q100_corpus_pipeline" -> ((s, d) => {
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q100_corpus_pipeline", (s, d) => {
       // ---- stage 0: ingest (base + planted victims, one family/stage)
       val base = docs(s, d).select(
         col("doc_id"),
@@ -195,34 +195,7 @@ object PipelineQueries {
           qz.agg(countDistinct(col("codes_str")).as("n"))))
         .unionAll(stage(7, "pack",
           packed.agg(countDistinct(col("lang"), col("seq_id")).as("n"))))
-    })
-  )
-
-  // ------------------------------------------------------------- oracle SQL
-
-  private val K = 3; private val H = 12; private val B = 4; private val Tau = 0.5
-
-  private def duckShingles(k: Int): String =
-    s"CASE WHEN len(ws) >= $k THEN list_distinct(list_transform(range(0, len(ws) - ${k - 1}), " +
-      s"i -> array_to_string(list_slice(ws, i + 1, i + $k), ' '))) ELSE CAST([] AS VARCHAR[]) END"
-
-  private val duckJaccard =
-    "CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / CAST(len(list_distinct(list_concat(sa.sh, sb.sh))) AS DOUBLE)"
-
-  private val duckCos =
-    """SUM(CAST(a.embedding[i.i] AS DOUBLE) * CAST(b.embedding[i.i] AS DOUBLE)) /
-      | (sqrt(SUM(CAST(a.embedding[i.i] AS DOUBLE) * CAST(a.embedding[i.i] AS DOUBLE))) *
-      |  sqrt(SUM(CAST(b.embedding[i.i] AS DOUBLE) * CAST(b.embedding[i.i] AS DOUBLE))))""".stripMargin
-
-  private val duckWsTokens =
-    "CASE WHEN text IS NULL OR trim(text) = '' THEN 0 ELSE len(regexp_split_to_array(trim(text), '\\s+')) END"
-
-  private val duckPunctRatio =
-    "CASE WHEN text IS NULL OR length(text) = 0 THEN 0.0 ELSE " +
-      "CAST(len(regexp_extract_all(lower(text), '[^a-z0-9\\s]')) AS DOUBLE) / CAST(length(text) AS DOUBLE) END"
-
-  def oracleSql: Map[String, String] = Map(
-    "q100_corpus_pipeline" -> {
+    }, {
       val mins = (1 to H).map(h =>
         s"list_aggregate(list_transform(sh, s -> md5('$h:' || s)), 'min')")
       val bandExprs = (0 until B).map { bi =>
@@ -315,6 +288,29 @@ object PipelineQueries {
          |UNION ALL SELECT 5, 'semantic', COUNT(*) FROM sem
          |UNION ALL SELECT 6, 'quantize', COUNT(DISTINCT codes_str) FROM codes
          |UNION ALL SELECT 7, 'pack', (SELECT COUNT(*) FROM (SELECT DISTINCT lang, seq_id FROM pk))""".stripMargin
-    }
+    })
   )
+
+  // ------------------------------------------------------------- oracle SQL
+
+  private val K = 3; private val H = 12; private val B = 4; private val Tau = 0.5
+
+  private def duckShingles(k: Int): String =
+    s"CASE WHEN len(ws) >= $k THEN list_distinct(list_transform(range(0, len(ws) - ${k - 1}), " +
+      s"i -> array_to_string(list_slice(ws, i + 1, i + $k), ' '))) ELSE CAST([] AS VARCHAR[]) END"
+
+  private val duckJaccard =
+    "CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / CAST(len(list_distinct(list_concat(sa.sh, sb.sh))) AS DOUBLE)"
+
+  private val duckCos =
+    """SUM(CAST(a.embedding[i.i] AS DOUBLE) * CAST(b.embedding[i.i] AS DOUBLE)) /
+      | (sqrt(SUM(CAST(a.embedding[i.i] AS DOUBLE) * CAST(a.embedding[i.i] AS DOUBLE))) *
+      |  sqrt(SUM(CAST(b.embedding[i.i] AS DOUBLE) * CAST(b.embedding[i.i] AS DOUBLE))))""".stripMargin
+
+  private val duckWsTokens =
+    "CASE WHEN text IS NULL OR trim(text) = '' THEN 0 ELSE len(regexp_split_to_array(trim(text), '\\s+')) END"
+
+  private val duckPunctRatio =
+    "CASE WHEN text IS NULL OR length(text) = 0 THEN 0.0 ELSE " +
+      "CAST(len(regexp_extract_all(lower(text), '[^a-z0-9\\s]')) AS DOUBLE) / CAST(length(text) AS DOUBLE) END"
 }

@@ -23,38 +23,52 @@ object RelationalQueries {
       .toDF("band", "lo", "hi")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def specs: Seq[QuerySpec] = Seq(
 
     // pivot: order totals by priority (rows) × year (columns).
-    "q36_pivot" -> ((s, d) =>
+    QuerySpec("q36_pivot", (s, d) =>
       Tables(s, d, "orders")
         .groupBy(col("o_orderpriority"))
         .pivot(year(col("o_orderdate")).cast("int"), Seq(1995, 1996, 1997))
         .agg(sum(dec(col("o_totalprice"))).cast("double"))
-        .withColumnsRenamed(Map("1995" -> "y1995", "1996" -> "y1996", "1997" -> "y1997"))),
+        .withColumnsRenamed(Map("1995" -> "y1995", "1996" -> "y1996", "1997" -> "y1997")),
+      """SELECT o_orderpriority,
+        | CAST(SUM(CASE WHEN year(o_orderdate) = 1995 THEN CAST(o_totalprice AS DECIMAL(12,2)) END) AS DOUBLE) AS y1995,
+        | CAST(SUM(CASE WHEN year(o_orderdate) = 1996 THEN CAST(o_totalprice AS DECIMAL(12,2)) END) AS DOUBLE) AS y1996,
+        | CAST(SUM(CASE WHEN year(o_orderdate) = 1997 THEN CAST(o_totalprice AS DECIMAL(12,2)) END) AS DOUBLE) AS y1997
+        |FROM orders GROUP BY 1""".stripMargin),
 
     // INTERSECT: customers active in both 1995 and 1996.
-    "q37_intersect" -> ((s, d) => {
+    QuerySpec("q37_intersect", (s, d) => {
       val o = Tables(s, d, "orders")
       def yr(y: Int) = o.filter(year(col("o_orderdate")) === y)
         .select(col("o_custkey"))
       yr(1995).intersect(yr(1996))
-    }),
+    },
+      """SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
+        |INTERSECT
+        |SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996""".stripMargin),
 
     // non-equi range join: price bands × parts (small band table
     // broadcasts; the nested-loop scan is the right plan for a tiny
     // non-equi build side).
-    "q38_range_join" -> ((s, d) => {
+    QuerySpec("q38_range_join", (s, d) => {
       val bands = priceBands(s)
       Tables(s, d, "part").join(broadcast(bands),
         col("p_retailprice") >= col("lo") && col("p_retailprice") < col("hi"))
         .groupBy(col("band"))
         .agg(count(lit(1)).as("n_parts"),
           sum(dec(col("p_retailprice"))).cast("double").as("total_price"))
-    }),
+    },
+      """WITH bands(band, lo, hi) AS (
+        |  VALUES ('low', 0.0, 930.0), ('mid', 930.0, 970.0), ('high', 970.0, 99999.0))
+        |SELECT band, COUNT(*) AS n_parts,
+        | CAST(SUM(CAST(p_retailprice AS DECIMAL(12,2))) AS DOUBLE) AS total_price
+        |FROM part JOIN bands ON p_retailprice >= lo AND p_retailprice < hi
+        |GROUP BY 1""".stripMargin),
 
     // window family: rank/dense_rank/lag/lead/running sum per group.
-    "q39_window_suite" -> ((s, d) => {
+    QuerySpec("q39_window_suite", (s, d) => {
       val w = Window.partitionBy(col("o_custkey")).orderBy(col("o_orderdate"), col("o_orderkey"))
       val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       Tables(s, d, "orders")
@@ -66,7 +80,17 @@ object RelationalQueries {
           lag(col("o_orderkey"), 1).over(w).as("prev_order"),
           lead(col("o_orderkey"), 1).over(w).as("next_order"),
           sum(dec(col("o_totalprice"))).over(cum).cast("double").as("running_total"))
-    }),
+    },
+      """SELECT o_custkey, o_orderkey,
+        | CAST(rank() OVER w AS INT) AS rnk,
+        | CAST(dense_rank() OVER w AS INT) AS drnk,
+        | lag(o_orderkey) OVER w AS prev_order,
+        | lead(o_orderkey) OVER w AS next_order,
+        | CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2)))
+        |      OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+        |            ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running_total
+        |FROM orders WHERE o_custkey < 200
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""".stripMargin),
 
     // bloom-pruned join: the probe (lineitem) is filtered by a bloom
     // sketch of the selective build side's keys BEFORE the join
@@ -74,7 +98,7 @@ object RelationalQueries {
     // (operators.BloomJoin). False positives are discarded by the
     // exact join, so the result is identical to the plain join the
     // oracle runs; only shuffle volume differs.
-    "q72_bloom_join" -> ((s, d) => {
+    QuerySpec("q72_bloom_join", (s, d) => {
       val probe = Tables(s, d, "lineitem")
       val build = Tables(s, d, "orders")
         .filter(col("o_orderpriority") === "1-URGENT" && col("o_custkey") < 500)
@@ -84,7 +108,14 @@ object RelationalQueries {
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n_rows"),
           sum(col("l_quantity").cast("bigint")).as("sum_qty"))
-    }),
+    },
+      """SELECT l_returnflag, COUNT(*) AS n_rows,
+        | CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
+        |FROM lineitem
+        |JOIN (SELECT o_orderkey FROM orders
+        |      WHERE o_orderpriority = '1-URGENT' AND o_custkey < 500) o
+        |  ON l_orderkey = o.o_orderkey
+        |GROUP BY 1""".stripMargin),
 
     // the SCALABLE range join (operators.RangeJoin): same semantics as
     // q38, executed as a bucket equi-join + exact verify instead of a
@@ -92,14 +123,20 @@ object RelationalQueries {
     // too big to broadcast. Bucket overlap is a candidate superset;
     // the exact predicate decides, so results == the plain non-equi
     // join the oracle runs.
-    "q86_range_binned" -> ((s, d) => {
+    QuerySpec("q86_range_binned", (s, d) => {
       graft.operators.RangeJoin.binnedPointJoin(
         Tables(s, d, "part"), priceBands(s), "p_retailprice", "lo", "hi",
         binWidth = 100.0)
         .groupBy(col("band"))
         .agg(count(lit(1)).as("n_parts"),
           sum(dec(col("p_retailprice"))).cast("double").as("total_price"))
-    }),
+    },
+      """WITH bands(band, lo, hi) AS (
+        |  VALUES ('low', 0.0, 930.0), ('mid', 930.0, 970.0), ('high', 970.0, 99999.0))
+        |SELECT band, COUNT(*) AS n_parts,
+        | CAST(SUM(CAST(p_retailprice AS DECIMAL(12,2))) AS DOUBLE) AS total_price
+        |FROM part JOIN bands ON p_retailprice >= lo AND p_retailprice < hi
+        |GROUP BY 1""".stripMargin),
 
     // interval-OVERLAP join (RangeJoin.binnedOverlapJoin): week-long
     // order windows × 10-day order windows from two customer strata —
@@ -107,7 +144,7 @@ object RelationalQueries {
     // bookings) q86's point-in-interval rewrite doesn't cover. The
     // canonical-bucket dedup keeps each true pair exactly once, so the
     // oracle is the plain non-equi overlap join.
-    "q91_interval_overlap" -> ((s, d) => {
+    QuerySpec("q91_interval_overlap", (s, d) => {
       val o = Tables(s, d, "orders")
       def day(c: org.apache.spark.sql.Column) =
         datediff(to_date(c), to_date(lit("1992-01-01")))
@@ -122,7 +159,19 @@ object RelationalQueries {
       graft.operators.RangeJoin.binnedOverlapJoin(l, r,
         "l_lo", "l_hi", "r_lo", "r_hi", binWidth = 8.0)
         .select(col("l_id"), col("r_id"))
-    }),
+    },
+      """WITH l AS (
+        |  SELECT o_orderkey AS l_id,
+        |         date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS l_lo,
+        |         date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) + 7 AS l_hi
+        |  FROM orders WHERE o_custkey % 100 = 0),
+        |r AS (
+        |  SELECT o_orderkey AS r_id,
+        |         date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS r_lo,
+        |         date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) + 10 AS r_hi
+        |  FROM orders WHERE o_custkey % 97 = 0)
+        |SELECT l_id, r_id
+        |FROM l JOIN r ON l_lo < r_hi AND r_lo < l_hi""".stripMargin),
 
     // join-key skew probe: the diagnostic a planner (or an operator
     // choosing a salt factor — q32's input) runs BEFORE a big join.
@@ -142,7 +191,7 @@ object RelationalQueries {
     // Spark `bucketBy`). The only exchange in the whole plan is the
     // tiny post-join priority aggregate — PlanSpec-pinned. Values are
     // layout-independent, so the oracle is the plain join-agg.
-    "q146_bucketed_join" -> ((s, d) => {
+    QuerySpec("q146_bucketed_join", (s, d) => {
       val root = java.nio.file.Files.createTempDirectory("graft_q146")
       CoreQueries.cleanupAtExit(root)
       // table names carry the per-invocation temp-dir token: two
@@ -174,7 +223,13 @@ object RelationalQueries {
       s.sql(s"DROP TABLE IF EXISTS ${tok}_li")
       s.sql(s"DROP TABLE IF EXISTS ${tok}_ord")
       out
-    }),
+    },
+      """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_rows,
+        | CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT))
+        |      AS BIGINT) AS rev_cents
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY 1""".stripMargin,
+      writesTables = true),
 
     // dynamic partition pruning (the third classic layout lever after
     // q146's bucketing and q80's z-order): the fact is written
@@ -195,7 +250,7 @@ object RelationalQueries {
     // page-cache/IO weather far more than its neighbors; the DPP
     // probe itself stays pruned (PlanSpec). The committed r16
     // artifact carries the mid-band 5.96 standalone reading.
-    "q148_dpp_prune" -> ((s, d) => {
+    QuerySpec("q148_dpp_prune", (s, d) => {
       val root = java.nio.file.Files.createTempDirectory("graft_q148")
       CoreQueries.cleanupAtExit(root)
       // plain hive-layout parquet, not saveAsTable: DPP fires on any
@@ -223,9 +278,20 @@ object RelationalQueries {
         .join(broadcast(dim.filter(col("tag") === "hot")), "oyear")
         .groupBy(col("oyear"))
         .agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("rev_cents"))
-    }),
+    },
+      """WITH dim(oyear, tag) AS (VALUES
+        |  (1992,'cold'),(1993,'cold'),(1994,'cold'),(1995,'hot'),
+        |  (1996,'hot'),(1997,'cold'),(1998,'cold'))
+        |SELECT CAST(year(CAST(o_orderdate AS DATE)) AS INT) AS oyear,
+        | CAST(COUNT(*) AS BIGINT) AS n_orders,
+        | CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT))
+        |      AS BIGINT) AS rev_cents
+        |FROM orders JOIN dim ON year(CAST(o_orderdate AS DATE)) = dim.oyear
+        |WHERE tag = 'hot'
+        |GROUP BY 1""".stripMargin,
+      writesTables = true),
 
-    "q145_skew_probe" -> ((s, d) => {
+    QuerySpec("q145_skew_probe", (s, d) => {
       val counts = Tables(s, d, "lineitem")
         .groupBy(col("l_suppkey").as("k")).agg(count(lit(1)).as("n"))
       counts.agg(
@@ -238,94 +304,7 @@ object RelationalQueries {
           expr("max_n * 100L * n_keys div total_rows"))
         .withColumn("rec_salt",
           expr("(max_n * n_keys + total_rows - 1L) div total_rows"))
-    })
-  )
-
-  def oracleSql: Map[String, String] = Map(
-
-    "q36_pivot" ->
-      """SELECT o_orderpriority,
-        | CAST(SUM(CASE WHEN year(o_orderdate) = 1995 THEN CAST(o_totalprice AS DECIMAL(12,2)) END) AS DOUBLE) AS y1995,
-        | CAST(SUM(CASE WHEN year(o_orderdate) = 1996 THEN CAST(o_totalprice AS DECIMAL(12,2)) END) AS DOUBLE) AS y1996,
-        | CAST(SUM(CASE WHEN year(o_orderdate) = 1997 THEN CAST(o_totalprice AS DECIMAL(12,2)) END) AS DOUBLE) AS y1997
-        |FROM orders GROUP BY 1""".stripMargin,
-
-    "q37_intersect" ->
-      """SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
-        |INTERSECT
-        |SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996""".stripMargin,
-
-    "q38_range_join" ->
-      """WITH bands(band, lo, hi) AS (
-        |  VALUES ('low', 0.0, 930.0), ('mid', 930.0, 970.0), ('high', 970.0, 99999.0))
-        |SELECT band, COUNT(*) AS n_parts,
-        | CAST(SUM(CAST(p_retailprice AS DECIMAL(12,2))) AS DOUBLE) AS total_price
-        |FROM part JOIN bands ON p_retailprice >= lo AND p_retailprice < hi
-        |GROUP BY 1""".stripMargin,
-
-    "q39_window_suite" ->
-      """SELECT o_custkey, o_orderkey,
-        | CAST(rank() OVER w AS INT) AS rnk,
-        | CAST(dense_rank() OVER w AS INT) AS drnk,
-        | lag(o_orderkey) OVER w AS prev_order,
-        | lead(o_orderkey) OVER w AS next_order,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2)))
-        |      OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |            ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running_total
-        |FROM orders WHERE o_custkey < 200
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""".stripMargin,
-
-    "q72_bloom_join" ->
-      """SELECT l_returnflag, COUNT(*) AS n_rows,
-        | CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-        |FROM lineitem
-        |JOIN (SELECT o_orderkey FROM orders
-        |      WHERE o_orderpriority = '1-URGENT' AND o_custkey < 500) o
-        |  ON l_orderkey = o.o_orderkey
-        |GROUP BY 1""".stripMargin,
-
-    "q86_range_binned" ->
-      """WITH bands(band, lo, hi) AS (
-        |  VALUES ('low', 0.0, 930.0), ('mid', 930.0, 970.0), ('high', 970.0, 99999.0))
-        |SELECT band, COUNT(*) AS n_parts,
-        | CAST(SUM(CAST(p_retailprice AS DECIMAL(12,2))) AS DOUBLE) AS total_price
-        |FROM part JOIN bands ON p_retailprice >= lo AND p_retailprice < hi
-        |GROUP BY 1""".stripMargin,
-
-    "q91_interval_overlap" ->
-      """WITH l AS (
-        |  SELECT o_orderkey AS l_id,
-        |         date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS l_lo,
-        |         date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) + 7 AS l_hi
-        |  FROM orders WHERE o_custkey % 100 = 0),
-        |r AS (
-        |  SELECT o_orderkey AS r_id,
-        |         date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS r_lo,
-        |         date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) + 10 AS r_hi
-        |  FROM orders WHERE o_custkey % 97 = 0)
-        |SELECT l_id, r_id
-        |FROM l JOIN r ON l_lo < r_hi AND r_lo < l_hi""".stripMargin,
-
-    "q146_bucketed_join" ->
-      """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_rows,
-        | CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT))
-        |      AS BIGINT) AS rev_cents
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1""".stripMargin,
-
-    "q148_dpp_prune" ->
-      """WITH dim(oyear, tag) AS (VALUES
-        |  (1992,'cold'),(1993,'cold'),(1994,'cold'),(1995,'hot'),
-        |  (1996,'hot'),(1997,'cold'),(1998,'cold'))
-        |SELECT CAST(year(CAST(o_orderdate AS DATE)) AS INT) AS oyear,
-        | CAST(COUNT(*) AS BIGINT) AS n_orders,
-        | CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT))
-        |      AS BIGINT) AS rev_cents
-        |FROM orders JOIN dim ON year(CAST(o_orderdate AS DATE)) = dim.oyear
-        |WHERE tag = 'hot'
-        |GROUP BY 1""".stripMargin,
-
-    "q145_skew_probe" ->
+    },
       """WITH c AS (SELECT l_suppkey AS k, CAST(COUNT(*) AS BIGINT) AS n
         |           FROM lineitem GROUP BY 1),
         |a AS (SELECT CAST(SUM(n) AS BIGINT) AS total_rows,
@@ -337,6 +316,6 @@ object RelationalQueries {
         |       CAST(max_n * 100 * n_keys // total_rows AS BIGINT) AS skew_e2,
         |       CAST((max_n * n_keys + total_rows - 1) // total_rows AS BIGINT)
         |         AS rec_salt
-        |FROM a, h""".stripMargin
+        |FROM a, h""".stripMargin)
   )
 }

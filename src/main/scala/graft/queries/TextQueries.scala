@@ -29,7 +29,7 @@ object TextQueries {
   private val BpeMerges = Seq("t" -> "h", "th" -> "e", "e" -> "r",
     "a" -> "n", "i" -> "n", "o" -> "n", "r" -> "e", "e" -> "s")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def specs: Seq[QuerySpec] = Seq(
 
     // ONE fused pass (native text_stats struct) instead of four
     // regexp/split passes over each document — this was the 10x
@@ -38,7 +38,7 @@ object TextQueries {
     // int-count inputs, same single IEEE division, same thresholds),
     // and TextFunctionsSpec pins the native struct against the
     // composed forms, whitespace quirks included.
-    "q16_text_stats" -> ((s, d) => {
+    QuerySpec("q16_text_stats", (s, d) => {
       val ts = graft.expressions.TextExpressions.textStats(col("text"))
       val ratio = when(col("ts.n_chars") === 0, lit(0.0))
         .otherwise(col("ts.n_punct").cast("double") /
@@ -52,24 +52,41 @@ object TextQueries {
           ratio.as("punct_ratio"),
           (col("ts.n_ws_tokens") >= MinKeepTokens &&
             ratio < MaxPunctRatio).as("keep"))
-    }),
+    },
+      s"""SELECT doc_id,
+         | $duckWsTokens AS n_ws_tokens,
+         | len(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\\s]')) AS n_tokens,
+         | $duckPunct AS n_punct,
+         | $duckPunctRatio AS punct_ratio,
+         | ($duckWsTokens >= $MinKeepTokens AND $duckPunctRatio < $MaxPunctRatio) AS keep
+         |FROM documents""".stripMargin),
 
-    "q17_lang_id" -> ((s, d) =>
+    QuerySpec("q17_lang_id", (s, d) =>
       docs(s, d).select(
         col("doc_id"),
         col("lang"),
         langId(col("text")).as("lang_detected"),
-        stopwordHits(col("text"), stopwords.head._2).cast("bigint").as("en_hits"))),
+        stopwordHits(col("text"), stopwords.head._2).cast("bigint").as("en_hits")), {
+      val scoreCols = stopwords.map { case (l, _) => s"${duckHits(l)} AS s_$l" }
+        .mkString(",\n ")
+      s"""SELECT doc_id, lang, $duckLangCase AS lang_detected, s_en AS en_hits
+         |FROM (SELECT doc_id, lang, text,
+         | $scoreCols
+         |FROM documents)""".stripMargin
+    }),
 
-    "q18_fingerprint" -> ((s, d) =>
+    QuerySpec("q18_fingerprint", (s, d) =>
       docs(s, d).select(
         col("doc_id"),
-        fingerprint(col("text")).as("fp"))),
+        fingerprint(col("text")).as("fp")),
+      """SELECT doc_id,
+        | md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
+        |FROM documents""".stripMargin),
 
     // repeated-3-gram fraction — the C4/Gopher repetition quality
     // signal: share of 3-gram slots occupied by a shingle already seen
     // in the document. (n3 - distinct3) / n3, one int/int division.
-    "q57_repetition" -> ((s, d) =>
+    QuerySpec("q57_repetition", (s, d) =>
       docs(s, d)
         .select(col("doc_id"),
           greatest(size(words(col("text"))) - 2, lit(0)).as("n3"),
@@ -77,12 +94,24 @@ object TextQueries {
         .select(col("doc_id"), col("n3"), col("d3"),
           when(col("n3") > 0,
             (col("n3") - col("d3")).cast("double") / col("n3").cast("double"))
-            .otherwise(0.0).as("rep_frac"))),
+            .otherwise(0.0).as("rep_frac")),
+      """SELECT doc_id, n3, d3,
+        | CASE WHEN n3 > 0 THEN CAST(n3 - d3 AS DOUBLE) / CAST(n3 AS DOUBLE)
+        |      ELSE 0.0 END AS rep_frac
+        |FROM (
+        |  SELECT doc_id,
+        |    CAST(greatest(len(ws) - 2, 0) AS INT) AS n3,
+        |    CAST(CASE WHEN len(ws) >= 3 THEN len(list_distinct(
+        |      list_transform(range(0, len(ws) - 2),
+        |                     i -> array_to_string(list_slice(ws, i + 1, i + 3), ' '))))
+        |      ELSE 0 END AS INT) AS d3
+        |  FROM (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
+        |        FROM documents))""".stripMargin),
 
     // PII scrub: plant a deterministic email + id digits, then mask
     // emails and digit runs (email pass first — the digit pass would
     // otherwise rewrite the address before it matches).
-    "q58_pii_mask" -> ((s, d) =>
+    QuerySpec("q58_pii_mask", (s, d) =>
       docs(s, d)
         .select(col("doc_id"),
           concat(col("text"), lit(" contact: user"), col("doc_id").cast("string"),
@@ -91,7 +120,15 @@ object TextQueries {
           regexp_replace(
             regexp_replace(col("t2"), "[a-z0-9._]+@[a-z0-9.]+", "<email>"),
             "[0-9]+", "#").as("masked"),
-          col("t2").rlike("@example\\.com").as("had_email"))),
+          col("t2").rlike("@example\\.com").as("had_email")),
+      """SELECT doc_id,
+        | regexp_replace(
+        |   regexp_replace(text || ' contact: user' || CAST(doc_id AS VARCHAR) || '@example.com ref 12345',
+        |                  '[a-z0-9._]+@[a-z0-9.]+', '<email>', 'g'),
+        |   '[0-9]+', '#', 'g') AS masked,
+        | regexp_matches(text || ' contact: user' || CAST(doc_id AS VARCHAR) || '@example.com ref 12345',
+        |                '@example\.com') AS had_email
+        |FROM documents""".stripMargin),
 
     // weighted priority sampling (the Duffield–Lund–Thorup shape with
     // the uniform draw replaced by the deterministic md5 grid): each
@@ -103,7 +140,7 @@ object TextQueries {
     // distributed TakeOrdered(k); the rank window runs on k rows.
     // Integer-exact: h and n_chars are positive BIGINTs, so div and
     // // agree, and (priority, doc_id) is a unique total order.
-    "q151_weighted_sample" -> ((s, d) => {
+    QuerySpec("q151_weighted_sample", (s, d) => {
       val h = conv(substring(md5(concat(lit("q151:"),
         col("doc_id").cast("string"))), 1, 15), 16, 10).cast("long")
       val top = docs(s, d).filter(col("n_chars") > 0)
@@ -115,7 +152,18 @@ object TextQueries {
         row_number().over(Window.orderBy(col("priority"), col("doc_id")))
           .cast("int").as("rn"),
         col("doc_id"), col("n_chars"), col("priority"))
-    }),
+    },
+      s"""WITH d AS (SELECT doc_id, n_chars,
+         |             CAST(('0x' || substring(md5('q151:' ||
+         |               CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+         |           FROM documents WHERE n_chars > 0),
+         |p AS (SELECT doc_id, n_chars, h // n_chars AS priority FROM d),
+         |t AS (SELECT * FROM p ORDER BY priority, doc_id
+         |      LIMIT $WeightedSampleK)
+         |SELECT CAST(row_number() OVER (ORDER BY priority, doc_id) AS INT)
+         |         AS rn,
+         |       doc_id, n_chars, CAST(priority AS BIGINT) AS priority
+         |FROM t""".stripMargin),
 
     // contiguous export numbering: dense 0-based example ids in
     // (lang, doc_id) order — operators.ContiguousIds: the scalable
@@ -124,10 +172,18 @@ object TextQueries {
     // partition-size count pass + one offset map). The unique sort key
     // makes the assignment independent of sampled range bounds and
     // partition count (the global-sweep fork check exercises that).
-    "q152_contiguous_ids" -> ((s, d) =>
+    QuerySpec("q152_contiguous_ids", (s, d) =>
       graft.operators.ContiguousIds.assign(
         docs(s, d).select(col("doc_id"), col("lang"), col("source")),
-        Seq("lang", "doc_id"), "ex_id")),
+        Seq("lang", "doc_id"), "ex_id"),
+      // same selection rule as the aggregate: k smallest salted-md5
+      // 60-bit prefixes per stratum; fixed-width lowercase hex compares
+      // identically as string and as number, and prefix ties break on
+      // the zero-padded id exactly like the heap's payload order.
+      """SELECT doc_id, lang, source,
+        |       CAST(row_number() OVER (ORDER BY lang, doc_id) - 1 AS BIGINT)
+        |         AS ex_id
+        |FROM documents""".stripMargin),
 
     // per-source curation (C4/RefinedWeb cap-and-blocklist by host):
     // broadcast anti-join drops blocklisted sources, then at most
@@ -135,13 +191,21 @@ object TextQueries {
     // order (q64's reproducible-sampler shape). WindowGroupLimit prunes
     // each map task to its partial top-cap BEFORE the exchange, so a
     // hot source never funnels the corpus through one partition.
-    "q153_source_curation" -> ((s, d) => {
+    QuerySpec("q153_source_curation", (s, d) => {
       import s.implicits._
       graft.operators.SourceCuration.curate(
         docs(s, d).select(col("doc_id"), col("source")),
         "source", "doc_id", CurationCap,
         CurationBlocked.toDF("source"), "q153:")
-    }),
+    },
+      s"""SELECT doc_id, source, rn FROM (
+         |  SELECT doc_id, source,
+         |    CAST(row_number() OVER (PARTITION BY source
+         |      ORDER BY md5('q153:' || CAST(doc_id AS VARCHAR)), doc_id)
+         |      AS INT) AS rn
+         |  FROM documents
+         |  WHERE source NOT IN (${CurationBlocked.map("'" + _ + "'").mkString(", ")}))
+         |WHERE rn <= $CurationCap""".stripMargin),
 
     // shard-balanced export manifest atop q152's numbering: shard =
     // ex_id div ExportShardSize (every shard = ExportShardSize
@@ -151,12 +215,22 @@ object TextQueries {
     // partitionBy(shard) + manifest in ONE atomic flip) is
     // CatalogSpec-pinned; values are layout-independent, so the oracle
     // is the plain window-derived aggregate.
-    "q154_export_manifest" -> ((s, d) =>
+    QuerySpec("q154_export_manifest", (s, d) =>
       graft.operators.ShardedExport.manifest(
         graft.operators.ShardedExport.withShards(
           docs(s, d).select(col("doc_id"), col("lang"), col("n_chars")),
           Seq("lang", "doc_id"), ExportShardSize),
-        "n_chars")),
+        "n_chars"),
+      s"""WITH e AS (SELECT n_chars,
+         |    CAST(row_number() OVER (ORDER BY lang, doc_id) - 1 AS BIGINT)
+         |      AS ex_id
+         |  FROM documents)
+         |SELECT CAST(ex_id // $ExportShardSize AS BIGINT) AS shard,
+         |       CAST(COUNT(*) AS BIGINT) AS n_docs,
+         |       CAST(SUM(n_chars) AS BIGINT) AS n_bytes,
+         |       CAST(MIN(ex_id) AS BIGINT) AS min_ex_id,
+         |       CAST(MAX(ex_id) AS BIGINT) AS max_ex_id
+         |FROM e GROUP BY 1""".stripMargin),
 
     // training-order export (round-11 verdict #2): q154's (lang,
     // doc_id) order ships language-GROUPED shards — the wrong layout
@@ -169,32 +243,52 @@ object TextQueries {
     // by NAMED columns; doc_id appended breaks any collision
     // deterministically. Scale shape identical to q152/q154: ONE
     // range exchange, no single-task stage.
-    "q156_training_order" -> ((s, d) =>
+    QuerySpec("q156_training_order", (s, d) =>
       graft.operators.ShardedExport.withShards(
         docs(s, d).select(col("doc_id"), col("lang"), col("n_chars"))
           .withColumn("h",
             md5(concat(lit("q156:"), col("doc_id").cast("string")))),
-        Seq("h", "doc_id"), ExportShardSize)),
+        Seq("h", "doc_id"), ExportShardSize),
+      s"""WITH e AS (SELECT doc_id, lang, n_chars,
+         |    md5('q156:' || CAST(doc_id AS VARCHAR)) AS h
+         |  FROM documents)
+         |SELECT doc_id, lang, n_chars, h,
+         |  CAST(row_number() OVER (ORDER BY h, doc_id) - 1 AS BIGINT)
+         |    AS ex_id,
+         |  CAST((row_number() OVER (ORDER BY h, doc_id) - 1)
+         |    // $ExportShardSize AS BIGINT) AS shard
+         |FROM e""".stripMargin),
 
     // deterministic per-stratum sampling: the k docs with the smallest
     // md5(id) per language — hash ordering is THE reproducible sampler
     // at pipeline scale (no RNG, no partition-order dependence, stable
     // under re-runs and engine changes; md5 is the cross-engine hash).
-    "q64_hash_sample" -> ((s, d) => {
+    QuerySpec("q64_hash_sample", (s, d) => {
       val w = Window.partitionBy(col("lang"))
         .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
       docs(s, d).select(col("doc_id"), col("lang"))
         .withColumn("rn", row_number().over(w).cast("int"))
         .filter(col("rn") <= 5)
-    }),
+    },
+      """SELECT doc_id, lang, rn FROM (
+        |  SELECT doc_id, lang,
+        |    CAST(row_number() OVER (PARTITION BY lang
+        |         ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS INT) AS rn
+        |  FROM documents)
+        |WHERE rn <= 5""".stripMargin),
 
     // reproducible train/val split: assignment by md5 prefix range
     // (~90/10) — membership is a pure function of the id.
-    "q65_train_split" -> ((s, d) =>
+    QuerySpec("q65_train_split", (s, d) =>
       docs(s, d).select(
         when(substring(md5(col("doc_id").cast("string")), 1, 2) < "e6", "train")
           .otherwise("val").as("split"))
-        .groupBy(col("split")).agg(count(lit(1)).as("n_docs"))),
+        .groupBy(col("split")).agg(count(lit(1)).as("n_docs")),
+      """SELECT split, COUNT(*) AS n_docs FROM (
+        |  SELECT CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e6'
+        |              THEN 'train' ELSE 'val' END AS split
+        |  FROM documents)
+        |GROUP BY 1""".stripMargin),
 
     // Unicode NFC canonicalization before fingerprinting: the planted
     // literal is DECOMPOSED-first (e + combining acute U+0301) then
@@ -202,27 +296,40 @@ object TextQueries {
     // visually-equal text dedups equal. was_denormalized asserts the
     // normalize path actually fired. The oracle runs ICU's
     // nfc_normalize against the JDK implementation.
-    "q66_nfc_dedup" -> ((s, d) => {
+    QuerySpec("q66_nfc_dedup", (s, d) => {
       val t2 = concat(col("text"), lit(" café café"))
       val nfc = graft.expressions.TextExpressions.nfcNormalize(t2)
       docs(s, d).select(
         col("doc_id"),
         (t2 =!= nfc).as("was_denormalized"),
         fingerprint(nfc).as("fp_nfc"))
-    }),
+    },
+      """SELECT doc_id,
+        | (text || ' cafe' || chr(769) || ' caf' || chr(233))
+        |   <> nfc_normalize(text || ' cafe' || chr(769) || ' caf' || chr(233)) AS was_denormalized,
+        | md5(regexp_replace(lower(trim(nfc_normalize(text || ' cafe' || chr(769) || ' caf' || chr(233)))), '\s+', ' ', 'g')) AS fp_nfc
+        |FROM documents""".stripMargin),
 
     // vocabulary build: corpus word frequencies, top 100 with a
     // deterministic (count desc, word) tie-break — the vocab step of a
     // tokenizer-training pipeline. The global window runs on the
     // aggregated vocab (bounded), never on the corpus.
-    "q62_vocab" -> ((s, d) => {
+    QuerySpec("q62_vocab", (s, d) => {
       val counts = docs(s, d)
         .select(explode(words(col("text"))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("n"))
       counts.withColumn("rnk",
         row_number().over(Window.orderBy(col("n").desc, col("w"))).cast("int"))
         .filter(col("rnk") <= 100)
-    }),
+    },
+      """SELECT w, n, rnk FROM (
+        |  SELECT w, n,
+        |    CAST(row_number() OVER (ORDER BY n DESC, w) AS INT) AS rnk
+        |  FROM (SELECT w, COUNT(*) AS n
+        |        FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
+        |              FROM documents)
+        |        GROUP BY 1))
+        |WHERE rnk <= 100""".stripMargin),
 
     // bigram collocation mining: PMI as an exact-count RATIO
     // (cab·N)/(ca·cb) — log() is libm-dependent across engines, the
@@ -233,7 +340,7 @@ object TextQueries {
     // a doc belongs to the sequence where it STARTS. Per-shard window
     // (never a global single-partition sort); the output is the packing
     // manifest a loader would consume.
-    "q70_pack_sequences" -> ((s, d) => {
+    QuerySpec("q70_pack_sequences", (s, d) => {
       val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       docs(s, d)
@@ -243,13 +350,21 @@ object TextQueries {
         .groupBy(col("lang"), col("seq_id"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_tok")).cast("bigint").as("n_tokens"))
-    }),
+    },
+      s"""WITH t AS (SELECT doc_id, lang, $duckWsTokens AS n_tok FROM documents),
+         |c AS (SELECT doc_id, lang, n_tok,
+         |        SUM(n_tok) OVER (PARTITION BY lang ORDER BY doc_id
+         |                         ROWS UNBOUNDED PRECEDING) - n_tok AS start_tok
+         |      FROM t)
+         |SELECT lang, CAST(floor(start_tok / 512.0) AS INT) AS seq_id,
+         |       COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS n_tokens
+         |FROM c GROUP BY 1, 2""".stripMargin),
 
     // source mixture weights for training-data sampling: proportional
     // weight plus the upsample factor against the largest source — all
     // arithmetic is one exact-integer division per output value, so the
     // doubles are engine-identical.
-    "q71_source_mixture" -> ((s, d) => {
+    QuerySpec("q71_source_mixture", (s, d) => {
       val counts = docs(s, d).groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           sum(wsTokenCount(col("text")).cast("bigint")).as("n_tokens"))
@@ -258,7 +373,15 @@ object TextQueries {
         .select(col("source"), col("n_docs"), col("n_tokens"),
           (col("n_docs").cast("double") / col("td").cast("double")).as("mix_weight"),
           (col("md").cast("double") / col("n_docs").cast("double")).as("upsample_factor"))
-    }),
+    },
+      s"""WITH c AS (SELECT source, COUNT(*) AS n_docs,
+         |             CAST(SUM($duckWsTokens) AS BIGINT) AS n_tokens
+         |           FROM documents GROUP BY 1),
+         |t AS (SELECT SUM(n_docs) AS td, MAX(n_docs) AS md FROM c)
+         |SELECT source, n_docs, n_tokens,
+         |       CAST(n_docs AS DOUBLE) / CAST(td AS DOUBLE) AS mix_weight,
+         |       CAST(md AS DOUBLE) / CAST(n_docs AS DOUBLE) AS upsample_factor
+         |FROM c, t""".stripMargin),
 
     // composed C4/Gopher-style quality gate: the individual signals
     // (token count, punct ratio, repetition, language agreement) fold
@@ -266,7 +389,7 @@ object TextQueries {
     // a real corpus filter, where per-rule attrition counts are the
     // monitoring output. Thresholds compare doubles computed
     // identically on both engines.
-    "q76_quality_filter" -> ((s, d) => {
+    QuerySpec("q76_quality_filter", (s, d) => {
       // the ws-token / punct-ratio legs ride the fused text_stats
       // struct (one scan instead of two regexp passes — same composed
       // semantics, pinned in TextFunctionsSpec); the ratio replays
@@ -293,6 +416,31 @@ object TextQueries {
           .otherwise("keep").as("verdict"))
         .groupBy(col("verdict"))
         .agg(count(lit(1)).as("n_docs"))
+    }, {
+      val scoreCols = stopwords.map { case (l, _) => s"${duckHits(l)} AS s_$l" }
+        .mkString(",\n ")
+      s"""WITH t AS (SELECT doc_id, lang, text,
+         | $duckWsTokens AS n_ws,
+         | $duckPunctRatio AS pr,
+         | regexp_extract_all(lower(text), '[a-z]+') AS ws,
+         | $scoreCols
+         |FROM documents),
+         |r AS (SELECT *,
+         |  CAST(greatest(len(ws) - 2, 0) AS INT) AS n3,
+         |  CAST(CASE WHEN len(ws) >= 3 THEN len(list_distinct(
+         |    list_transform(range(0, len(ws) - 2),
+         |                   i -> array_to_string(list_slice(ws, i + 1, i + 3), ' '))))
+         |    ELSE 0 END AS INT) AS d3
+         |  FROM t)
+         |SELECT verdict, COUNT(*) AS n_docs FROM (
+         |  SELECT CASE WHEN n_ws < $MinKeepTokens THEN 'too_short'
+         |              WHEN pr >= $MaxPunctRatio THEN 'high_punct'
+         |              WHEN n3 > 0 AND CAST(n3 - d3 AS DOUBLE) / CAST(n3 AS DOUBLE) >= 0.3
+         |                THEN 'repetitive'
+         |              WHEN ($duckLangCase) <> lang THEN 'lang_mismatch'
+         |              ELSE 'keep' END AS verdict
+         |  FROM r)
+         |GROUP BY 1""".stripMargin
     }),
 
     // temperature-scaled mixture (τ=2, the multilingual-LM sampling
@@ -302,7 +450,7 @@ object TextQueries {
     // in an oracle-checked result. target_docs = ⌊√(n·max)⌋, the
     // per-source doc count after rebalancing to keep the largest
     // source at its natural size.
-    "q77_temperature_mix" -> ((s, d) => {
+    QuerySpec("q77_temperature_mix", (s, d) => {
       val counts = docs(s, d).groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"))
       val tot = counts.agg(max(col("n_docs")).as("md"))
@@ -312,14 +460,21 @@ object TextQueries {
           .as("temp_weight"),
         floor(sqrt(col("n_docs").cast("double") * col("md").cast("double")))
           .cast("bigint").as("target_docs"))
-    }),
+    },
+      """WITH c AS (SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY 1),
+        |t AS (SELECT MAX(n_docs) AS md FROM c)
+        |SELECT source, n_docs,
+        |       sqrt(CAST(n_docs AS DOUBLE)) / sqrt(CAST(md AS DOUBLE)) AS temp_weight,
+        |       CAST(floor(sqrt(CAST(n_docs AS DOUBLE) * CAST(md AS DOUBLE))) AS BIGINT)
+        |         AS target_docs
+        |FROM c, t""".stripMargin),
 
     // sliding-window chunking for context-budget ingestion: windows of
     // 128 ws-tokens at stride 96 (32-token overlap); every doc yields
     // ≥1 chunk. The output is the chunk manifest (doc, index, token
     // range) a loader or RAG indexer consumes — row-per-chunk, no
     // document text movement.
-    "q78_chunk_docs" -> ((s, d) =>
+    QuerySpec("q78_chunk_docs", (s, d) =>
       docs(s, d)
         .select(col("doc_id"), wsTokenCount(col("text")).as("n_tok"))
         .select(col("doc_id"), col("n_tok"),
@@ -328,7 +483,15 @@ object TextQueries {
         .select(col("doc_id"),
           (col("tok_start") / 96).cast("int").as("chunk_idx"),
           col("tok_start").cast("int").as("tok_start"),
-          least(lit(128), col("n_tok") - col("tok_start")).cast("int").as("tok_len"))),
+          least(lit(128), col("n_tok") - col("tok_start")).cast("int").as("tok_len")),
+      s"""WITH t AS (SELECT doc_id, $duckWsTokens AS n_tok FROM documents),
+         |c AS (SELECT doc_id, n_tok,
+         |        unnest(range(0, greatest(n_tok, 1), 96)) AS tok_start
+         |      FROM t)
+         |SELECT doc_id, CAST(tok_start // 96 AS INT) AS chunk_idx,
+         |       CAST(tok_start AS INT) AS tok_start,
+         |       CAST(least(128, n_tok - tok_start) AS INT) AS tok_len
+         |FROM c""".stripMargin),
 
     // BPE tokenization with a frozen merge vocabulary (the per-corpus
     // production step; training is BpeSpec-verified). The native
@@ -337,11 +500,35 @@ object TextQueries {
     // string replace over a delimiter-bracketed symbol string ("low" →
     // "|l||o||w|", rule (l,o) → replace "|l||o|" with "|lo|") — both
     // are the same greedy pass, so token counts match exactly.
-    "q96_bpe_tokens" -> ((s, d) =>
+    QuerySpec("q96_bpe_tokens", (s, d) =>
       docs(s, d).select(col("doc_id"),
         size(graft.operators.Bpe.encode(col("text"), BpeMerges))
           .cast("bigint").as("n_tokens"),
-        size(words(col("text"))).cast("bigint").as("n_words"))),
+        size(words(col("text"))).cast("bigint").as("n_words")), {
+      // each merge pass = one replace() over the bracketed symbol repr;
+      // generated from the same BpeMerges constant as the Spark side
+      val replaced = BpeMerges.foldLeft("repr") { case (acc, (a, b)) =>
+        s"replace($acc, '|$a||$b|', '|$a$b|')"
+      }
+      s"""WITH w AS (
+         |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
+         |  FROM documents),
+         |s AS (
+         |  SELECT doc_id,
+         |         regexp_replace(word, '(.)', '|\\1|', 'g') AS repr
+         |  FROM w),
+         |t AS (
+         |  SELECT doc_id,
+         |         len(string_split(trim($replaced, '|'), '||')) AS n_tok
+         |  FROM s),
+         |agg AS (
+         |  SELECT doc_id, SUM(n_tok) AS n_tokens, COUNT(*) AS n_words
+         |  FROM t GROUP BY 1)
+         |SELECT d.doc_id,
+         |       CAST(COALESCE(agg.n_tokens, 0) AS BIGINT) AS n_tokens,
+         |       CAST(COALESCE(agg.n_words, 0) AS BIGINT) AS n_words
+         |FROM documents d LEFT JOIN agg USING (doc_id)""".stripMargin
+    }),
 
     // order-independent table digest: per-row md5 over (id, content),
     // first 8 hex digits decoded to an integer, summed exactly in
@@ -349,7 +536,7 @@ object TextQueries {
     // fingerprint that verifies a migration/replica without moving the
     // data (commutative sum ⇒ partition- and order-insensitive; md5 is
     // the cross-engine hash).
-    "q83_table_digest" -> ((s, d) => {
+    QuerySpec("q83_table_digest", (s, d) => {
       val h = md5(concat(col("doc_id").cast("string"), lit(":"),
         coalesce(col("text"), lit(""))))
       docs(s, d)
@@ -358,6 +545,19 @@ object TextQueries {
         .agg(count(lit(1)).as("n_rows"),
           pmod(sum(col("hv")), lit(DigestMod).cast(DecimalType(38, 0)))
             .cast("bigint").as("digest"))
+    }, {
+      // decode hex nibble at 1-based position p of the md5 string
+      def nib(p: Int) =
+        s"(CASE WHEN ascii(substr(h, $p, 1)) <= 57 " +
+          s"THEN ascii(substr(h, $p, 1)) - 48 " +
+          s"ELSE ascii(substr(h, $p, 1)) - 87 END)"
+      val value = (1 to 8)
+        .map(p => s"CAST(${nib(p)} AS HUGEINT) * ${1L << (4 * (8 - p))}")
+        .mkString(" + ")
+      s"""SELECT COUNT(*) AS n_rows,
+         |       CAST(SUM($value) % $DigestMod AS BIGINT) AS digest
+         |FROM (SELECT md5(CAST(doc_id AS VARCHAR) || ':' || COALESCE(text, '')) AS h
+         |      FROM documents)""".stripMargin
     }),
 
     // array set operations against a computed reference set: per-doc
@@ -365,7 +565,7 @@ object TextQueries {
     // a 1-row aggregate cross-joined in (bounded, broadcast — never a
     // driver-side collect); set semantics (distinct elements) on both
     // engines, compared by SIZE so element order never matters.
-    "q85_array_ops" -> ((s, d) => {
+    QuerySpec("q85_array_ops", (s, d) => {
       // orderBy+limit = TakeOrderedAndProject (distributed top-k); an
       // unpartitioned row_number window would funnel the whole
       // vocabulary through one task
@@ -380,9 +580,22 @@ object TextQueries {
           .cast("int").as("n_common"),
         size(array_except(col("top"), words(col("text"))))
           .cast("int").as("n_missing"))
-    }),
+    },
+      """WITH topw AS (
+        |  SELECT list(w ORDER BY w) AS top FROM (
+        |    SELECT w FROM (
+        |      SELECT w, COUNT(*) AS n
+        |      FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
+        |            FROM documents)
+        |      GROUP BY 1)
+        |    ORDER BY n DESC, w LIMIT 10))
+        |SELECT doc_id,
+        |  CAST(len(list_intersect(list_distinct(ws), topw.top)) AS INT) AS n_common,
+        |  CAST(len(list_filter(topw.top, t -> NOT list_contains(ws, t))) AS INT) AS n_missing
+        |FROM (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
+        |      FROM documents), topw""".stripMargin),
 
-    "q63_bigram_pmi" -> ((s, d) => {
+    QuerySpec("q63_bigram_pmi", (s, d) => {
       val ws = docs(s, d).select(words(col("text")).as("ws"))
       val bg = ws.select(explode(array_compact(zip_with(
         col("ws"),
@@ -408,7 +621,22 @@ object TextQueries {
         .select(col("bg").as("bigram"), col("cab"),
           ((d38(col("cab")) * d38(col("nn"))).cast("double") /
             (d38(col("c1")) * d38(col("c2"))).cast("double")).as("pmi_ratio"))
-    }),
+    },
+      """WITH w AS (SELECT regexp_extract_all(lower(text), '[a-z]+') AS ws FROM documents),
+        |bg AS (SELECT unnest(list_transform(range(0, greatest(len(ws) - 1, 0)),
+        |                     i -> ws[i + 1] || ' ' || ws[i + 2])) AS bg
+        |       FROM w),
+        |bgc AS (SELECT bg, COUNT(*) AS cab FROM bg GROUP BY 1 HAVING COUNT(*) >= 5),
+        |uni AS (SELECT w, COUNT(*) AS c
+        |        FROM (SELECT unnest(ws) AS w FROM w) GROUP BY 1),
+        |tot AS (SELECT COUNT(*) AS nn FROM bg)
+        |SELECT b.bg AS bigram, b.cab,
+        |       CAST(CAST(b.cab AS HUGEINT) * t.nn AS DOUBLE) /
+        |       CAST(CAST(u1.c AS HUGEINT) * u2.c AS DOUBLE) AS pmi_ratio
+        |FROM bgc b
+        |CROSS JOIN tot t
+        |JOIN uni u1 ON u1.w = string_split(b.bg, ' ')[1]
+        |JOIN uni u2 ON u2.w = string_split(b.bg, ' ')[2]""".stripMargin),
 
     // n-gram-LM coverage gate — the exactly-replayable core of
     // perplexity quality filtering (CCNet-style): a doc keeps when >=
@@ -416,26 +644,87 @@ object TextQueries {
     // LmMinCount times. Integer counts + integer comparison, so the
     // verdict is bit-identical on any engine; operators.NgramLm (one
     // gram exchange shared by the corpus count and the hit flags).
-    "q101_lm_gate" -> ((s, d) =>
+    QuerySpec("q101_lm_gate", (s, d) =>
       graft.operators.NgramLm.coverageGate(docs(s, d), "doc_id", "text",
-        minCount = LmMinCount, minPct = LmMinPct)),
+        minCount = LmMinCount, minPct = LmMinPct),
+      // full replay: bigram occurrence stream → corpus counts → per-doc
+      // coverage → integer keep verdict; docs without bigrams keep 0/0
+      s"""WITH w AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws FROM documents),
+         |big AS (SELECT doc_id, unnest(list_transform(range(0, greatest(len(ws) - 1, 0)),
+         |                              i -> ws[i + 1] || ' ' || ws[i + 2])) AS g
+         |        FROM w),
+         |cnt AS (SELECT g, COUNT(*) AS c FROM big GROUP BY 1),
+         |per AS (SELECT b.doc_id,
+         |               CAST(COUNT(*) AS BIGINT) AS bi_total,
+         |               CAST(SUM(CASE WHEN c.c >= $LmMinCount THEN 1 ELSE 0 END) AS BIGINT) AS bi_hits
+         |        FROM big b JOIN cnt c USING (g) GROUP BY 1)
+         |SELECT d.doc_id,
+         |       COALESCE(p.bi_total, 0) AS bi_total,
+         |       COALESCE(p.bi_hits, 0) AS bi_hits,
+         |       COALESCE(p.bi_hits, 0) * 100 >= COALESCE(p.bi_total, 0) * $LmMinPct AS keep
+         |FROM documents d LEFT JOIN per p USING (doc_id)""".stripMargin),
 
     // per-doc top terms by quantized tf-idf — idf enters as the exact
     // BIGINT quotient (scale·N) div df, so the ranking is bit-identical
     // on any engine; operators.TfIdf (token stream collapses to
     // (doc, term, tf) map-side before the one term exchange; per-doc
     // top-k via the mergeable O(k) topk_str aggregate, never a sort)
-    "q102_tfidf_terms" -> ((s, d) =>
+    QuerySpec("q102_tfidf_terms", (s, d) =>
       graft.operators.TfIdf.topTerms(docs(s, d), "doc_id", "text",
-        k = TfIdfK, idfScale = TfIdfScale)),
+        k = TfIdfK, idfScale = TfIdfScale),
+      // full replay: token stream → (doc, term, tf) → df → exact-integer
+      // quantized idf → top-k per doc by (score desc, term asc);
+      // // is DuckDB floor division (all values positive ⇒ identical to
+      // Spark's DIV truncation)
+      s"""WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS term
+         |             FROM documents),
+         |tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM tok GROUP BY 1, 2),
+         |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
+         |dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
+         |s AS (SELECT tf.doc_id, tf.term,
+         |             tf.tf * (($TfIdfScale * n.n) // dfreq.df) AS score
+         |      FROM tf CROSS JOIN n JOIN dfreq USING (term)),
+         |r AS (SELECT doc_id, term, score,
+         |             row_number() OVER (PARTITION BY doc_id
+         |                                ORDER BY score DESC, term) AS rn
+         |      FROM s),
+         |top AS (SELECT doc_id,
+         |               string_agg(term, ',' ORDER BY score DESC, term) AS top_terms
+         |        FROM r WHERE rn <= $TfIdfK GROUP BY 1)
+         |SELECT d.doc_id, COALESCE(t.top_terms, '') AS top_terms
+         |FROM documents d LEFT JOIN top t USING (doc_id)""".stripMargin),
 
     // BM25 retrieval: top-k docs for a term query, scored in exact
     // BIGINT arithmetic (k1=6/5, b=3/4 fold into the integer rational
     // 22·T·tf / (10·T·tf + 3·T + 9·dl·N); idf = the q102 quotient) so
     // the ranking replays bit-identically; operators.Bm25
-    "q103_bm25" -> ((s, d) =>
+    QuerySpec("q103_bm25", (s, d) =>
       graft.operators.Bm25.rank(docs(s, d), "doc_id", "text",
-        Bm25Query, k = Bm25K)),
+        Bm25Query, k = Bm25K),
+      // full replay of the integer BM25: doc lengths → pruned tf → df →
+      // quantized term scores → exact integer sums → (score desc, id)
+      // top-k with rank. // is floor division (all values positive).
+      s"""WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
+         |tok AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS term
+         |        FROM documents),
+         |dl AS (SELECT d.doc_id, CAST(COALESCE(c.c, 0) AS BIGINT) AS dl
+         |       FROM documents d LEFT JOIN (SELECT doc_id, COUNT(*) AS c FROM tok GROUP BY 1) c
+         |       USING (doc_id)),
+         |t AS (SELECT CAST(SUM(dl) AS BIGINT) AS t FROM dl),
+         |tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM tok
+         |       WHERE term IN (${Bm25Query.map(q => s"'$q'").mkString(", ")}) GROUP BY 1, 2),
+         |dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
+         |s AS (SELECT tf.doc_id,
+         |             ((10000 * n.n) // dfreq.df) *
+         |             ((1000000 * 22 * t.t * tf.tf) //
+         |              (10 * t.t * tf.tf + 3 * t.t + 9 * dl.dl * n.n)) AS sc
+         |      FROM tf JOIN dfreq USING (term) JOIN dl USING (doc_id)
+         |           CROSS JOIN n CROSS JOIN t),
+         |d AS (SELECT doc_id, CAST(SUM(sc) AS BIGINT) AS score FROM s GROUP BY 1),
+         |top AS (SELECT doc_id, score FROM d ORDER BY score DESC, doc_id LIMIT $Bm25K)
+         |SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT) AS rank,
+         |       doc_id, score
+         |FROM top""".stripMargin),
 
     // reciprocal-rank fusion of two retrieval rankings for the same
     // query — BM25 (q103's exact integer face) and a TF-density
@@ -445,7 +734,7 @@ object TextQueries {
     // ordering replays bit-identically; each pool is a distributed
     // TakeOrdered (never a global sort), the fusion joins two k-row
     // sets, and ranks within pools are row_numbers over k rows.
-    "q128_rrf_fusion" -> ((s, d) => {
+    QuerySpec("q128_rrf_fusion", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val a = graft.operators.Bm25.rank(docs(s, d), "doc_id", "text",
           Bm25Query, k = RrfPool)
@@ -471,7 +760,39 @@ object TextQueries {
         .withColumn("rank", row_number().over(
           Window.orderBy(col("rrf").desc, col("doc_id"))))
         .select(col("rank"), col("doc_id"), col("rrf"))
-    }),
+    },
+      // the q103 BM25 CTE with a RrfPool-deep pool, a parallel
+      // TF-density pool over the same pruned tf table, and the integer
+      // RRF merge — floor divisions on positive operands throughout.
+      s"""WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
+         |tok AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS term
+         |        FROM documents),
+         |dl AS (SELECT d.doc_id, CAST(COALESCE(c.c, 0) AS BIGINT) AS dl
+         |       FROM documents d LEFT JOIN (SELECT doc_id, COUNT(*) AS c FROM tok GROUP BY 1) c
+         |       USING (doc_id)),
+         |t AS (SELECT CAST(SUM(dl) AS BIGINT) AS t FROM dl),
+         |tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM tok
+         |       WHERE term IN (${Bm25Query.map(q => s"'$q'").mkString(", ")}) GROUP BY 1, 2),
+         |dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
+         |s AS (SELECT tf.doc_id,
+         |             ((10000 * n.n) // dfreq.df) *
+         |             ((1000000 * 22 * t.t * tf.tf) //
+         |              (10 * t.t * tf.tf + 3 * t.t + 9 * dl.dl * n.n)) AS sc
+         |      FROM tf JOIN dfreq USING (term) JOIN dl USING (doc_id)
+         |           CROSS JOIN n CROSS JOIN t),
+         |dbm AS (SELECT doc_id, CAST(SUM(sc) AS BIGINT) AS score FROM s GROUP BY 1),
+         |topa AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT) AS ra
+         |         FROM (SELECT doc_id, score FROM dbm ORDER BY score DESC, doc_id LIMIT $RrfPool)),
+         |s2 AS (SELECT tf.doc_id, ($TfDenScale * SUM(tf.tf)) // dl.dl AS sc2
+         |       FROM tf JOIN dl USING (doc_id) GROUP BY tf.doc_id, dl.dl),
+         |topb AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY sc2 DESC, doc_id) AS INT) AS rb
+         |         FROM (SELECT doc_id, sc2 FROM s2 ORDER BY sc2 DESC, doc_id LIMIT $RrfPool)),
+         |f AS (SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id,
+         |             COALESCE($RrfScale // ($RrfC + a.ra), 0) +
+         |             COALESCE($RrfScale // ($RrfC + b.rb), 0) AS rrf
+         |      FROM topa a FULL JOIN topb b ON a.doc_id = b.doc_id)
+         |SELECT CAST(row_number() OVER (ORDER BY rrf DESC, doc_id) AS INT) AS rank, doc_id, rrf
+         |FROM (SELECT doc_id, rrf FROM f ORDER BY rrf DESC, doc_id LIMIT $RrfK)""".stripMargin),
 
     // stratified corpus sampling with exact per-stratum quotas, WITHOUT
     // a per-stratum sort: the O(k)-heap topk_str aggregate carries only
@@ -483,7 +804,7 @@ object TextQueries {
     // independent draw). At 100 TB this is the only stratified-sample
     // shape that works: the exchange moves |strata|·k rows, not the
     // corpus.
-    "q104_stratified_sample" -> ((s, d) => {
+    QuerySpec("q104_stratified_sample", (s, d) => {
       val h = md5(concat(lit("q104:"), col("doc_id").cast("string")))
       val ord = -conv(substring(h, 1, 15), 16, 10).cast("long")
       docs(s, d)
@@ -497,7 +818,14 @@ object TextQueries {
         .select(col("lang"), col("source"),
           (col("pos") + 1).cast("int").as("rn"),
           col("pk").cast("long").as("doc_id"))
-    }),
+    },
+      s"""SELECT lang, source, rn, doc_id FROM (
+         |  SELECT lang, source, doc_id,
+         |    CAST(row_number() OVER (PARTITION BY lang, source
+         |      ORDER BY substring(md5('q104:' || CAST(doc_id AS VARCHAR)), 1, 15),
+         |               lpad(CAST(doc_id AS VARCHAR), 10, '0')) AS INT) AS rn
+         |  FROM documents)
+         |WHERE rn <= $StratQuota""".stripMargin),
 
     // term burstiness (collection frequency / document frequency):
     // terms that cluster densely in few documents (cf/df high) are
@@ -506,21 +834,29 @@ object TextQueries {
     // map-side so the exchange carries per-doc term counts, then the
     // second shuffle is vocab-sized. The ratio is ONE division of
     // exact counts.
-    "q108_term_burstiness" -> ((s, d) =>
+    QuerySpec("q108_term_burstiness", (s, d) =>
       docs(s, d)
         .select(col("doc_id"), explode(words(col("text"))).as("w"))
         .groupBy(col("w"), col("doc_id")).agg(count(lit(1)).as("c"))
         .groupBy(col("w"))
         .agg(count(lit(1)).as("df"), sum(col("c")).as("cf"))
         .filter(col("cf") >= BurstMinCf)
-        .withColumn("burstiness", col("cf").cast("double") / col("df"))),
+        .withColumn("burstiness", col("cf").cast("double") / col("df")),
+      s"""WITH tok AS (SELECT doc_id,
+         |               unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
+         |             FROM documents),
+         |pd AS (SELECT w, doc_id, COUNT(*) AS c FROM tok GROUP BY 1, 2)
+         |SELECT w, CAST(COUNT(*) AS BIGINT) AS df, CAST(SUM(c) AS BIGINT) AS cf,
+         |       CAST(SUM(c) AS DOUBLE) / COUNT(*) AS burstiness
+         |FROM pd GROUP BY 1
+         |HAVING CAST(SUM(c) AS BIGINT) >= $BurstMinCf""".stripMargin),
 
     // corpus accounting (the dataset-card table): per (source, lang)
     // cell — documents, characters, whitespace tokens, and each cell's
     // exact share of the corpus token budget in basis points (integer
     // floor division — no float percentages to drift). ONE aggregate
     // over the corpus plus a broadcast of the single-row total.
-    "q123_corpus_report" -> ((s, d) => {
+    QuerySpec("q123_corpus_report", (s, d) => {
       val cells = docs(s, d)
         .groupBy(col("source"), col("lang"))
         .agg(count(lit(1)).as("n_docs"),
@@ -531,7 +867,16 @@ object TextQueries {
         .select(col("source"), col("lang"), col("n_docs"), col("n_chars"),
           col("n_tokens"),
           expr("n_tokens * 10000 div __total").as("share_bp"))
-    }),
+    },
+      s"""WITH cells AS (
+         |  SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
+         |         CAST(SUM(n_chars) AS BIGINT) AS n_chars,
+         |         CAST(SUM($duckWsTokens) AS BIGINT) AS n_tokens
+         |  FROM documents GROUP BY 1, 2),
+         |t AS (SELECT CAST(SUM(n_tokens) AS BIGINT) AS total FROM cells)
+         |SELECT source, lang, n_docs, n_chars, n_tokens,
+         |       n_tokens * 10000 // total AS share_bp
+         |FROM cells CROSS JOIN t""".stripMargin),
 
     // weight-proportional systematic sampling (the PPS scheme loaders
     // use to draw a token-budget-proportional subcorpus): within each
@@ -540,7 +885,7 @@ object TextQueries {
     // selects the crossing row. Fully integer-exact (no RNG, no
     // floats), reproducible, and one partitioned window — cumulative
     // weights never need a global sort.
-    "q117_systematic_sample" -> ((s, d) => {
+    QuerySpec("q117_systematic_sample", (s, d) => {
       val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val whole = Window.partitionBy(col("lang"))
@@ -551,7 +896,16 @@ object TextQueries {
         .filter(col("step") > 0 &&
           expr("cum div step") > expr("(cum - n_chars) div step"))
         .select(col("lang"), col("doc_id"), col("n_chars"), col("cum"))
-    }),
+    },
+      """WITH c AS (
+        |  SELECT lang, doc_id, n_chars,
+        |    SUM(n_chars) OVER (PARTITION BY lang ORDER BY doc_id
+        |                       ROWS UNBOUNDED PRECEDING) AS cum,
+        |    SUM(n_chars) OVER (PARTITION BY lang) // 10 AS step
+        |  FROM documents)
+        |SELECT lang, doc_id, n_chars, CAST(cum AS BIGINT) AS cum
+        |FROM c
+        |WHERE step > 0 AND cum // step > (cum - n_chars) // step""".stripMargin),
 
     // Count-Min point frequencies over the token stream: ONE pass
     // builds the fixed depth×width grid (what crosses the wire per map
@@ -562,7 +916,7 @@ object TextQueries {
     // must never undercount, and its excess must stay within
     // 8·N/width — probabilistic over hash choice in the theorem, but
     // with seeds fixed it is a deterministic property of this data.
-    "q109_cms_freq" -> ((s, d) => {
+    QuerySpec("q109_cms_freq", (s, d) => {
       val tok = docs(s, d).select(explode(words(col("text"))).as("w"))
       val top = tok.groupBy(col("w")).agg(count(lit(1)).as("n"))
         .withColumn("rnk",
@@ -576,7 +930,16 @@ object TextQueries {
           (col("est") >= col("n")).as("no_undercount"),
           (col("est") - col("n") <= expr(s"8L * element_at(sk, 3) div $CmsWidth"))
             .as("within_bound"))
-    }),
+    },
+      // exact top-probe counts; the sketch verdict booleans are the
+      // engine-agnostic contract (TRUE here = "your sketch, your check")
+      s"""SELECT w, rnk, n, TRUE AS no_undercount, TRUE AS within_bound FROM (
+         |  SELECT w, CAST(COUNT(*) AS BIGINT) AS n,
+         |    CAST(row_number() OVER (ORDER BY COUNT(*) DESC, w) AS INT) AS rnk
+         |  FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
+         |        FROM documents)
+         |  GROUP BY 1)
+         |WHERE rnk <= $CmsProbes""".stripMargin),
 
     // exact phrase search: occurrences of a fixed word trigram per
     // document. ONE native positional-shingle pass per row + an array
@@ -584,7 +947,7 @@ object TextQueries {
     // scan-side map, which is precisely the 100 TB answer for "count
     // phrase hits per doc" (an inverted-index formulation pays three
     // explode+join exchanges to produce the same bounded output).
-    "q141_phrase_match" -> ((s, d) =>
+    QuerySpec("q141_phrase_match", (s, d) =>
       docs(s, d)
         .select(col("doc_id"),
           size(filter(
@@ -592,7 +955,23 @@ object TextQueries {
               .wordShinglesAll(col("text"), PhraseWords.length),
             g => g === lit(PhraseWords.mkString(" "))))
             .cast("bigint").as("n_matches"))
-        .filter(col("n_matches") > 0)),
+        .filter(col("n_matches") > 0), {
+      val k = PhraseWords.length
+      s"""WITH w AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
+         |           FROM documents),
+         |g AS (SELECT doc_id,
+         |        CASE WHEN len(ws) >= $k
+         |          THEN list_transform(range(0, len(ws) - ${k - 1}),
+         |            i -> array_to_string(
+         |              list_slice(ws, CAST(i AS INT) + 1, CAST(i AS INT) + $k), ' '))
+         |          ELSE CAST([] AS VARCHAR[]) END AS gs
+         |      FROM w)
+         |SELECT doc_id,
+         |       CAST(len(list_filter(gs, x -> x = '${PhraseWords.mkString(" ")}'))
+         |            AS BIGINT) AS n_matches
+         |FROM g
+         |WHERE len(list_filter(gs, x -> x = '${PhraseWords.mkString(" ")}')) > 0""".stripMargin
+    }),
 
     // raw web page → training text: the markup-extraction stage every
     // web-scale corpus starts with (the q155 synthesize-then-decode
@@ -611,7 +990,7 @@ object TextQueries {
     // shuffles, scan-side map the whole way, embarrassingly parallel
     // at a 100 TB crawl; the ratio/keep arithmetic is all-integer
     // (q20 fixed-point, `div`), so both engines agree bit-for-bit.
-    "q164_html_extract" -> ((s, d) => {
+    QuerySpec("q164_html_extract", (s, d) => {
       val html = concat(
         lit("<html><head><title>doc "), col("doc_id").cast("string"),
         lit("</title><style>.x{color:red}</style></head><body><nav>"),
@@ -626,7 +1005,48 @@ object TextQueries {
         .select(col("doc_id"), col("html_chars"), col("n_links"),
           col("extracted_chars"), md5(col("extracted")).as("extracted_md5"),
           col("markup_ratio_q20"), col("keep"))
-    }),
+    },
+      // identical page synthesis; the extraction chain replays
+      // operators.Markup step for step (regexp dialect-safe: '(?s)',
+      // '<[^>]*>', '<[^>]*$' and the EXPLICIT whitespace class
+      // '[ \t\n\r\f]+' parse the same under Java regex and RE2 — \s
+      // would NOT: Java's includes U+000B, RE2's doesn't); the entity
+      // replace chain is GENERATED from Markup.Entities (amp forms
+      // last), so the r16 numeric-character-reference table cannot
+      // drift between engines; ratio div guarded by greatest() as on
+      // the Spark side
+      s"""WITH b AS (
+         |  SELECT doc_id,
+         |    '<html><head><title>doc ' || CAST(doc_id AS VARCHAR) ||
+         |    '</title><style>.x{color:red}</style></head><body><nav>' ||
+         |    repeat('$HtmlNavLink', CAST(doc_id % 7 + 1 AS INT)) ||
+         |    '</nav><p>' || text || '</p>$HtmlRefSnippet' ||
+         |    CASE WHEN doc_id % 5 = 0 THEN '$HtmlAdBlock' ELSE '' END ||
+         |    '<footer>(c) corpus</footer></body></html>' AS html
+         |  FROM documents WHERE text IS NOT NULL),
+         |e AS (SELECT doc_id, html,
+         |        regexp_extract(html, '(?s)<body[^>]*>(.*)</body>', 1) AS body
+         |      FROM b),
+         |s AS (SELECT doc_id, html, body,
+         |        regexp_replace(regexp_replace(body, '<[^>]*>', ' ', 'g'),
+         |                       '<[^>]*$$', ' ', 'g') AS stripped
+         |      FROM e),
+         |t AS (SELECT doc_id,
+         |        CAST(length(html) AS BIGINT) AS html_chars,
+         |        CAST((length(body) - length(replace(body, '<a href', ''))) // 7
+         |             AS BIGINT) AS n_links,
+         |        trim(regexp_replace(${duckEntityDecode("stripped")},
+         |          '[ \\t\\n\\r\\f]+', ' ', 'g')) AS txt
+         |      FROM s)
+         |SELECT doc_id, html_chars, n_links,
+         |  CAST(length(txt) AS BIGINT) AS extracted_chars,
+         |  md5(txt) AS extracted_md5,
+         |  CAST((length(txt) * 1048576) // greatest(html_chars, 1)
+         |       AS BIGINT) AS markup_ratio_q20,
+         |  (n_links <= $HtmlMaxLinks AND
+         |   (length(txt) * 1048576) // greatest(html_chars, 1)
+         |     >= $HtmlRatioMinQ20) AS keep
+         |FROM t""".stripMargin),
 
     // learned quality filter: the fastText/CCNet-style linear scorer —
     // where q76 is hand-rules with per-rule attrition, this is a
@@ -637,11 +1057,49 @@ object TextQueries {
     // inside the scan's codegen stage at a 100 TB crawl. Weights,
     // features, and the ~62%-keep calibration live at
     // [[graft.operators.QualityClassifier]].
-    "q165_learned_quality" -> ((s, d) =>
+    QuerySpec("q165_learned_quality", (s, d) =>
       graft.operators.QualityClassifier.score(
         docs(s, d).filter(col("text").isNotNull)
           .select(col("doc_id"), col("text")), "text")
-        .drop("text")),
+        .drop("text"), {
+      // identical frozen weights (QualityClassifier constants inlined),
+      // identical feature arithmetic: every q20 div happens BEFORE its
+      // weight multiplies (so `div`/`//` agree — dividends are all
+      // non-negative), the token cap via least(), the dot product in
+      // BIGINT end to end
+      import graft.operators.QualityClassifier._
+      // per-language hits over the ALREADY-extracted word array (the
+      // Spark side filters __qc_ws the same way — one regexp pass)
+      val hits = stopwords.map { case (_, stops) =>
+        s"len(list_filter(ws, w -> list_contains(${duckList(stops)}, w)))"
+      }.mkString(" + ")
+      s"""WITH t AS (
+         |  SELECT doc_id,
+         |    $duckWsTokens AS n_ws,
+         |    $duckPunct AS n_punct,
+         |    length(text) AS n_chars,
+         |    regexp_extract_all(lower(text), '[a-z]+') AS ws
+         |  FROM documents WHERE text IS NOT NULL),
+         |f AS (
+         |  SELECT doc_id,
+         |    $WTokens * least(n_ws, $TokenCap) AS c_tokens,
+         |    $WPunct * ((CAST(n_punct AS BIGINT) * 1048576) //
+         |               greatest(CAST(n_chars AS BIGINT), 1)) AS c_punct,
+         |    $WStop * ((CAST($hits AS BIGINT) * 1048576) //
+         |              greatest(CAST(len(ws) AS BIGINT), 1)) AS c_stop,
+         |    $WWlen * ((CAST(coalesce(list_sum(list_transform(ws, w -> length(w))), 0)
+         |                    AS BIGINT) * 131072) //
+         |              greatest(CAST(len(ws) AS BIGINT), 1)) AS c_wlen
+         |  FROM t)
+         |SELECT doc_id,
+         |  CAST(c_tokens AS BIGINT) AS c_tokens,
+         |  CAST(c_punct AS BIGINT) AS c_punct,
+         |  CAST(c_stop AS BIGINT) AS c_stop,
+         |  CAST(c_wlen AS BIGINT) AS c_wlen,
+         |  CAST($Bias + c_tokens + c_punct + c_stop + c_wlen AS BIGINT) AS score,
+         |  ($Bias + c_tokens + c_punct + c_stop + c_wlen >= 0) AS keep
+         |FROM f""".stripMargin
+    }),
 
     // PII scrub: the q164 synthesize-then-extract pattern applied to
     // the redaction stage — deterministic PII is injected per doc_id
@@ -653,7 +1111,7 @@ object TextQueries {
     // with all five patterns — the compliance exit criterion, true by
     // construction and ASSERTED per row by both engines rather than
     // assumed. Scan-side per-row regex work, zero shuffles.
-    "q166_pii_scrub" -> ((s, d) => {
+    QuerySpec("q166_pii_scrub", (s, d) => {
       val pad = (m: Int, w: Int) =>
         lpad((col("doc_id") % m).cast("string"), w, "0")
       val withPii = concat(
@@ -680,6 +1138,48 @@ object TextQueries {
           col("n_phone"), col("n_ip"),
           length(col("redacted")).cast("bigint").as("redacted_chars"),
           md5(col("redacted")).as("redacted_md5"), col("clean"))
+    }, {
+      // identical synthesis, and the detection/redaction chain is
+      // GENERATED from Pii.Patterns (regexes + placeholders + order), so
+      // the two engines cannot drift: the patterns use only syntax with
+      // identical Java-regex/RE2 semantics (explicit classes, bounded
+      // repetition — no \b, no \d, no lookaround)
+      val pats = graft.operators.Pii.Patterns
+      val counts = pats.map { case (fam, re, _) =>
+        s"CAST(len(regexp_extract_all(text, '$re')) AS BIGINT) AS n_$fam"
+      }.mkString(",\n          ")
+      val redacted = pats.foldLeft("text") { case (e, (_, re, ph)) =>
+        s"regexp_replace($e, '$re', '$ph', 'g')"
+      }
+      val cleanSql = pats.map { case (_, re, _) =>
+        s"len(regexp_extract_all(redacted, '$re')) = 0"
+      }.mkString(" AND ")
+      s"""WITH p AS (
+         |  SELECT doc_id,
+         |    text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com' ||
+         |    CASE WHEN doc_id % 3 = 0 THEN ' tel 555-' ||
+         |      lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-' ||
+         |      lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ELSE '' END ||
+         |    CASE WHEN doc_id % 5 = 0 THEN ' host 10.0.' ||
+         |      CAST(doc_id % 256 AS VARCHAR) || '.' ||
+         |      CAST(doc_id % 97 AS VARCHAR) ELSE '' END ||
+         |    CASE WHEN doc_id % 7 = 0 THEN ' card 4242 4242 4242 ' ||
+         |      lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ELSE '' END ||
+         |    CASE WHEN doc_id % 11 = 0 THEN ' ssn ' ||
+         |      lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-' ||
+         |      lpad(CAST(doc_id % 100 AS VARCHAR), 2, '0') || '-' ||
+         |      lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ELSE '' END AS text
+         |  FROM documents WHERE text IS NOT NULL),
+         |r AS (
+         |  SELECT doc_id,
+         |          $counts,
+         |    $redacted AS redacted
+         |  FROM p)
+         |SELECT doc_id, n_email, n_cc, n_ssn, n_phone, n_ip,
+         |  CAST(length(redacted) AS BIGINT) AS redacted_chars,
+         |  md5(redacted) AS redacted_md5,
+         |  ($cleanSql) AS clean
+         |FROM r""".stripMargin
     }),
 
     // within-document repetition filter (Gopher/MassiveText rules):
@@ -692,14 +1192,50 @@ object TextQueries {
     // oracle-exercised on the natural corpus too. Per-row, zero
     // shuffles, scan-side (PlanSpec-pinned) — thresholds and arithmetic
     // live at [[graft.operators.Repetition]].
-    "q168_repetition_filter" -> ((s, d) =>
+    QuerySpec("q168_repetition_filter", (s, d) =>
       graft.operators.Repetition.annotate(
         docs(s, d).filter(col("text").isNotNull).select(
           col("doc_id"),
           concat(col("text"),
             when(col("doc_id") % RepPlantMod === 0, lit(" " + RepPlantTail))
               .otherwise(lit(""))).as("text")), "text")
-        .drop("text"))
+        .drop("text"), {
+      // identical plant; positional n-grams via the q141 slice pattern
+      // (duplicates KEPT — dedup metrics count positions); thresholds
+      // inlined from Repetition's frozen q20 constants; every div is a
+      // floor-// on non-negative BIGINTs, matching Spark's `div`
+      import graft.operators.Repetition._
+      def gs(k: Int) =
+        s"CASE WHEN len(ws) >= $k THEN list_transform(range(0, len(ws) - ${k - 1}), " +
+          s"i -> array_to_string(list_slice(ws, CAST(i AS INT) + 1, CAST(i AS INT) + $k), ' ')) " +
+          "ELSE CAST([] AS VARCHAR[]) END"
+      def dup(n: Int) =
+        s"CAST(((len(g$n) - len(list_distinct(g$n))) * 1048576) // " +
+          s"greatest(len(g$n), 1) AS BIGINT) AS dup${n}_q20"
+      s"""WITH p AS (
+         |  SELECT doc_id,
+         |    text || CASE WHEN doc_id % $RepPlantMod = 0
+         |                 THEN ' $RepPlantTail' ELSE '' END AS text
+         |  FROM documents WHERE text IS NOT NULL),
+         |w AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
+         |      FROM p),
+         |g AS (SELECT doc_id, ${gs(2)} AS g2, ${gs(3)} AS g3, ${gs(4)} AS g4
+         |      FROM w),
+         |r AS (SELECT doc_id,
+         |        ${dup(2)},
+         |        ${dup(3)},
+         |        ${dup(4)},
+         |        CAST((coalesce(list_max(list_filter(list_transform(
+         |               list_distinct(g2),
+         |               g -> len(list_filter(g2, x -> x = g))), c -> c >= 2)),
+         |             0) * 1048576)
+         |             // greatest(len(g2), 1) AS BIGINT) AS top2_q20
+         |      FROM g)
+         |SELECT doc_id, dup2_q20, dup3_q20, dup4_q20, top2_q20,
+         |  (dup2_q20 <= $Dup2MaxQ20 AND dup3_q20 <= $Dup3MaxQ20 AND
+         |   dup4_q20 <= $Dup4MaxQ20 AND top2_q20 <= $Top2MaxQ20) AS keep
+         |FROM r""".stripMargin
+    })
   )
 
   /** q164 page-synthesis + gate parameters (shared with the oracle).
@@ -813,617 +1349,4 @@ object TextQueries {
     }.mkString(" ")
     s"CASE WHEN ${scored.mkString(" + ")} = 0 THEN 'und' $cases ELSE '${stopwords.last._1}' END"
   }
-
-  def oracleSql: Map[String, String] = Map(
-
-    "q16_text_stats" ->
-      s"""SELECT doc_id,
-         | $duckWsTokens AS n_ws_tokens,
-         | len(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\\s]')) AS n_tokens,
-         | $duckPunct AS n_punct,
-         | $duckPunctRatio AS punct_ratio,
-         | ($duckWsTokens >= $MinKeepTokens AND $duckPunctRatio < $MaxPunctRatio) AS keep
-         |FROM documents""".stripMargin,
-
-    "q17_lang_id" -> {
-      val scoreCols = stopwords.map { case (l, _) => s"${duckHits(l)} AS s_$l" }
-        .mkString(",\n ")
-      s"""SELECT doc_id, lang, $duckLangCase AS lang_detected, s_en AS en_hits
-         |FROM (SELECT doc_id, lang, text,
-         | $scoreCols
-         |FROM documents)""".stripMargin
-    },
-
-    "q18_fingerprint" ->
-      """SELECT doc_id,
-        | md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
-        |FROM documents""".stripMargin,
-
-    "q57_repetition" ->
-      """SELECT doc_id, n3, d3,
-        | CASE WHEN n3 > 0 THEN CAST(n3 - d3 AS DOUBLE) / CAST(n3 AS DOUBLE)
-        |      ELSE 0.0 END AS rep_frac
-        |FROM (
-        |  SELECT doc_id,
-        |    CAST(greatest(len(ws) - 2, 0) AS INT) AS n3,
-        |    CAST(CASE WHEN len(ws) >= 3 THEN len(list_distinct(
-        |      list_transform(range(0, len(ws) - 2),
-        |                     i -> array_to_string(list_slice(ws, i + 1, i + 3), ' '))))
-        |      ELSE 0 END AS INT) AS d3
-        |  FROM (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
-        |        FROM documents))""".stripMargin,
-
-    "q64_hash_sample" ->
-      """SELECT doc_id, lang, rn FROM (
-        |  SELECT doc_id, lang,
-        |    CAST(row_number() OVER (PARTITION BY lang
-        |         ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS INT) AS rn
-        |  FROM documents)
-        |WHERE rn <= 5""".stripMargin,
-
-    "q65_train_split" ->
-      """SELECT split, COUNT(*) AS n_docs FROM (
-        |  SELECT CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e6'
-        |              THEN 'train' ELSE 'val' END AS split
-        |  FROM documents)
-        |GROUP BY 1""".stripMargin,
-
-    "q66_nfc_dedup" ->
-      """SELECT doc_id,
-        | (text || ' cafe' || chr(769) || ' caf' || chr(233))
-        |   <> nfc_normalize(text || ' cafe' || chr(769) || ' caf' || chr(233)) AS was_denormalized,
-        | md5(regexp_replace(lower(trim(nfc_normalize(text || ' cafe' || chr(769) || ' caf' || chr(233)))), '\s+', ' ', 'g')) AS fp_nfc
-        |FROM documents""".stripMargin,
-
-    "q62_vocab" ->
-      """SELECT w, n, rnk FROM (
-        |  SELECT w, n,
-        |    CAST(row_number() OVER (ORDER BY n DESC, w) AS INT) AS rnk
-        |  FROM (SELECT w, COUNT(*) AS n
-        |        FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-        |              FROM documents)
-        |        GROUP BY 1))
-        |WHERE rnk <= 100""".stripMargin,
-
-    "q70_pack_sequences" ->
-      s"""WITH t AS (SELECT doc_id, lang, $duckWsTokens AS n_tok FROM documents),
-         |c AS (SELECT doc_id, lang, n_tok,
-         |        SUM(n_tok) OVER (PARTITION BY lang ORDER BY doc_id
-         |                         ROWS UNBOUNDED PRECEDING) - n_tok AS start_tok
-         |      FROM t)
-         |SELECT lang, CAST(floor(start_tok / 512.0) AS INT) AS seq_id,
-         |       COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS n_tokens
-         |FROM c GROUP BY 1, 2""".stripMargin,
-
-    "q71_source_mixture" ->
-      s"""WITH c AS (SELECT source, COUNT(*) AS n_docs,
-         |             CAST(SUM($duckWsTokens) AS BIGINT) AS n_tokens
-         |           FROM documents GROUP BY 1),
-         |t AS (SELECT SUM(n_docs) AS td, MAX(n_docs) AS md FROM c)
-         |SELECT source, n_docs, n_tokens,
-         |       CAST(n_docs AS DOUBLE) / CAST(td AS DOUBLE) AS mix_weight,
-         |       CAST(md AS DOUBLE) / CAST(n_docs AS DOUBLE) AS upsample_factor
-         |FROM c, t""".stripMargin,
-
-    "q76_quality_filter" -> {
-      val scoreCols = stopwords.map { case (l, _) => s"${duckHits(l)} AS s_$l" }
-        .mkString(",\n ")
-      s"""WITH t AS (SELECT doc_id, lang, text,
-         | $duckWsTokens AS n_ws,
-         | $duckPunctRatio AS pr,
-         | regexp_extract_all(lower(text), '[a-z]+') AS ws,
-         | $scoreCols
-         |FROM documents),
-         |r AS (SELECT *,
-         |  CAST(greatest(len(ws) - 2, 0) AS INT) AS n3,
-         |  CAST(CASE WHEN len(ws) >= 3 THEN len(list_distinct(
-         |    list_transform(range(0, len(ws) - 2),
-         |                   i -> array_to_string(list_slice(ws, i + 1, i + 3), ' '))))
-         |    ELSE 0 END AS INT) AS d3
-         |  FROM t)
-         |SELECT verdict, COUNT(*) AS n_docs FROM (
-         |  SELECT CASE WHEN n_ws < $MinKeepTokens THEN 'too_short'
-         |              WHEN pr >= $MaxPunctRatio THEN 'high_punct'
-         |              WHEN n3 > 0 AND CAST(n3 - d3 AS DOUBLE) / CAST(n3 AS DOUBLE) >= 0.3
-         |                THEN 'repetitive'
-         |              WHEN ($duckLangCase) <> lang THEN 'lang_mismatch'
-         |              ELSE 'keep' END AS verdict
-         |  FROM r)
-         |GROUP BY 1""".stripMargin
-    },
-
-    "q77_temperature_mix" ->
-      """WITH c AS (SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY 1),
-        |t AS (SELECT MAX(n_docs) AS md FROM c)
-        |SELECT source, n_docs,
-        |       sqrt(CAST(n_docs AS DOUBLE)) / sqrt(CAST(md AS DOUBLE)) AS temp_weight,
-        |       CAST(floor(sqrt(CAST(n_docs AS DOUBLE) * CAST(md AS DOUBLE))) AS BIGINT)
-        |         AS target_docs
-        |FROM c, t""".stripMargin,
-
-    "q78_chunk_docs" ->
-      s"""WITH t AS (SELECT doc_id, $duckWsTokens AS n_tok FROM documents),
-         |c AS (SELECT doc_id, n_tok,
-         |        unnest(range(0, greatest(n_tok, 1), 96)) AS tok_start
-         |      FROM t)
-         |SELECT doc_id, CAST(tok_start // 96 AS INT) AS chunk_idx,
-         |       CAST(tok_start AS INT) AS tok_start,
-         |       CAST(least(128, n_tok - tok_start) AS INT) AS tok_len
-         |FROM c""".stripMargin,
-
-    // each merge pass = one replace() over the bracketed symbol repr;
-    // generated from the same BpeMerges constant as the Spark side
-    "q96_bpe_tokens" -> {
-      val replaced = BpeMerges.foldLeft("repr") { case (acc, (a, b)) =>
-        s"replace($acc, '|$a||$b|', '|$a$b|')"
-      }
-      s"""WITH w AS (
-         |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-         |  FROM documents),
-         |s AS (
-         |  SELECT doc_id,
-         |         regexp_replace(word, '(.)', '|\\1|', 'g') AS repr
-         |  FROM w),
-         |t AS (
-         |  SELECT doc_id,
-         |         len(string_split(trim($replaced, '|'), '||')) AS n_tok
-         |  FROM s),
-         |agg AS (
-         |  SELECT doc_id, SUM(n_tok) AS n_tokens, COUNT(*) AS n_words
-         |  FROM t GROUP BY 1)
-         |SELECT d.doc_id,
-         |       CAST(COALESCE(agg.n_tokens, 0) AS BIGINT) AS n_tokens,
-         |       CAST(COALESCE(agg.n_words, 0) AS BIGINT) AS n_words
-         |FROM documents d LEFT JOIN agg USING (doc_id)""".stripMargin
-    },
-
-    "q85_array_ops" ->
-      """WITH topw AS (
-        |  SELECT list(w ORDER BY w) AS top FROM (
-        |    SELECT w FROM (
-        |      SELECT w, COUNT(*) AS n
-        |      FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-        |            FROM documents)
-        |      GROUP BY 1)
-        |    ORDER BY n DESC, w LIMIT 10))
-        |SELECT doc_id,
-        |  CAST(len(list_intersect(list_distinct(ws), topw.top)) AS INT) AS n_common,
-        |  CAST(len(list_filter(topw.top, t -> NOT list_contains(ws, t))) AS INT) AS n_missing
-        |FROM (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
-        |      FROM documents), topw""".stripMargin,
-
-    "q83_table_digest" -> {
-      // decode hex nibble at 1-based position p of the md5 string
-      def nib(p: Int) =
-        s"(CASE WHEN ascii(substr(h, $p, 1)) <= 57 " +
-          s"THEN ascii(substr(h, $p, 1)) - 48 " +
-          s"ELSE ascii(substr(h, $p, 1)) - 87 END)"
-      val value = (1 to 8)
-        .map(p => s"CAST(${nib(p)} AS HUGEINT) * ${1L << (4 * (8 - p))}")
-        .mkString(" + ")
-      s"""SELECT COUNT(*) AS n_rows,
-         |       CAST(SUM($value) % $DigestMod AS BIGINT) AS digest
-         |FROM (SELECT md5(CAST(doc_id AS VARCHAR) || ':' || COALESCE(text, '')) AS h
-         |      FROM documents)""".stripMargin
-    },
-
-    "q63_bigram_pmi" ->
-      """WITH w AS (SELECT regexp_extract_all(lower(text), '[a-z]+') AS ws FROM documents),
-        |bg AS (SELECT unnest(list_transform(range(0, greatest(len(ws) - 1, 0)),
-        |                     i -> ws[i + 1] || ' ' || ws[i + 2])) AS bg
-        |       FROM w),
-        |bgc AS (SELECT bg, COUNT(*) AS cab FROM bg GROUP BY 1 HAVING COUNT(*) >= 5),
-        |uni AS (SELECT w, COUNT(*) AS c
-        |        FROM (SELECT unnest(ws) AS w FROM w) GROUP BY 1),
-        |tot AS (SELECT COUNT(*) AS nn FROM bg)
-        |SELECT b.bg AS bigram, b.cab,
-        |       CAST(CAST(b.cab AS HUGEINT) * t.nn AS DOUBLE) /
-        |       CAST(CAST(u1.c AS HUGEINT) * u2.c AS DOUBLE) AS pmi_ratio
-        |FROM bgc b
-        |CROSS JOIN tot t
-        |JOIN uni u1 ON u1.w = string_split(b.bg, ' ')[1]
-        |JOIN uni u2 ON u2.w = string_split(b.bg, ' ')[2]""".stripMargin,
-
-    "q58_pii_mask" ->
-      """SELECT doc_id,
-        | regexp_replace(
-        |   regexp_replace(text || ' contact: user' || CAST(doc_id AS VARCHAR) || '@example.com ref 12345',
-        |                  '[a-z0-9._]+@[a-z0-9.]+', '<email>', 'g'),
-        |   '[0-9]+', '#', 'g') AS masked,
-        | regexp_matches(text || ' contact: user' || CAST(doc_id AS VARCHAR) || '@example.com ref 12345',
-        |                '@example\.com') AS had_email
-        |FROM documents""".stripMargin,
-
-    // full replay: bigram occurrence stream → corpus counts → per-doc
-    // coverage → integer keep verdict; docs without bigrams keep 0/0
-    "q101_lm_gate" ->
-      s"""WITH w AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws FROM documents),
-         |big AS (SELECT doc_id, unnest(list_transform(range(0, greatest(len(ws) - 1, 0)),
-         |                              i -> ws[i + 1] || ' ' || ws[i + 2])) AS g
-         |        FROM w),
-         |cnt AS (SELECT g, COUNT(*) AS c FROM big GROUP BY 1),
-         |per AS (SELECT b.doc_id,
-         |               CAST(COUNT(*) AS BIGINT) AS bi_total,
-         |               CAST(SUM(CASE WHEN c.c >= $LmMinCount THEN 1 ELSE 0 END) AS BIGINT) AS bi_hits
-         |        FROM big b JOIN cnt c USING (g) GROUP BY 1)
-         |SELECT d.doc_id,
-         |       COALESCE(p.bi_total, 0) AS bi_total,
-         |       COALESCE(p.bi_hits, 0) AS bi_hits,
-         |       COALESCE(p.bi_hits, 0) * 100 >= COALESCE(p.bi_total, 0) * $LmMinPct AS keep
-         |FROM documents d LEFT JOIN per p USING (doc_id)""".stripMargin,
-
-    // full replay: token stream → (doc, term, tf) → df → exact-integer
-    // quantized idf → top-k per doc by (score desc, term asc);
-    // // is DuckDB floor division (all values positive ⇒ identical to
-    // Spark's DIV truncation)
-    "q102_tfidf_terms" ->
-      s"""WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS term
-         |             FROM documents),
-         |tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM tok GROUP BY 1, 2),
-         |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
-         |dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-         |s AS (SELECT tf.doc_id, tf.term,
-         |             tf.tf * (($TfIdfScale * n.n) // dfreq.df) AS score
-         |      FROM tf CROSS JOIN n JOIN dfreq USING (term)),
-         |r AS (SELECT doc_id, term, score,
-         |             row_number() OVER (PARTITION BY doc_id
-         |                                ORDER BY score DESC, term) AS rn
-         |      FROM s),
-         |top AS (SELECT doc_id,
-         |               string_agg(term, ',' ORDER BY score DESC, term) AS top_terms
-         |        FROM r WHERE rn <= $TfIdfK GROUP BY 1)
-         |SELECT d.doc_id, COALESCE(t.top_terms, '') AS top_terms
-         |FROM documents d LEFT JOIN top t USING (doc_id)""".stripMargin,
-
-    // full replay of the integer BM25: doc lengths → pruned tf → df →
-    // quantized term scores → exact integer sums → (score desc, id)
-    // top-k with rank. // is floor division (all values positive).
-    "q103_bm25" ->
-      s"""WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
-         |tok AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS term
-         |        FROM documents),
-         |dl AS (SELECT d.doc_id, CAST(COALESCE(c.c, 0) AS BIGINT) AS dl
-         |       FROM documents d LEFT JOIN (SELECT doc_id, COUNT(*) AS c FROM tok GROUP BY 1) c
-         |       USING (doc_id)),
-         |t AS (SELECT CAST(SUM(dl) AS BIGINT) AS t FROM dl),
-         |tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM tok
-         |       WHERE term IN (${Bm25Query.map(q => s"'$q'").mkString(", ")}) GROUP BY 1, 2),
-         |dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-         |s AS (SELECT tf.doc_id,
-         |             ((10000 * n.n) // dfreq.df) *
-         |             ((1000000 * 22 * t.t * tf.tf) //
-         |              (10 * t.t * tf.tf + 3 * t.t + 9 * dl.dl * n.n)) AS sc
-         |      FROM tf JOIN dfreq USING (term) JOIN dl USING (doc_id)
-         |           CROSS JOIN n CROSS JOIN t),
-         |d AS (SELECT doc_id, CAST(SUM(sc) AS BIGINT) AS score FROM s GROUP BY 1),
-         |top AS (SELECT doc_id, score FROM d ORDER BY score DESC, doc_id LIMIT $Bm25K)
-         |SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT) AS rank,
-         |       doc_id, score
-         |FROM top""".stripMargin,
-
-    // the q103 BM25 CTE with a RrfPool-deep pool, a parallel
-    // TF-density pool over the same pruned tf table, and the integer
-    // RRF merge — floor divisions on positive operands throughout.
-    "q128_rrf_fusion" ->
-      s"""WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
-         |tok AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS term
-         |        FROM documents),
-         |dl AS (SELECT d.doc_id, CAST(COALESCE(c.c, 0) AS BIGINT) AS dl
-         |       FROM documents d LEFT JOIN (SELECT doc_id, COUNT(*) AS c FROM tok GROUP BY 1) c
-         |       USING (doc_id)),
-         |t AS (SELECT CAST(SUM(dl) AS BIGINT) AS t FROM dl),
-         |tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM tok
-         |       WHERE term IN (${Bm25Query.map(q => s"'$q'").mkString(", ")}) GROUP BY 1, 2),
-         |dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-         |s AS (SELECT tf.doc_id,
-         |             ((10000 * n.n) // dfreq.df) *
-         |             ((1000000 * 22 * t.t * tf.tf) //
-         |              (10 * t.t * tf.tf + 3 * t.t + 9 * dl.dl * n.n)) AS sc
-         |      FROM tf JOIN dfreq USING (term) JOIN dl USING (doc_id)
-         |           CROSS JOIN n CROSS JOIN t),
-         |dbm AS (SELECT doc_id, CAST(SUM(sc) AS BIGINT) AS score FROM s GROUP BY 1),
-         |topa AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT) AS ra
-         |         FROM (SELECT doc_id, score FROM dbm ORDER BY score DESC, doc_id LIMIT $RrfPool)),
-         |s2 AS (SELECT tf.doc_id, ($TfDenScale * SUM(tf.tf)) // dl.dl AS sc2
-         |       FROM tf JOIN dl USING (doc_id) GROUP BY tf.doc_id, dl.dl),
-         |topb AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY sc2 DESC, doc_id) AS INT) AS rb
-         |         FROM (SELECT doc_id, sc2 FROM s2 ORDER BY sc2 DESC, doc_id LIMIT $RrfPool)),
-         |f AS (SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id,
-         |             COALESCE($RrfScale // ($RrfC + a.ra), 0) +
-         |             COALESCE($RrfScale // ($RrfC + b.rb), 0) AS rrf
-         |      FROM topa a FULL JOIN topb b ON a.doc_id = b.doc_id)
-         |SELECT CAST(row_number() OVER (ORDER BY rrf DESC, doc_id) AS INT) AS rank, doc_id, rrf
-         |FROM (SELECT doc_id, rrf FROM f ORDER BY rrf DESC, doc_id LIMIT $RrfK)""".stripMargin,
-
-    // same selection rule as the aggregate: k smallest salted-md5
-    // 60-bit prefixes per stratum; fixed-width lowercase hex compares
-    // identically as string and as number, and prefix ties break on
-    // the zero-padded id exactly like the heap's payload order.
-    "q152_contiguous_ids" ->
-      """SELECT doc_id, lang, source,
-        |       CAST(row_number() OVER (ORDER BY lang, doc_id) - 1 AS BIGINT)
-        |         AS ex_id
-        |FROM documents""".stripMargin,
-
-    "q153_source_curation" ->
-      s"""SELECT doc_id, source, rn FROM (
-         |  SELECT doc_id, source,
-         |    CAST(row_number() OVER (PARTITION BY source
-         |      ORDER BY md5('q153:' || CAST(doc_id AS VARCHAR)), doc_id)
-         |      AS INT) AS rn
-         |  FROM documents
-         |  WHERE source NOT IN (${CurationBlocked.map("'" + _ + "'").mkString(", ")}))
-         |WHERE rn <= $CurationCap""".stripMargin,
-
-    "q154_export_manifest" ->
-      s"""WITH e AS (SELECT n_chars,
-         |    CAST(row_number() OVER (ORDER BY lang, doc_id) - 1 AS BIGINT)
-         |      AS ex_id
-         |  FROM documents)
-         |SELECT CAST(ex_id // $ExportShardSize AS BIGINT) AS shard,
-         |       CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |       CAST(SUM(n_chars) AS BIGINT) AS n_bytes,
-         |       CAST(MIN(ex_id) AS BIGINT) AS min_ex_id,
-         |       CAST(MAX(ex_id) AS BIGINT) AS max_ex_id
-         |FROM e GROUP BY 1""".stripMargin,
-
-    "q156_training_order" ->
-      s"""WITH e AS (SELECT doc_id, lang, n_chars,
-         |    md5('q156:' || CAST(doc_id AS VARCHAR)) AS h
-         |  FROM documents)
-         |SELECT doc_id, lang, n_chars, h,
-         |  CAST(row_number() OVER (ORDER BY h, doc_id) - 1 AS BIGINT)
-         |    AS ex_id,
-         |  CAST((row_number() OVER (ORDER BY h, doc_id) - 1)
-         |    // $ExportShardSize AS BIGINT) AS shard
-         |FROM e""".stripMargin,
-
-    "q151_weighted_sample" ->
-      s"""WITH d AS (SELECT doc_id, n_chars,
-         |             CAST(('0x' || substring(md5('q151:' ||
-         |               CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-         |           FROM documents WHERE n_chars > 0),
-         |p AS (SELECT doc_id, n_chars, h // n_chars AS priority FROM d),
-         |t AS (SELECT * FROM p ORDER BY priority, doc_id
-         |      LIMIT $WeightedSampleK)
-         |SELECT CAST(row_number() OVER (ORDER BY priority, doc_id) AS INT)
-         |         AS rn,
-         |       doc_id, n_chars, CAST(priority AS BIGINT) AS priority
-         |FROM t""".stripMargin,
-
-    "q104_stratified_sample" ->
-      s"""SELECT lang, source, rn, doc_id FROM (
-         |  SELECT lang, source, doc_id,
-         |    CAST(row_number() OVER (PARTITION BY lang, source
-         |      ORDER BY substring(md5('q104:' || CAST(doc_id AS VARCHAR)), 1, 15),
-         |               lpad(CAST(doc_id AS VARCHAR), 10, '0')) AS INT) AS rn
-         |  FROM documents)
-         |WHERE rn <= $StratQuota""".stripMargin,
-
-    "q108_term_burstiness" ->
-      s"""WITH tok AS (SELECT doc_id,
-         |               unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-         |             FROM documents),
-         |pd AS (SELECT w, doc_id, COUNT(*) AS c FROM tok GROUP BY 1, 2)
-         |SELECT w, CAST(COUNT(*) AS BIGINT) AS df, CAST(SUM(c) AS BIGINT) AS cf,
-         |       CAST(SUM(c) AS DOUBLE) / COUNT(*) AS burstiness
-         |FROM pd GROUP BY 1
-         |HAVING CAST(SUM(c) AS BIGINT) >= $BurstMinCf""".stripMargin,
-
-    "q123_corpus_report" ->
-      s"""WITH cells AS (
-         |  SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |         CAST(SUM(n_chars) AS BIGINT) AS n_chars,
-         |         CAST(SUM($duckWsTokens) AS BIGINT) AS n_tokens
-         |  FROM documents GROUP BY 1, 2),
-         |t AS (SELECT CAST(SUM(n_tokens) AS BIGINT) AS total FROM cells)
-         |SELECT source, lang, n_docs, n_chars, n_tokens,
-         |       n_tokens * 10000 // total AS share_bp
-         |FROM cells CROSS JOIN t""".stripMargin,
-
-    "q117_systematic_sample" ->
-      """WITH c AS (
-        |  SELECT lang, doc_id, n_chars,
-        |    SUM(n_chars) OVER (PARTITION BY lang ORDER BY doc_id
-        |                       ROWS UNBOUNDED PRECEDING) AS cum,
-        |    SUM(n_chars) OVER (PARTITION BY lang) // 10 AS step
-        |  FROM documents)
-        |SELECT lang, doc_id, n_chars, CAST(cum AS BIGINT) AS cum
-        |FROM c
-        |WHERE step > 0 AND cum // step > (cum - n_chars) // step""".stripMargin,
-
-    // exact top-probe counts; the sketch verdict booleans are the
-    // engine-agnostic contract (TRUE here = "your sketch, your check")
-    "q109_cms_freq" ->
-      s"""SELECT w, rnk, n, TRUE AS no_undercount, TRUE AS within_bound FROM (
-         |  SELECT w, CAST(COUNT(*) AS BIGINT) AS n,
-         |    CAST(row_number() OVER (ORDER BY COUNT(*) DESC, w) AS INT) AS rnk
-         |  FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-         |        FROM documents)
-         |  GROUP BY 1)
-         |WHERE rnk <= $CmsProbes""".stripMargin,
-
-    "q141_phrase_match" -> {
-      val k = PhraseWords.length
-      s"""WITH w AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
-         |           FROM documents),
-         |g AS (SELECT doc_id,
-         |        CASE WHEN len(ws) >= $k
-         |          THEN list_transform(range(0, len(ws) - ${k - 1}),
-         |            i -> array_to_string(
-         |              list_slice(ws, CAST(i AS INT) + 1, CAST(i AS INT) + $k), ' '))
-         |          ELSE CAST([] AS VARCHAR[]) END AS gs
-         |      FROM w)
-         |SELECT doc_id,
-         |       CAST(len(list_filter(gs, x -> x = '${PhraseWords.mkString(" ")}'))
-         |            AS BIGINT) AS n_matches
-         |FROM g
-         |WHERE len(list_filter(gs, x -> x = '${PhraseWords.mkString(" ")}')) > 0""".stripMargin
-    },
-
-    // identical page synthesis; the extraction chain replays
-    // operators.Markup step for step (regexp dialect-safe: '(?s)',
-    // '<[^>]*>', '<[^>]*$' and the EXPLICIT whitespace class
-    // '[ \t\n\r\f]+' parse the same under Java regex and RE2 — \s
-    // would NOT: Java's includes U+000B, RE2's doesn't); the entity
-    // replace chain is GENERATED from Markup.Entities (amp forms
-    // last), so the r16 numeric-character-reference table cannot
-    // drift between engines; ratio div guarded by greatest() as on
-    // the Spark side
-    "q164_html_extract" ->
-      s"""WITH b AS (
-         |  SELECT doc_id,
-         |    '<html><head><title>doc ' || CAST(doc_id AS VARCHAR) ||
-         |    '</title><style>.x{color:red}</style></head><body><nav>' ||
-         |    repeat('$HtmlNavLink', CAST(doc_id % 7 + 1 AS INT)) ||
-         |    '</nav><p>' || text || '</p>$HtmlRefSnippet' ||
-         |    CASE WHEN doc_id % 5 = 0 THEN '$HtmlAdBlock' ELSE '' END ||
-         |    '<footer>(c) corpus</footer></body></html>' AS html
-         |  FROM documents WHERE text IS NOT NULL),
-         |e AS (SELECT doc_id, html,
-         |        regexp_extract(html, '(?s)<body[^>]*>(.*)</body>', 1) AS body
-         |      FROM b),
-         |s AS (SELECT doc_id, html, body,
-         |        regexp_replace(regexp_replace(body, '<[^>]*>', ' ', 'g'),
-         |                       '<[^>]*$$', ' ', 'g') AS stripped
-         |      FROM e),
-         |t AS (SELECT doc_id,
-         |        CAST(length(html) AS BIGINT) AS html_chars,
-         |        CAST((length(body) - length(replace(body, '<a href', ''))) // 7
-         |             AS BIGINT) AS n_links,
-         |        trim(regexp_replace(${duckEntityDecode("stripped")},
-         |          '[ \\t\\n\\r\\f]+', ' ', 'g')) AS txt
-         |      FROM s)
-         |SELECT doc_id, html_chars, n_links,
-         |  CAST(length(txt) AS BIGINT) AS extracted_chars,
-         |  md5(txt) AS extracted_md5,
-         |  CAST((length(txt) * 1048576) // greatest(html_chars, 1)
-         |       AS BIGINT) AS markup_ratio_q20,
-         |  (n_links <= $HtmlMaxLinks AND
-         |   (length(txt) * 1048576) // greatest(html_chars, 1)
-         |     >= $HtmlRatioMinQ20) AS keep
-         |FROM t""".stripMargin,
-
-    // identical frozen weights (QualityClassifier constants inlined),
-    // identical feature arithmetic: every q20 div happens BEFORE its
-    // weight multiplies (so `div`/`//` agree — dividends are all
-    // non-negative), the token cap via least(), the dot product in
-    // BIGINT end to end
-    "q165_learned_quality" -> {
-      import graft.operators.QualityClassifier._
-      // per-language hits over the ALREADY-extracted word array (the
-      // Spark side filters __qc_ws the same way — one regexp pass)
-      val hits = stopwords.map { case (_, stops) =>
-        s"len(list_filter(ws, w -> list_contains(${duckList(stops)}, w)))"
-      }.mkString(" + ")
-      s"""WITH t AS (
-         |  SELECT doc_id,
-         |    $duckWsTokens AS n_ws,
-         |    $duckPunct AS n_punct,
-         |    length(text) AS n_chars,
-         |    regexp_extract_all(lower(text), '[a-z]+') AS ws
-         |  FROM documents WHERE text IS NOT NULL),
-         |f AS (
-         |  SELECT doc_id,
-         |    $WTokens * least(n_ws, $TokenCap) AS c_tokens,
-         |    $WPunct * ((CAST(n_punct AS BIGINT) * 1048576) //
-         |               greatest(CAST(n_chars AS BIGINT), 1)) AS c_punct,
-         |    $WStop * ((CAST($hits AS BIGINT) * 1048576) //
-         |              greatest(CAST(len(ws) AS BIGINT), 1)) AS c_stop,
-         |    $WWlen * ((CAST(coalesce(list_sum(list_transform(ws, w -> length(w))), 0)
-         |                    AS BIGINT) * 131072) //
-         |              greatest(CAST(len(ws) AS BIGINT), 1)) AS c_wlen
-         |  FROM t)
-         |SELECT doc_id,
-         |  CAST(c_tokens AS BIGINT) AS c_tokens,
-         |  CAST(c_punct AS BIGINT) AS c_punct,
-         |  CAST(c_stop AS BIGINT) AS c_stop,
-         |  CAST(c_wlen AS BIGINT) AS c_wlen,
-         |  CAST($Bias + c_tokens + c_punct + c_stop + c_wlen AS BIGINT) AS score,
-         |  ($Bias + c_tokens + c_punct + c_stop + c_wlen >= 0) AS keep
-         |FROM f""".stripMargin
-    },
-
-    // identical synthesis, and the detection/redaction chain is
-    // GENERATED from Pii.Patterns (regexes + placeholders + order), so
-    // the two engines cannot drift: the patterns use only syntax with
-    // identical Java-regex/RE2 semantics (explicit classes, bounded
-    // repetition — no \b, no \d, no lookaround)
-    "q166_pii_scrub" -> {
-      val pats = graft.operators.Pii.Patterns
-      val counts = pats.map { case (fam, re, _) =>
-        s"CAST(len(regexp_extract_all(text, '$re')) AS BIGINT) AS n_$fam"
-      }.mkString(",\n          ")
-      val redacted = pats.foldLeft("text") { case (e, (_, re, ph)) =>
-        s"regexp_replace($e, '$re', '$ph', 'g')"
-      }
-      val cleanSql = pats.map { case (_, re, _) =>
-        s"len(regexp_extract_all(redacted, '$re')) = 0"
-      }.mkString(" AND ")
-      s"""WITH p AS (
-         |  SELECT doc_id,
-         |    text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com' ||
-         |    CASE WHEN doc_id % 3 = 0 THEN ' tel 555-' ||
-         |      lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-' ||
-         |      lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ELSE '' END ||
-         |    CASE WHEN doc_id % 5 = 0 THEN ' host 10.0.' ||
-         |      CAST(doc_id % 256 AS VARCHAR) || '.' ||
-         |      CAST(doc_id % 97 AS VARCHAR) ELSE '' END ||
-         |    CASE WHEN doc_id % 7 = 0 THEN ' card 4242 4242 4242 ' ||
-         |      lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ELSE '' END ||
-         |    CASE WHEN doc_id % 11 = 0 THEN ' ssn ' ||
-         |      lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-' ||
-         |      lpad(CAST(doc_id % 100 AS VARCHAR), 2, '0') || '-' ||
-         |      lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ELSE '' END AS text
-         |  FROM documents WHERE text IS NOT NULL),
-         |r AS (
-         |  SELECT doc_id,
-         |          $counts,
-         |    $redacted AS redacted
-         |  FROM p)
-         |SELECT doc_id, n_email, n_cc, n_ssn, n_phone, n_ip,
-         |  CAST(length(redacted) AS BIGINT) AS redacted_chars,
-         |  md5(redacted) AS redacted_md5,
-         |  ($cleanSql) AS clean
-         |FROM r""".stripMargin
-    },
-
-    // identical plant; positional n-grams via the q141 slice pattern
-    // (duplicates KEPT — dedup metrics count positions); thresholds
-    // inlined from Repetition's frozen q20 constants; every div is a
-    // floor-// on non-negative BIGINTs, matching Spark's `div`
-    "q168_repetition_filter" -> {
-      import graft.operators.Repetition._
-      def gs(k: Int) =
-        s"CASE WHEN len(ws) >= $k THEN list_transform(range(0, len(ws) - ${k - 1}), " +
-          s"i -> array_to_string(list_slice(ws, CAST(i AS INT) + 1, CAST(i AS INT) + $k), ' ')) " +
-          "ELSE CAST([] AS VARCHAR[]) END"
-      def dup(n: Int) =
-        s"CAST(((len(g$n) - len(list_distinct(g$n))) * 1048576) // " +
-          s"greatest(len(g$n), 1) AS BIGINT) AS dup${n}_q20"
-      s"""WITH p AS (
-         |  SELECT doc_id,
-         |    text || CASE WHEN doc_id % $RepPlantMod = 0
-         |                 THEN ' $RepPlantTail' ELSE '' END AS text
-         |  FROM documents WHERE text IS NOT NULL),
-         |w AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
-         |      FROM p),
-         |g AS (SELECT doc_id, ${gs(2)} AS g2, ${gs(3)} AS g3, ${gs(4)} AS g4
-         |      FROM w),
-         |r AS (SELECT doc_id,
-         |        ${dup(2)},
-         |        ${dup(3)},
-         |        ${dup(4)},
-         |        CAST((coalesce(list_max(list_filter(list_transform(
-         |               list_distinct(g2),
-         |               g -> len(list_filter(g2, x -> x = g))), c -> c >= 2)),
-         |             0) * 1048576)
-         |             // greatest(len(g2), 1) AS BIGINT) AS top2_q20
-         |      FROM g)
-         |SELECT doc_id, dup2_q20, dup3_q20, dup4_q20, top2_q20,
-         |  (dup2_q20 <= $Dup2MaxQ20 AND dup3_q20 <= $Dup3MaxQ20 AND
-         |   dup4_q20 <= $Dup4MaxQ20 AND top2_q20 <= $Top2MaxQ20) AS keep
-         |FROM r""".stripMargin
-    }
-  )
 }

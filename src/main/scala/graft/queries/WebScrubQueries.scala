@@ -98,8 +98,8 @@ object WebScrubQueries {
   private def docs(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "documents")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q167_web_scrub" -> ((s, d) => {
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q167_web_scrub", (s, d) => {
       val base = docs(s, d).filter(col("text").isNotNull).select(
         col("doc_id"),
         concat(
@@ -155,102 +155,13 @@ object WebScrubQueries {
           .as("s"))
         .select(col("s.stage_ord"), col("s.stage"), col("s.n_rows"),
           col("s.checksum"))
-    }),
-
-    // q170 — the PRODUCTION 4-stage chain (r16 review item 3): q167's
-    // scrub with the Gopher repetition rules inserted between the
-    // learned filter and PII, still ONE filter-free per-row pass
-    // (PlanSpec: ≤1 exchange, no join). q167's victim families carry
-    // over; three NEW repetition-flavored plants (constants above):
-    //   - % 11 loop tail — dies at ITS OWN stage (passes markup AND
-    //     the learned filter by construction: dense stopwords, short
-    //     words — the page class q168 exists to catch);
-    //   - % 23 entity-obfuscated loop — the decode-INVARIANCE
-    //     demonstrator (dies at repetition decoded or not; the spec
-    //     proves the equality);
-    //   - % 17 tag-scaffolding list — survives, pinning
-    //     strip-BEFORE-repetition (raw markup loops, visible text
-    //     does not; the spec runs the filter both ways).
-    // Stage 3's checksum sums all four q20 repetition signals over the
-    // rows REACHING the stage (markup ∧ quality), so the feature
-    // arithmetic of pages the stage kills is pinned too, not just the
-    // survivor count.
-    "q170_web_scrub_full" -> ((s, d) => {
-      val base = docs(s, d).filter(col("text").isNotNull).select(
-        col("doc_id"),
-        concat(
-          when(col("doc_id") % GibMod === 0, lit(Gibberish))
-            .otherwise(col("text")),
-          when(col("doc_id") % LoopMod === 0,
-            expr(s"' ' || repeat('$LoopUnit', 30)")).otherwise(lit("")),
-          when(col("doc_id") % PiiMod === 0,
-            concat(lit(" reach John.Doe"), col("doc_id").cast("string"),
-              lit("@Example.COM card 4242-4242-4242-4242 dial +1 555-010-"),
-              lpad((col("doc_id") % 10000).cast("string"), 4, "0")))
-            .otherwise(lit(""))).as("text"))
-      val html = concat(
-        lit("<html><head><title>w "), col("doc_id").cast("string"),
-        lit("</title></head><body>\n<nav>"),
-        expr(s"repeat('$NavLink', CAST(doc_id % 7 + 1 AS INT))"),
-        lit("</nav>\n<p>"), col("text"), lit("</p>\n" + RefSnippet),
-        when(col("doc_id") % ObfMod === 0, lit(ObfEmail)).otherwise(lit("")),
-        when(col("doc_id") % EntLoopMod === 0,
-          expr(s"'<p>' || repeat('$EntLoopUnit', 25) || '</p>'"))
-          .otherwise(lit("")),
-        when(col("doc_id") % ListMod === 0, lit(ListBlock)).otherwise(lit("")),
-        when(col("doc_id") % AdMod === 0, lit(AdBlock)).otherwise(lit("")),
-        lit("\n<footer>(c) corpus</footer></body></html>"))
-      val wide = WebScrub.scrubFull(
-        base.select(col("doc_id"), html.as("html")), "html")
-      val mq = col("markup_keep") && col("quality_keep")
-      val surv = WebScrub.survivedFull
-      val hits = Pii.Patterns.map { case (f, _, _) => col(s"n_$f") }
-        .reduce(_ + _)
-      val repSum = col("dup2_q20") + col("dup3_q20") + col("dup4_q20") +
-        col("top2_q20")
-      val a = wide.agg(
-        count(lit(1)).cast("bigint").as("n0"),
-        sum(col("html_chars")).as("c0"),
-        sum(when(col("markup_keep"), 1L).otherwise(0L)).as("n1"),
-        sum(when(col("markup_keep"), col("extracted_chars")).otherwise(0L))
-          .as("c1"),
-        sum(when(mq, 1L).otherwise(0L)).as("n2"),
-        sum(when(mq, col("score")).otherwise(0L)).as("c2"),
-        sum(when(surv, 1L).otherwise(0L)).as("n3"),
-        sum(when(mq, repSum).otherwise(0L)).as("c3"),
-        sum(when(surv && hits > 0L, 1L).otherwise(0L)).as("n4"),
-        sum(when(surv, hits).otherwise(0L)).as("c4"),
-        sum(when(surv && col("redacted") =!= col("extracted"), 1L)
-          .otherwise(0L)).as("n5"),
-        sum(when(surv,
-          conv(substring(md5(col("redacted")), 1, 8), 16, 10).cast("bigint"))
-          .otherwise(0L)).as("c5"),
-        sum(when(surv && !col("clean"), 1L).otherwise(0L)).as("n6"),
-        sum(when(surv && col("clean"), 1L).otherwise(0L)).as("c6"))
-      def st(ord: Int, name: String) =
-        struct(lit(ord).cast("int").as("stage_ord"), lit(name).as("stage"),
-          col(s"n$ord").cast("bigint").as("n_rows"),
-          col(s"c$ord").cast("bigint").as("checksum"))
-      a.select(explode(array(
-          st(0, "ingest"), st(1, "markup"), st(2, "quality"),
-          st(3, "repetition"), st(4, "pii_hits"), st(5, "redacted"),
-          st(6, "clean_exit")))
-          .as("s"))
-        .select(col("s.stage_ord"), col("s.stage"), col("s.n_rows"),
-          col("s.checksum"))
-    })
-  )
-
-  // ------------------------------------------------------------- oracle SQL
-
-  def oracleSql: Map[String, String] = Map(
-    // identical synthesis; the markup chain replays operators.Markup
-    // with the entity table GENERATED from Markup.Entities, the
-    // quality features inline QualityClassifier's frozen weights (the
-    // q165 fragments verbatim), and the detection/redaction chain is
-    // GENERATED from Pii.Patterns — three generated surfaces, zero
-    // room for engine drift
-    "q167_web_scrub" -> {
+    }, {
+      // identical synthesis; the markup chain replays operators.Markup
+      // with the entity table GENERATED from Markup.Entities, the
+      // quality features inline QualityClassifier's frozen weights (the
+      // q165 fragments verbatim), and the detection/redaction chain is
+      // GENERATED from Pii.Patterns — three generated surfaces, zero
+      // room for engine drift
       import QualityClassifier._
       val qcHits = stopwords.map { case (_, stops) =>
         s"len(list_filter(ws, w -> list_contains(${TextQueries.duckList(stops)}, w)))"
@@ -357,12 +268,93 @@ object WebScrubQueries {
          |  CAST(SUM(CASE WHEN surv AND NOT clean THEN 1 ELSE 0 END) AS BIGINT),
          |  CAST(SUM(CASE WHEN surv AND clean THEN 1 ELSE 0 END) AS BIGINT)
          |FROM p""".stripMargin
-    },
+    }),
 
-    // q167's generated surfaces (entity table, quality weights, Pii
-    // chain) plus the q168 repetition fragments — four generated
-    // surfaces, one SQL replay of the whole 4-stage chain
-    "q170_web_scrub_full" -> {
+    // q170 — the PRODUCTION 4-stage chain: q167's
+    // scrub with the Gopher repetition rules inserted between the
+    // learned filter and PII, still ONE filter-free per-row pass
+    // (PlanSpec: ≤1 exchange, no join). q167's victim families carry
+    // over; three NEW repetition-flavored plants (constants above):
+    //   - % 11 loop tail — dies at ITS OWN stage (passes markup AND
+    //     the learned filter by construction: dense stopwords, short
+    //     words — the page class q168 exists to catch);
+    //   - % 23 entity-obfuscated loop — the decode-INVARIANCE
+    //     demonstrator (dies at repetition decoded or not; the spec
+    //     proves the equality);
+    //   - % 17 tag-scaffolding list — survives, pinning
+    //     strip-BEFORE-repetition (raw markup loops, visible text
+    //     does not; the spec runs the filter both ways).
+    // Stage 3's checksum sums all four q20 repetition signals over the
+    // rows REACHING the stage (markup ∧ quality), so the feature
+    // arithmetic of pages the stage kills is pinned too, not just the
+    // survivor count.
+    QuerySpec("q170_web_scrub_full", (s, d) => {
+      val base = docs(s, d).filter(col("text").isNotNull).select(
+        col("doc_id"),
+        concat(
+          when(col("doc_id") % GibMod === 0, lit(Gibberish))
+            .otherwise(col("text")),
+          when(col("doc_id") % LoopMod === 0,
+            expr(s"' ' || repeat('$LoopUnit', 30)")).otherwise(lit("")),
+          when(col("doc_id") % PiiMod === 0,
+            concat(lit(" reach John.Doe"), col("doc_id").cast("string"),
+              lit("@Example.COM card 4242-4242-4242-4242 dial +1 555-010-"),
+              lpad((col("doc_id") % 10000).cast("string"), 4, "0")))
+            .otherwise(lit(""))).as("text"))
+      val html = concat(
+        lit("<html><head><title>w "), col("doc_id").cast("string"),
+        lit("</title></head><body>\n<nav>"),
+        expr(s"repeat('$NavLink', CAST(doc_id % 7 + 1 AS INT))"),
+        lit("</nav>\n<p>"), col("text"), lit("</p>\n" + RefSnippet),
+        when(col("doc_id") % ObfMod === 0, lit(ObfEmail)).otherwise(lit("")),
+        when(col("doc_id") % EntLoopMod === 0,
+          expr(s"'<p>' || repeat('$EntLoopUnit', 25) || '</p>'"))
+          .otherwise(lit("")),
+        when(col("doc_id") % ListMod === 0, lit(ListBlock)).otherwise(lit("")),
+        when(col("doc_id") % AdMod === 0, lit(AdBlock)).otherwise(lit("")),
+        lit("\n<footer>(c) corpus</footer></body></html>"))
+      val wide = WebScrub.scrubFull(
+        base.select(col("doc_id"), html.as("html")), "html")
+      val mq = col("markup_keep") && col("quality_keep")
+      val surv = WebScrub.survivedFull
+      val hits = Pii.Patterns.map { case (f, _, _) => col(s"n_$f") }
+        .reduce(_ + _)
+      val repSum = col("dup2_q20") + col("dup3_q20") + col("dup4_q20") +
+        col("top2_q20")
+      val a = wide.agg(
+        count(lit(1)).cast("bigint").as("n0"),
+        sum(col("html_chars")).as("c0"),
+        sum(when(col("markup_keep"), 1L).otherwise(0L)).as("n1"),
+        sum(when(col("markup_keep"), col("extracted_chars")).otherwise(0L))
+          .as("c1"),
+        sum(when(mq, 1L).otherwise(0L)).as("n2"),
+        sum(when(mq, col("score")).otherwise(0L)).as("c2"),
+        sum(when(surv, 1L).otherwise(0L)).as("n3"),
+        sum(when(mq, repSum).otherwise(0L)).as("c3"),
+        sum(when(surv && hits > 0L, 1L).otherwise(0L)).as("n4"),
+        sum(when(surv, hits).otherwise(0L)).as("c4"),
+        sum(when(surv && col("redacted") =!= col("extracted"), 1L)
+          .otherwise(0L)).as("n5"),
+        sum(when(surv,
+          conv(substring(md5(col("redacted")), 1, 8), 16, 10).cast("bigint"))
+          .otherwise(0L)).as("c5"),
+        sum(when(surv && !col("clean"), 1L).otherwise(0L)).as("n6"),
+        sum(when(surv && col("clean"), 1L).otherwise(0L)).as("c6"))
+      def st(ord: Int, name: String) =
+        struct(lit(ord).cast("int").as("stage_ord"), lit(name).as("stage"),
+          col(s"n$ord").cast("bigint").as("n_rows"),
+          col(s"c$ord").cast("bigint").as("checksum"))
+      a.select(explode(array(
+          st(0, "ingest"), st(1, "markup"), st(2, "quality"),
+          st(3, "repetition"), st(4, "pii_hits"), st(5, "redacted"),
+          st(6, "clean_exit")))
+          .as("s"))
+        .select(col("s.stage_ord"), col("s.stage"), col("s.n_rows"),
+          col("s.checksum"))
+    }, {
+      // q167's generated surfaces (entity table, quality weights, Pii
+      // chain) plus the q168 repetition fragments — four generated
+      // surfaces, one SQL replay of the whole 4-stage chain
       import QualityClassifier._
       val qcHits = stopwords.map { case (_, stops) =>
         s"len(list_filter(ws, w -> list_contains(${TextQueries.duckList(stops)}, w)))"
@@ -504,6 +496,6 @@ object WebScrubQueries {
          |  CAST(SUM(CASE WHEN surv AND NOT clean THEN 1 ELSE 0 END) AS BIGINT),
          |  CAST(SUM(CASE WHEN surv AND clean THEN 1 ELSE 0 END) AS BIGINT)
          |FROM p""".stripMargin
-    }
+    })
   )
 }

@@ -421,6 +421,30 @@ class CatalogSpec extends SparkSpec {
       "invalid-layout append must fail before publishing its commit")
   }
 
+  test("clusterBy layout check reads the written frame: undeclared tables append and fold") {
+    val dir = Files.createTempDirectory("cat_undeclared_cluster").toString
+    val cat = new Catalog(spark, s"$dir/wh", compactEvery = 2)
+    def batch(ids: Seq[Long]) = ids.map(i => (i % 2, i, s"v$i")).toDF("p", "id", "v")
+    cat.appendDelta("scratch_events", batch(Seq(3L, 1L)), Seq("p"), Seq("id"))
+    cat.appendDelta("scratch_events", batch(Seq(4L, 2L)), Seq("p"), Seq("id"))
+    assert(liveCommitCount(s"$dir/wh", "scratch_events") === 1)
+    assert(cat.table("scratch_events").select("id").as[Long].collect().sorted.toSeq ===
+      Seq(1L, 2L, 3L, 4L))
+    // a STRING partition column of the undeclared frame still fails loudly
+    intercept[IllegalArgumentException] {
+      cat.appendDelta("scratch_events_by_v", batch(Seq(1L)), Seq("v"), Seq("id"))
+    }
+    assert(!cat.exists("scratch_events_by_v"))
+    // a BOOLEAN partition column would read back from its directories
+    // as STRING, failing the auto-compaction after the append published:
+    // it is rejected at append entry instead
+    val flags = Seq((true, 1L), (false, 2L)).toDF("flag", "id")
+    intercept[IllegalArgumentException] {
+      cat.appendDelta("scratch_flags", flags, Seq("flag"), Seq("id"))
+    }
+    assert(!cat.exists("scratch_flags"))
+  }
+
   test("maxId rejects non-integral footer stats and falls back to the exact scan") {
     val dir = Files.createTempDirectory("cat_decmax").toString
     val cat = new Catalog(spark, s"$dir/wh")

@@ -16,4 +16,26 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(noOracle.subsetOf(SparkEntry.rowsOnlyQueries),
       s"queries missing oracle SQL: ${noOracle.mkString(", ")}")
   }
+
+  test("the registry holds 173 distinct query names") {
+    val names = SparkEntry.specs.map(_.name)
+    assert(names.size === 173)
+    assert(names.distinct.size === 173)
+  }
+
+  test("a query name declared twice fails registry construction") {
+    val q = SparkEntry.specs.head
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.join(Seq(q), SparkEntry.specs.tail.take(2) :+ q.copy(oracleSql = "SELECT 1"))
+    }
+    assert(e.getMessage.contains(q.name))
+  }
+
+  test("a query declared without oracle SQL is rejected") {
+    val q = SparkEntry.specs.head
+    Seq("", "  \n ").foreach { sql =>
+      val e = intercept[IllegalArgumentException](q.copy(oracleSql = sql))
+      assert(e.getMessage.contains(q.name))
+    }
+  }
 }

@@ -14,19 +14,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder().withExtensions(new GraftExtensions)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf: saveAsTable targets (bucketed-join tests) land in a
-      // temp dir, never the repo working directory
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val session: SparkSession = Sessions.local(4,
+    "spark.app.name" -> "graft-test",
+    // static conf: saveAsTable targets (bucketed-join tests) land in a
+    // temp dir, never the repo working directory
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh").toString)
 }

@@ -241,11 +241,11 @@ def artifacts_gate(repo):
         print("FAIL BASELINE.md contains XXX placeholder(s) — the gate "
               "document must commit real numbers")
         fails += 1
-    # Source of truth for the query set: every "qN_name" -> binding in
-    # the queries package (same names feed SparkEntry.queries).
+    # Source of truth for the query set: every QuerySpec("qN_name", ...)
+    # declaration in the queries package (the specs SparkEntry joins).
     declared = set()
     for p in glob.glob(f"{repo}/src/main/scala/graft/queries/*.scala"):
-        declared |= set(re.findall(r'"(q\d+_\w+)"\s*->', open(p).read()))
+        declared |= set(re.findall(r'QuerySpec\(\s*"(q\d+_\w+)"', open(p).read()))
     if not declared:
         print("FAIL no query declarations found under graft/queries")
         return 1
