@@ -1,6 +1,11 @@
 package graft
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 import graft.expressions.{ArrayPairs, SortedIntersectCount, BloomMightContain, BpeEncode, CmsEstimate, CmsSketch, DeletionVariants, DotProductFloat, MarkupClean, QcFeatures, RepetitionStats, SpanCut, TextStatsExpr, KmvMinima, LangId, Lev1Dist, MinHashSigs, MisraGries, NfcNormalize, SignBucketKeys, SimHashBits, StopHits, TopKStrings, VecSumLong, WinnowFingerprints, WordShingles}
 
@@ -9,36 +14,49 @@ import graft.expressions.{ArrayPairs, SortedIntersectCount, BloomMightContain, B
   * process; [[Sessions.local]] does this), or
   * `spark.sql.extensions=graft.GraftExtensions` (config/submit).
   *
-  * Currently registers the native expressions (SQL-callable and used by
-  * the operators through `call_function`).
+  * Registers the native expressions of [[GraftExtensions.functions]]
+  * (SQL-callable and used by the operators through `call_function`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(DotProductFloat.registration)
-    ext.injectFunction(WordShingles.registration)
-    ext.injectFunction(SimHashBits.registration)
-    ext.injectFunction(LangId.registration)
-    ext.injectFunction(StopHits.registration)
-    ext.injectFunction(MinHashSigs.registration)
-    ext.injectFunction(NfcNormalize.registration)
-    ext.injectFunction(SignBucketKeys.registration)
-    ext.injectFunction(BloomMightContain.registration)
-    ext.injectFunction(MisraGries.registration)
-    ext.injectFunction(TopKStrings.registration)
-    ext.injectFunction(VecSumLong.registration)
-    ext.injectFunction(WinnowFingerprints.registration)
-    ext.injectFunction(BpeEncode.registration)
-    ext.injectFunction(TextStatsExpr.registration)
-    ext.injectFunction(Lev1Dist.registration)
-    ext.injectFunction(DeletionVariants.registration)
-    ext.injectFunction(CmsSketch.registration)
-    ext.injectFunction(CmsEstimate.registration)
-    ext.injectFunction(ArrayPairs.registration)
-    ext.injectFunction(SortedIntersectCount.registration)
-    ext.injectFunction(KmvMinima.registration)
-    ext.injectFunction(RepetitionStats.registration)
-    ext.injectFunction(QcFeatures.registration)
-    ext.injectFunction(MarkupClean.registration)
-    ext.injectFunction(SpanCut.registration)
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(ext.injectFunction)
+}
+
+object GraftExtensions {
+  /** Spark's own reflective builder: it calls the constructor whose
+    * parameters are all `Expression`s and match the argument count, and
+    * fails analysis with `WRONG_NUM_ARGS` when none does. */
+  private def fn[T <: Expression : ClassTag](name: String): SparkSessionExtensions#FunctionDescription = {
+    val (info, builder) = FunctionRegistryBase.build[T](name, since = None)
+    (FunctionIdentifier(name), info, builder)
   }
+
+  /** Every native function, once. */
+  val functions: Seq[SparkSessionExtensions#FunctionDescription] = Seq(
+    fn[DotProductFloat](DotProductFloat.name),
+    fn[WordShingles](WordShingles.name),
+    fn[SimHashBits](SimHashBits.name),
+    fn[LangId](LangId.name),
+    fn[StopHits](StopHits.name),
+    fn[MinHashSigs](MinHashSigs.name),
+    fn[NfcNormalize](NfcNormalize.name),
+    fn[SignBucketKeys](SignBucketKeys.name),
+    fn[BloomMightContain](BloomMightContain.name),
+    fn[MisraGries](MisraGries.name),
+    fn[TopKStrings](TopKStrings.name),
+    fn[VecSumLong](VecSumLong.name),
+    fn[WinnowFingerprints](WinnowFingerprints.name),
+    fn[BpeEncode](BpeEncode.name),
+    fn[TextStatsExpr](TextStatsExpr.name),
+    fn[Lev1Dist](Lev1Dist.name),
+    fn[DeletionVariants](DeletionVariants.name),
+    fn[CmsSketch](CmsSketch.name),
+    fn[CmsEstimate](CmsEstimate.name),
+    fn[ArrayPairs](ArrayPairs.name),
+    fn[SortedIntersectCount](SortedIntersectCount.name),
+    fn[KmvMinima](KmvMinima.name),
+    fn[RepetitionStats](RepetitionStats.name),
+    fn[QcFeatures](QcFeatures.name),
+    fn[MarkupClean](MarkupClean.name),
+    fn[SpanCut](SpanCut.name))
 }

@@ -1,8 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
@@ -215,24 +214,8 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 
 object SortedIntersectCount {
   val name = "sorted_intersect_count"
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[SortedIntersectCount].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, s"$name takes 2 arguments, got ${exprs.length}")
-      SortedIntersectCount(exprs(0), exprs(1))
-    })
 }
 
 object ArrayPairs {
   val name = "array_pairs"
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[ArrayPairs].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 1, s"$name takes 1 argument, got ${exprs.length}")
-      ArrayPairs(exprs.head)
-    })
 }

@@ -1,10 +1,9 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, IntegerType, LongType, StringType}
@@ -90,14 +89,6 @@ case class BloomMightContain(left: Expression, right: Expression)
 
 object BloomMightContain {
   val name = "bloom_might_contain"
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[BloomMightContain].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, s"$name takes 2 arguments, got ${exprs.length}")
-      BloomMightContain(exprs.head, exprs(1))
-    })
 
   /** Column wrapper. `sketchBytes` must be a foldable binary column
     * (normally `lit(serializedBloom)`). */

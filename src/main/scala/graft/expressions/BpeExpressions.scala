@@ -3,9 +3,8 @@ package graft.expressions
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.call_function
@@ -102,12 +101,4 @@ object BpeEncode {
     call_function(name, text,
       org.apache.spark.sql.functions.array(
         merges.map { case (a, b) => org.apache.spark.sql.functions.lit(s"$a $b") }: _*))
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[BpeEncode].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, s"$name takes 2 arguments, got ${exprs.length}")
-      BpeEncode(exprs.head, exprs(1))
-    })
 }

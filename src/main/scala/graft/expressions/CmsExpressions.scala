@@ -2,10 +2,9 @@ package graft.expressions
 
 import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, TernaryLike}
@@ -44,6 +43,10 @@ case class CmsSketch(child: Expression, depthExpr: Expression,
                      inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[Array[Long]]
   with TernaryLike[Expression] {
+
+  /** The SQL form: children only, buffer offsets 0. */
+  def this(child: Expression, depthExpr: Expression, widthExpr: Expression) =
+    this(child, depthExpr, widthExpr, 0, 0)
 
   override def first: Expression = child
   override def second: Expression = depthExpr
@@ -149,15 +152,6 @@ object CmsSketch {
     val h = scala.util.hashing.MurmurHash3.bytesHash(bytes, 0x9E3779B9 * (row + 1) + 17)
     java.lang.Math.floorMod(h, width)
   }
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[CmsSketch].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 3,
-        s"$name takes 3 arguments (value, depth, width), got ${exprs.length}")
-      CmsSketch(exprs.head, exprs(1), exprs(2))
-    })
 }
 
 /** Point query against a [[CmsSketch]] array: the minimum cell across
@@ -221,13 +215,4 @@ object CmsEstimate {
   /** Column wrapper: min-cell point estimate of `value`'s count. */
   def estimate(sketch: org.apache.spark.sql.Column, value: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.call_function(name, sketch, value)
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[CmsEstimate].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2,
-        s"$name takes 2 arguments (sketch, value), got ${exprs.length}")
-      CmsEstimate(exprs.head, exprs(1))
-    })
 }

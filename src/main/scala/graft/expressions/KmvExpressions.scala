@@ -3,10 +3,9 @@ package graft.expressions
 import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -55,6 +54,9 @@ case class KmvMinima(left: Expression, right: Expression,
                      inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]]
   with BinaryLike[Expression] {
+
+  /** The SQL form: children only, buffer offsets 0. */
+  def this(left: Expression, right: Expression) = this(left, right, 0, 0)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
@@ -166,13 +168,4 @@ object KmvMinima {
       .otherwise(floor(lit((k - 1).toDouble) * lit(hashSpace) /
         element_at(mins, k).cast("double")).cast("long"))
   }
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[KmvMinima].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2,
-        s"$name takes 2 arguments (hash, k), got ${exprs.length}")
-      KmvMinima(exprs.head, exprs(1))
-    })
 }

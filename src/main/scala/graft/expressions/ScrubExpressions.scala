@@ -1,9 +1,8 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions.call_function
@@ -140,14 +139,6 @@ object RepetitionStats {
     StructField("dup3_q20", LongType, nullable = true),
     StructField("dup4_q20", LongType, nullable = true),
     StructField("top2_q20", LongType, nullable = false)))
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[RepetitionStats].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 1, s"$name takes 1 argument, got ${exprs.length}")
-      RepetitionStats(exprs.head)
-    })
 }
 
 /** Native learned-quality feature pack: word count, summed word length
@@ -217,14 +208,6 @@ object QcFeatures {
     StructField("n_words", IntegerType, nullable = false),
     StructField("wsum", IntegerType, nullable = true),
     StructField("hits", IntegerType, nullable = false)))
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[QcFeatures].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 1, s"$name takes 1 argument, got ${exprs.length}")
-      QcFeatures(exprs.head)
-    })
 }
 
 /** Native markup text chain over an ISOLATED body: tag strip → frozen
@@ -364,14 +347,6 @@ object MarkupClean {
   val schema: StructType = StructType(Seq(
     StructField("extracted", StringType, nullable = false),
     StructField("n_links", LongType, nullable = false)))
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[MarkupClean].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 1, s"$name takes 1 argument, got ${exprs.length}")
-      MarkupClean(exprs.head)
-    })
 }
 
 /** Native span cut-and-reassemble: given a document's text, the set of
@@ -486,14 +461,6 @@ object SpanCut {
     StructField("removed_words", LongType, nullable = false),
     StructField("removed_chars", LongType, nullable = false),
     StructField("cleaned", StringType, nullable = false)))
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[SpanCut].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 3, s"$name takes 3 arguments, got ${exprs.length}")
-      SpanCut(exprs.head, exprs(1), exprs(2))
-    })
 }
 
 object ScrubExpressions {

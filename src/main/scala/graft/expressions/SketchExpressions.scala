@@ -2,10 +2,9 @@ package graft.expressions
 
 import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -41,6 +40,9 @@ case class MisraGries(child: Expression, kExpr: Expression,
                       inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[java.util.HashMap[String, java.lang.Long]]
   with BinaryLike[Expression] {
+
+  /** The SQL form: children only, buffer offsets 0. */
+  def this(child: Expression, kExpr: Expression) = this(child, kExpr, 0, 0)
 
   override def left: Expression = child
   override def right: Expression = kExpr
@@ -168,12 +170,4 @@ case class MisraGries(child: Expression, kExpr: Expression,
 
 object MisraGries {
   val name = "misra_gries"
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[MisraGries].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, s"$name takes 2 arguments (value, k), got ${exprs.length}")
-      MisraGries(exprs.head, exprs(1))
-    })
 }

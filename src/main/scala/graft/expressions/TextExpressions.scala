@@ -3,9 +3,8 @@ package graft.expressions
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.call_function
@@ -34,6 +33,9 @@ import org.apache.spark.unsafe.types.UTF8String
 case class WordShingles(first: Expression, second: Expression,
                         third: Expression)
   extends TernaryExpression with CodegenFallback {
+
+  /** The two-argument SQL form: distinct shingles. */
+  def this(first: Expression, second: Expression) = this(first, second, Literal(false))
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = WordShingles.name
@@ -104,16 +106,6 @@ case class WordShingles(first: Expression, second: Expression,
 
 object WordShingles {
   val name = "word_shingles"
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[WordShingles].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2 || exprs.length == 3,
-        s"$name takes 2 or 3 arguments, got ${exprs.length}")
-      WordShingles(exprs.head, exprs(1), exprs.lift(2).getOrElse(
-        org.apache.spark.sql.catalyst.expressions.Literal(false)))
-    })
 }
 
 /** Shared [a-z]-run tokenizer for the native text expressions —
@@ -192,14 +184,6 @@ case class SimHashBits(child: Expression)
 
 object SimHashBits {
   val name = "simhash_bits"
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[SimHashBits].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 1, s"$name takes 1 argument, got ${exprs.length}")
-      SimHashBits(exprs.head)
-    })
 }
 
 /** Native MinHash signature: for each h in 1..numHashes, the
@@ -303,14 +287,6 @@ case class MinHashSigs(left: Expression, right: Expression)
 
 object MinHashSigs {
   val name = "minhash_sigs"
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[MinHashSigs].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, s"$name takes 2 arguments, got ${exprs.length}")
-      MinHashSigs(exprs.head, exprs(1))
-    })
 }
 
 /** Native stopword-hit count: occurrences (repeats counted) of words
@@ -360,14 +336,6 @@ case class StopHits(left: Expression, right: Expression)
 
 object StopHits {
   val name = "stop_hits"
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[StopHits].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, s"$name takes 2 arguments, got ${exprs.length}")
-      StopHits(exprs.head, exprs(1))
-    })
 }
 
 /** Native language ID: one tokenize pass + static stopword lookup.
@@ -436,14 +404,6 @@ object LangId {
     }
     m
   }
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[LangId].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 1, s"$name takes 1 argument, got ${exprs.length}")
-      LangId(exprs.head)
-    })
 }
 
 /** Unicode NFC normalization (canonical composition) — the standard
@@ -478,14 +438,6 @@ case class NfcNormalize(child: Expression)
 
 object NfcNormalize {
   val name = "nfc_normalize"
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[NfcNormalize].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 1, s"$name takes 1 argument, got ${exprs.length}")
-      NfcNormalize(exprs.head)
-    })
 }
 
 /** Winnowing fingerprints (Schleimer/Wilkerson/Aiken's MOSS local
@@ -624,14 +576,6 @@ case class WinnowFingerprints(first: Expression, second: Expression,
 
 object WinnowFingerprints {
   val name = "winnow_fingerprints"
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[WinnowFingerprints].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 3, s"$name takes 3 arguments, got ${exprs.length}")
-      WinnowFingerprints(exprs.head, exprs(1), exprs(2))
-    })
 }
 
 /** Fused text statistics: one pass computing the q16 family —
@@ -744,14 +688,6 @@ object TextStatsExpr {
       org.apache.spark.sql.types.StructField("n_tokens", IntegerType, nullable = false),
       org.apache.spark.sql.types.StructField("n_punct", IntegerType, nullable = false),
       org.apache.spark.sql.types.StructField("n_chars", IntegerType, nullable = false)))
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[TextStatsExpr].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 1, s"$name takes 1 argument, got ${exprs.length}")
-      TextStatsExpr(exprs.head)
-    })
 }
 
 /** Native SymSpell deletion neighborhood: the string plus every
@@ -807,14 +743,6 @@ object DeletionVariants {
   val name = "deletion_variants"
 
   def variants(s: Column): Column = call_function(name, s)
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[DeletionVariants].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 1, s"$name takes 1 argument, got ${exprs.length}")
-      DeletionVariants(exprs.head)
-    })
 }
 
 /** Bounded edit distance for the fuzzy-join verify: 0 when equal, 1
@@ -885,14 +813,6 @@ object Lev1Dist {
   val name = "lev1_dist"
 
   def dist(a: Column, b: Column): Column = call_function(name, a, b)
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[Lev1Dist].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, s"$name takes 2 arguments, got ${exprs.length}")
-      Lev1Dist(exprs.head, exprs(1))
-    })
 }
 
 object TextExpressions {

@@ -4,10 +4,9 @@ import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.util.Comparator
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.TernaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -54,6 +53,10 @@ case class TopKStrings(first: Expression, second: Expression,
                        inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[java.util.PriorityQueue[(Long, UTF8String)]]
   with TernaryLike[Expression] {
+
+  /** The SQL form: children only, buffer offsets 0. */
+  def this(first: Expression, second: Expression, third: Expression) =
+    this(first, second, third, 0, 0)
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = false
@@ -188,13 +191,4 @@ object TopKStrings {
     * pick an explicit order-preserving integer encoding). */
   def topk(ord: Column, payload: Column, k: Int): Column =
     call_function(name, ord, payload, lit(k))
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[TopKStrings].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 3,
-        s"$name takes 3 arguments (ord, payload, k), got ${exprs.length}")
-      TopKStrings(exprs.head, exprs(1), exprs(2))
-    })
 }

@@ -1,12 +1,11 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -93,14 +92,6 @@ case class DotProductFloat(left: Expression, right: Expression)
 
 object DotProductFloat {
   val name = "dot_product_float"
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[DotProductFloat].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, s"$name takes 2 arguments, got ${exprs.length}")
-      DotProductFloat(exprs.head, exprs(1))
-    })
 }
 
 /** All `tables`×`planes` LSH sign-bucket keys of a vector in ONE fused
@@ -225,14 +216,6 @@ object SignBucketKeys {
         .digest(s"$plane:$i".getBytes("UTF-8"))
       if ((md(0) & 1) == 0) 1.0 else -1.0
     }
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[SignBucketKeys].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 4, s"$name takes 4 arguments, got ${exprs.length}")
-      SignBucketKeys(exprs(0), exprs(1), exprs(2), exprs(3))
-    })
 }
 
 /** Elementwise sum of BIGINT arrays as a native MERGEABLE aggregate:
@@ -259,6 +242,9 @@ case class VecSumLong(child: Expression,
                       inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[Array[Long]]
   with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] {
+
+  /** The SQL form: children only, buffer offsets 0. */
+  def this(child: Expression) = this(child, 0, 0)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
@@ -348,14 +334,6 @@ object VecSumLong {
   /** Column wrapper: elementwise exact BIGINT sum of an integral-array
     * column per group. Requires [[graft.GraftExtensions]]. */
   def vecSum(arr: Column): Column = call_function(name, arr)
-
-  val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[VecSumLong].getName, name),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 1, s"$name takes 1 argument, got ${exprs.length}")
-      VecSumLong(exprs.head)
-    })
 }
 
 object VectorExpressions {

@@ -17,18 +17,18 @@ object Ingest {
     extends RuntimeException(
       s"validation failed: missing=${missingColumns.mkString(",")}")
 
-  /** Read the ledger CSV with the reference's parse config
-    * (sep=",", quote='"', header; reference app/app.py:22). The
-    * Brazilian decimal format is NOT handled by the reader — `Valor`
-    * stays a raw string so the dedup hash sees pre-normalization bytes
-    * (SURVEY §1.4-1).
+  /** The reference's parse config (sep=",", quote='"', header;
+    * reference app/app.py:22), shared by the batch reader and the
+    * file-watch stream. */
+  val csvOptions: Map[String, String] = Map(
+    "sep" -> ",", "quote" -> "\"", "header" -> "true", "encoding" -> "UTF-8")
+
+  /** Read the ledger CSV with [[csvOptions]]. The Brazilian decimal
+    * format is NOT handled by the reader — `Valor` stays a raw string so
+    * the dedup hash sees pre-normalization bytes (SURVEY §1.4-1).
     */
   def readCsv(spark: SparkSession, csvPath: String): DataFrame =
-    spark.read
-      .option("sep", ",").option("quote", "\"")
-      .option("header", "true").option("encoding", "UTF-8")
-      .schema(Schemas.csvSchema)
-      .csv(csvPath)
+    spark.read.options(csvOptions).schema(Schemas.csvSchema).csv(csvPath)
 
   /** The staging transform: blanks→null, Valor fillna "0", raw-value
     * id_hash, then money normalization — in exactly the reference's
@@ -45,21 +45,25 @@ object Ingest {
       .select(Schemas.stagingSchema.fieldNames.map(col): _*)
   }
 
-  /** Full ingestion: validate (strict = throw with the violation report,
-    * mirroring the reference's hard stop at app/app.py:53-62), transform,
-    * overwrite staging. Permissive mode routes offending rows to
+  /** Full ingestion of one CSV file: [[readCsv]], then [[stage]]. */
+  def run(catalog: Catalog, csvPath: String, strict: Boolean = true): Long =
+    stage(catalog, readCsv(catalog.spark, csvPath), strict)
+
+  /** Validate (strict = throw with the violation report, mirroring the
+    * reference's hard stop at app/app.py:53-62), transform, overwrite
+    * staging. Permissive mode routes offending rows to
     * `rejects_lancamentos` with the violated-column list (SURVEY
     * §1.4-7) instead of failing the batch. Returns the staged count,
     * read from the staging commit's footers (no re-scan of staging).
     */
-  def run(catalog: Catalog, csvPath: String, strict: Boolean = true): Long = {
-    val raw = readCsv(catalog.spark, csvPath)
-    val v = Validate(raw)
-    if (strict && !v.ok()) throw Rejected(v.missingColumns, v.violations)
-    val normalized = Validate.normalizeBlanks(raw)
+  def stage(catalog: Catalog, raw: DataFrame, strict: Boolean): Long = {
     val clean =
-      if (strict) raw
-      else {
+      if (strict) {
+        val v = Validate(raw)
+        if (!v.ok()) throw Rejected(v.missingColumns, v.violations)
+        raw
+      } else {
+        val normalized = Validate.normalizeBlanks(raw)
         val motivo = array_join(array_compact(array(
           Schemas.requiredColumns.map(c => when(col(c).isNull, lit(c))): _*)), ",")
         val rejected = normalized

@@ -46,13 +46,11 @@ import graft.operators.{Dedup, Quantize, Similarity}
   * documented survivor-set pins (each bounded by the corpus, reused by
   * every later stage instead of recomputing the expensive prefix once
   * per stage count; the quality-gate pin is r19 — the nfc + text_stats
-  * prefix ran three times unpinned). The pins ride
-  * [[graft.operators.Materialize.pin]]
-  * — localCheckpoint on a dir-less local session (bench-identical),
-  * reliable checkpoint when the session has a checkpoint dir, so an
-  * executor loss mid-query cannot kill the truncated-lineage consumers
-  * on a real cluster (the round-18 verdict's lineage-truncation
-  * warnings in the Verify log were exactly these three sites).
+  * prefix ran three times unpinned). The pins are always
+  * `localCheckpoint(eager = true)`, even under a checkpoint dir: the
+  * returned lazy frame reads them after the builder returns, so no
+  * handle could delete a reliable checkpoint at the right time and
+  * its files would outlive the query.
   */
 object PipelineQueries {
 
@@ -119,7 +117,7 @@ object PipelineQueries {
             .otherwise(col("__ts.n_punct").cast("double") /
               col("__ts.n_chars").cast("double")) >= MaxPunctRatio))
         .drop("__ts")
-        .transform(graft.operators.Materialize.pin)
+        .localCheckpoint(eager = true)
 
       // ---- stage 3: exact dedup (q19 machinery — fingerprint groupBy,
       // min-id canonical)
@@ -129,7 +127,7 @@ object PipelineQueries {
       // re-running the gate + dedup prefix per stage count (bounded:
       // at most the ingest batch; blocks freed by the context cleaner)
       val ded = qf.join(canon, Seq("fp", "doc_id"), "left_semi")
-        .drop("fp").transform(graft.operators.Materialize.pin)
+        .drop("fp").localCheckpoint(eager = true)
 
       // ---- stage 4: incremental near-dup, batch vs corpus (q97
       // machinery: planted ids are the "new arrivals", the original
@@ -139,7 +137,7 @@ object PipelineQueries {
       val ndDrops = Dedup.nearDupPairsAgainst(corp, btch, "doc_id", "text")
         .select(col("batch_id").as("doc_id")).distinct()
       val nd = ded.join(ndDrops, Seq("doc_id"), "left_anti")
-        .transform(graft.operators.Materialize.pin)
+        .localCheckpoint(eager = true)
 
       // ---- stage 5: semantic prune (q93 machinery — min-id keep
       // inside given clusters at cosine >= 0.999; docs without an
@@ -156,7 +154,7 @@ object PipelineQueries {
         .semanticPrune(embSurv, "vec_id", "embedding", "label", CosTau)
         .filter(!col("keep")).select(col("id").as("doc_id"))
       val sem = nd.join(semDrops, Seq("doc_id"), "left_anti")
-        .transform(graft.operators.Materialize.pin)
+        .localCheckpoint(eager = true)
 
       // ---- stage 6: int8 quantization of the surviving embeddings
       // (q99 machinery; bounds computed over THIS population). The

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import graft.ledger.{Catalog, Ingest, Validate, Warehouse}
+import graft.ledger.{Catalog, Ingest, Warehouse}
 
 /** Structured Streaming surface.
   *
@@ -579,15 +579,15 @@ object Streams {
 
   /** The reference's upload loop as a file-watch stream: each CSV file
     * dropped in `watchDir` becomes a micro-batch that runs the same
-    * validate → hash → staging → warehouse-merge pipeline. Idempotent
-    * under replay (at-least-once delivery, exactly-once effect) because
-    * every write is a keyed merge-ignore. */
+    * permissive [[Ingest.stage]] as a batch upload (a row missing a
+    * required column lands in `rejects_lancamentos`), then the
+    * warehouse merge. Idempotent under replay (at-least-once delivery,
+    * exactly-once effect) because every write is a keyed merge-ignore. */
   def ledgerUploadStream(spark: SparkSession, catalog: Catalog,
                          watchDir: String, checkpointDir: String,
                          availableNow: Boolean = true,
                          onBatchComplete: Long => Unit = _ => ()) = {
-    val raw = spark.readStream
-      .option("sep", ",").option("quote", "\"").option("header", "true")
+    val raw = spark.readStream.options(Ingest.csvOptions)
       .schema(graft.ledger.Schemas.csvSchema)
       .csv(watchDir)
     val q = raw.writeStream
@@ -595,9 +595,7 @@ object Streams {
       .outputMode(OutputMode.Append())
       .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("30 seconds"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val clean = Validate.normalizeBlanks(batch)
-          .na.drop(graft.ledger.Schemas.requiredColumns)
-        catalog.replace("staging_lancamentos", Ingest.toStaging(clean))
+        Ingest.stage(catalog, batch, strict = false)
         new Warehouse(catalog).run()
         // fires after ALL batch effects but before the engine commits
         // the offset — the exactly-once kill-test injects its crash

@@ -24,6 +24,17 @@ class MaterializeSpec extends SparkSpec {
     finally s.close()
   }
 
+  /** Names of the reliable checkpoint `rdd-*` directories under `dir`. */
+  private def rddDirs(dir: String): Set[String] = {
+    val s = Files.walk(java.nio.file.Paths.get(dir))
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.filter(p => Files.isDirectory(p) &&
+        p.getFileName.toString.startsWith("rdd-"))
+        .map(_.getFileName.toString).toSet
+    } finally s.close()
+  }
+
   private def withCheckpointDir[A](f: String => A): A = {
     val sc = spark.sparkContext
     val dir = Files.createTempDirectory("mat_ckpt").toString
@@ -93,6 +104,16 @@ class MaterializeSpec extends SparkSpec {
     }
   }
 
+  test("q100 under a checkpoint dir leaves no checkpoint files behind") {
+    // the query's pins are read by the lazy frame it returns, so they
+    // are local: a reliable checkpoint here would have no owner to
+    // delete it
+    withCheckpointDir { dir =>
+      assert(SparkEntry.queries("q100_corpus_pipeline")(spark, sf0001).count() > 0L)
+      assert(rddDirs(dir).isEmpty, s"q100 leaked reliable checkpoints: ${rddDirs(dir)}")
+    }
+  }
+
   test("Pinned handle: one live state copy on the reliable store, not N — " +
       "and replace-by-derived-frame cannot leak or wrong-delete") {
     // Round-13 verdict #5: the raw deleteCheckpoint(df) form was a
@@ -101,19 +122,9 @@ class MaterializeSpec extends SparkSpec {
     // handle holds the pin root privately, so both misuses are
     // unrepresentable; this canary loop pins the no-leak invariant.
     withCheckpointDir { dir =>
-      def rddDirs(): Set[String] = {
-        val root = java.nio.file.Paths.get(dir)
-        val s = Files.walk(root)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.filter(p => Files.isDirectory(p) &&
-            p.getFileName.toString.startsWith("rdd-"))
-            .map(_.getFileName.toString).toSet
-        } finally s.close()
-      }
       val pinned = Materialize.pinState((1L to 10L).toDF("v"))
       var state = pinned.df
-      val first = rddDirs()
+      val first = rddDirs(dir)
       assert(first.size === 1, s"expected one checkpoint dir, got $first")
       // three replacement rounds, each handing replace() a frame
       // DERIVED from the previous state (the Bpe.train shape): each
@@ -121,9 +132,9 @@ class MaterializeSpec extends SparkSpec {
       // any point (leak canary), and it ROTATES (the old one really
       // was reclaimed, not orphaned)
       (1 to 3).foreach { _ =>
-        val before = rddDirs()
+        val before = rddDirs(dir)
         state = pinned.replace(state.select((col("v") + 1).as("v")))
-        val after = rddDirs()
+        val after = rddDirs(dir)
         assert(after.size === 1, s"expected one live checkpoint, got $after")
         assert(after.intersect(before).isEmpty,
           "superseded checkpoint must be deleted")
@@ -131,7 +142,7 @@ class MaterializeSpec extends SparkSpec {
       // the surviving state stays fully readable off its own files
       assert(state.as[Long].collect().sorted.toSeq === (4L to 13L))
       pinned.delete()
-      assert(rddDirs().isEmpty, "final cleanup must reclaim the last copy")
+      assert(rddDirs(dir).isEmpty, "final cleanup must reclaim the last copy")
     }
     // local path (no checkpoint dir): replace/delete are safe no-ops
     // on the file side and the state stays readable

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.AnalysisException
+
 import graft.functions.Registry
 
 class RegistrySpec extends SparkSpec {
@@ -60,5 +62,30 @@ class RegistrySpec extends SparkSpec {
       colDf.queryExecution.optimizedPlan.canonicalized)
     // the heavy value must be among the sketch's candidates
     assert(sqlDf.as[Seq[String]].head().contains("x"))
+  }
+
+  test("native functions: 26 distinct names, each resolves from SQL and rejects a wrong argument count by name") {
+    val names = GraftExtensions.functions.map(_._1.funcName)
+    // injectFunction silently keeps the last of two equal names
+    assert(names.size === 26)
+    assert(names.distinct.size === names.size, s"duplicate names: ${names.diff(names.distinct)}")
+    for (n <- names) {
+      val desc = spark.sql(s"DESCRIBE FUNCTION $n").as[String].collect()
+      assert(desc.exists(_.startsWith("Class: graft.expressions.")), s"$n: ${desc.mkString("; ")}")
+      // no native function takes more than 4 arguments
+      for (argc <- Seq(0, 6)) {
+        val call = s"SELECT $n(${Seq.fill(argc)("NULL").mkString(", ")})"
+        val e = intercept[AnalysisException](spark.sql(call))
+        assert(Option(e.getCondition).exists(_.startsWith("WRONG_NUM_ARGS")),
+          s"$call: ${e.getCondition}: ${e.getMessage}")
+      }
+    }
+  }
+
+  test("word_shingles: the two-argument form is the three-argument form with false") {
+    val r = spark.sql("SELECT word_shingles(t, 2) AS a, word_shingles(t, 2, false) AS b " +
+      "FROM VALUES ('the cat saw the cat sat') AS v(t)").head()
+    assert(r.getSeq[String](0).nonEmpty)
+    assert(r.getSeq[String](0) === r.getSeq[String](1))
   }
 }

@@ -982,6 +982,26 @@ class StreamsSpec extends SparkSpec {
     assert(cat.table("dim_tempo").count() === 2)
   }
 
+  test("ledgerUploadStream: a blank-Tipo row is recorded in rejects_lancamentos, the rest staged") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("stream_rejects").toString
+    Files.createDirectories(java.nio.file.Paths.get(s"$dir/in"))
+    val cat = new Catalog(spark, s"$dir/wh")
+    val header = "Descrição,Tipo,Grupo,Categoria,Classificação,Data,Valor"
+    Files.writeString(java.nio.file.Paths.get(s"$dir/in/m1.csv"),
+      header + "\n" +
+        """Aluguel,Despesa,Moradia,Aluguel,Essencial,01/2024,"1.500,00"""" + "\n" +
+        """Sem tipo,  ,Moradia,Aluguel,Essencial,01/2024,"9,00"""" + "\n" +
+        """Mercado,Despesa,Alimentação,Mercado,Essencial,02/2024,"300,00"""")
+    val q = Streams.ledgerUploadStream(spark, cat, s"$dir/in", s"$dir/cp")
+    q.awaitTermination(60000)
+    assert(cat.table("staging_lancamentos").select("Descrição").as[String]
+      .collect().sorted.toSeq === Seq("Aluguel", "Mercado"))
+    assert(cat.table("fato_lancamento").count() === 2)
+    assert(cat.table("rejects_lancamentos").select("Descrição", "motivo")
+      .as[(String, String)].collect().toSeq === Seq(("Sem tipo", "Tipo")))
+  }
+
   test("ledgerUploadStream: crash after sink-write/before-commit replays with zero duplicates") {
     // the exactly-once claim (SURVEY §2.7): foreachBatch is
     // at-least-once — offsets commit AFTER the batch body — so a crash

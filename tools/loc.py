@@ -1,18 +1,22 @@
 #!/usr/bin/env python3
 """Count code, comment and blank lines of the Scala/Java sources.
 
-Usage: python3 tools/loc.py [FILE ...]
+Usage: python3 tools/loc.py [--rev REV] [FILE ...]
 
 Prints one row for src/main and one for src/test (every *.scala and
 *.java file below them), then one row per FILE given on the command
-line. A code line is a non-blank line with at least one character
+line. With --rev, counts the same paths as they are at git revision
+REV (read through `git ls-tree` and `git show`, not the working tree);
+a FILE absent at REV counts as zero. A code line is a non-blank line with at least one character
 outside `//` and `/* ... */` comments (block comments nest, as in
 Scala; comment markers inside string and character literals are not
 comments). A comment line is a non-blank line that is not code. Run it
 from the repository root, before and after a change, so every
 simplification reports the same count.
 """
+import argparse
 import os
+import subprocess
 import sys
 
 
@@ -92,9 +96,15 @@ def classify(text):
     return code, comment, blank
 
 
-def count_file(path):
-    with open(path, encoding="utf-8") as f:
-        return classify(f.read())
+def git(*args):
+    return subprocess.run(["git", *args], check=True, capture_output=True).stdout
+
+
+def count_file(path, rev=None):
+    if rev is None:
+        with open(path, encoding="utf-8") as f:
+            return classify(f.read())
+    return classify(git("show", f"{rev}:./{path}").decode("utf-8"))
 
 
 def sources(root):
@@ -104,20 +114,36 @@ def sources(root):
                 yield os.path.join(d, name)
 
 
-def row(label, paths):
+def sources_at(rev, root):
+    """The *.scala and *.java files below `root` (or `root` itself) at `rev`."""
+    names = git("ls-tree", "-r", "--name-only", rev, "--", root).decode("utf-8")
+    return [n for n in names.splitlines() if n == root or n.endswith((".scala", ".java"))]
+
+
+def row(label, paths, rev=None):
     total = [0, 0, 0]
     for p in paths:
-        for k, v in enumerate(count_file(p)):
+        for k, v in enumerate(count_file(p, rev)):
             total[k] += v
     print(f"{label:<60} {total[0]:>7} {total[1]:>8} {total[2]:>6}")
 
 
 def main(argv):
+    ap = argparse.ArgumentParser(description="Count code, comment and blank lines.")
+    ap.add_argument("--rev", help="count the paths as they are at this git revision")
+    ap.add_argument("files", nargs="*", metavar="FILE")
+    args = ap.parse_args(argv)
+    if args.rev is not None and subprocess.run(
+            ["git", "rev-parse", "--verify", "--quiet", f"{args.rev}^{{commit}}"],
+            capture_output=True).returncode != 0:
+        ap.error(f"not a git revision: {args.rev}")
     print(f"{'':<60} {'code':>7} {'comment':>8} {'blank':>6}")
     for root in ("src/main", "src/test"):
-        row(root, list(sources(root)))
-    for path in argv:
-        row(path, [path])
+        paths = list(sources(root)) if args.rev is None else sources_at(args.rev, root)
+        row(root, paths, args.rev)
+    for path in args.files:
+        paths = [path] if args.rev is None else sources_at(args.rev, path)
+        row(path, paths, args.rev)
     return 0
 
 
