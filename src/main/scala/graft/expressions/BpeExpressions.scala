@@ -18,8 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * non-overlapping ("aaa" under (a,a) → ["aa", "a"]), byte-for-byte
   * the semantics of [[graft.operators.Bpe.applyMerge]] folded over the
   * rule list, which survives as the composed parity reference
-  * (`Bpe.encodeComposed` — an interpreted HOF layer PER MERGE, so it
-  * exists for the spec, not the corpus).
+  * (`Composed.bpeEncode` in the test sources — an interpreted HOF
+  * layer PER MERGE, so it exists for the spec, not the corpus).
   *
   * One fused JVM loop per row: O(words × merges × word-length) with a
   * reused scratch buffer, no per-merge Column tree. Merges arrive as a

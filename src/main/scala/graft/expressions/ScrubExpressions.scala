@@ -14,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * "prefer fused single-pass evaluation over stacked interpreted
   * passes"). Each expression replaces a chain of built-in passes whose
   * SEMANTICS it reproduces exactly — the composed forms survive as
-  * `*Composed` parity references next to each operator, and the specs
-  * pin native == composed on adversarial inputs. The DuckDB oracles
+  * parity references in the test sources (`graft.Composed`), and the
+  * specs pin native == composed on adversarial inputs. The DuckDB oracles
   * are untouched: they replay the composed SQL, so the driver's hash
   * gate re-proves the fusion at every SF.
   */
@@ -44,7 +44,7 @@ private[expressions] object AzTokens {
 /** Native Gopher-repetition signal pack: one tokenize pass + one
   * hash-counting pass per n ∈ {2,3,4} over the document's OWN grams.
   *
-  * Semantics are EXACTLY [[graft.operators.Repetition.annotateComposed]]'s
+  * Semantics are EXACTLY `Composed.repetitionAnnotate`'s (test sources)
   * column arithmetic:
   *   - dupN_q20 = `((total_N − distinct_N) * 2²⁰) div greatest(total_N, 1)`
   *     over POSITIONAL word n-grams (`word_shingles(text, n, true)`),
@@ -145,7 +145,7 @@ object RepetitionStats {
   * and total stopword hits (all 5 language lists) in ONE tokenize pass.
   *
   * Semantics are EXACTLY the composed intermediates of
-  * [[graft.operators.QualityClassifier.scoreComposed]]:
+  * `Composed.qualityScore` (test sources):
   *   - n_words = `size(regexp_extract_all(lower(text), '[a-z]+'))`
   *     (−1 for NULL text — size-of-NULL legacy);
   *   - wsum    = `aggregate(words, 0, (acc, w) -> acc + length(w))` —

@@ -138,7 +138,7 @@ private[expressions] object AzWords {
 /** Native SimHash bit vector: 64 ints (0/1), one fused pass.
   *
   * Semantics are EXACTLY the composed form
-  * ([[graft.operators.Dedup.simhashBitsComposed]]): per word occurrence,
+  * (`Composed.simhashBits`, test sources): per word occurrence,
   * the first 16 hex chars of md5(word) contribute 64 bits (nibble
   * MSB-first); bit i of the signature is 1 iff
   * `2 * sum_i >= totalWords` (ties → 1; empty text → all ones). The
@@ -341,7 +341,7 @@ object StopHits {
 /** Native language ID: one tokenize pass + static stopword lookup.
   *
   * Semantics are EXACTLY the composed CASE/greatest form
-  * ([[graft.functions.TextFunctions.langIdComposed]]): score per
+  * (`Composed.langId`, test sources): score per
   * language = stopword occurrences (repeats counted, a word may score
   * for several languages), result = first language in list order
   * attaining the maximum, "und" when all scores are zero. The composed

@@ -35,12 +35,6 @@ object TextFunctions {
   def stopwordHits(c: Column, stops: Seq[String]): Column =
     graft.expressions.TextExpressions.stopHits(c, stops)
 
-  /** Pure-builtin composition — parity reference for [[stopwordHits]]. */
-  def stopwordHitsComposed(c: Column, stops: Seq[String]): Column = {
-    val set = array(stops.map(lit): _*)
-    size(filter(words(c), w => array_contains(set, w)))
-  }
-
   /** Small public stopword lists, enough for a coarse n-gram-free
     * language heuristic. Order of `langs` is the deterministic
     * tie-break (first wins on equal score). */
@@ -55,23 +49,9 @@ object TextFunctions {
     * language (list order) wins ties; "und" when nothing matched.
     * Native one-pass expression ([[graft.expressions.LangId]]); the
     * DuckDB oracle replays the equivalent CASE/GREATEST SQL, and
-    * [[langIdComposed]] keeps that form for parity testing. */
+    * `Composed.langId` (test sources) keeps that form for parity testing. */
   def langId(c: Column): Column =
     graft.expressions.TextExpressions.langId(c)
-
-  /** The pure-builtin composition (one regexp pass + interpreted array
-    * filter per language) — parity reference for the native form. */
-  def langIdComposed(c: Column): Column = {
-    val scores = stopwords.map { case (l, s) => l -> stopwordHitsComposed(c, s) }
-    val total = scores.map(_._2).reduce(_ + _)
-    val cases = scores.init.zipWithIndex.foldRight(lit(scores.last._1)) {
-      case (((lang, score), i), elseCol) =>
-        val rest = scores.drop(i + 1).map(_._2)
-        val restMax = if (rest.size == 1) rest.head else greatest(rest: _*)
-        when(score >= restMax, lit(lang)).otherwise(elseCol)
-    }
-    when(total === 0, lit("und")).otherwise(cases)
-  }
 
   /** Punctuation-ish character count (non-alnum, non-space). */
   def punctCount(c: Column): Column =

@@ -56,15 +56,19 @@ import graft.operators.MergeUpsert
   * Every table is also registered as a temp view so the full
   * `spark.sql` surface works over the warehouse (SURVEY §3.3).
   *
-  * '''One reader, one footer walker, one write tail''': every DataFrame
-  * over commit dirs comes from [[read]], under the schema [[schemaAt]]
-  * resolves (evolved record, else declared, else the first commit's),
-  * so reads, rewrites ([[compact]], [[compactSmall]], [[deleteWhere]])
+  * '''One reader, one footer walker, one write tail, one publish''':
+  * every DataFrame over commit dirs comes from [[read]], under the
+  * schema [[schemaAt]] resolves (evolved record, else declared, else
+  * the first commit's), so reads, rewrites ([[compact]], [[compactSmall]], [[deleteWhere]])
   * and pruned reads ([[tableWhere]]) agree on columns and initial
   * defaults. Every metadata answer (row counts, id resume offsets,
   * commit pruning, [[stats]], commit sizes) comes from [[footers]] /
   * [[dataFiles]], which fail loudly on a missing live commit dir.
-  * Every write lands through [[writeCommit]].
+  * Every write lands through [[writeCommit]], and every new version
+  * goes out through [[publish]] (the v{N} claim, the `LATEST` flip, the
+  * snapshot bump and the temp-view refresh, once per version). A
+  * rewrite goes through [[swap]], so each public write only chooses
+  * the commits it keeps and the frame it writes.
   *
   * Scale: dims stay tiny so their merge anti-joins broadcast; the fact
   * merge anti-joins on `id_hash` and its commits are partitioned by
@@ -165,17 +169,17 @@ final class Catalog(val spark: SparkSession, val root: String,
   private def manifestDir(t: String): Path = Paths.get(tableDir(t), "_manifests")
   private def snapDir: Path = Paths.get(root, "_snapshots")
 
-  private def latestVersion(t: String): Option[Int] = {
-    val p = manifestDir(t).resolve("LATEST")
-    if (Files.exists(p)) Some(new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toInt)
-    else None
-  }
+  private def lines(p: Path): Seq[String] =
+    Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toSeq
 
-  private def latestSnapshot: Option[Int] = {
-    val p = snapDir.resolve("LATEST")
-    if (Files.exists(p)) Some(new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toInt)
-    else None
-  }
+  /** The version the `LATEST` pointer file in `dir` names, if any. */
+  private def pointer(dir: Path): Option[Int] =
+    Some(dir.resolve("LATEST")).filter(Files.exists(_))
+      .map(p => new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toInt)
+
+  private def latestVersion(t: String): Option[Int] = pointer(manifestDir(t))
+
+  private def latestSnapshot: Option[Int] = pointer(snapDir)
 
   /** table → manifest version map of the published snapshot (empty if
     * none has been published yet). */
@@ -183,10 +187,14 @@ final class Catalog(val spark: SparkSession, val root: String,
     latestSnapshot.map(snapshotVersionsAt).getOrElse(Map.empty)
 
   private def snapshotVersionsAt(n: Int): Map[String, Int] =
-    Files.readAllLines(snapDir.resolve(s"s$n"), StandardCharsets.UTF_8)
-      .asScala.filter(_.nonEmpty).map { line =>
-        val Array(t, v) = line.split(' '); t -> v.toInt
-      }.toMap
+    nameVersions(lines(snapDir.resolve(s"s$n")))
+
+  /** `name version` lines — a snapshot file, or the INFLIGHT marker's
+    * begin-state — as a map; blank lines are skipped. */
+  private def nameVersions(ls: Seq[String]): Map[String, Int] =
+    ls.filter(_.nonEmpty).map { line =>
+      val Array(t, v) = line.split(' '); t -> v.toInt
+    }.toMap
 
   /** The manifest version a READ of `t` resolves to: the writer inside
     * a transaction (and any table outside snapshot scope, or before the
@@ -214,8 +222,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     * version 0 (no table yet) has none. */
   private def commitsAt(t: String, v: Int): Seq[String] =
     if (v == 0) Seq.empty
-    else Files.readAllLines(manifestDir(t).resolve(s"v$v"), StandardCharsets.UTF_8)
-      .asScala.toSeq.filter(_.nonEmpty)
+    else lines(manifestDir(t).resolve(s"v$v")).filter(_.nonEmpty)
 
   /** Live commit dirs (absolute paths) at the read-resolved version. */
   private def liveCommits(t: String): Seq[String] =
@@ -230,38 +237,75 @@ final class Catalog(val spark: SparkSession, val root: String,
       try listing.iterator().asScala.toSeq finally listing.close()
     }
 
+  /** The write-temp for `name` in `dir`: `.<name>.tmp<8 hex>`. Dot-
+    * prefixed so a crash-orphaned temp matches no listing's name-prefix
+    * filter (see [[claimVersionFile]]); [[recover]] deletes exactly
+    * this shape, never a tag that merely contains ".tmp". */
+  private def tempFor(dir: Path, name: String): Path =
+    dir.resolve(s".$name.tmp${java.util.UUID.randomUUID().toString.take(8)}")
+
   private def atomicWrite(dir: Path, name: String, body: String): Unit = {
-    // dot-prefixed for the claimVersionFile reason: a crash-orphaned
-    // temp must not match any listing's name-prefix filter
-    val tmp = dir.resolve(s".$name.tmp${java.util.UUID.randomUUID().toString.take(8)}")
+    val tmp = tempFor(dir, name)
     Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, dir.resolve(name),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Publish `dirs` as the new table state: claim v{base+1} with
-    * create-exclusive (the fence), then flip LATEST via write-temp +
-    * atomic rename.
+  /** The one publish step: `dirs` (plus an optional `schema_v{N}`
+    * record) become the table's version base+1. It claims v{base+1} with
+    * create-exclusive (the fence), flips LATEST via write-temp + atomic
+    * rename, bumps the snapshot pointer for a direct write to a scoped
+    * table, and refreshes the table's temp view. Every published version
+    * passes through here exactly once; a write that publishes nothing
+    * never calls it.
     *
-    * `base` is the LATEST version the CALLER observed when it computed
+    * `base` is the version the CALLER observed when it computed
     * `dirs` — the claim is tied to that read, never to a re-read of
     * LATEST here. Otherwise a concurrent writer flipping LATEST between
     * the caller's read and the claim would let this commit claim
     * base+2 "successfully" while silently dropping the other writer's
     * commit dirs from its list; with the base threaded through, the
     * stale writer collides on v{base+1} and fails loudly instead. */
-  private def commit(t: String, dirs: Seq[String], base: Int): Unit = {
+  private def publish(t: String, base: Int, dirs: Seq[String],
+                      schema: Option[String] = None): Unit = {
     val md = manifestDir(t)
     Files.createDirectories(md)
     val next = base + 1
     claimVersionFile(md, s"v$next", dirs.mkString("\n"),
       s"table $t version $next")
+    schema.foreach(atomicWrite(md, s"schema_v$next", _))
     atomicWrite(md, "LATEST", next.toString)
     // keep the warehouse pointer current for direct (non-transactional)
     // writes to scoped tables; inside a transaction the single flip
     // happens once, at the end
     if (!inTxn && snapshotScoped(t) && latestSnapshot.isDefined)
       publishSnapshot(single = Some(t -> next))
+    register(t)
+  }
+
+  /** The one rewrite step: `df` into a fresh commit ([[writeCommit]]),
+    * its rows counted from the new commit's footers, published over
+    * `base` as `kept` plus the new commit. With `dropEmpty`, a zero-row
+    * commit is deleted instead and `kept` alone is published — or
+    * nothing, when `kept` is exactly `base`'s commits. Returns the
+    * written row count. */
+  private def swap(t: String, base: Int, kept: Seq[String], df: DataFrame,
+                   partitionBy: Seq[String] = Seq.empty,
+                   clusterBy: Seq[String] = Seq.empty,
+                   batchId: Option[Long] = None,
+                   dropEmpty: Boolean = false): Long = {
+    val dir = writeCommit(t, df, partitionBy, clusterBy, batchId)
+    // exact count from the written files' parquet FOOTERS: metadata
+    // only, no second data scan and no extra Spark job (an observed
+    // write metric can over-count under stage retries or speculative
+    // execution; a read-back count re-scans the data)
+    val n = rows(footers(Seq(dir)))
+    if (n > 0 || !dropEmpty) publish(t, base, kept :+ dir)
+    else {
+      deleteRecursively(Paths.get(dir))
+      if (kept != commitsAt(t, base)) publish(t, base, kept)
+    }
+    n
   }
 
   /** Create-exclusive claim of a manifest/snapshot file: exactly one of
@@ -278,7 +322,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     * existing target on POSIX, losing exclusivity. link(2) is both:
     * the final name appears atomically with its full content, or fails
     * EEXIST. The temp file is cleaned here on every path; one orphaned
-    * by a hard kill matches the `.tmp` pattern recover() deletes.
+    * by a hard kill is what recover() deletes.
     * Filesystems without hard-link support fall back to CREATE_NEW
     * (exclusive, but with the empty-file crash window back open —
     * contained by the unparseable-tag skip/abort machinery). */
@@ -287,10 +331,8 @@ final class Catalog(val spark: SparkSession, val root: String,
     // dot-prefixed temp: "tag.rel.tmpX" would match tags()' "tag."
     // prefix filter (a fully-written orphan surfaces as a phantom tag,
     // and rollback's tag-drop could delete a LIVE writer's temp);
-    // ".tag.rel.tmpX" matches no listing prefix while keeping the
-    // ".tmp" substring recover() cleans
-    val tmp = dir.resolve(
-      s".$name.tmp${java.util.UUID.randomUUID().toString.take(8)}")
+    // ".tag.rel.tmpX" matches no listing prefix
+    val tmp = tempFor(dir, name)
     Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
     def lostRace(): Nothing =
       throw new Catalog.ConcurrentWriteException(
@@ -334,7 +376,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     * exists to hide.
     *
     * The s{N+1} claim is tied to the SAME observed base N the map was
-    * built from (the commit() fence pattern); losing the claim race
+    * built from (the publish() fence pattern); losing the claim race
     * means another writer published meanwhile, so the map is rebuilt
     * over THEIR snapshot and the claim retried — a concurrent bump to a
     * different table merges instead of silently vanishing. */
@@ -450,16 +492,11 @@ final class Catalog(val spark: SparkSession, val root: String,
     else { rollbackToInflight(inflight); true }
   }
 
+  /** The INFLIGHT marker: its owner line, then the begin-state. */
   private def readInflight(p: Path): (String, Map[String, Int]) = {
-    val lines = Files.readAllLines(p, StandardCharsets.UTF_8).asScala.filter(_.nonEmpty)
-    val owner = lines.headOption match {
-      case Some(l) if l.startsWith("owner ") => l.drop("owner ".length)
-      case _ => ""
-    }
-    val state = lines.drop(1).map { line =>
-      val Array(t, v) = line.split(' '); t -> v.toInt
-    }.toMap
-    (owner, state)
+    val ls = lines(p).filter(_.nonEmpty)
+    val owner = ls.headOption.filter(_.startsWith("owner ")).fold("")(_.drop("owner ".length))
+    (owner, nameVersions(ls.drop(1)))
   }
 
   private def rollbackToInflight(inflight: Path): Unit = {
@@ -484,24 +521,27 @@ final class Catalog(val spark: SparkSession, val root: String,
           val md = manifestDir(t)
           if (tv > 0) atomicWrite(md, "LATEST", tv.toString)
           else Files.deleteIfExists(md.resolve("LATEST"))
-          // drop tags pinning the versions being rolled back, loudly:
-          // the next commit RE-CLAIMS those version numbers with
-          // different data, so a surviving tag would silently re-point
-          // — worse than the immutability break it looks like. The
-          // tagged state was never published; rolling it back rolls
-          // back its tags with it.
-          tags(t).foreach { case (name, v) =>
-            if (v > tv) {
-              System.err.println(s"[catalog] rollback of $t to v$tv " +
-                s"drops tag '$name' (pinned the aborted v$v)")
-              Files.deleteIfExists(md.resolve(s"tag.$name"))
-            }
-          }
+          // the tagged state was never published; rolling it back rolls
+          // back its tags with it
+          dropTagsAbove(t, tv, "rollback")
           (tv + 1 to head).foreach(v => Files.deleteIfExists(md.resolve(s"v$v")))
         }
       }
     }
   }
+
+  /** Drop, loudly, every tag of `t` pinning a version above `head`,
+    * returning how many: the next commit RE-CLAIMS those version
+    * numbers with different data, so a surviving tag would silently
+    * re-point — worse than the immutability break it looks like. */
+  private def dropTagsAbove(t: String, head: Int, by: String): Int =
+    tags(t).count { case (name, v) =>
+      v > head && {
+        System.err.println(s"[catalog] $by of $t to v$head drops tag " +
+          s"'$name' (pinned v$v above it)")
+        Files.deleteIfExists(manifestDir(t).resolve(s"tag.$name"))
+      }
+    }
 
   /** Stable identity of this catalog instance, recorded in INFLIGHT so
     * a begin can tell its own crashed transaction (auto-heal) from
@@ -529,7 +569,7 @@ final class Catalog(val spark: SparkSession, val root: String,
         // from foreign interference must not brick recovery
         (n.startsWith(prefix) &&
           n.drop(prefix.length).toIntOption.exists(_ > latest)) ||
-          n.contains(".tmp")
+          n.matches("""\..+\.tmp[0-9a-f]{8}""") // a tempFor orphan
       }
       orphans.foreach(n => Files.deleteIfExists(dir.resolve(n)))
       orphans.size
@@ -549,16 +589,8 @@ final class Catalog(val spark: SparkSession, val root: String,
     // that version number, tableAtTag's liveness check passes again and
     // the tag silently serves data it never pinned. Recovery owns that
     // window: a tag above the recovered head can never become valid.
-    val droppedTags = allTables.map { t =>
-      val head = latestVersion(t).getOrElse(0)
-      tags(t).count { case (name, v) =>
-        v > head && {
-          System.err.println(s"[catalog] recover drops tag '$name' of $t " +
-            s"(pinned v$v above the recovered head v$head)")
-          Files.deleteIfExists(manifestDir(t).resolve(s"tag.$name"))
-        }
-      }
-    }.sum
+    val droppedTags = allTables.map(t =>
+      dropTagsAbove(t, latestVersion(t).getOrElse(0), "recover")).sum
     val cleared = tables + droppedTags +
       clean(snapDir, latestSnapshot.getOrElse(0), "s")
     if (!Files.exists(snapDir.resolve("INFLIGHT")) && latestSnapshot.isDefined) {
@@ -570,22 +602,18 @@ final class Catalog(val spark: SparkSession, val root: String,
     cleared
   }
 
-  private def newCommitDir(t: String): String = {
-    val v = latestVersion(t).getOrElse(0) + 1
-    s"${tableDir(t)}/c${v}_${java.util.UUID.randomUUID().toString.take(8)}"
-  }
-
   /** The shared write tail: `df` into a fresh commit dir of `t`,
     * hive-partitioned on `partitionBy`, each task's rows sorted by
     * `partitionBy ++ clusterBy` when `clusterBy` is set (the
     * partitioned writer requires the partition columns to lead), with
     * the applied-batch-id marker inside the dir when `batchId` is set.
-    * Returns the dir; nothing is visible until the caller's [[commit]]. */
+    * Returns the dir; nothing is visible until [[publish]] lists it. */
   private def writeCommit(t: String, df: DataFrame,
                           partitionBy: Seq[String] = Seq.empty,
                           clusterBy: Seq[String] = Seq.empty,
                           batchId: Option[Long] = None): String = {
-    val dir = newCommitDir(t)
+    val dir = s"${tableDir(t)}/c${latestVersion(t).getOrElse(0) + 1}_" +
+      java.util.UUID.randomUUID().toString.take(8)
     val sorted =
       if (clusterBy.isEmpty) df
       else df.sortWithinPartitions((partitionBy ++ clusterBy).map(col): _*)
@@ -623,19 +651,12 @@ final class Catalog(val spark: SparkSession, val root: String,
     val (cur, priorDefaults) = schemaAt(table, base)
     require(!cur.fieldNames.map(_.toLowerCase).contains(column.toLowerCase),
       s"column '$column' already exists on '$table'")
-    val md = manifestDir(table)
-    val next = base + 1
-    claimVersionFile(md, s"v$next", commitsAt(table, base).mkString("\n"),
-      s"table $table version $next (add column $column)")
     // prior defaults carry forward; the record is self-contained so a
     // reader never has to walk older schema files
     val defaults = priorDefaults ++ default.map(column -> _)
     val body = ("ddl:" + cur.add(column, ddlType, nullable = true).toDDL) +:
       defaults.toSeq.sorted.map { case (c, d) => s"default:$c:$d" }
-    atomicWrite(md, s"schema_v$next", body.mkString("\n"))
-    atomicWrite(md, "LATEST", next.toString)
-    if (!inTxn && snapshotScoped(table) && latestSnapshot.isDefined)
-      publishSnapshot(single = Some(table -> next))
+    publish(table, base, commitsAt(table, base), Some(body.mkString("\n")))
   }
 
   /** Newest schema record at-or-below `version`: (evolved schema,
@@ -647,10 +668,10 @@ final class Catalog(val spark: SparkSession, val root: String,
       .map(v => md.resolve(s"schema_v$v"))
       .find(Files.exists(_))
       .map { p =>
-        val lines = Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-        val ddl = lines.collectFirst { case l if l.startsWith("ddl:") => l.drop(4) }
+        val ls = lines(p)
+        val ddl = ls.collectFirst { case l if l.startsWith("ddl:") => l.drop(4) }
           .getOrElse(throw new IllegalStateException(s"malformed schema record $p"))
-        val defaults = lines.collect {
+        val defaults = ls.collect {
           case l if l.startsWith("default:") =>
             val rest = l.drop(8); val i = rest.indexOf(':')
             rest.take(i) -> rest.drop(i + 1)
@@ -761,8 +782,6 @@ final class Catalog(val spark: SparkSession, val root: String,
 
   private def rows(fs: Seq[ParquetMetadata]): Long =
     fs.iterator.flatMap(_.getBlocks.asScala).map(_.getRowCount).sum
-
-  private def rowCount(dir: String): Long = rows(footers(Seq(dir)))
 
   /** [min, max] of an integral column over the populated row groups of
     * `fs`; None when any of them lacks usable stats, which callers
@@ -927,14 +946,8 @@ final class Catalog(val spark: SparkSession, val root: String,
     * directory without listing the rest. Returns the written row count
     * from the commit's footers, like [[appendDelta]]. */
   def replace(table: String, df: DataFrame,
-              partitionBy: Seq[String] = Seq.empty): Long = {
-    val base = writeBase(table)
-    val dir = writeCommit(table, df, partitionBy)
-    val n = rowCount(dir)
-    commit(table, Seq(dir), base)
-    register(table)
-    n
-  }
+              partitionBy: Seq[String] = Seq.empty): Long =
+    swap(table, writeBase(table), Seq.empty, df, partitionBy)
 
   /** Current max of an integral column, or 0 on empty/missing table —
     * the surrogate-key offset (SERIAL resume semantics).
@@ -1039,16 +1052,12 @@ final class Catalog(val spark: SparkSession, val root: String,
     // double-counted. Ids are per-checkpoint monotonic; a FRESH
     // checkpoint replays the whole source, so it must maintain a fresh
     // table (documented at the stream wrapper).
-    batchId.foreach { id =>
-      if (appliedBatchId(table).exists(_ >= id)) return
-    }
+    if (replayed(table, batchId)) return
     val p = graft.operators.IncrementalAgg.partial(batch, keys, aggs)
     val merged =
       if (!exists(table)) p
       else graft.operators.IncrementalAgg.merge(this.table(table), p, keys, aggs)
-    val base = writeBase(table)
-    commit(table, Seq(writeCommit(table, merged, batchId = batchId)), base)
-    register(table)
+    swap(table, writeBase(table), Seq.empty, merged, batchId = batchId)
   }
 
   /** [[maintainAgg]]'s sibling for the KMV distinct-sketch family —
@@ -1083,15 +1092,13 @@ final class Catalog(val spark: SparkSession, val root: String,
     * travel, exports, and [[graft.operators.KmvAlgebra.overlap]]'s
     * verification), and a refresh whose `k` disagrees with the stored
     * stamp fails loudly instead of silently truncating the estimator
-    * (pre-r15 the mismatch read a truncated sketch as an EXACT
+    * (a mismatched refresh would read a truncated sketch as an EXACT
     * distinct set downstream).
     */
   def maintainKmv(table: String, batch: DataFrame, keys: Seq[String],
                   hashCol: String, k: Int,
                   batchId: Option[Long] = None): Unit = {
-    batchId.foreach { id =>
-      if (appliedBatchId(table).exists(_ >= id)) return
-    }
+    if (replayed(table, batchId)) return
     kmvK(table).foreach { stored =>
       require(stored == k,
         s"maintainKmv('$table'): table is stamped kmv_k=$stored but this " +
@@ -1113,24 +1120,22 @@ final class Catalog(val spark: SparkSession, val root: String,
               coalesce(col("__stored"), noMins),
               coalesce(col("__fresh"), noMins))), 1, k).as("mins"): _*)
       }
-    val merged = merged0.withColumn("kmv_k", lit(k))
-    val base = writeBase(table)
-    commit(table, Seq(writeCommit(table, merged, batchId = batchId)), base)
-    register(table)
+    swap(table, writeBase(table), Seq.empty, merged0.withColumn("kmv_k", lit(k)),
+      batchId = batchId)
   }
 
   /** The `k` a [[maintainKmv]] sketch table was built with, read from
     * its constant `kmv_k` stamp. None when the table doesn't exist, is
     * empty, predates the stamp, or every stamp is NULL (a wholly
     * uncertified outside-the-maintainer write reads as "no certified
-    * k", not a throw — r15 advice). A PARTIALLY certified grid —
-    * some NULL stamps, or more than one distinct k — fails loudly
-    * instead (r16 advice: skipping NULL rows before a limit(1) read
-    * let a half-decertified table return the surviving k and read as
-    * fully certified; [[maintainKmv]] would then merge new minima into
-    * a corrupt grid). One small aggregate over the sketch grid — the
-    * grid is O(groups · k) by contract, so the constancy scan costs
-    * what the old one-row probe did at any real scale. */
+    * k", not a throw). A PARTIALLY certified grid — some NULL stamps,
+    * or more than one distinct k — fails loudly instead: reading only
+    * the non-NULL stamps would let a half-decertified table return the
+    * surviving k and read as fully certified, and [[maintainKmv]]
+    * would then merge new minima into a corrupt grid. One small
+    * aggregate over the sketch grid — the grid is O(groups · k) by
+    * contract, so the constancy scan costs what a one-row probe would
+    * at any real scale. */
   def kmvK(table: String): Option[Int] =
     Option.when(exists(table))(this.table(table))
       .filter(_.columns.contains("kmv_k")).flatMap { df =>
@@ -1170,20 +1175,26 @@ final class Catalog(val spark: SparkSession, val root: String,
       }
     }.sorted.lastOption
 
+  /** The replay guard of [[maintainAgg]] and [[maintainKmv]]: `batchId`
+    * (or a later one) is already folded into `table`. */
+  private def replayed(table: String, batchId: Option[Long]): Boolean =
+    batchId.exists(id => appliedBatchId(table).exists(_ >= id))
+
   /** Append a pre-computed delta (already deduped/anti-joined) as a new
     * commit. The delta plan may read `table` itself; it materializes
     * into its own fresh directory, which becomes visible only at the
     * manifest flip — the append can never scan files it is creating.
     *
-    * The appended-row count rides the write job as an observed metric —
-    * no second scan of what was just written (at fact scale the old
-    * read-back-and-count doubled every load's I/O).
+    * The appended-row count comes from the new commit's footers — no
+    * second scan of what was just written. An empty delta publishes
+    * nothing: no version, no view refresh, and a missing table stays
+    * missing.
     *
     * `clusterBy` declares the within-file sort order the table's
-    * commits maintain; it is consumed by the auto-compaction pass (see
-    * [[compactEvery]]), which must restore that clustering when it
-    * rewrites — the delta itself is expected to arrive pre-sorted (the
-    * writer already has it clustered at zero cost). */
+    * commits maintain: each write task's rows are sorted by
+    * `partitionBy ++ clusterBy` ([[writeCommit]]), and the
+    * auto-compaction pass (see [[compactEvery]]) restores the same
+    * clustering when it rewrites. */
   def appendDelta(table: String, delta: DataFrame,
                   partitionBy: Seq[String] = Seq.empty,
                   clusterBy: Seq[String] = Seq.empty): Long = {
@@ -1192,21 +1203,13 @@ final class Catalog(val spark: SparkSession, val root: String,
     // inside compact() would surface AFTER this append's commit already
     // published — reporting a successful write as a failure
     requireClusterableLayout(delta.schema, partitionBy, clusterBy)
-    // the commit claim is tied to THIS read of LATEST (see commit):
+    // the commit claim is tied to THIS read of LATEST (see publish):
     // the new manifest's dir list and its claimed version come from the
     // same observation, so a concurrent commit makes us fail loudly
     // instead of silently dropping it from the list
     val base = writeBase(table)
     val baseDirs = commitsAt(table, base)
-    val dir = writeCommit(table, delta, partitionBy)
-    // exact appended count from the written files' parquet FOOTERS:
-    // metadata-only, no second data scan and no extra Spark job (an
-    // observed write metric can over-count under stage retries or
-    // speculative execution; a read-back count re-scans the data)
-    val n = rowCount(dir)
-    if (n > 0) commit(table, baseDirs :+ dir, base)
-    else deleteRecursively(Paths.get(dir))
-    register(table)
+    val n = swap(table, base, baseDirs, delta, partitionBy, clusterBy, dropEmpty = true)
     if (n > 0 && compactEvery > 0 && baseDirs.size + 1 >= compactEvery)
       compact(table, partitionBy, clusterBy)
     n
@@ -1277,21 +1280,14 @@ final class Catalog(val spark: SparkSession, val root: String,
     val survivors = read(table, base, affected.map(_._1))
       // keep NULLs: a negated BETWEEN would null-out and drop them
       .filter(col(column).isNull || col(column) < lo || col(column) > hi)
-    val dir = writeCommit(table, survivors, partitionBy, clusterBy)
-    val after = rowCount(dir)
     // an empty rewrite dir is noise — EXCEPT when it is the table's
     // only remaining commit: an undeclared table (quarantine, rollup)
     // recovers its schema from commit footers, so a delete that empties
     // it must leave the zero-row commit as the schema carrier (the
     // quarantine-purge runbook hits this correcting the last row —
     // table()/tableWhere on the emptied table stay readable)
-    if (after > 0 || kept.isEmpty) commit(table, kept :+ dir, base)
-    else {
-      commit(table, kept, base)
-      deleteRecursively(Paths.get(dir))
-    }
-    register(table)
-    before - after
+    before - swap(table, base, kept, survivors, partitionBy, clusterBy,
+      dropEmpty = kept.nonEmpty)
   }
 
   /** Row-level change feed between two published versions (Delta's
@@ -1337,9 +1333,8 @@ final class Catalog(val spark: SparkSession, val root: String,
     // fewer, larger files (small-file debt is what it repays), and the
     // within-partition sort then clusters across what were separate
     // tiny files
-    val folded = if (numFiles > 0) df.coalesce(numFiles) else df
-    commit(table, Seq(writeCommit(table, folded, partitionBy, clusterBy)), base)
-    register(table)
+    swap(table, base, Seq.empty, if (numFiles > 0) df.coalesce(numFiles) else df,
+      partitionBy, clusterBy)
   }
 
   /** Table statistics from parquet footers only (ANALYZE-lite): exact
@@ -1377,11 +1372,9 @@ final class Catalog(val spark: SparkSession, val root: String,
     val live = commitsAt(table, base)
     val small = live.filter(c => dataFiles(Seq(c)).map(_.getLen).sum < smallBytes)
     if (small.size < 2) return 0
-    val dir = writeCommit(table, read(table, base, small).coalesce(1),
-      partitionBy, clusterBy)
     val smallSet = small.toSet
-    commit(table, live.filterNot(smallSet) :+ dir, base)
-    register(table)
+    swap(table, base, live.filterNot(smallSet), read(table, base, small).coalesce(1),
+      partitionBy, clusterBy)
     small.size
   }
 

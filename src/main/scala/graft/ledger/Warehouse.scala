@@ -47,13 +47,14 @@ object Warehouse {
 
   /** Batches at or under this many rows ALSO skip the fact write's
     * range repartition and write straight from the id window's single
-    * partition (r19): for a small delta the boundary-sampling job + the
-    * range exchange cost more than one writer task. The bound is much
-    * tighter than [[boundedIdBatchRows]] because the single WRITER
-    * serializes parquet encoding + one directory per month, where the
-    * id window only numbers rows: a 64k-row write is ~0.1 s, but the
-    * same trade at ~1M rows measured 19 vs 15 s on the whole q68 e2e
-    * at the 100× decade (single-task encode of 36 month directories). */
+    * partition: for a small delta the boundary-sampling job + the range
+    * exchange cost more than one writer task (OPTIMIZATION_r19.md §3).
+    * The bound is much tighter than [[boundedIdBatchRows]] because the
+    * single WRITER serializes parquet encoding + one directory per
+    * month, where the id window only numbers rows: a 64k-row write is
+    * ~0.1 s, but the same trade at ~1M rows measured 19 vs 15 s on the
+    * whole q68 e2e at the 100× decade (single-task encode of 36 month
+    * directories). */
   val singleTaskWriteRows: Long = 64L * 1024
 }
 
@@ -63,12 +64,11 @@ final class Warehouse(catalog: Catalog, strictQuirks: Boolean = false) {
 
   /** dim_tempo (reference app/etl.py:20-40). */
   def loadDimTempo(): Long = {
-    // r19: no pre-dedup on the raw `Data` string — the (ano, mes)
-    // dropDuplicates below is the semantic dedup, its partial
-    // aggregation already collapses repeats map-side, and the string
-    // dedup was a SECOND full exchange per run whose only effect was
-    // running parseMonth on fewer rows (a per-row expression vs an
-    // exchange + AQE stage job — the wrong trade).
+    // no pre-dedup on the raw `Data` string: the (ano, mes)
+    // dropDuplicates below is the semantic dedup and its partial
+    // aggregation already collapses repeats map-side; a string dedup
+    // would be a SECOND full exchange per run whose only effect is
+    // running parseMonth on fewer rows (OPTIMIZATION_r19.md §3).
     val months = staging
       .select(col("Data")).na.drop()
       .select(parseMonth(col("Data")).as("d")).na.drop()
@@ -197,20 +197,21 @@ final class Warehouse(catalog: Catalog, strictQuirks: Boolean = false) {
       .select(Schemas.fatoLancamento.fieldNames.map(col): _*)
     // Cluster rows by the dimension hierarchy inside each written file:
     // parquet row-group min/max stats then prune category-filtered BI
-    // scans, on top of the (ano, mes) directory pruning. The range
-    // repartition leads with the write-partition columns, so each task
-    // owns a CONTIGUOUS (ano, mes) span: the partitioned writer opens
-    // ~1 directory per task in parallel instead of one task grinding
-    // through every month serially (the bounded-id path funnels through
-    // one window task) or every task touching every month (tasks ×
-    // months tiny files — the small-files antipattern at scale). Big
-    // months split across tasks by the range boundaries; the sort MUST
-    // lead with the partition columns or the writer stacks its own
-    // sort on top, destroying the clustering it sits above.
+    // scans, on top of the (ano, mes) directory pruning. appendDelta
+    // sorts each write task's rows by partitionBy ++ clusterBy, so the
+    // sort leads with the partition columns (otherwise the writer
+    // stacks its own sort on top, destroying the clustering). The range
+    // repartition leads with them too, so each task owns a CONTIGUOUS
+    // (ano, mes) span: the partitioned writer opens ~1 directory per
+    // task in parallel instead of one task grinding through every
+    // month serially (the bounded-id path funnels through one window
+    // task) or every task touching every month (tasks × months tiny
+    // files — the small-files antipattern at scale). Big months split
+    // across tasks by the range boundaries.
     //
-    // On the SMALL-BATCH path (≤ singleTaskWriteRows — r19, guide
-    // §6/§1.2: q68's cost is ~70 jobs of fixed scheduling over a tiny
-    // batch, and this stage paid three of them): the delta just came
+    // On the SMALL-BATCH path (≤ singleTaskWriteRows; q68's cost is
+    // mostly fixed job scheduling over a tiny batch, and this stage
+    // paid three jobs — OPTIMIZATION_r19.md §3): the delta just came
     // out of assignBounded's GLOBAL
     // id_hash window, i.e. it sits in ONE partition — a partition-local
     // sort leading with the write-partition columns is already a TOTAL
@@ -231,9 +232,7 @@ final class Warehouse(catalog: Catalog, strictQuirks: Boolean = false) {
     // instead of tasks × months tiny files. It must NOT pin a
     // table-sized delta in executor memory, so it keeps the recompute.
     if (batchRows <= Warehouse.singleTaskWriteRows)
-      catalog.appendDelta("fato_lancamento",
-        keyed.sortWithinPartitions(
-          "ano", "mes", "id_tipo", "id_grupo", "id_categoria"),
+      catalog.appendDelta("fato_lancamento", keyed,
         partitionBy = Seq("ano", "mes"),
         clusterBy = Seq("id_tipo", "id_grupo", "id_categoria"))
     else {
@@ -250,8 +249,6 @@ final class Warehouse(catalog: Catalog, strictQuirks: Boolean = false) {
         val clustered = cached
           .repartitionByRange(col("ano"), col("mes"),
             col("id_tipo"), col("id_grupo"), col("id_categoria"))
-          .sortWithinPartitions(
-            "ano", "mes", "id_tipo", "id_grupo", "id_categoria")
         catalog.appendDelta("fato_lancamento", clustered,
           partitionBy = Seq("ano", "mes"),
           clusterBy = Seq("id_tipo", "id_grupo", "id_categoria"))
@@ -280,13 +277,12 @@ final class Warehouse(catalog: Catalog, strictQuirks: Boolean = false) {
     * dedups at source (dim_tempo `dropDuplicates(ano, mes)`, the other
     * four a `distinct()` over exactly their key columns), because the
     * distinct doubles as the map-side reduction of a fact-scale batch
-    * down to vocabulary size. r19 (guide §2.4): mergeDim therefore
-    * anti-joins directly instead of going through
-    * [[MergeIgnore.newRows]], whose defensive `dropDuplicates(keys)`
-    * was a second full exchange on the same keys per loader per run
-    * (visible as dim_tempo's extra AQE-stage job in the q68 profile —
-    * the optimizer collapses it only when the source distinct covers
-    * exactly the key columns). */
+    * down to vocabulary size. mergeDim therefore anti-joins directly
+    * instead of going through [[MergeIgnore.newRows]], whose defensive
+    * `dropDuplicates(keys)` would be a second full exchange on the same
+    * keys per loader per run — the optimizer collapses it only when the
+    * source distinct covers exactly the key columns
+    * (OPTIMIZATION_r19.md §3). */
   private def mergeDim(table: String, rows: DataFrame, keys: Seq[String],
                        idCol: String, orderBy: Seq[String]): Long = {
     val offset = catalog.maxId(table, idCol)

@@ -32,7 +32,7 @@ import graft.functions.TextFunctions.words
 object Bpe {
 
   /** Initial symbol array: the word's single characters. */
-  private def chars(w: Column): Column =
+  private[graft] def chars(w: Column): Column =
     transform(sequence(lit(1), length(w)), i => substring(w, i, lit(1)))
 
   /** One left-to-right merge pass of (a, b) → "ab" over a symbol
@@ -101,15 +101,4 @@ object Bpe {
     * corpus-scale path. */
   def encode(text: Column, merges: Seq[(String, String)]): Column =
     graft.expressions.BpeEncode.encode(text, merges)
-
-  /** Composed parity reference for [[encode]]: the same per-word char
-    * split + sequential merge passes from builtins (interpreted HOF
-    * chain, one layer per merge — spec-scale only). */
-  def encodeComposed(text: Column, merges: Seq[(String, String)]): Column = {
-    val toks = transform(words(text), w =>
-      merges.foldLeft(chars(w)) { case (acc, (a, b)) =>
-        applyMerge(acc, a, b)
-      })
-    flatten(toks)
-  }
 }

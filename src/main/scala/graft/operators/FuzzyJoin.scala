@@ -37,17 +37,6 @@ object FuzzyJoin {
   def deletionVariants(s: Column): Column =
     graft.expressions.DeletionVariants.variants(s)
 
-  /** Pure-builtin composition — parity reference for the native
-    * [[deletionVariants]] (two interpreted substr evaluations per
-    * variant; spec-scale only). */
-  def deletionVariantsComposed(s: Column): Column =
-    array_distinct(concat(
-      array(s),
-      // greatest(…, 0): empty strings yield one degenerate variant
-      // instead of a negative-bound sequence
-      transform(sequence(lit(0), greatest(length(s) - 1, lit(0))),
-        i => concat(s.substr(lit(1), i), s.substr(i + lit(2), length(s))))))
-
   /** All (leftId, rightId, dist) pairs with levenshtein ≤ 1 between
     * `left.strCol` and `right.strCol`. Columns in the output:
     * `<leftIdCol>`, `<rightIdCol>`, `dist`. The two id columns must be

@@ -75,7 +75,7 @@ object QualityClassifier {
     * 5 lists) ride ONE fused native pass
     * ([[graft.expressions.QcFeatures]]) instead of a regexp
     * extract-all plus five interpreted filter/array_contains walks
-    * plus an interpreted aggregate. [[scoreComposed]] keeps the
+    * plus an interpreted aggregate. `Composed.qualityScore` keeps the
     * original chain as the parity reference (QualityClassifierSpec
     * pins native == composed, NULL text included; the q165-family
     * DuckDB oracles replay the composed SQL unchanged). */
@@ -101,35 +101,4 @@ object QualityClassifier {
           col("c_wlen"))
       .withColumn("keep", col("score") >= 0L)
       .drop("__qc_ts", "__qc_f")
-
-  /** The pure-builtin composition — parity reference for [[score]]
-    * (and the shape the DuckDB oracles replay). */
-  private[graft] def scoreComposed(df: DataFrame, textCol: String): DataFrame = {
-    val hits = TextFunctions.stopwords.map { case (_, stops) =>
-      val set = array(stops.map(lit): _*)
-      size(filter(col("__qc_ws"), w => array_contains(set, w)))
-    }.reduce(_ + _)
-    df.withColumn("__qc_ts",
-        graft.expressions.TextExpressions.textStats(col(textCol)))
-      .withColumn("__qc_ws", TextFunctions.words(col(textCol)))
-      .withColumn("__qc_hits", hits.cast("bigint"))
-      .withColumn("__qc_wsum",
-        aggregate(col("__qc_ws"), lit(0), (acc, w) => acc + length(w))
-          .cast("bigint"))
-      .withColumn("c_tokens",
-        lit(WTokens) * least(col("__qc_ts.n_ws_tokens"), lit(TokenCap))
-          .cast("bigint"))
-      .withColumn("c_punct", lit(WPunct) * expr(
-        "(CAST(__qc_ts.n_punct AS BIGINT) * 1048576L) div " +
-          "greatest(CAST(__qc_ts.n_chars AS BIGINT), 1L)"))
-      .withColumn("c_stop", lit(WStop) * expr(
-        "(__qc_hits * 1048576L) div greatest(CAST(size(__qc_ws) AS BIGINT), 1L)"))
-      .withColumn("c_wlen", lit(WWlen) * expr(
-        "(__qc_wsum * 131072L) div greatest(CAST(size(__qc_ws) AS BIGINT), 1L)"))
-      .withColumn("score",
-        lit(Bias) + col("c_tokens") + col("c_punct") + col("c_stop") +
-          col("c_wlen"))
-      .withColumn("keep", col("score") >= 0L)
-      .drop("__qc_ts", "__qc_ws", "__qc_hits", "__qc_wsum")
-  }
 }

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.expressions.TextExpressions.wordShinglesAll
-
 /** Within-document repetition filter — the Gopher/MassiveText quality
   * rules (Rae et al. 2021, table A1) every crawl pipeline runs beside
   * the learned filter (reference scope: none — the ledger app has no
@@ -17,8 +15,9 @@ import graft.expressions.TextExpressions.wordShinglesAll
   *   - `dup{2,3,4}_q20` — the fraction of positional word n-grams
   *     that are duplicates of an earlier occurrence,
   *     (total − distinct) / total in q20 fixed-point. One native
-  *     [[wordShinglesAll]] pass per n (positions kept — dedup metrics
-  *     count positions, not kinds), then pure array arithmetic.
+  *     [[graft.expressions.TextExpressions.wordShinglesAll]] pass per n
+  *     (positions kept — dedup metrics count positions, not kinds),
+  *     then pure array arithmetic.
   *   - `top2_q20` — the occurrence share of the single most frequent
   *     2-gram (Gopher's "fraction in top n-gram" signal, counted over
   *     grams rather than characters so the arithmetic stays integer),
@@ -62,8 +61,9 @@ object Repetition {
     * ONE fused native pass ([[graft.expressions.RepetitionStats]] —
     * one tokenize + one hash-count per n) instead of three positional
     * word_shingles arrays, three interpreted array_distincts and an
-    * O(kinds·total) interpreted top-gram transform. [[annotateComposed]]
-    * keeps the original chain as the parity reference (RepetitionSpec
+    * O(kinds·total) interpreted top-gram transform.
+    * `Composed.repetitionAnnotate` (test sources) keeps the original
+    * chain as the parity reference (RepetitionSpec
     * pins native == composed on the adversarial corpus; the q168/q170
     * DuckDB oracles replay the composed SQL unchanged). */
   def annotate(df: DataFrame, textCol: String): DataFrame =
@@ -77,35 +77,4 @@ object Repetition {
         col("dup2_q20") <= Dup2MaxQ20 && col("dup3_q20") <= Dup3MaxQ20 &&
           col("dup4_q20") <= Dup4MaxQ20 && col("top2_q20") <= Top2MaxQ20)
       .drop("__rep")
-
-  /** The pure-builtin composition — parity reference for [[annotate]]
-    * (and the shape the DuckDB oracles replay). */
-  private[graft] def annotateComposed(df: DataFrame, textCol: String): DataFrame = {
-    val g2 = col("__rep_g2")
-    val top2Count =
-      coalesce(array_max(filter(transform(array_distinct(g2),
-        g => size(filter(g2, x => x === g))), c => c >= 2)), lit(0))
-        .cast("bigint")
-    df.withColumn("__rep_g2", wordShinglesAll(col(textCol), 2))
-      .withColumn("__rep_g3", wordShinglesAll(col(textCol), 3))
-      .withColumn("__rep_g4", wordShinglesAll(col(textCol), 4))
-      // the divisions are SQL div (truncating) on non-negative BIGINTs,
-      // identical to DuckDB's floor-// — the q165 discipline
-      .withColumn("dup2_q20", expr(
-        "((CAST(size(__rep_g2) - size(array_distinct(__rep_g2)) AS BIGINT)) " +
-          "* 1048576L) div greatest(CAST(size(__rep_g2) AS BIGINT), 1L)"))
-      .withColumn("dup3_q20", expr(
-        "((CAST(size(__rep_g3) - size(array_distinct(__rep_g3)) AS BIGINT)) " +
-          "* 1048576L) div greatest(CAST(size(__rep_g3) AS BIGINT), 1L)"))
-      .withColumn("dup4_q20", expr(
-        "((CAST(size(__rep_g4) - size(array_distinct(__rep_g4)) AS BIGINT)) " +
-          "* 1048576L) div greatest(CAST(size(__rep_g4) AS BIGINT), 1L)"))
-      .withColumn("__rep_top2", top2Count)
-      .withColumn("top2_q20", expr(
-        "(__rep_top2 * 1048576L) div greatest(CAST(size(__rep_g2) AS BIGINT), 1L)"))
-      .withColumn("keep",
-        col("dup2_q20") <= Dup2MaxQ20 && col("dup3_q20") <= Dup3MaxQ20 &&
-          col("dup4_q20") <= Dup4MaxQ20 && col("top2_q20") <= Top2MaxQ20)
-      .drop("__rep_g2", "__rep_g3", "__rep_g4", "__rep_top2")
-  }
 }

@@ -37,7 +37,7 @@ class BpeSpec extends SparkSpec {
     assert(merges.length === 8)
     val diff = Tables(spark, sf0001, "documents")
       .select(Bpe.encode(col("text"), merges).as("fast"),
-        Bpe.encodeComposed(col("text"), merges).as("slow"))
+        Composed.bpeEncode(col("text"), merges).as("slow"))
       .filter(col("fast") =!= col("slow"))
     assert(diff.count() === 0)
   }

@@ -1129,4 +1129,81 @@ class CatalogSpec extends SparkSpec {
     val e = intercept[IllegalStateException](cat.tableAt("dim_tipo", 1).count())
     assert(e.getMessage.contains("vacuumed"))
   }
+
+  private def latest(root: String, t: String): Option[Int] =
+    Some(Paths.get(s"$root/$t/_manifests/LATEST")).filter(Files.exists(_))
+      .map(p => Files.readString(p).trim.toInt)
+
+  test("recover() deletes dot-prefixed write temps, never a tag whose name contains .tmp") {
+    val dir = Files.createTempDirectory("cat_recover_tmp").toString
+    val cat = new Catalog(spark, s"$dir/wh")
+    cat.replace("dim_tipo", tipoDf("a"))
+    cat.tag("dim_tipo", "tmp")
+    cat.tag("dim_tipo", "rc.tmp1")
+    val md = Paths.get(s"$dir/wh/dim_tipo/_manifests")
+    // what a writer killed between its temp write and the rename leaves
+    Files.write(md.resolve(".LATEST.tmp0a1b2c3d"), "9".getBytes)
+    assert(cat.recover() === 1)
+    assert(!Files.exists(md.resolve(".LATEST.tmp0a1b2c3d")))
+    assert(cat.tags("dim_tipo") === Map("tmp" -> 1, "rc.tmp1" -> 1))
+  }
+
+  test("appendDelta of an empty frame into a missing undeclared table publishes nothing") {
+    val dir = Files.createTempDirectory("cat_empty_append").toString
+    val cat = new Catalog(spark, s"$dir/wh")
+    val empty = Seq.empty[(Long, String)].toDF("id", "v")
+    assert(cat.appendDelta("undeclared_t", empty) === 0L)
+    assert(!cat.exists("undeclared_t"))
+    assert(latest(s"$dir/wh", "undeclared_t").isEmpty)
+    assert(!spark.catalog.tableExists("undeclared_t"))
+    // the first non-empty append still creates the table
+    assert(cat.appendDelta("undeclared_t", Seq((1L, "a")).toDF("id", "v")) === 1L)
+    assert(latest(s"$dir/wh", "undeclared_t") === Some(1))
+  }
+
+  test("addColumn refreshes the temp view: spark.table sees the new column") {
+    val dir = Files.createTempDirectory("cat_evolve_view").toString
+    val cat = new Catalog(spark, s"$dir/wh")
+    cat.replace("evolve_view_t", Seq((1L, "a")).toDF("id", "name"))
+    cat.addColumn("evolve_view_t", "score", "BIGINT", default = Some("5"))
+    assert(cat.table("evolve_view_t").columns.toSeq === Seq("id", "name", "score"))
+    assert(spark.table("evolve_view_t").columns.toSeq === Seq("id", "name", "score"))
+    assert(spark.table("evolve_view_t").as[(Long, String, Long)].collect().toSeq
+      === Seq((1L, "a", 5L)))
+  }
+
+  test("empty frames: which writes publish a version and which leave the table as it was") {
+    import graft.operators.IncrementalAgg.AggSpec
+    val dir = Files.createTempDirectory("cat_empty_writes").toString
+    val root = s"$dir/wh"
+    val cat = new Catalog(spark, root)
+    val empty = Seq.empty[(Long, String)].toDF("id", "v")
+    // replace publishes the zero-row commit: it carries the schema
+    assert(cat.replace("empty_replace", empty) === 0L)
+    assert(latest(root, "empty_replace") === Some(1))
+    assert(spark.table("empty_replace").columns.toSeq === Seq("id", "v"))
+    assert(spark.table("empty_replace").count() === 0L)
+    // the rollup maintainers create their table from an empty batch
+    cat.maintainAgg("empty_agg", empty, Seq("v"), Seq(AggSpec("n", "count", "*")))
+    assert(latest(root, "empty_agg") === Some(1))
+    assert(spark.table("empty_agg").count() === 0L)
+    cat.maintainKmv("empty_kmv", empty, Seq("v"), "id", k = 8)
+    assert(latest(root, "empty_kmv") === Some(1))
+    assert(spark.table("empty_kmv").columns.toSeq === Seq("v", "mins", "kmv_k"))
+    // an empty append onto an existing table publishes no version
+    assert(cat.appendDelta("empty_replace", empty) === 0L)
+    assert(latest(root, "empty_replace") === Some(1))
+    // compact publishes over an existing empty table, and keeps it readable
+    cat.compact("empty_replace")
+    assert(latest(root, "empty_replace") === Some(2))
+    assert(cat.table("empty_replace").count() === 0L)
+    // on a missing declared table, nothing is written or registered
+    assert(cat.deleteWhere("dim_grupo", "id_grupo", 0, 10) === 0L)
+    cat.compact("dim_grupo")
+    assert(cat.compactSmall("dim_grupo", smallBytes = 1L << 20) === 0)
+    assert(cat.appendDelta("dim_grupo", Seq.empty[(Int, Int, String)]
+      .toDF("id_grupo", "id_tipo", "nome_grupo")) === 0L)
+    assert(!cat.exists("dim_grupo"))
+    assert(!Files.exists(Paths.get(s"$root/dim_grupo/_manifests")))
+  }
 }

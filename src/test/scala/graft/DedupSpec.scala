@@ -28,14 +28,14 @@ class DedupSpec extends SparkSpec {
     for (k <- Seq(1, 2, 3)) {
       val diff = Tables(spark, sf001, "documents")
         .select(Dedup.shingles(col("text"), k).as("fast"),
-          Dedup.shinglesComposed(col("text"), k).as("slow"))
+          Composed.shingles(col("text"), k).as("slow"))
         .filter(col("fast") =!= col("slow"))
       assert(diff.count() === 0, s"k=$k mismatch")
     }
     // unicode + punctuation edge: lowercase mapping shared with lower()
     val edge = Seq("AÇÃO é ótima! X9y, Zz... ,,", "", "  ", "ab").toDF("text")
     val d2 = edge.select(Dedup.shingles(col("text"), 2).as("fast"),
-      Dedup.shinglesComposed(col("text"), 2).as("slow"))
+      Composed.shingles(col("text"), 2).as("slow"))
       .filter(col("fast") =!= col("slow"))
     assert(d2.count() === 0)
   }
@@ -47,7 +47,7 @@ class DedupSpec extends SparkSpec {
     assert(out(0) === Seq("a b c", "b c d"))
     assert(out(1) === Seq("x x x", "x x x")) // duplicates KEPT
     assert(out(2) === Seq.empty)
-    // composed positional reference (the shinglesComposed chain minus
+    // composed positional reference (the Composed.shingles chain minus
     // the distinct): parity on real docs incl. tokenizer edges
     def composed(c: org.apache.spark.sql.Column, k: Int) = {
       val w = graft.functions.TextFunctions.words(c)
@@ -346,7 +346,7 @@ class DedupSpec extends SparkSpec {
     val diff = Tables(spark, sf001, "documents")
       .select(graft.expressions.TextExpressions
         .winnowFingerprints(col("text"), 8, 16).as("fast"),
-        Dedup.winnowComposed(col("text"), 8, 16).as("slow"))
+        Composed.winnow(col("text"), 8, 16).as("slow"))
       .filter(col("fast") =!= col("slow"))
     assert(diff.count() === 0)
     // multibyte + short-text edges: code-point indexing must match
@@ -354,7 +354,7 @@ class DedupSpec extends SparkSpec {
     val edge = Seq("ação é ótima já", "ab", "", "abcdefghij").toDF("text")
     val d2 = edge.select(graft.expressions.TextExpressions
       .winnowFingerprints(col("text"), 8, 16).as("fast"),
-      Dedup.winnowComposed(col("text"), 8, 16).as("slow"))
+      Composed.winnow(col("text"), 8, 16).as("slow"))
       .filter(col("fast") =!= col("slow"))
     assert(d2.count() === 0)
     val sizes = edge.select(size(graft.expressions.TextExpressions
@@ -414,13 +414,13 @@ class DedupSpec extends SparkSpec {
   test("native simhash_bits matches the composed builtin form on real docs") {
     val diff = Tables(spark, sf001, "documents")
       .select(Dedup.simhashBits(col("text")).as("fast"),
-        Dedup.simhashBitsComposed(col("text")).as("slow"))
+        Composed.simhashBits(col("text")).as("slow"))
       .filter(col("fast") =!= col("slow"))
     assert(diff.count() === 0)
     // edges: blank → all ones (empty majority, ties → 1); repeats weighted
     val edge = Seq("", "  ", "a a a b", "AÇÃO é!").toDF("text")
     val d2 = edge.select(Dedup.simhashBits(col("text")).as("fast"),
-      Dedup.simhashBitsComposed(col("text")).as("slow"))
+      Composed.simhashBits(col("text")).as("slow"))
       .filter(col("fast") =!= col("slow"))
     assert(d2.count() === 0)
   }

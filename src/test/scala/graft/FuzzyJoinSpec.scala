@@ -43,12 +43,12 @@ class FuzzyJoinSpec extends SparkSpec {
     val edge = Seq("", "a", "aa", "abc", "ação", "a😀b", "kettle").toDF("s")
     val d1 = edge.select(
       FuzzyJoin.deletionVariants(col("s")).as("fast"),
-      FuzzyJoin.deletionVariantsComposed(col("s")).as("slow"))
+      Composed.deletionVariants(col("s")).as("slow"))
       .filter(col("fast") =!= col("slow"))
     assert(d1.count() === 0, d1.collect().mkString("; "))
     val d2 = Tables(spark, sf0001, "part").select(col("p_name").as("s"))
       .select(FuzzyJoin.deletionVariants(col("s")).as("fast"),
-        FuzzyJoin.deletionVariantsComposed(col("s")).as("slow"))
+        Composed.deletionVariants(col("s")).as("slow"))
       .filter(col("fast") =!= col("slow"))
     assert(d2.count() === 0)
   }

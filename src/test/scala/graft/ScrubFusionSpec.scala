@@ -61,14 +61,14 @@ class ScrubFusionSpec extends SparkSpec {
   test("Repetition.annotate native == composed on the adversarial corpus " +
       "(NULL text included)") {
     assertSame(Repetition.annotate(df, "text"),
-      Repetition.annotateComposed(df, "text"), "repetition_stats")
+      Composed.repetitionAnnotate(df, "text"), "repetition_stats")
   }
 
   test("QualityClassifier.score native == composed on the adversarial " +
       "corpus (NULL text included: every word-derived feature NULL via " +
       "size(NULL) = NULL propagation)") {
     assertSame(QualityClassifier.score(df, "text"),
-      QualityClassifier.scoreComposed(df, "text"), "qc_features")
+      Composed.qualityScore(df, "text"), "qc_features")
   }
 
   test("Markup fused chain == composed strip/decode/collapse + composed " +
@@ -129,7 +129,7 @@ class ScrubFusionSpec extends SparkSpec {
       (3L, Seq.empty[String]), (9999L, Seq("a b"))
     ).toDF("doc_id", "__rm")
     val native = Dedup.cutAndReassemble(docs, "doc_id", "text", 2, rm)
-    val composed = Dedup.cutAndReassembleComposed(docs, "doc_id", "text", 2, rm)
+    val composed = Composed.cutAndReassemble(docs, "doc_id", "text", 2, rm)
     assertSame(native, composed, "span_cut")
   }
 

@@ -68,12 +68,12 @@ class TextFunctionsSpec extends SparkSpec {
     val en = stopwords.head._2
     val diff = Tables(spark, sf001, "documents")
       .select(stopwordHits(col("text"), en).as("fast"),
-        stopwordHitsComposed(col("text"), en).as("slow"))
+        Composed.stopwordHits(col("text"), en).as("slow"))
       .filter(col("fast") =!= col("slow"))
     assert(diff.count() === 0)
     val edge = Seq("", "  ", "the THE The, the.", "xthex").toDF("text")
     val d2 = edge.select(stopwordHits(col("text"), en).as("fast"),
-      stopwordHitsComposed(col("text"), en).as("slow"))
+      Composed.stopwordHits(col("text"), en).as("slow"))
       .filter(col("fast") =!= col("slow"))
     assert(d2.count() === 0)
   }
@@ -81,7 +81,7 @@ class TextFunctionsSpec extends SparkSpec {
   test("native lang_id matches the composed CASE/greatest form on real docs") {
     val diff = Tables(spark, sf001, "documents")
       .select(langId(col("text")).as("fast"),
-        langIdComposed(col("text")).as("slow"))
+        Composed.langId(col("text")).as("slow"))
       .filter(col("fast") =!= col("slow"))
     assert(diff.count() === 0)
     // tie-break edges: 'de' is a stopword of es/fr/pt; 'la' of es/fr —
@@ -89,7 +89,7 @@ class TextFunctionsSpec extends SparkSpec {
     val edge = Seq("de", "la", "un", "de la", "e o", "the der el le o")
       .toDF("text")
     val d2 = edge.select(langId(col("text")).as("fast"),
-      langIdComposed(col("text")).as("slow"))
+      Composed.langId(col("text")).as("slow"))
       .filter(col("fast") =!= col("slow"))
     assert(d2.count() === 0)
   }
