@@ -12,8 +12,6 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StructType}
 
-import graft.operators.MergeUpsert
-
 /** Parquet-backed warehouse catalog with MANIFEST-POINTER commits.
   *
   * Layout per table:
@@ -58,11 +56,10 @@ import graft.operators.MergeUpsert
   *
   * '''One reader, one footer walker, one write tail, one publish''':
   * every DataFrame over commit dirs comes from [[read]], under the
-  * schema [[schemaAt]] resolves (evolved record, else declared, else
-  * the first commit's), so reads, rewrites ([[compact]], [[compactSmall]], [[deleteWhere]])
-  * and pruned reads ([[tableWhere]]) agree on columns and initial
-  * defaults. Every metadata answer (row counts, id resume offsets,
-  * commit pruning, [[stats]], commit sizes) comes from [[footers]] /
+  * schema [[schemaAt]] resolves (declared, else the first commit's), so
+  * reads, rewrites ([[compact]], [[deleteWhere]]) and pruned reads
+  * ([[tableWhere]]) agree on columns. Every metadata answer (row
+  * counts, id resume offsets, commit pruning) comes from [[footers]] /
   * [[dataFiles]], which fail loudly on a missing live commit dir.
   * Every write lands through [[writeCommit]], and every new version
   * goes out through [[publish]] (the v{N} claim, the `LATEST` flip, the
@@ -183,7 +180,7 @@ final class Catalog(val spark: SparkSession, val root: String,
 
   /** table → manifest version map of the published snapshot (empty if
     * none has been published yet). */
-  def snapshotVersions: Map[String, Int] =
+  private[graft] def snapshotVersions: Map[String, Int] =
     latestSnapshot.map(snapshotVersionsAt).getOrElse(Map.empty)
 
   private def snapshotVersionsAt(n: Int): Map[String, Int] =
@@ -240,7 +237,7 @@ final class Catalog(val spark: SparkSession, val root: String,
   /** The write-temp for `name` in `dir`: `.<name>.tmp<8 hex>`. Dot-
     * prefixed so a crash-orphaned temp matches no listing's name-prefix
     * filter (see [[claimVersionFile]]); [[recover]] deletes exactly
-    * this shape, never a tag that merely contains ".tmp". */
+    * this shape, never a file that merely contains ".tmp". */
   private def tempFor(dir: Path, name: String): Path =
     dir.resolve(s".$name.tmp${java.util.UUID.randomUUID().toString.take(8)}")
 
@@ -251,8 +248,8 @@ final class Catalog(val spark: SparkSession, val root: String,
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** The one publish step: `dirs` (plus an optional `schema_v{N}`
-    * record) become the table's version base+1. It claims v{base+1} with
+  /** The one publish step: `dirs` become the table's version base+1.
+    * It claims v{base+1} with
     * create-exclusive (the fence), flips LATEST via write-temp + atomic
     * rename, bumps the snapshot pointer for a direct write to a scoped
     * table, and refreshes the table's temp view. Every published version
@@ -266,14 +263,12 @@ final class Catalog(val spark: SparkSession, val root: String,
     * base+2 "successfully" while silently dropping the other writer's
     * commit dirs from its list; with the base threaded through, the
     * stale writer collides on v{base+1} and fails loudly instead. */
-  private def publish(t: String, base: Int, dirs: Seq[String],
-                      schema: Option[String] = None): Unit = {
+  private def publish(t: String, base: Int, dirs: Seq[String]): Unit = {
     val md = manifestDir(t)
     Files.createDirectories(md)
     val next = base + 1
     claimVersionFile(md, s"v$next", dirs.mkString("\n"),
       s"table $t version $next")
-    schema.foreach(atomicWrite(md, s"schema_v$next", _))
     atomicWrite(md, "LATEST", next.toString)
     // keep the warehouse pointer current for direct (non-transactional)
     // writes to scoped tables; inside a transaction the single flip
@@ -316,22 +311,18 @@ final class Catalog(val spark: SparkSession, val root: String,
     * Write-temp + hard-LINK to the final name, because the claim must
     * be exclusive AND crash-atomic at once: a plain
     * CREATE_NEW-then-write leaves an EMPTY claim file if the writer
-    * dies between create and write (observed risk: an empty tag.* file
-    * made tags() — and through it vacuum() — throw until manual
-    * cleanup), and rename(2) (ATOMIC_MOVE) silently REPLACES an
-    * existing target on POSIX, losing exclusivity. link(2) is both:
-    * the final name appears atomically with its full content, or fails
-    * EEXIST. The temp file is cleaned here on every path; one orphaned
-    * by a hard kill is what recover() deletes.
+    * dies between create and write, and rename(2) (ATOMIC_MOVE)
+    * silently REPLACES an existing target on POSIX, losing
+    * exclusivity. link(2) is both: the final name appears atomically
+    * with its full content, or fails EEXIST. The temp file is cleaned
+    * here on every path; one orphaned by a hard kill is what recover()
+    * deletes.
     * Filesystems without hard-link support fall back to CREATE_NEW
-    * (exclusive, but with the empty-file crash window back open —
-    * contained by the unparseable-tag skip/abort machinery). */
+    * (exclusive, but with the empty-file crash window back open: the
+    * empty claim sits above LATEST like any crashed claim, so it
+    * blocks the next claim until recover() clears it). */
   private def claimVersionFile(dir: Path, name: String, body: String,
                                what: String): Unit = {
-    // dot-prefixed temp: "tag.rel.tmpX" would match tags()' "tag."
-    // prefix filter (a fully-written orphan surfaces as a phantom tag,
-    // and rollback's tag-drop could delete a LIVE writer's temp);
-    // ".tag.rel.tmpX" matches no listing prefix
     val tmp = tempFor(dir, name)
     Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
     def lostRace(): Nothing =
@@ -341,9 +332,7 @@ final class Catalog(val spark: SparkSession, val root: String,
           "run recover() after confirming no writer is live)")
     // filesystems without hard links fall back to CREATE_NEW + write.
     // Still exclusive (CREATE_NEW fails EEXIST); NOT crash-atomic — a
-    // writer dying between create and write leaves an empty claim
-    // file, the exact artifact the unparseable-tag machinery (tags()
-    // skips with a warning, vacuum aborts loudly) exists to contain.
+    // writer dying between create and write leaves an empty claim file
     def createNewFallback(): Unit =
       try Files.write(dir.resolve(name),
         body.getBytes(StandardCharsets.UTF_8),
@@ -521,27 +510,11 @@ final class Catalog(val spark: SparkSession, val root: String,
           val md = manifestDir(t)
           if (tv > 0) atomicWrite(md, "LATEST", tv.toString)
           else Files.deleteIfExists(md.resolve("LATEST"))
-          // the tagged state was never published; rolling it back rolls
-          // back its tags with it
-          dropTagsAbove(t, tv, "rollback")
           (tv + 1 to head).foreach(v => Files.deleteIfExists(md.resolve(s"v$v")))
         }
       }
     }
   }
-
-  /** Drop, loudly, every tag of `t` pinning a version above `head`,
-    * returning how many: the next commit RE-CLAIMS those version
-    * numbers with different data, so a surviving tag would silently
-    * re-point — worse than the immutability break it looks like. */
-  private def dropTagsAbove(t: String, head: Int, by: String): Int =
-    tags(t).count { case (name, v) =>
-      v > head && {
-        System.err.println(s"[catalog] $by of $t to v$head drops tag " +
-          s"'$name' (pinned v$v above it)")
-        Files.deleteIfExists(manifestDir(t).resolve(s"tag.$name"))
-      }
-    }
 
   /** Stable identity of this catalog instance, recorded in INFLIGHT so
     * a begin can tell its own crashed transaction (auto-heal) from
@@ -565,8 +538,8 @@ final class Catalog(val spark: SparkSession, val root: String,
   def recover(): Int = {
     def clean(dir: Path, latest: Int, prefix: String): Int = {
       val orphans = children(dir).map(_.getFileName.toString).filter { n =>
-        // toIntOption (the tags() rationale): an over-long digit run
-        // from foreign interference must not brick recovery
+        // toIntOption: an over-long digit run from foreign interference
+        // must not brick recovery
         (n.startsWith(prefix) &&
           n.drop(prefix.length).toIntOption.exists(_ > latest)) ||
           n.matches("""\..+\.tmp[0-9a-f]{8}""") // a tempFor orphan
@@ -581,17 +554,8 @@ final class Catalog(val spark: SparkSession, val root: String,
     val allTables: Seq[String] = (Schemas.tableNames ++ children(Paths.get(root))
       .filter(p => Files.isDirectory(p) && Files.exists(p.resolve("_manifests")))
       .map(_.getFileName.toString)).distinct
-    val tables = allTables.map(t =>
-      clean(manifestDir(t), latestVersion(t).getOrElse(0), "v")).sum
-    // rollbackScopedHeads drops tags atop the manifests it rewinds, but
-    // a crash between its LATEST flip and its tag loop leaves a tag
-    // pinning a version ABOVE the head; once a later commit re-claims
-    // that version number, tableAtTag's liveness check passes again and
-    // the tag silently serves data it never pinned. Recovery owns that
-    // window: a tag above the recovered head can never become valid.
-    val droppedTags = allTables.map(t =>
-      dropTagsAbove(t, latestVersion(t).getOrElse(0), "recover")).sum
-    val cleared = tables + droppedTags +
+    val cleared = allTables.map(t =>
+      clean(manifestDir(t), latestVersion(t).getOrElse(0), "v")).sum +
       clean(snapDir, latestSnapshot.getOrElse(0), "s")
     if (!Files.exists(snapDir.resolve("INFLIGHT")) && latestSnapshot.isDefined) {
       val published = snapshotVersions
@@ -630,57 +594,6 @@ final class Catalog(val spark: SparkSession, val root: String,
   def exists(table: String): Boolean = latestVersion(table).isDefined
 
   // ---------------------------------------------------------------------
-  // schema evolution (add-column)
-
-  /** Evolve a table: add a nullable column of `ddlType` with an
-    * optional SQL `default` applied to rows that PRE-DATE the column
-    * (Iceberg initial-default semantics — rows written after the
-    * evolution read back exactly what was written, including NULL).
-    *
-    * Metadata-only: publishes a new manifest version carrying the SAME
-    * commit dirs plus a `schema_v{N}` record; no data file is touched.
-    * Readers resolve the newest schema record at-or-below their
-    * version, so time travel to a pre-evolution version sees the old
-    * shape, and commits whose parquet footers lack the column are
-    * filled with the default per commit (never blanket-coalesced —
-    * a post-evolution NULL stays NULL). */
-  def addColumn(table: String, column: String, ddlType: String,
-                default: Option[String] = None): Unit = {
-    val base = writeBase(table)
-    require(base >= 1, s"cannot evolve '$table': table does not exist")
-    val (cur, priorDefaults) = schemaAt(table, base)
-    require(!cur.fieldNames.map(_.toLowerCase).contains(column.toLowerCase),
-      s"column '$column' already exists on '$table'")
-    // prior defaults carry forward; the record is self-contained so a
-    // reader never has to walk older schema files
-    val defaults = priorDefaults ++ default.map(column -> _)
-    val body = ("ddl:" + cur.add(column, ddlType, nullable = true).toDDL) +:
-      defaults.toSeq.sorted.map { case (c, d) => s"default:$c:$d" }
-    publish(table, base, commitsAt(table, base), Some(body.mkString("\n")))
-  }
-
-  /** Newest schema record at-or-below `version`: (evolved schema,
-    * per-column initial defaults). None = never evolved. */
-  private def evolvedSchemaAt(t: String, version: Int):
-      Option[(StructType, Map[String, String])] = {
-    val md = manifestDir(t)
-    (version to 1 by -1).iterator
-      .map(v => md.resolve(s"schema_v$v"))
-      .find(Files.exists(_))
-      .map { p =>
-        val ls = lines(p)
-        val ddl = ls.collectFirst { case l if l.startsWith("ddl:") => l.drop(4) }
-          .getOrElse(throw new IllegalStateException(s"malformed schema record $p"))
-        val defaults = ls.collect {
-          case l if l.startsWith("default:") =>
-            val rest = l.drop(8); val i = rest.indexOf(':')
-            rest.take(i) -> rest.drop(i + 1)
-        }.toMap
-        (StructType.fromDDL(ddl), defaults)
-      }
-  }
-
-  // ---------------------------------------------------------------------
   // the commit reader: every DataFrame over commit dirs is built here
 
   /** Scan one commit dir under `schema` (inferred from its footers when
@@ -689,58 +602,27 @@ final class Catalog(val spark: SparkSession, val root: String,
   private def scan(dir: String, schema: Option[StructType] = None): DataFrame =
     schema.fold(spark.read)(spark.read.schema).option("basePath", dir).parquet(dir)
 
-  /** The schema a read of `t` at manifest `version` uses, with the
-    * initial defaults of columns [[addColumn]] added: the newest schema
-    * record at-or-below `version`, else the declared schema, else the
-    * schema of the version's first commit. Tables outside the star
-    * contract (rollups, exports) exist only once written, so a missing
-    * one is a loud error, never a guess at a schema this catalog never
-    * declared. */
-  private def schemaAt(t: String, version: Int): (StructType, Map[String, String]) =
-    evolvedSchemaAt(t, version).getOrElse {
-      val schema = Schemas.schemaOfOpt(t).getOrElse {
-        val commits = commitsAt(t, version)
-        require(commits.nonEmpty,
-          s"table '$t' has no declared schema and no committed data")
-        scan(commits.head).schema
-      }
-      (schema, Map.empty[String, String])
+  /** The schema a read of `t` at manifest `version` uses: the declared
+    * schema, else the schema of the version's first commit. Tables
+    * outside the star contract (rollups, exports) exist only once
+    * written, so a missing one is a loud error, never a guess at a
+    * schema this catalog never declared. */
+  private def schemaAt(t: String, version: Int): StructType =
+    Schemas.schemaOfOpt(t).getOrElse {
+      val commits = commitsAt(t, version)
+      require(commits.nonEmpty,
+        s"table '$t' has no declared schema and no committed data")
+      scan(commits.head).schema
     }
 
-  /** Union of `commits` under [[schemaAt]]`(t, version)`, or an empty
-    * frame of that schema. A commit whose files pre-date an evolved
-    * column gets that column's initial default — checked per commit
-    * through its footers, so a NULL written after the evolution stays
-    * NULL. Only tables with defaults pay that footer read: a declared,
-    * never-evolved table opens no file here. */
+  /** Union of `commits` under [[schemaAt]]`(t, version)`, each selected
+    * in the schema's column order (the union is positional), or an
+    * empty frame of that schema. */
   private def read(t: String, version: Int, commits: Seq[String]): DataFrame = {
-    val (schema, defaults) = schemaAt(t, version)
-    if (commits.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    commits.map { c =>
-      val present =
-        if (defaults.isEmpty) Set.empty[String]
-        else scan(c).schema.fieldNames.map(_.toLowerCase).toSet
-      schema.fieldNames
-        .filter(f => defaults.contains(f) && !present(f.toLowerCase))
-        .foldLeft(scan(c, Some(schema))) { (df, f) =>
-          df.withColumn(f, expr(defaults(f)).cast(schema(f).dataType))
-        }.select(schema.fieldNames.map(col): _*)
-    }.reduce(_.unionAll(_))
-  }
-
-  /** [[read]] of manifest `version` that first checks its commit dirs
-    * survive: [[vacuum]] keeps only the LATEST version's (and tagged
-    * versions') files, and a missing dir should fail here naming the
-    * cause rather than as FileNotFound deep in the scan. */
-  private def readUnvacuumed(table: String, version: Int): DataFrame = {
-    val commits = commitsAt(table, version)
-    val gone = commits.filterNot(c => Files.exists(Paths.get(c)))
-    if (gone.nonEmpty)
-      throw new IllegalStateException(
-        s"$table version $version was vacuumed: missing commit dirs " +
-          gone.mkString(", "))
-    read(table, version, commits)
+    val schema = schemaAt(t, version)
+    if (commits.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else commits.map(c => scan(c, Some(schema)).select(schema.fieldNames.map(col): _*))
+      .reduce(_.unionAll(_))
   }
 
   // ---------------------------------------------------------------------
@@ -819,114 +701,6 @@ final class Catalog(val spark: SparkSession, val root: String,
     Some((mn, mx))
   }
 
-  /** Committed manifest versions, ascending (1 = first commit). Every
-    * write (replace / appendDelta / compact) publishes a new version;
-    * old manifests stay on disk until [[vacuum]]. Derived from the
-    * READ-resolved head — never from per-table LATEST alone, and never
-    * from a directory listing: a crashed writer's claimed-but-
-    * unpublished versions (orphan v-file, or a scoped head an aborted
-    * transaction advanced past the snapshot) must stay as invisible to
-    * time travel as they are to [[table]]. */
-  def versions(table: String): Seq[Int] =
-    readVersion(table).fold(Seq.empty[Int])(v => (1 to v).toSeq)
-
-  /** Time travel: the table exactly as published at manifest `version`
-    * (Delta-style `versionAsOf`). Valid as long as the version's commit
-    * dirs survive — [[vacuum]] keeps only the LATEST version's files,
-    * so pin or copy historical versions before vacuuming. */
-  def tableAt(table: String, version: Int): DataFrame = {
-    require(versions(table).contains(version),
-      s"$table has no version $version (have: ${versions(table).mkString(",")})")
-    readUnvacuumed(table, version)
-  }
-
-  /** Named immutable refs (Iceberg-style tags): pin the table's state
-    * at manifest `version` (default: the current head) under `name`,
-    * readable forever as [[tableAtTag]] — and [[vacuum]] keeps every
-    * tagged version's commit dirs alive, where plain [[tableAt]] time
-    * travel is only valid until the next vacuum. Tags are
-    * create-exclusive and immutable ([[claimVersionFile]], the same
-    * fence as manifests: silently re-pointing a published release is
-    * exactly the overwrite the fencing discipline exists to prevent);
-    * [[dropTag]] + re-[[tag]] is the explicit way to move one.
-    * Returns the pinned version. */
-  def tag(table: String, name: String, version: Int = -1): Int = {
-    require(name.matches("[A-Za-z0-9._-]+"),
-      s"tag name '$name' must match [A-Za-z0-9._-]+")
-    val v =
-      if (version == -1) readVersion(table).getOrElse(throw new
-        IllegalArgumentException(s"$table has no published version to tag"))
-      else version
-    require(versions(table).contains(v),
-      s"$table has no version $v (have: ${versions(table).mkString(",")})")
-    claimVersionFile(manifestDir(table), s"tag.$name", v.toString,
-      s"tag '$name' on $table")
-    v
-  }
-
-  /** All tags on `table` (name → pinned manifest version). */
-  def tags(table: String): Map[String, Int] =
-    // skip-and-report unparseable tag files instead of throwing:
-    // tags() feeds vacuum(), so one corrupt file (a pre-hard-link
-    // crashed claim, or outside interference) must not brick vacuuming
-    // and tag listing for the whole table
-    tagFiles(table).flatMap {
-      case (f, Right(v)) => Some(f.stripPrefix("tag.") -> v)
-      case (f, Left(raw)) =>
-        System.err.println(s"[catalog] skipping unparseable tag file " +
-          s"${manifestDir(table).resolve(f)} (content '$raw') — a crashed or " +
-          "foreign write; delete it (or re-tag) to clear this warning")
-        None
-    }.toMap
-
-  /** Tag files whose content does not parse as a version — crashed
-    * claims or foreign writes. Listing ([[tags]]) skips them with a
-    * warning; the destructive path ([[vacuum]]) must abort on them. */
-  private def unparseableTagFiles(table: String): Seq[String] =
-    tagFiles(table).collect { case (f, Left(_)) => f }
-
-  /** Every `tag.*` file of `table` with its pinned version, or its raw
-    * content when that does not parse. toIntOption, not isDigit+toInt:
-    * an all-digit value above Int.MaxValue would pass the digit guard
-    * and throw from toInt. */
-  private def tagFiles(table: String): Seq[(String, Either[String, Int])] =
-    children(manifestDir(table)).map(_.getFileName.toString)
-      .filter(_.startsWith("tag.")).map { f =>
-        val raw = new String(Files.readAllBytes(manifestDir(table).resolve(f)),
-          StandardCharsets.UTF_8).trim
-        f -> raw.toIntOption.toRight(raw)
-      }
-
-  /** The table exactly as pinned by `name` (see [[tag]]).
-    *
-    * Resolved from the tag's pinned version DIRECTLY, not through
-    * [[tableAt]]'s `versions()` gate: `versions()` is scoped to the
-    * READ-resolved head (the published snapshot for scoped tables), and
-    * a tag may legitimately pin a version ahead of it — e.g. tagged
-    * inside a transaction whose snapshot publish later aborted. The
-    * "readable forever" contract depends only on the tag's claim file,
-    * its manifest, and its commit dirs, all of which [[vacuum]]
-    * preserves; the only loud failures are a dangling tag (manifest
-    * rolled back by recovery) or vacuumed commit dirs from BEFORE the
-    * tag existed. */
-  def tableAtTag(table: String, name: String): DataFrame = {
-    val v = tags(table).getOrElse(name,
-      throw new IllegalArgumentException(s"$table has no tag '$name' " +
-        s"(have: ${tags(table).keys.toSeq.sorted.mkString(", ")})"))
-    if (!Files.exists(manifestDir(table).resolve(s"v$v")))
-      throw new IllegalStateException(
-        s"tag '$name' on $table pins version $v but manifest v$v no " +
-          "longer exists (rolled back by transaction recovery?) — the " +
-          "tag is dangling; dropTag and re-tag a live version")
-    readUnvacuumed(table, v)
-  }
-
-  /** Remove a tag; its version's commit dirs become vacuum-eligible
-    * again (unless still the head / snapshot-referenced / otherwise
-    * tagged). Returns false when no such tag existed. */
-  def dropTag(table: String, name: String): Boolean =
-    Files.deleteIfExists(manifestDir(table).resolve(s"tag.$name"))
-
   /** Read a table (union of live commits), or an empty frame with the
     * declared schema — [[read]] at the read-resolved version. */
   def table(table: String): DataFrame = {
@@ -984,8 +758,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     * is a planning optimization, never a semantics change. Commits
     * whose stats are unusable (missing column, non-integral type,
     * stats disabled by the writer) are conservatively kept. The kept
-    * commits go through [[read]], so columns and initial defaults are
-    * exactly [[table]]'s. */
+    * commits go through [[read]], so columns are exactly [[table]]'s. */
   def tableWhere(table: String, column: String, lo: Long, hi: Long): DataFrame = {
     val v = readVersion(table).getOrElse(0)
     requireIntegral(table, v, column, "tableWhere")
@@ -996,7 +769,7 @@ final class Catalog(val spark: SparkSession, val root: String,
   /** `column` of `t` at `version` must be INT or BIGINT: footer-range
     * pruning reads integral statistics only. */
   private def requireIntegral(t: String, version: Int, column: String, op: String): Unit = {
-    val dt = schemaAt(t, version)._1(column).dataType
+    val dt = schemaAt(t, version)(column).dataType
     require(dt == IntegerType || dt == LongType,
       s"$op prunes integral columns only; $t.$column is ${dt.simpleString}")
   }
@@ -1012,22 +785,6 @@ final class Catalog(val spark: SparkSession, val root: String,
   private def intersects(fs: Seq[ParquetMetadata], column: String,
                          lo: Long, hi: Long): Boolean =
     range(fs, column).forall { case (mn, mx) => mx >= lo && mn <= hi }
-
-  /** K3 upsert merge (`… ON CONFLICT DO UPDATE` /
-    * `MERGE WHEN MATCHED THEN UPDATE`). Matched rows are replaced by
-    * the batch's latest version (per `orderBy` desc), new keys
-    * inserted, the rest kept. Published as ONE replace commit — the
-    * merged plan reads the current version while writing into a fresh
-    * commit dir, and readers flip atomically at the manifest rename
-    * (same visibility contract as [[replace]]). A full-table rewrite
-    * is the right shape for dimension tables; for partitioned facts
-    * prefer the Warehouse's partition-pruned anti-join merge. */
-  def mergeUpsert(table: String, batch: DataFrame, keys: Seq[String],
-                  orderBy: Seq[org.apache.spark.sql.Column] = Seq.empty): Unit =
-    // table() returns an empty declared-schema frame for a missing
-    // table, so the result always carries exactly the table's columns
-    // (batch-only ordering columns never leak into the commit)
-    replace(table, MergeUpsert.upsert(this.table(table), batch, keys, orderBy))
 
   /** Incremental materialized-rollup maintenance: fold `batch` into the
     * grouped rollup `table` by merging partial aggregates
@@ -1070,8 +827,8 @@ final class Catalog(val spark: SparkSession, val root: String,
     * stays O(groups · k), and each refresh costs the batch plus the
     * sketch grid. The arrays feed the q163 set algebra downstream
     * ([[graft.expressions.KmvMinima.kmvEstimate]], union/intersection/
-    * Jaccard between groups, between refreshes via time travel, or
-    * against another table's maintained sketch) — a distinct-count and
+    * Jaccard between groups, or against another table's maintained
+    * sketch) — a distinct-count and
     * overlap monitor maintained at manifest cost, never a
     * COUNT(DISTINCT) rescan. Merge is associative/commutative/
     * duplicate-insensitive, so refresh order and batch boundaries
@@ -1088,8 +845,8 @@ final class Catalog(val spark: SparkSession, val root: String,
     * ever truncated to, so growing k mid-life silently degrades the
     * estimator — start a fresh table to re-sketch at a larger k. The
     * contract is ENFORCED, not just documented: every write stamps `k`
-    * into the constant `kmv_k` column (self-describing — it rides time
-    * travel, exports, and [[graft.operators.KmvAlgebra.overlap]]'s
+    * into the constant `kmv_k` column (self-describing — it rides
+    * exports and [[graft.operators.KmvAlgebra.overlap]]'s
     * verification), and a refresh whose `k` disagrees with the stored
     * stamp fails loudly instead of silently truncating the estimator
     * (a mismatched refresh would read a truncated sketch as an EXACT
@@ -1136,7 +893,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     * aggregate over the sketch grid — the grid is O(groups · k) by
     * contract, so the constancy scan costs what a one-row probe would
     * at any real scale. */
-  def kmvK(table: String): Option[Int] =
+  private[graft] def kmvK(table: String): Option[Int] =
     Option.when(exists(table))(this.table(table))
       .filter(_.columns.contains("kmv_k")).flatMap { df =>
       val r = df.agg(
@@ -1161,7 +918,7 @@ final class Catalog(val spark: SparkSession, val root: String,
 
   /** The last micro-batch id folded into `table` by [[maintainAgg]],
     * read from the marker inside the live commit (metadata-only). */
-  def appliedBatchId(table: String): Option[Long] =
+  private[graft] def appliedBatchId(table: String): Option[Long] =
     liveCommits(table).flatMap { dir =>
       val marker = new HPath(dir, AppliedBatchIdMarker)
       val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
@@ -1248,8 +1005,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     * every other commit carries into the new version's manifest
     * verbatim (zero read or write I/O for it), and the delete publishes
     * as ONE atomic manifest flip: readers see the old state or the
-    * complete post-delete state, and time travel to the pre-delete
-    * version stays intact. This is the opt-out / contamination-purge
+    * complete post-delete state. This is the opt-out / contamination-purge
     * shape at 100 TB — deleting one id range touches the few commits
     * that contain it, not the table.
     *
@@ -1264,7 +1020,7 @@ final class Catalog(val spark: SparkSession, val root: String,
                   partitionBy: Seq[String] = Seq.empty,
                   clusterBy: Seq[String] = Seq.empty): Long = {
     val base = writeBase(table)
-    requireClusterableLayout(schemaAt(table, base)._1, partitionBy, clusterBy)
+    requireClusterableLayout(schemaAt(table, base), partitionBy, clusterBy)
     // validated against the schema reads use, so catalog-generic tables
     // (quarantine, rollups, sketch tables) qualify too — the
     // quarantine-correction runbook purges a media_quarantine row this
@@ -1290,23 +1046,6 @@ final class Catalog(val spark: SparkSession, val root: String,
       dropEmpty = kept.nonEmpty)
   }
 
-  /** Row-level change feed between two published versions (Delta's
-    * `table_changes` shape, computed from snapshots): multiset
-    * difference both ways, tagged `_change` = insert | delete. An
-    * updated row appears as its old version deleted plus its new
-    * version inserted — exactly what a downstream incremental consumer
-    * replays. Cost is a scan of both versions (anti-join shuffle on
-    * all columns); for commit-granular incremental feeds, consumers at
-    * scale read the per-version manifests instead — appends are
-    * per-commit additive — and reserve this for versions that rewrote
-    * history (upserts, deletes, compaction is content-neutral). */
-  def changes(table: String, fromVersion: Int, toVersion: Int): DataFrame = {
-    val a = tableAt(table, fromVersion)
-    val b = tableAt(table, toVersion)
-    b.exceptAll(a).withColumn("_change", lit("insert"))
-      .unionAll(a.exceptAll(b).withColumn("_change", lit("delete")))
-  }
-
   /** Fold all commits into one (scan-overhead maintenance). Atomic:
     * readers see either the old commit set or the compacted one. Reads
     * the same LATEST the commit claims against — a concurrent append
@@ -1323,11 +1062,8 @@ final class Catalog(val spark: SparkSession, val root: String,
               numFiles: Int = 0): Unit = {
     // argument validation — before the empty-table early return
     val base = writeBase(table)
-    requireClusterableLayout(schemaAt(table, base)._1, partitionBy, clusterBy)
+    requireClusterableLayout(schemaAt(table, base), partitionBy, clusterBy)
     if (base == 0) return
-    // through the one reader: an evolved table's initial defaults
-    // MATERIALIZE into the rewrite (afterwards every file carries the
-    // column)
     val df = read(table, base, commitsAt(table, base))
     // numFiles > 0: coalesce before the sort — compaction's point is
     // fewer, larger files (small-file debt is what it repays), and the
@@ -1337,112 +1073,32 @@ final class Catalog(val spark: SparkSession, val root: String,
       partitionBy, clusterBy)
   }
 
-  /** Table statistics from parquet footers only (ANALYZE-lite): exact
-    * row count always; [min, max] for each requested integral column
-    * whose every populated row group carries usable stats (the same
-    * conservative rules as [[tableWhere]] pruning — a column that
-    * fails them is omitted from the map rather than reported wrong).
-    * Driver-side metadata reads, no data scan: what a table format
-    * serves from its manifest, and the numbers a query planner or
-    * data-quality dashboard wants without paying for a 100 TB pass. */
-  def stats(table: String, columns: Seq[String] = Seq.empty): Catalog.TableStats = {
-    val fs = footers(liveCommits(table))
-    // an all-null column yields the empty range, reported as no range
-    Catalog.TableStats(rows(fs), columns.flatMap(c =>
-      range(fs, c).filter { case (mn, mx) => mn <= mx }.map(c -> _)).toMap)
-  }
-
-  /** Size-aware compaction (the OPTIMIZE shape): fold only the commits
-    * whose on-disk size is under `smallBytes` into one clustered
-    * commit; every larger commit carries into the new manifest
-    * VERBATIM — zero read or write I/O for data that is already in
-    * healthy files. [[compact]] rewrites the whole table, which is
-    * right for restoring global clustering; this pass repays
-    * small-file debt (the steady drip of tiny per-batch appends) at a
-    * cost proportional to the debt, not the table — the only shape
-    * that stays affordable when the table is 100 TB and the debt is
-    * 100 MB. Same atomic manifest flip as every other write. Returns
-    * the number of commits folded (0 = nothing worth folding: fewer
-    * than two small commits). */
-  def compactSmall(table: String, smallBytes: Long,
-                   partitionBy: Seq[String] = Seq.empty,
-                   clusterBy: Seq[String] = Seq.empty): Int = {
-    val base = writeBase(table)
-    requireClusterableLayout(schemaAt(table, base)._1, partitionBy, clusterBy)
-    val live = commitsAt(table, base)
-    val small = live.filter(c => dataFiles(Seq(c)).map(_.getLen).sum < smallBytes)
-    if (small.size < 2) return 0
-    val smallSet = small.toSet
-    swap(table, base, live.filterNot(smallSet), read(table, base, small).coalesce(1),
-      partitionBy, clusterBy)
-    small.size
-  }
-
-  /** Move every unparseable `tag.*` file (crashed pre-hard-link
-    * claims, foreign writes — the artifacts [[vacuum]] aborts on) to
-    * `_manifests/quarantine/`, returning the quarantined file names.
-    * The one audited recovery step the vacuum runbook needs: after a
-    * quarantine, [[vacuum]] proceeds and valid pins stay readable,
-    * while the quarantined bytes remain inspectable (was this a
-    * crashed claim on a version we are about to collect?) instead of
-    * being raw-deleted. Re-quarantining the same name uniquifies the
-    * target — successive incidents never overwrite each other's
-    * evidence. Run from the single writer, like vacuum itself: a
-    * LIVE writer's claim mid-flight is indistinguishable from a
-    * crashed one here. */
-  def quarantineCorruptTags(table: String): Seq[String] = {
-    val md = manifestDir(table)
-    val corrupt = unparseableTagFiles(table)
-    if (corrupt.isEmpty) return Seq.empty
-    val qd = md.resolve("quarantine")
-    Files.createDirectories(qd)
-    corrupt.map { f =>
-      var target = qd.resolve(f)
-      var n = 1
-      while (Files.exists(target)) {
-        target = qd.resolve(s"$f.$n")
-        n += 1
-      }
-      Files.move(md.resolve(f), target)
-      System.err.println(s"[catalog] quarantined corrupt tag file $f " +
-        s"of $table -> $target")
-      target.getFileName.toString
-    }
-  }
+  /** Live row count from parquet footers only — metadata reads, no
+    * Spark job. */
+  def rowCount(table: String): Long = rows(footers(liveCommits(table)))
 
   /** Delete commit dirs referenced by neither the LATEST manifest nor
     * the published snapshot (crashed writers, replaced/compacted
     * history). Assumes no reader is pinned to an older version — run
-    * from the single writer, like compaction in any MVCC table format. */
+    * from the single writer, like compaction in any MVCC table format.
+    *
+    * Refuses, deleting nothing, while `_manifests` holds a `tag.*`
+    * file: earlier versions of this catalog wrote those to pin old
+    * versions against vacuum, and a pin this catalog no longer reads
+    * must never be collected silently. */
   def vacuum(table: String): Int = {
-    // DESTRUCTIVE path: an unparseable tag file may be a crashed claim
-    // on a version this vacuum would otherwise collect — tags() skips
-    // it for LISTING, but deleting data under a possible pin breaks
-    // the "tagged versions stay readable forever" contract with
-    // permanent loss. Abort loudly; the operator clears the corrupt
-    // file (delete or re-tag) and re-runs.
-    val corrupt = unparseableTagFiles(table)
-    require(corrupt.isEmpty,
-      s"vacuum aborted for '$table': unparseable tag file(s) " +
-        s"${corrupt.mkString(", ")} may pin versions this vacuum would " +
-        "delete — remove or re-tag them first (see the tags() warning)")
-    val snapRefs = snapshotVersions.get(table)
-      .map(v => commitsAt(table, v)).getOrElse(Seq.empty)
-    // tagged versions stay readable forever — their commit dirs are
-    // live no matter how far behind the head they fall (see [[tag]]).
-    // A dangling tag (its manifest rolled back by recovery) pins
-    // nothing; skipping it here keeps vacuum runnable — tableAtTag is
-    // where the dangle is reported loudly
-    val tagRefs = tags(table).values.toSeq.distinct
-      .filter(v => Files.exists(manifestDir(table).resolve(s"v$v")))
-      .flatMap(v => commitsAt(table, v))
-    val live = (latestVersion(table).map(commitsAt(table, _)).getOrElse(Seq.empty)
-        ++ snapRefs ++ tagRefs)
-      .map(p => Paths.get(p).getFileName.toString).toSet
+    val md = manifestDir(table)
+    val tags = children(md).map(_.getFileName.toString).filter(_.startsWith("tag."))
+    require(tags.isEmpty,
+      s"vacuum aborted for '$table': ${tags.sorted.mkString(", ")} in $md " +
+        "may pin versions this vacuum would delete — move them out of " +
+        "_manifests once their versions are no longer needed")
+    val live = (latestVersion(table).toSeq ++ snapshotVersions.get(table))
+      .flatMap(commitsAt(table, _)).map(p => Paths.get(p).getFileName.toString).toSet
     val dead = children(Paths.get(tableDir(table)))
       .filter(p => Files.isDirectory(p))
       .filter(p => p.getFileName.toString != "_manifests")
-      .filterNot(p => live.contains(p.getFileName.toString))
+      .filterNot(p => live(p.getFileName.toString))
     dead.foreach(deleteRecursively)
     dead.size
   }
@@ -1462,9 +1118,4 @@ object Catalog {
     * manifest or snapshot version file: the commit was NOT published
     * and must be retried against the new table state. */
   final class ConcurrentWriteException(msg: String) extends RuntimeException(msg)
-
-  /** Footer-derived table statistics: exact live row count, and
-    * [min, max] per requested column where every row group had usable
-    * stats (see [[Catalog.stats]]). */
-  final case class TableStats(rows: Long, ranges: Map[String, (Long, Long)])
 }

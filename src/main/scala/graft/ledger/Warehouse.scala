@@ -187,7 +187,7 @@ final class Warehouse(catalog: Catalog, strictQuirks: Boolean = false) {
     // cadence this pipeline serves) takes the one-job single-window
     // path; anything larger — a backfill, a migration — pays
     // assignScalable's two-pass scheme and keeps every task bounded.
-    val batchRows = catalog.stats("staging_lancamentos").rows
+    val batchRows = catalog.rowCount("staging_lancamentos")
     val assigned =
       if (batchRows <= Warehouse.boundedIdBatchRows)
         SurrogateKeys.assignBounded(delta, "id_lancamento", Seq("id_hash"), offset)
@@ -302,22 +302,25 @@ final class Warehouse(catalog: Catalog, strictQuirks: Boolean = false) {
   /** The full build. The reference's only hard edges are
     * tipo→grupo→categoria→fato, tempo→fato, classificacao→fato
     * (app/etl.py:136-149 runs sequentially only by accident), so the
-    * three independent dims run as parallel futures — concurrent Spark
-    * jobs interleave their stages and hide scheduling latency; each
-    * writes a different table, preserving single-writer-per-table
-    * discipline. The whole build runs inside [[Catalog.transaction]]:
-    * other catalog instances see either the previous warehouse state or
-    * the complete new one, never dims-without-fact. Returns per-table
-    * appended row counts. */
+    * two dims off the tipo chain (tempo, classificacao) run as parallel
+    * futures — concurrent Spark jobs interleave their stages and hide
+    * scheduling latency; each writes a different table, preserving
+    * single-writer-per-table discipline. The whole build runs inside
+    * [[Catalog.transaction]]: other catalog instances see either the
+    * previous warehouse state or the complete new one, never
+    * dims-without-fact. The body never returns or throws before both
+    * futures settle: a future still writing after the transaction ended
+    * would publish its dim outside it. Returns per-table appended row
+    * counts. */
   def run(): Map[String, Long] = catalog.transaction {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val tempoF = Future(loadDimTempo())
     val clsF = Future(loadDimClassificacao())
-    val tipo = loadDimTipo()
-    val grupo = loadDimGrupo()
-    val categoria = loadDimCategoria()
+    val (tipo, grupo, categoria) =
+      try (loadDimTipo(), loadDimGrupo(), loadDimCategoria())
+      finally Seq(tempoF, clsF).foreach(Await.ready(_, Duration.Inf))
     val tempo = Await.result(tempoF, Duration.Inf)
     val cls = Await.result(clsF, Duration.Inf)
     val fato = loadFato()

@@ -184,8 +184,8 @@ object Streams {
     * commit, so a re-delivered batch is skipped, and set semantics make
     * even a hypothetical double-fold harmless), same fresh-checkpoint
     * ⇒ fresh-table contract. Use this over [[runningKmvMinima]] when
-    * the sketch must SURVIVE the stream (time travel across refreshes,
-    * cross-table overlap against another maintained sketch) rather
+    * the sketch must SURVIVE the stream (cross-table overlap against
+    * another maintained sketch, reads after the query stops) rather
     * than live in the query's state store. */
   def maintainedKmvStream(df: DataFrame, catalog: Catalog, table: String,
                           keys: Seq[String], hashCol: String, k: Int,

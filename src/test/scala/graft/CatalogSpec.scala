@@ -70,35 +70,6 @@ class CatalogSpec extends SparkSpec {
     assert(cat.table("dim_tipo").select("nome_tipo").as[String].collect().toSeq === Seq("z"))
   }
 
-  test("time travel: tableAt reads any committed version unchanged") {
-    val dir = Files.createTempDirectory("cat_tt").toString
-    val cat = new Catalog(spark, s"$dir/wh")
-    cat.replace("dim_tipo", tipoDf("a"))                       // v1
-    cat.appendDelta("dim_tipo", tipoDf("b").withColumn("id_tipo",
-      org.apache.spark.sql.functions.lit(2)))                  // v2
-    cat.replace("dim_tipo", tipoDf("z"))                       // v3
-    assert(cat.versions("dim_tipo") === Seq(1, 2, 3))
-    def names(v: Int) =
-      cat.tableAt("dim_tipo", v).select("nome_tipo").as[String].collect().sorted.toSeq
-    assert(names(1) === Seq("a"))
-    assert(names(2) === Seq("a", "b"))
-    assert(names(3) === Seq("z"))
-    assert(cat.table("dim_tipo").count() === 1) // latest unaffected
-    intercept[IllegalArgumentException](cat.tableAt("dim_tipo", 9))
-  }
-
-  test("tableAt on a vacuumed version fails fast naming the cause") {
-    val dir = Files.createTempDirectory("cat_vac").toString
-    val cat = new Catalog(spark, s"$dir/wh")
-    cat.replace("dim_tipo", tipoDf("a")) // v1
-    cat.replace("dim_tipo", tipoDf("b")) // v2 (v1's commit now dead)
-    cat.vacuum("dim_tipo")
-    val e = intercept[IllegalStateException](cat.tableAt("dim_tipo", 1))
-    assert(e.getMessage.contains("vacuumed"))
-    // the surviving version still time-travels
-    assert(cat.tableAt("dim_tipo", 2).count() === 1)
-  }
-
   test("transaction: a crash mid-load never exposes a half-built warehouse to readers") {
     val dir = Files.createTempDirectory("cat_txn").toString
     val writer = new Catalog(spark, s"$dir/wh")
@@ -140,14 +111,14 @@ class CatalogSpec extends SparkSpec {
     })
     assert(reader.table("dim_tipo").count() === 0,
       "first-load crash leaked a half-built schema to readers")
-    assert(reader.versions("dim_tipo").isEmpty,
-      "aborted first-load head visible to time travel")
+    assert(reader.snapshotVersions.get("dim_tipo").isEmpty,
+      "aborted first-load head resolvable by readers")
     // healing run publishes the complete state
     writer.transaction { writer.replace("dim_tipo", tipoDf("a", "b")) }
     assert(reader.table("dim_tipo").count() === 2)
   }
 
-  test("time travel cannot see a crashed transaction's unpublished head") {
+  test("readers cannot resolve a crashed transaction's unpublished head") {
     val dir = Files.createTempDirectory("cat_ttfence").toString
     val cat = new Catalog(spark, s"$dir/wh")
     val reader = new Catalog(spark, s"$dir/wh")
@@ -156,13 +127,11 @@ class CatalogSpec extends SparkSpec {
       cat.replace("dim_tipo", tipoDf("x", "y", "z"))
       sys.error("crash")
     })
-    // reader: neither table() nor versions()/tableAt() resolves the
-    // aborted head (the writer's own txn view may — readers never)
-    assert(reader.versions("dim_tipo").max === reader.snapshotVersions("dim_tipo"))
-    assert(reader.tableAt("dim_tipo",
-      reader.versions("dim_tipo").max).count() === 1)
-    intercept[IllegalArgumentException](
-      reader.tableAt("dim_tipo", reader.snapshotVersions("dim_tipo") + 1))
+    // the per-table head names the aborted v2; a reader resolves the
+    // published v1 (the writer's own txn view may see v2 — readers never)
+    assert(latest(s"$dir/wh", "dim_tipo") === Some(2))
+    assert(reader.snapshotVersions("dim_tipo") === 1)
+    assert(reader.table("dim_tipo").count() === 1)
   }
 
   test("snapshot-scoped reads still see direct non-transactional writes") {
@@ -215,7 +184,8 @@ class CatalogSpec extends SparkSpec {
       cat.replace("dim_tipo", tipoDf("a", "b"))
     }
     assert(cat.table("dim_tipo").count() === 2)
-    assert(cat.versions("dim_tipo") === Seq(1, 2))
+    assert(cat.snapshotVersions("dim_tipo") === 2)
+    assert(latest(s"$dir/wh", "dim_tipo") === Some(2))
   }
 
   test("direct write to a table with an unpublished transactional head fails loudly") {
@@ -550,8 +520,8 @@ class CatalogSpec extends SparkSpec {
     assert(a.toSeq === (1 to 4).map(i => (i.toLong, s"a_$i")))
     assert(b.toSeq === (1 to 4).map(i => (i.toLong, s"b_$i")))
     // four commits each — no writer lost a commit to the other's flips
-    assert(catA.versions("owned_by_a").size === 4)
-    assert(catB.versions("owned_by_b").size === 4)
+    assert(latest(s"$dir/wh", "owned_by_a") === Some(4))
+    assert(latest(s"$dir/wh", "owned_by_b") === Some(4))
   }
 
   test("tableWhere prunes commits by footer range and still answers exactly") {
@@ -579,30 +549,6 @@ class CatalogSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       cat.tableWhere("dim_tipo", "nome_tipo", 0, 1)
     }
-  }
-
-  test("mergeUpsert: replaces matched keys, inserts new, one atomic version per merge") {
-    import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("cat_upsert").toString
-    val cat = new Catalog(spark, s"$dir/wh")
-    // upsert into a MISSING table: the deduped batch becomes v1 with
-    // exactly the declared columns (the ordering column must not leak)
-    val b1 = Seq((1, "a", 1), (2, "b-old", 1), (2, "b", 2))
-      .toDF("id_tipo", "nome_tipo", "seq")
-    cat.mergeUpsert("dim_tipo", b1, Seq("id_tipo"), Seq(col("seq")))
-    assert(cat.table("dim_tipo").columns.toSeq === Seq("id_tipo", "nome_tipo"))
-    assert(cat.table("dim_tipo").as[(Int, String)].collect().sortBy(_._1).toSeq
-      === Seq((1, "a"), (2, "b")))
-    // second merge: id 2 updated in place, id 3 inserted, id 1 kept
-    val v1 = cat.versions("dim_tipo").max
-    val b2 = Seq((2, "b2", 3), (3, "c", 1)).toDF("id_tipo", "nome_tipo", "seq")
-    cat.mergeUpsert("dim_tipo", b2, Seq("id_tipo"), Seq(col("seq")))
-    assert(cat.table("dim_tipo").as[(Int, String)].collect().sortBy(_._1).toSeq
-      === Seq((1, "a"), (2, "b2"), (3, "c")))
-    // one replace commit per merge; the pre-merge state is time-travelable
-    assert(cat.versions("dim_tipo").max === v1 + 1)
-    assert(cat.tableAt("dim_tipo", v1).as[(Int, String)].collect().sortBy(_._1).toSeq
-      === Seq((1, "a"), (2, "b")))
   }
 
   test("deleteWhere rewrites only range-affected commits; untouched dirs carry verbatim") {
@@ -637,49 +583,19 @@ class CatalogSpec extends SparkSpec {
     assert(cat.deleteWhere("dim_tipo", "id_tipo", 21, 30) === 10)
     assert(liveCommitCount(s"$dir/wh", "dim_tipo") === 2)
 
-    // time travel to the pre-delete state stays intact
-    assert(cat.tableAt("dim_tipo", 3).count() === 31)
+    // the pre-delete commits were never rewritten in place: v3's dirs
+    // still hold all 31 rows
+    assert(preDirs.map(d => spark.read.parquet(d).count()).sum === 31)
   }
 
-  test("stats: footer-only row count and integral ranges equal the exact scan") {
+  test("rowCount: footer-only live row count equals the exact scan") {
     val dir = Files.createTempDirectory("cat_stats").toString
     val cat = new Catalog(spark, s"$dir/wh")
+    assert(cat.rowCount("dim_tipo") === 0L)
     cat.appendDelta("dim_tipo", Seq((3, "c"), (7, "g")).toDF("id_tipo", "nome_tipo"))
     cat.appendDelta("dim_tipo", Seq((1, "a"), (5, "e")).toDF("id_tipo", "nome_tipo"))
-    val st = cat.stats("dim_tipo", Seq("id_tipo", "nome_tipo"))
-    assert(st.rows === 4)
-    assert(st.ranges("id_tipo") === (1L, 7L))
-    // string column: stats exist in footers but the integral-only
-    // contract omits it rather than surfacing raw binary bounds
-    assert(!st.ranges.contains("nome_tipo"))
-    // matches the exact scan
-    val (mn, mx) = cat.table("dim_tipo")
-      .agg(org.apache.spark.sql.functions.min("id_tipo"),
-        org.apache.spark.sql.functions.max("id_tipo"))
-      .as[(Int, Int)].head()
-    assert(st.ranges("id_tipo") === (mn.toLong, mx.toLong))
-  }
-
-  test("compactSmall folds only sub-threshold commits; big commits carry verbatim") {
-    val dir = Files.createTempDirectory("cat_optimize").toString
-    val cat = new Catalog(spark, s"$dir/wh")
-    def batch(ids: Range) = ids.map(i => (i, s"n$i")).toDF("id_tipo", "nome_tipo")
-    cat.appendDelta("dim_tipo", batch(1 to 5000))  // the "big" commit
-    cat.appendDelta("dim_tipo", batch(5001 to 5002))
-    cat.appendDelta("dim_tipo", batch(5003 to 5004))
-    cat.appendDelta("dim_tipo", batch(5005 to 5006))
-    val md = Paths.get(s"$dir/wh/dim_tipo/_manifests")
-    val preDirs = Files.readString(md.resolve("v4")).split("\n").filter(_.nonEmpty).toSeq
-
-    assert(cat.compactSmall("dim_tipo", smallBytes = 10000) === 3)
-    val postDirs = Files.readString(md.resolve("v5")).split("\n").filter(_.nonEmpty).toSeq
-    assert(postDirs.size === 2, s"3 small commits should fold to 1: $postDirs")
-    assert(postDirs.contains(preDirs.head), "the big commit must carry over verbatim")
-    assert(cat.table("dim_tipo").count() === 5006)
-
-    // idempotent maintenance: one small commit left → nothing to fold
-    assert(cat.compactSmall("dim_tipo", smallBytes = 10000) === 0)
-    assert(Files.readString(md.resolve("LATEST")).trim === "5")
+    assert(cat.rowCount("dim_tipo") === 4L)
+    assert(cat.rowCount("dim_tipo") === cat.table("dim_tipo").count())
   }
 
   test("deleteWhere on a partitioned fact keeps the (ano, mes) layout in the rewrite") {
@@ -708,22 +624,6 @@ class CatalogSpec extends SparkSpec {
       .filter(org.apache.spark.sql.functions.col("mes") === 1).count() === 7)
   }
 
-  test("changes: row-level insert/delete feed between versions") {
-    val dir = Files.createTempDirectory("cat_changes").toString
-    val cat = new Catalog(spark, s"$dir/wh")
-    cat.appendDelta("dim_tipo", Seq((1, "a"), (2, "b")).toDF("id_tipo", "nome_tipo"))
-    cat.appendDelta("dim_tipo", Seq((3, "c")).toDF("id_tipo", "nome_tipo"))
-    cat.deleteWhere("dim_tipo", "id_tipo", 1, 1)
-    def feed(from: Int, to: Int) =
-      cat.changes("dim_tipo", from, to)
-        .select("_change", "id_tipo", "nome_tipo")
-        .as[(String, Int, String)].collect().sortBy(_.toString).toSeq
-    assert(feed(1, 2) === Seq(("insert", 3, "c")))
-    assert(feed(2, 3) === Seq(("delete", 1, "a")))
-    assert(feed(1, 3) === Seq(("delete", 1, "a"), ("insert", 3, "c")))
-    assert(feed(2, 2) === Seq.empty)
-  }
-
   test("deleteWhere inside an aborted transaction is rolled back like any write") {
     val dir = Files.createTempDirectory("cat_del_txn").toString
     val cat = new Catalog(spark, s"$dir/wh")
@@ -742,18 +642,6 @@ class CatalogSpec extends SparkSpec {
       "aborted deleteWhere leaked into the published state")
   }
 
-  test("changes: compaction is content-neutral — the feed between pre and post is empty") {
-    val dir = Files.createTempDirectory("cat_changes_compact").toString
-    val cat = new Catalog(spark, s"$dir/wh")
-    cat.appendDelta("dim_tipo", Seq((1, "a"), (2, "b")).toDF("id_tipo", "nome_tipo"))
-    cat.appendDelta("dim_tipo", Seq((3, "c")).toDF("id_tipo", "nome_tipo"))
-    cat.compact("dim_tipo")
-    val vs = cat.versions("dim_tipo")
-    // a downstream incremental consumer can skip compaction versions
-    // entirely: the multiset diff across the fold is empty
-    assert(cat.changes("dim_tipo", vs(vs.size - 2), vs.last).count() === 0)
-  }
-
   test("maintainAgg: refreshes equal the one-shot aggregate; schema stable; versioned") {
     import graft.operators.IncrementalAgg
     import graft.operators.IncrementalAgg.AggSpec
@@ -767,109 +655,24 @@ class CatalogSpec extends SparkSpec {
     val b1 = batch(("a", 1), ("b", 2))
     val b2 = batch(("a", 3), ("c", 4))
     val b3 = batch(("b", 5), ("a", 6))
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.toString).toSeq
     cat.maintainAgg("rollup_kv", b1, Seq("k"), aggs)
     val schema0 = cat.table("rollup_kv").schema
+    val first = sorted(cat.table("rollup_kv"))
     cat.maintainAgg("rollup_kv", b2, Seq("k"), aggs)
     cat.maintainAgg("rollup_kv", b3, Seq("k"), aggs)
     // the decimal sum would widen +10 precision per refresh without the
     // cast-back; the maintained table must keep its first schema
     assert(cat.table("rollup_kv").schema === schema0)
-    def sorted(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).sortBy(_.toString).toSeq
     val direct = IncrementalAgg.partial(b1.unionAll(b2).unionAll(b3), Seq("k"), aggs)
       .select(schema0.fieldNames.map(org.apache.spark.sql.functions.col): _*)
     assert(sorted(cat.table("rollup_kv")) === sorted(direct))
     // each refresh is one atomic replace commit: three versions, and
-    // time travel still shows the first rollup state
-    assert(cat.versions("rollup_kv").size === 3)
-    assert(sorted(cat.tableAt("rollup_kv", cat.versions("rollup_kv").min)) ===
-      sorted(IncrementalAgg.partial(b1, Seq("k"), aggs)
-        .select(schema0.fieldNames.map(org.apache.spark.sql.functions.col): _*)))
-  }
-
-  test("tags pin versions across writes, compaction, and vacuum") {
-    val dir = Files.createTempDirectory("cat_tags").toString
-    val cat = new Catalog(spark, s"$dir/wh")
-    cat.replace("dim_tipo", tipoDf("a", "b"))          // v1
-    assert(cat.tag("dim_tipo", "release-1") === 1)     // defaults to head
-    cat.replace("dim_tipo", tipoDf("x", "y", "z"))     // v2
-    cat.compact("dim_tipo")                            // v3 (folds v2)
-    // vacuum keeps the tagged version's dirs alongside the head's
-    cat.vacuum("dim_tipo")
-    assert(cat.tableAtTag("dim_tipo", "release-1")
-      .select("nome_tipo").as[String].collect().sorted.toSeq === Seq("a", "b"))
-    assert(cat.table("dim_tipo").count() === 3)
-    assert(cat.tags("dim_tipo") === Map("release-1" -> 1))
-    // untagged history is still vacuum-eligible: v2's commit is gone
-    val e = intercept[IllegalStateException](cat.tableAt("dim_tipo", 2).count())
-    assert(e.getMessage.contains("vacuumed"))
-  }
-
-  test("tableAtTag reads a pin ahead of the published snapshot; rollback drops it loudly") {
-    val dir = Files.createTempDirectory("cat_tag_ahead").toString
-    val writer = new Catalog(spark, s"$dir/wh")
-    val reader = new Catalog(spark, s"$dir/wh")
-    writer.transaction { writer.replace("dim_tipo", tipoDf("a")) } // snapshot: tipo→1
-    // crash mid-transaction AFTER tagging the in-flight head: the
-    // snapshot never flips, so readers resolve v1 — but the tag's
-    // claim, manifest, and commit dirs all exist, and the "readable
-    // forever" contract must not depend on readVersion scoping
-    intercept[RuntimeException](writer.transaction {
-      writer.replace("dim_tipo", tipoDf("a", "b", "c"))            // head v2
-      assert(writer.tag("dim_tipo", "pre-release") === 2)
-      sys.error("executor lost")                                   // kill-point
-    })
-    assert(reader.table("dim_tipo").count() === 1)                 // snapshot holds
-    assert(reader.versions("dim_tipo") === Seq(1))                 // v2 unpublished
-    assert(reader.tableAtTag("dim_tipo", "pre-release").count() === 3)
-    reader.vacuum("dim_tipo")                                      // keeps the pin
-    assert(reader.tableAtTag("dim_tipo", "pre-release").count() === 3)
-    // the healing transaction rolls v2 back and RE-CLAIMS the version
-    // number with new data — the tag must be dropped (loudly), never
-    // silently re-pointed at data it did not pin
-    writer.transaction { writer.replace("dim_tipo", tipoDf("z")) }
-    assert(!writer.tags("dim_tipo").contains("pre-release"))
-    intercept[IllegalArgumentException](
-      writer.tableAtTag("dim_tipo", "pre-release"))
-  }
-
-  test("unparseable tag files: tags() skips with a warning; vacuum aborts " +
-      "loudly until the operator clears them, then succeeds with pins intact") {
-    val dir = Files.createTempDirectory("cat_tag_corrupt").toString
-    val cat = new Catalog(spark, s"$dir/wh")
-    cat.replace("dim_tipo", tipoDf("a"))                           // v1
-    cat.tag("dim_tipo", "good")
-    // plant the crash artifact the pre-hard-link claim could leave: an
-    // empty tag file (created, never written)
-    Files.write(Paths.get(s"$dir/wh/dim_tipo/_manifests/tag.bad"),
-      Array.emptyByteArray)
-    // all-digit but above Int.MaxValue (foreign interference): passed
-    // the old isDigit guard, then toInt threw and bricked tags()
-    Files.write(Paths.get(s"$dir/wh/dim_tipo/_manifests/tag.huge"),
-      "4294967296".getBytes)
-    // an orphaned IN-FLIGHT claim temp (writer hard-killed between
-    // write and createLink): dot-prefixed since round 10, so it must
-    // match no listing prefix — the old "tag.rel.tmpX" naming surfaced
-    // it as a phantom tag "rel.tmpX"
-    Files.write(Paths.get(s"$dir/wh/dim_tipo/_manifests/.tag.rel.tmp1a2b3c4d"),
-      "7".getBytes)
-    assert(cat.tags("dim_tipo") === Map("good" -> 1))              // skipped
-    cat.replace("dim_tipo", tipoDf("x", "y"))                      // v2
-    // DESTRUCTIVE op must not guess: a corrupt tag may be a crashed
-    // claim pinning a version this vacuum would collect. It aborts
-    // naming every corrupt file so the operator can act.
-    val ex = intercept[IllegalArgumentException](cat.vacuum("dim_tipo"))
-    assert(ex.getMessage.contains("tag.bad") && ex.getMessage.contains("tag.huge"))
-    assert(cat.tableAtTag("dim_tipo", "good")
-      .select("nome_tipo").as[String].collect().toSeq === Seq("a"))
-    // operator clears the corrupt files (here: deletes; re-tagging
-    // also works) and re-runs — vacuum proceeds, pins stay readable.
-    Files.delete(Paths.get(s"$dir/wh/dim_tipo/_manifests/tag.bad"))
-    Files.delete(Paths.get(s"$dir/wh/dim_tipo/_manifests/tag.huge"))
-    cat.vacuum("dim_tipo")
-    assert(cat.tableAtTag("dim_tipo", "good")
-      .select("nome_tipo").as[String].collect().toSeq === Seq("a"))
-    assert(cat.table("dim_tipo").count() === 2)                    // head v2 intact
+    // the first refresh held exactly the first batch's rollup
+    assert(latest(s"$dir/wh", "rollup_kv") === Some(3))
+    assert(first === sorted(IncrementalAgg.partial(b1, Seq("k"), aggs)
+      .select(schema0.fieldNames.map(org.apache.spark.sql.functions.col): _*)))
   }
 
   test("recover() clears orphan claims on registered export tables, not " +
@@ -898,39 +701,6 @@ class CatalogSpec extends SparkSpec {
       Seq("lang", "doc_id"), 4L, "n_chars")
     assert(m.agg(org.apache.spark.sql.functions.sum("n_docs"))
       .head().getLong(0) === 4L)
-  }
-
-  test("quarantineCorruptTags: one audited call clears the vacuum abort; " +
-      "evidence stays inspectable; repeat incidents never overwrite it") {
-    val dir = Files.createTempDirectory("cat_tag_quarantine").toString
-    val cat = new Catalog(spark, s"$dir/wh")
-    cat.replace("dim_tipo", tipoDf("a"))                           // v1
-    cat.tag("dim_tipo", "good")
-    cat.replace("dim_tipo", tipoDf("x", "y"))                      // v2
-    val md = s"$dir/wh/dim_tipo/_manifests"
-    Files.write(Paths.get(s"$md/tag.bad"), Array.emptyByteArray)
-    Files.write(Paths.get(s"$md/tag.huge"), "4294967296".getBytes)
-    intercept[IllegalArgumentException](cat.vacuum("dim_tipo"))
-    // the runbook step: one method, not raw file surgery
-    val moved = cat.quarantineCorruptTags("dim_tipo")
-    assert(moved.toSet === Set("tag.bad", "tag.huge"))
-    cat.vacuum("dim_tipo")                                         // proceeds
-    assert(cat.tableAtTag("dim_tipo", "good")
-      .select("nome_tipo").as[String].collect().toSeq === Seq("a"))
-    assert(cat.tags("dim_tipo") === Map("good" -> 1))
-    // evidence inspectable: original bytes under _manifests/quarantine
-    assert(new String(Files.readAllBytes(
-      Paths.get(s"$md/quarantine/tag.huge"))) === "4294967296")
-    assert(Files.size(Paths.get(s"$md/quarantine/tag.bad")) === 0L)
-    // a SECOND incident with the same file name uniquifies, never
-    // overwrites the first incident's evidence
-    Files.write(Paths.get(s"$md/tag.huge"), "still bad".getBytes)
-    assert(cat.quarantineCorruptTags("dim_tipo") === Seq("tag.huge.1"))
-    assert(new String(Files.readAllBytes(
-      Paths.get(s"$md/quarantine/tag.huge.1"))) === "still bad")
-    // nothing corrupt left: the call is an idempotent no-op
-    assert(cat.quarantineCorruptTags("dim_tipo") === Seq.empty)
-    cat.vacuum("dim_tipo")
   }
 
   test("sharded export: data laid out by shard + manifest, ONE atomic snapshot flip") {
@@ -1114,38 +884,66 @@ class CatalogSpec extends SparkSpec {
       .head().getLong(0) === 8L)
   }
 
-  test("tags are create-exclusive and immutable; dropTag releases the pin") {
-    val dir = Files.createTempDirectory("cat_tags2").toString
-    val cat = new Catalog(spark, s"$dir/wh")
-    cat.replace("dim_tipo", tipoDf("a"))               // v1
-    cat.replace("dim_tipo", tipoDf("b"))               // v2
-    cat.tag("dim_tipo", "rel", version = 1)
-    intercept[Catalog.ConcurrentWriteException](cat.tag("dim_tipo", "rel"))
-    intercept[IllegalArgumentException](cat.tag("dim_tipo", "nope", version = 9))
-    intercept[IllegalArgumentException](cat.tableAtTag("dim_tipo", "absent"))
-    assert(cat.dropTag("dim_tipo", "rel"))
-    assert(!cat.dropTag("dim_tipo", "rel"))
-    cat.vacuum("dim_tipo") // pin released: v1's commit dir may go
-    val e = intercept[IllegalStateException](cat.tableAt("dim_tipo", 1).count())
-    assert(e.getMessage.contains("vacuumed"))
-  }
-
-  private def latest(root: String, t: String): Option[Int] =
-    Some(Paths.get(s"$root/$t/_manifests/LATEST")).filter(Files.exists(_))
-      .map(p => Files.readString(p).trim.toInt)
-
   test("recover() deletes dot-prefixed write temps, never a tag whose name contains .tmp") {
     val dir = Files.createTempDirectory("cat_recover_tmp").toString
     val cat = new Catalog(spark, s"$dir/wh")
     cat.replace("dim_tipo", tipoDf("a"))
-    cat.tag("dim_tipo", "tmp")
-    cat.tag("dim_tipo", "rc.tmp1")
     val md = Paths.get(s"$dir/wh/dim_tipo/_manifests")
+    // tag files as earlier versions of this catalog wrote them
+    Files.write(md.resolve("tag.tmp"), "1".getBytes)
+    Files.write(md.resolve("tag.rc.tmp1"), "1".getBytes)
     // what a writer killed between its temp write and the rename leaves
     Files.write(md.resolve(".LATEST.tmp0a1b2c3d"), "9".getBytes)
     assert(cat.recover() === 1)
     assert(!Files.exists(md.resolve(".LATEST.tmp0a1b2c3d")))
-    assert(cat.tags("dim_tipo") === Map("tmp" -> 1, "rc.tmp1" -> 1))
+    assert(Files.readString(md.resolve("tag.tmp")) === "1")
+    assert(Files.readString(md.resolve("tag.rc.tmp1")) === "1")
+  }
+
+  test("tag and schema_v files an earlier catalog wrote change no read or write; " +
+      "vacuum refuses and deletes nothing") {
+    val dir = Files.createTempDirectory("cat_compat").toString
+    val plain = new Catalog(spark, s"$dir/plain")
+    val planted = new Catalog(spark, s"$dir/planted")
+    Seq(plain, planted).foreach { c =>
+      c.replace("dim_tipo", tipoDf("a"))                            // v1
+      c.replace("dim_tipo", tipoDf("a", "b", "c"))                  // v2: v1's dir dead
+    }
+    // a tag pinning v1 and a schema record evolving v2, as earlier
+    // versions of this catalog wrote them beside the manifests
+    val md = Paths.get(s"$dir/planted/dim_tipo/_manifests")
+    Files.write(md.resolve("tag.rel"), "1".getBytes)
+    Files.write(md.resolve("schema_v2"),
+      "ddl:id_tipo INT,nome_tipo STRING,score BIGINT\ndefault:score:5".getBytes)
+    def observed(c: Catalog) = (
+      c.table("dim_tipo").columns.toSeq,
+      c.table("dim_tipo").as[(Int, String)].collect().sorted.toSeq,
+      c.tableWhere("dim_tipo", "id_tipo", 2, 3).as[(Int, String)].collect().sorted.toSeq,
+      c.maxId("dim_tipo", "id_tipo"))
+    assert(observed(planted) === observed(plain))
+    assert(observed(plain)._1 === Seq("id_tipo", "nome_tipo"))
+    val more = Seq((4, "d")).toDF("id_tipo", "nome_tipo")
+    assert(planted.appendDelta("dim_tipo", more) === plain.appendDelta("dim_tipo", more))
+    assert(latest(s"$dir/planted", "dim_tipo") === latest(s"$dir/plain", "dim_tipo"))
+    assert(observed(planted) === observed(plain))
+    assert(planted.recover() === plain.recover())
+    assert(Files.exists(md.resolve("tag.rel")) && Files.exists(md.resolve("schema_v2")))
+    // vacuum would collect v1's dir, which the tag pins: it refuses,
+    // naming the tag file, and every commit dir stays on disk
+    def commitDirs(root: String) = {
+      val l = Files.list(Paths.get(s"$root/dim_tipo"))
+      try {
+        import scala.jdk.CollectionConverters._
+        l.iterator().asScala.map(_.getFileName.toString)
+          .filter(_ != "_manifests").toSet
+      } finally l.close()
+    }
+    val before = commitDirs(s"$dir/planted")
+    assert(before.size === 3)
+    val e = intercept[IllegalArgumentException](planted.vacuum("dim_tipo"))
+    assert(e.getMessage.contains("tag.rel"), e.getMessage)
+    assert(commitDirs(s"$dir/planted") === before)
+    assert(plain.vacuum("dim_tipo") === 1)
   }
 
   test("appendDelta of an empty frame into a missing undeclared table publishes nothing") {
@@ -1159,17 +957,6 @@ class CatalogSpec extends SparkSpec {
     // the first non-empty append still creates the table
     assert(cat.appendDelta("undeclared_t", Seq((1L, "a")).toDF("id", "v")) === 1L)
     assert(latest(s"$dir/wh", "undeclared_t") === Some(1))
-  }
-
-  test("addColumn refreshes the temp view: spark.table sees the new column") {
-    val dir = Files.createTempDirectory("cat_evolve_view").toString
-    val cat = new Catalog(spark, s"$dir/wh")
-    cat.replace("evolve_view_t", Seq((1L, "a")).toDF("id", "name"))
-    cat.addColumn("evolve_view_t", "score", "BIGINT", default = Some("5"))
-    assert(cat.table("evolve_view_t").columns.toSeq === Seq("id", "name", "score"))
-    assert(spark.table("evolve_view_t").columns.toSeq === Seq("id", "name", "score"))
-    assert(spark.table("evolve_view_t").as[(Long, String, Long)].collect().toSeq
-      === Seq((1L, "a", 5L)))
   }
 
   test("empty frames: which writes publish a version and which leave the table as it was") {
@@ -1200,7 +987,6 @@ class CatalogSpec extends SparkSpec {
     // on a missing declared table, nothing is written or registered
     assert(cat.deleteWhere("dim_grupo", "id_grupo", 0, 10) === 0L)
     cat.compact("dim_grupo")
-    assert(cat.compactSmall("dim_grupo", smallBytes = 1L << 20) === 0)
     assert(cat.appendDelta("dim_grupo", Seq.empty[(Int, Int, String)]
       .toDF("id_grupo", "id_tipo", "nome_grupo")) === 0L)
     assert(!cat.exists("dim_grupo"))

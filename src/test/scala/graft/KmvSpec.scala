@@ -111,10 +111,10 @@ class KmvSpec extends SparkSpec {
     assert(folded === oneShot)
     // at-least-once replay: re-delivering batch 2 must not change the
     // table OR write a new version
-    val versionsBefore = cat.versions("sk").size
+    val versionsBefore = latest(s"$dir/wh", "sk")
     cat.maintainKmv("sk", all.filter(parts(2)), Seq("g"), "h", k = K,
       batchId = Some(2L))
-    assert(cat.versions("sk").size === versionsBefore)
+    assert(latest(s"$dir/wh", "sk") === versionsBefore)
     assert(cat.table("sk").select("g", "mins")
       .as[(String, Seq[Long])].collect().toMap === oneShot)
     // the maintained arrays feed the same estimate readout as q163
@@ -206,12 +206,12 @@ class KmvSpec extends SparkSpec {
       exceptionChain(e).flatMap(t => Option(t.getMessage))
         .exists(m => m.contains("kmv_k=32") && m.contains("k=64")), e.getMessage)
     // refresh at a different k: loud, and the table is untouched
-    val vBefore = cat.versions("sk32").size
+    val vBefore = latest(s"$dir/wh", "sk32")
     val e2 = intercept[IllegalArgumentException] {
       cat.maintainKmv("sk32", rows, Seq("lang"), "h", k = 64)
     }
     assert(e2.getMessage.contains("kmv_k=32") && e2.getMessage.contains("k=64"))
-    assert(cat.versions("sk32").size === vBefore)
+    assert(latest(s"$dir/wh", "sk32") === vBefore)
     // an UN-stamped side built at larger k' is caught by the length
     // guard (k+1..k' minima would corrupt the union)
     import spark.implicits._

@@ -213,6 +213,38 @@ class LedgerPipelineSpec extends SparkSpec {
       "aborted blind-append rows must roll back, not double up")
   }
 
+  test("a run that throws waits for its dim futures: an aborted load's dims stay unpublished") {
+    val dir = Files.createTempDirectory("ledger_abort_futures").toString
+    val cat = new Catalog(spark, s"$dir/wh")
+    val wh = new Warehouse(cat)
+    Ingest.run(cat, writeCsv(dir, "b1.csv", batch1))
+    wh.run()
+    // corrupt dim_tipo: its one live commit dir is gone, so loadDimTipo's
+    // maxId fails at once, before any of its jobs run, while the
+    // dim_tempo future is still writing batch2's new month
+    val md = java.nio.file.Paths.get(s"$dir/wh/dim_tipo/_manifests")
+    val tipoDir = Files.readString(md.resolve("v1")).split("\n").filter(_.nonEmpty).head
+    val walk = Files.walk(java.nio.file.Paths.get(tipoDir))
+    try walk.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    finally walk.close()
+    Ingest.run(cat, writeCsv(dir, "b2.csv", batch2))
+    // publish ends by registering the table's view: once dim_tempo's
+    // view is back, the dim_tempo future has finished
+    spark.catalog.dropTempView("dim_tempo")
+    val e = intercept[IllegalStateException](wh.run())
+    assert(e.getMessage.contains("live commit dir is missing"), e.getMessage)
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (!spark.catalog.tableExists("dim_tempo") && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert(latest(s"$dir/wh", "dim_tempo") === Some(2), "the dim_tempo future never committed")
+    // the new month is only the aborted transaction's head: a fresh
+    // Catalog still reads the pre-run dim_tempo
+    val reader = new Catalog(spark, s"$dir/wh")
+    assert(reader.snapshotVersions("dim_tempo") === 1,
+      "the aborted run's dim_tempo was published outside its transaction")
+    assert(reader.table("dim_tempo").select("mes").collect().map(_.getInt(0)).toSeq === Seq(1))
+  }
+
   test("hash-before-normalize: staging id_hash is computed on raw Valor") {
     val dir = Files.createTempDirectory("ledger_hash").toString
     val cat = new Catalog(spark, s"$dir/wh")

@@ -11,6 +11,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf0001 = "/root/testdata/sf0.001"
   def sf001 = "/root/testdata/sf0.01"
+
+  /** The version a catalog table's per-table `LATEST` pointer names,
+    * read from disk under the catalog `root` (None: no committed
+    * version). */
+  def latest(root: String, t: String): Option[Int] =
+    Some(java.nio.file.Paths.get(s"$root/$t/_manifests/LATEST"))
+      .filter(java.nio.file.Files.exists(_))
+      .map(p => java.nio.file.Files.readString(p).trim.toInt)
 }
 
 object SparkSpec {

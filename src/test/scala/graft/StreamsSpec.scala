@@ -422,7 +422,7 @@ class StreamsSpec extends SparkSpec {
         .as[(String, Long, Long)].collect().sortBy(_._1)
       assert(rows.toSeq === Seq(("a", 2L, 4L), ("b", 1L, 2L)))
       // one atomic rollup version per micro-batch
-      assert(cat.versions("rollup_stream").size === 2)
+      assert(latest(s"$dir/wh", "rollup_stream") === Some(2))
     } finally q.stop()
   }
 
@@ -439,16 +439,16 @@ class StreamsSpec extends SparkSpec {
     try {
       mem.addData(("a", 90L), ("a", 40L), ("b", 10L))
       q.processAllAvailable()
+      // the batch-0 sketch, read before the next refresh
+      val v1 = cat.table("kmv_stream").select("g", "mins")
+        .as[(String, Seq[Long])].collect().toMap
       mem.addData(("a", 40L), ("a", 20L), ("a", 70L), ("a", 5L))
       q.processAllAvailable()
       val rows = cat.table("kmv_stream").select("g", "mins")
         .as[(String, Seq[Long])].collect().toMap
       assert(rows === Map("a" -> Seq(5L, 20L, 40L), "b" -> Seq(10L)))
-      // one atomic sketch version per micro-batch; time travel reads
-      // the refresh history (v1 = batch-0 sketch)
-      assert(cat.versions("kmv_stream").size === 2)
-      val v1 = cat.tableAt("kmv_stream", cat.versions("kmv_stream").min)
-        .select("g", "mins").as[(String, Seq[Long])].collect().toMap
+      // one atomic sketch version per micro-batch (v1 = batch-0 sketch)
+      assert(latest(s"$dir/wh", "kmv_stream") === Some(2))
       assert(v1 === Map("a" -> Seq(40L, 90L), "b" -> Seq(10L)))
     } finally q.stop()
   }
