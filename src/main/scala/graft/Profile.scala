@@ -7,14 +7,13 @@ import graft.queries.CoreQueries
 
 /** Scratch profiler for hot queries (not part of the driver contract).
   *
-  * Round 12: dissects q68, the warehouse build (11 s at sf0.1, ~10% of the
-  * bench sweep, ~100 jobs) into its phases — staging ingest, each dim
-  * loader, the fact merge, the rerun, the final read — with wall time
-  * AND Spark job counts per phase, so the "is it commit overhead or
-  * join work?" question has numbers. Loaders run SEQUENTIALLY here
-  * (run() overlaps dim_tempo/dim_classificacao with the rest), so the
-  * phase sum exceeds q68's in-bench wall time; the split, not the
-  * total, is the signal.
+  * Dissects q68, the warehouse build, into its phases — staging ingest,
+  * the dimension pass (one collect of the batch vocabulary and the
+  * stored keys, then the non-empty dim writes), the fact merge, the
+  * view refresh, the rerun and the final read — with wall time AND
+  * Spark job counts per phase, so the "is it commit overhead or join
+  * work?" question has numbers.
+  * The phases are the steps `Warehouse.run` makes, in its order.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -38,7 +37,7 @@ object Profile {
     }
 
     for (rep <- 1 to 2) {
-      println(s"=== rep $rep (sequential loaders; in-bench run overlaps tempo/cls) ===")
+      println(s"=== rep $rep ===")
       Bench.steadyState(spark)
       val csvish = CoreQueries.ledgerBatch(Tables(spark, sfDir, "orders"))
       val root = java.nio.file.Files.createTempDirectory("graft_prof68")
@@ -50,22 +49,14 @@ object Profile {
       val wh = new graft.ledger.Warehouse(cat)
       val total0 = System.nanoTime()
       cat.transaction {
-        phase("  run1 dim_tempo")(wh.loadDimTempo())
-        phase("  run1 dim_tipo")(wh.loadDimTipo())
-        phase("  run1 dim_grupo")(wh.loadDimGrupo())
-        phase("  run1 dim_categoria")(wh.loadDimCategoria())
-        phase("  run1 dim_classificacao")(wh.loadDimClassificacao())
-        phase("  run1 fato")(wh.loadFato())
+        val dims = phase("  run1 vocabulary + dims")(wh.loadDims())
+        phase("  run1 fato")(wh.loadFato(dims))
         phase("  run1 registerAll")(cat.registerAll())
       }
-      println(f"PROF run1 total (seq)         ${(System.nanoTime() - total0) / 1e9}%8.2f s")
+      println(f"PROF run1 total               ${(System.nanoTime() - total0) / 1e9}%8.2f s")
       cat.transaction {
-        phase("  run2 dim_tempo")(wh.loadDimTempo())
-        phase("  run2 dim_tipo")(wh.loadDimTipo())
-        phase("  run2 dim_grupo")(wh.loadDimGrupo())
-        phase("  run2 dim_categoria")(wh.loadDimCategoria())
-        phase("  run2 dim_classificacao")(wh.loadDimClassificacao())
-        phase("  run2 fato")(wh.loadFato())
+        val dims = phase("  run2 vocabulary + dims")(wh.loadDims())
+        phase("  run2 fato")(wh.loadFato(dims))
         phase("  run2 registerAll")(cat.registerAll())
       }
       phase("final fact read") {

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
@@ -423,7 +424,14 @@ final class Catalog(val spark: SparkSession, val root: String,
     * pre-first-snapshot direct writes intact. Crash-recovery runs at
     * the next transaction begin; direct appendDelta calls between a
     * crash and that begin build on the unpublished head — route loads
-    * through transactions (Warehouse.run does). */
+    * through transactions (Warehouse.run does).
+    *
+    * A body that throws leaves the temp views of its session reading the
+    * published snapshot again: each [[publish]] inside the body pointed
+    * its table's view at the in-transaction head, so on the way out every
+    * scoped table's view is re-registered from the snapshot (dropped, if
+    * the snapshot has no such table or it cannot be read) before the
+    * failure is rethrown. */
   def transaction[T](body: => T): T = {
     require(inTxnFlag.compareAndSet(false, true),
       "transaction already in progress on this Catalog instance " +
@@ -468,6 +476,18 @@ final class Catalog(val spark: SparkSession, val root: String,
       // rolls "back" to versions that equal the published heads (no-op)
       Files.deleteIfExists(inflight)
       out
+    } catch {
+      case NonFatal(e) =>
+        inTxnFlag.set(false)
+        scopedTables.foreach { t =>
+          try if (readVersion(t).isDefined) register(t) else spark.catalog.dropTempView(t)
+          catch {
+            case NonFatal(r) =>
+              spark.catalog.dropTempView(t)
+              e.addSuppressed(r)
+          }
+        }
+        throw e
     } finally inTxnFlag.set(false)
   }
 

@@ -1,21 +1,31 @@
 package graft.ledger
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.LedgerFunctions._
 import graft.operators.{MergeIgnore, SurrogateKeys}
 
-/** Entry point 2 (SURVEY §3.2): staging → star schema. Six loaders over
-  * `staging_lancamentos`, each ending in a merge-ignore write, sequenced
-  * by the reference's dependency DAG (reference app/etl.py:136-149):
+/** Entry point 2 (SURVEY §3.2): staging → star schema, in the
+  * reference's dependency order (reference app/etl.py:136-149):
   * tipo→grupo→categoria→fato, tempo→fato, classificacao→fato.
   *
-  * Spark-first shape: every loader is one declarative DataFrame pipeline
-  * — Catalyst broadcasts the dim joins (dims are tiny), hash-aggregates
-  * the DISTINCTs, and whole-stage-codegens the scalar work. Surrogate
-  * keys replace SERIAL via row_number + max-offset (SURVEY §1.3).
+  * Dimensions are vocabulary-sized (a few tipos, grupos, categorias
+  * and classificações, one row per month), so [[loadDims]] resolves all
+  * five on the driver in one pass: one collect reads the batch's
+  * vocabulary from staging (bounded by [[Warehouse.vocabularyCap]])
+  * together with the existing dimension keys, each merge-ignore delta
+  * is computed in memory, and only a non-empty one is written, as one
+  * commit of one file.
+  * Surrogate keys keep SERIAL semantics (SURVEY §1.3): dense, resumed
+  * from the footer max id, numbered in key order under Spark's binary
+  * UTF-8 string order. [[loadFato]] stays one DataFrame pipeline:
+  * staging joined to the batch's driver-built id lookups, then
+  * merge-ignore on `id_hash`.
   *
   * Documented divergence (SURVEY §1.4-2): `dim_tempo` merges on
   * (ano, mes) instead of blind-appending, so re-uploading a month cannot
@@ -32,10 +42,10 @@ import graft.operators.{MergeIgnore, SurrogateKeys}
   * `strictQuirks = true` reproduces the reference bit-for-bit for
   * byte-level migration testing: `dim_tempo` blind-appends (per-batch
   * dedup only, reference app/etl.py:26-39 — re-uploads create duplicate
-  * (ano, mes) rows with fresh ids), and the fact load collapses the
-  * resulting join multiples to one row per `id_hash` exactly like
-  * `ON CONFLICT DO NOTHING` (app/etl.py:129; the reference winner is
-  * arbitrary — we pick min id_tempo so the state is reproducible).
+  * (ano, mes) rows with fresh ids), and the fact keeps one row per
+  * `id_hash` exactly like `ON CONFLICT DO NOTHING` (app/etl.py:129; the
+  * reference winner is arbitrary — we pick min id_tempo so the state is
+  * reproducible).
   */
 object Warehouse {
   /** Batches at or under this many rows (from footer metadata) take the
@@ -45,10 +55,12 @@ object Warehouse {
     * the three extra jobs the scalable path schedules. */
   val boundedIdBatchRows: Long = 4L * 1000 * 1000
 
-  /** Batches at or under this many rows ALSO skip the fact write's
-    * range repartition and write straight from the id window's single
-    * partition: for a small delta the boundary-sampling job + the range
-    * exchange cost more than one writer task (OPTIMIZATION_r19.md §3).
+  /** Batches at or under this many rows run in ONE partition end to
+    * end: the vocabulary collect and the whole fact merge (lookup joins,
+    * dedup, anti-join, id window, write) plan no exchange and run as one
+    * job each, and the fact write skips the range repartition. For a
+    * small batch every exchange's job costs more than the one task it
+    * spares (OPTIMIZATION_r19.md §3).
     * The bound is much tighter than [[boundedIdBatchRows]] because the
     * single WRITER serializes parquet encoding + one directory per
     * month, where the id window only numbers rows: a 64k-row write is
@@ -56,130 +68,247 @@ object Warehouse {
     * whole q68 e2e at the 100× decade (single-task encode of 36 month
     * directories). */
   val singleTaskWriteRows: Long = 64L * 1024
+
+  /** The most distinct values one dimension may take from a batch, and
+    * the most rows an existing dimension may hold: [[Warehouse.loadDims]]
+    * holds both on the driver. Dimensions stay within millions of
+    * distinct values even at fact scale (see [[SurrogateKeys]]). A
+    * `var` only so a spec can lower it. */
+  @volatile private[graft] var vocabularyCap: Int = 1000 * 1000
+
+  /** A dimension above [[vocabularyCap]]; raised before the load
+    * writes anything. */
+  final class VocabularyTooLarge(dimension: String, count: Long, cap: Int)
+    extends IllegalStateException(
+      s"$dimension holds $count distinct values or more, above the " +
+        s"vocabulary cap of $cap; the load wrote nothing")
+
+  /** What the dimension pass hands the fact: the rows appended to each
+    * dimension, and the batch vocabulary's surrogate ids as lookups —
+    * (Tipo, Grupo, Categoria) paths, Classificação values and (ano,
+    * mes) months. */
+  private[graft] final case class Dims(appended: Map[String, Long], batchRows: Long,
+                                       paths: DataFrame, classificacoes: DataFrame,
+                                       months: DataFrame, batchMonths: Seq[(Int, Int)])
+
+  /** The batch's distinct (Tipo, Grupo, Categoria) paths (a component
+    * may be null), non-null Classificação values, and months by (ano,
+    * mes) with their `dim_tempo` columns. */
+  private final case class Vocabulary(paths: Seq[(String, String, String)],
+                                      classificacoes: Seq[String],
+                                      months: Map[(Int, Int), Seq[Any]])
+
+  /** Every existing dimension key → its id. */
+  private final case class Existing(tipo: Map[String, Int],
+                                    grupo: Map[(Int, String), Int],
+                                    categoria: Map[(Int, String), Int],
+                                    tempo: Map[(Int, Int), Int],
+                                    classificacao: Map[String, Int])
+
+  /** The row layout of [[Warehouse.readKeys]]. */
+  private val keyLayout = StructType(Seq(
+    "set" -> StringType, "id" -> IntegerType, "parent" -> IntegerType,
+    "name" -> StringType, "grupo" -> StringType, "categoria" -> StringType,
+    "ano" -> IntegerType, "mes" -> IntegerType, "semana" -> IntegerType,
+    "data_inicio" -> DateType, "data_fim" -> DateType
+  ).map { case (n, t) => StructField(n, t) })
+
+  /** [[keyLayout]]'s columns, the `given` ones set and the rest null. */
+  private def keyRow(given: (String, Column)*): Seq[Column] = {
+    val g = given.toMap
+    keyLayout.map(f => g.getOrElse(f.name, lit(null)).cast(f.dataType).as(f.name))
+  }
+
+  /** Spark's string order (binary UTF-8), which `String.compareTo`
+    * (UTF-16 code units) is not: ids must number keys the way the
+    * DataFrame window did. */
+  private val utf8: Ordering[String] = Ordering.fromLessThan((a, b) =>
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0)
+
+  private val keyed: Ordering[(Int, String)] = Ordering.Tuple2(Ordering.Int, utf8)
 }
 
 final class Warehouse(catalog: Catalog, strictQuirks: Boolean = false) {
+  import Warehouse._
 
   private def staging: DataFrame = catalog.table("staging_lancamentos")
 
-  /** dim_tempo (reference app/etl.py:20-40). */
-  def loadDimTempo(): Long = {
-    // no pre-dedup on the raw `Data` string: the (ano, mes)
-    // dropDuplicates below is the semantic dedup and its partial
-    // aggregation already collapses repeats map-side; a string dedup
-    // would be a SECOND full exchange per run whose only effect is
-    // running parseMonth on fewer rows (OPTIMIZATION_r19.md §3).
-    val months = staging
-      .select(col("Data")).na.drop()
-      .select(parseMonth(col("Data")).as("d")).na.drop()
-      .select(
-        yearOf(col("d")).cast("int").as("ano"),
-        monthOf(col("d")).cast("int").as("mes"),
-        isoWeek(col("d")).cast("int").as("semana"),
-        monthStart(col("d")).as("data_inicio"),
-        monthEnd(col("d")).as("data_fim"))
-      .dropDuplicates("ano", "mes")
-    if (strictQuirks) {
-      // SURVEY §1.4-2 parity: pandas-append semantics — no merge on
-      // (ano, mes), so a re-uploaded month gets a second identical row
-      val offset = catalog.maxId("dim_tempo", "id_tempo")
-      val keyed = SurrogateKeys.assign(months, "id_tempo", Seq("ano", "mes"), offset)
-        .select(Schemas.dimTempo.fieldNames.map(col): _*)
-      catalog.appendDelta("dim_tempo", keyed)
-    } else
-      mergeDim("dim_tempo", months, Seq("ano", "mes"), "id_tempo",
-        orderBy = Seq("ano", "mes"))
+  /** `df` in one partition when the batch has at most
+    * [[Warehouse.singleTaskWriteRows]] rows. */
+  private def funnel(df: DataFrame, batchRows: Long): DataFrame =
+    if (batchRows <= singleTaskWriteRows) df.coalesce(1) else df
+
+  /** The five dimensions (reference app/etl.py:20-102) in one pass: the
+    * batch vocabulary and the existing keys are collected
+    * ([[readKeys]]), each dimension's new keys get ids in the
+    * reference's dependency order (tipo → grupo → categoria, then tempo
+    * and classificação), and only the non-empty deltas are written. A
+    * Tipo, Grupo or Categoria that is null stops its path at the level
+    * above it; ingest never stages one. */
+  private[graft] def loadDims(): Dims = {
+    // footer metadata, no job
+    val batchRows = catalog.rowCount("staging_lancamentos")
+    val (v, e) = readKeys(batchRows)
+    val (tipo, newTipo) = merge("dim_tipo", v.paths.flatMap(p => Option(p._1)), e.tipo)(utf8)
+    val (grupo, newGrupo) = merge("dim_grupo",
+      v.paths.collect { case (t, g, _) if t != null && g != null => (tipo(t), g) },
+      e.grupo)(keyed)
+    val resolved = v.paths.collect {
+      case (t, g, c) if t != null && g != null && c != null => (t, g, c, grupo((tipo(t), g)))
+    }
+    val (categoria, newCategoria) = merge("dim_categoria",
+      resolved.map { case (_, _, c, gid) => (gid, c) }, e.categoria)(keyed)
+    val (tempo, newTempo) = merge("dim_tempo", v.months.keys.toSeq, e.tempo, blind = strictQuirks)
+    val (cls, newCls) = merge("dim_classificacao", v.classificacoes, e.classificacao)(utf8)
+    val appended = Seq(
+      "dim_tipo" -> newTipo.map { case (n, id) => Row(id, n) },
+      "dim_grupo" -> newGrupo.map { case ((t, n), id) => Row(id, t, n) },
+      "dim_categoria" -> newCategoria.map { case ((g, n), id) => Row(id, g, n) },
+      "dim_tempo" -> newTempo.map { case (k, id) => Row.fromSeq(id +: v.months(k)) },
+      "dim_classificacao" -> newCls.map { case (n, id) => Row(id, n) }
+    ).map { case (t, rows) =>
+      // one commit of one file, rows in id order, as the DataFrame
+      // window wrote it; an empty delta runs no write job
+      t -> (if (rows.isEmpty) 0L
+            else catalog.appendDelta(t,
+              catalog.spark.createDataFrame(rows.asJava, Schemas.schemaOf(t)).coalesce(1)))
+    }.toMap
+    import catalog.spark.implicits._
+    Dims(appended, batchRows,
+      paths = resolved.map { case (t, g, c, gid) => (t, g, c, tipo(t), gid, categoria((gid, c))) }
+        .toDF("Tipo", "Grupo", "Categoria", "id_tipo", "id_grupo", "id_categoria"),
+      classificacoes = v.classificacoes.map(c => (c, cls(c))).toDF("Classificação", "id_classificacao"),
+      months = v.months.keys.toSeq.map { case k @ (a, m) => (a, m, tempo(k)) }
+        .toDF("ano", "mes", "id_tempo"),
+      batchMonths = v.months.keys.toSeq)
   }
 
-  /** dim_tipo (reference app/etl.py:43-55). */
-  def loadDimTipo(): Long =
-    mergeDim("dim_tipo",
-      staging.select(col("Tipo").as("nome_tipo")).na.drop().distinct(),
-      Seq("nome_tipo"), "id_tipo", orderBy = Seq("nome_tipo"))
-
-  /** dim_classificacao (reference app/etl.py:57-70). */
-  def loadDimClassificacao(): Long =
-    mergeDim("dim_classificacao",
-      staging.select(col("Classificação").as("nome_classificacao"))
-        .filter(col("nome_classificacao").isNotNull).distinct(),
-      Seq("nome_classificacao"), "id_classificacao",
-      orderBy = Seq("nome_classificacao"))
-
-  /** dim_grupo (reference app/etl.py:72-85): grupo values resolved to
-    * their parent tipo's surrogate key. */
-  def loadDimGrupo(): Long = {
-    val dt = broadcast(catalog.table("dim_tipo"))
-    val sl = staging
-    val rows = sl
-      .join(dt, sl("Tipo") === dt("nome_tipo"))
-      .select(col("id_tipo"), col("Grupo").as("nome_grupo"))
-      .distinct()
-    mergeDim("dim_grupo", rows, Seq("id_tipo", "nome_grupo"), "id_grupo",
-      orderBy = Seq("id_tipo", "nome_grupo"))
+  /** The batch's vocabulary and every existing dimension key, read in
+    * one collect of rows laid out as [[keyLayout]]:
+    *
+    *  - `set` "path": a distinct (Tipo, Grupo, Categoria) in (`name`,
+    *    `grupo`, `categoria`); a component may be null;
+    *  - `set` "classificacao": a distinct Classificação in `name`;
+    *  - `set` "month": a distinct (`ano`, `mes`) with its `dim_tempo`
+    *    columns;
+    *  - `set` = a dimension table: one stored row's `id`, its key in
+    *    `name` (and `parent`, the grupo's id_tipo or the categoria's
+    *    id_grupo) or in (`ano`, `mes`).
+    *
+    * The vocabulary explodes each staging row into one row per set with
+    * the other sets' columns null, so one distinct yields each set on
+    * its own, never their product. A batch of at most
+    * [[Warehouse.singleTaskWriteRows]] rows is funneled into one
+    * partition after the explode, so the distinct plans no exchange and
+    * the whole read is one job. The vocabulary's limit is a pigeonhole
+    * bound: three sets of at most `cap` rows fit in `3 * cap`, so a
+    * result of `3 * cap + 1` rows has a set above the cap, and every set
+    * of a smaller result is complete. Each stored dimension is bounded
+    * by its footer row count before the read. A blind-appended
+    * `dim_tempo` key maps to its min id. */
+  private def readKeys(batchRows: Long): (Vocabulary, Existing) = {
+    val cap = vocabularyCap
+    val set = col("set")
+    val d = col("d")
+    def in(s: String, c: Column): Column = when(set === s, c)
+    val vocabulary = staging
+      .select(col("Tipo"), col("Grupo"), col("Categoria"), col("Classificação"),
+        parseMonth(col("Data")).as("d"),
+        explode(array(lit("path"), lit("classificacao"), lit("month"))).as("set"))
+      .select(keyRow(
+        "set" -> set,
+        "name" -> coalesce(in("path", col("Tipo")), in("classificacao", col("Classificação"))),
+        "grupo" -> in("path", col("Grupo")),
+        "categoria" -> in("path", col("Categoria")),
+        "ano" -> in("month", yearOf(d)), "mes" -> in("month", monthOf(d)),
+        "semana" -> in("month", isoWeek(d)), "data_inicio" -> in("month", monthStart(d)),
+        "data_fim" -> in("month", monthEnd(d))): _*)
+      // a set keeps the rows whose leading key is non-null: a row with
+      // no Tipo yields no dimension, a Data that does not parse no month
+      .filter(col("name").isNotNull || col("ano").isNotNull)
+    val stored = Seq(
+      "dim_tipo" -> Seq("id" -> "id_tipo", "name" -> "nome_tipo"),
+      "dim_grupo" -> Seq("id" -> "id_grupo", "parent" -> "id_tipo", "name" -> "nome_grupo"),
+      "dim_categoria" -> Seq("id" -> "id_categoria", "parent" -> "id_grupo",
+        "name" -> "nome_categoria"),
+      "dim_tempo" -> Seq("id" -> "id_tempo", "ano" -> "ano", "mes" -> "mes"),
+      "dim_classificacao" -> Seq("id" -> "id_classificacao", "name" -> "nome_classificacao")
+    ).filter { case (t, _) => catalog.exists(t) }.map { case (t, cols) =>
+      val n = catalog.rowCount(t)
+      if (n > cap) throw new VocabularyTooLarge(t, n, cap)
+      catalog.table(t).select(keyRow(("set" -> lit(t)) +: cols.map { case (k, c) => k -> col(c) }: _*): _*)
+    }
+    val sets = (funnel(vocabulary, batchRows).distinct().limit(3 * cap + 1) +: stored)
+      .reduce(_ union _)
+      .collect()
+      .groupBy(_.getString(0))
+    def rows(s: String): Seq[Row] = sets.getOrElse(s, Array.empty[Row]).toSeq
+    def vocab(s: String, dimension: String): Seq[Row] = {
+      val r = rows(s)
+      if (r.size > cap) throw new VocabularyTooLarge(dimension, r.size, cap)
+      r
+    }
+    def ids[K](t: String)(key: Row => K): Map[K, Int] =
+      rows(t).groupMapReduce(key)(_.getInt(1))(math.min)
+    (Vocabulary(
+      vocab("path", "dim_categoria").map(r => (r.getString(3), r.getString(4), r.getString(5))),
+      vocab("classificacao", "dim_classificacao").map(_.getString(3)),
+      vocab("month", "dim_tempo").map(r => (r.getInt(6), r.getInt(7)) -> r.toSeq.drop(6)).toMap),
+      Existing(
+        ids("dim_tipo")(_.getString(3)),
+        ids("dim_grupo")(r => (r.getInt(2), r.getString(3))),
+        ids("dim_categoria")(r => (r.getInt(2), r.getString(3))),
+        ids("dim_tempo")(r => (r.getInt(6), r.getInt(7))),
+        ids("dim_classificacao")(_.getString(3))))
   }
 
-  /** dim_categoria (reference app/etl.py:88-102). */
-  def loadDimCategoria(): Long = {
-    val dt = broadcast(catalog.table("dim_tipo"))
-    val dg = broadcast(catalog.table("dim_grupo"))
-    val sl = staging
-    val rows = sl
-      .join(dt, sl("Tipo") === dt("nome_tipo"))
-      .join(dg, dg("nome_grupo") === sl("Grupo") && dg("id_tipo") === dt("id_tipo"))
-      .select(col("id_grupo"), col("Categoria").as("nome_categoria"))
-      .distinct()
-    mergeDim("dim_categoria", rows, Seq("id_grupo", "nome_categoria"),
-      "id_categoria", orderBy = Seq("id_grupo", "nome_categoria"))
+  /** Merge-ignore on the driver: the batch keys `existing` lacks (all of
+    * them, for a blind append) get dense ids in key order, continuing
+    * from the table's footer max id. Returns every key's id — an
+    * existing id wins, so a blind-appended key keeps its min id — and
+    * the new keys with their ids, in id order. */
+  private def merge[K](table: String, batch: Seq[K], existing: Map[K, Int],
+                       blind: Boolean = false)(implicit order: Ordering[K])
+      : (Map[K, Int], Seq[(K, Int)]) = {
+    val fresh = batch.distinct.filter(k => blind || !existing.contains(k)).sorted
+    val offset = catalog.maxId(table, Schemas.schemaOf(table).head.name)
+    val added = fresh.zipWithIndex.map { case (k, i) => k -> Math.toIntExact(offset + i + 1) }
+    (added.toMap ++ existing, added)
   }
 
-  /** fato_lancamento (reference app/etl.py:105-133): the 5-way star join
-    * + merge-ignore on id_hash. All five dim sides broadcast; the only
-    * shuffle left is the anti-join against existing hashes, and at scale
-    * that prunes to the (ano, mes) partitions present in the batch.
+  /** fato_lancamento (reference app/etl.py:105-133): staging joined to
+    * the batch's id lookups, then merge-ignore on id_hash against the
+    * existing fact, pruned to the (ano, mes) partitions present in the
+    * batch. Under `strictQuirks` the month lookup already holds the min
+    * id_tempo of a duplicated month, so each staging row joins once.
+    *
+    * The lookups and the existing side are small, so Catalyst
+    * broadcasts them; a batch of at most
+    * [[Warehouse.singleTaskWriteRows]] rows streams through them in one
+    * partition, so the dedup, the anti-join and the id window plan no
+    * shuffle and the write is the merge's only other job.
     */
-  def loadFato(): Long = {
-    val sl = staging.withColumn("__d", parseMonth(col("Data")))
+  private[graft] def loadFato(dims: Dims): Long = {
+    val batchRows = dims.batchRows
+    val sl = funnel(staging, batchRows).withColumn("__d", parseMonth(col("Data")))
       .withColumn("ano", yearOf(col("__d")).cast("int"))
       .withColumn("mes", monthOf(col("__d")).cast("int"))
-    val dt = broadcast(catalog.table("dim_tipo"))
-    val dg = broadcast(catalog.table("dim_grupo"))
-    val dc = broadcast(catalog.table("dim_categoria"))
-    val cs = broadcast(catalog.table("dim_classificacao"))
-    val dtmp = broadcast(catalog.table("dim_tempo"))
-
-    val joined = sl
-      .join(dt, sl("Tipo") === dt("nome_tipo"))
-      .join(dg, dg("nome_grupo") === sl("Grupo") && dg("id_tipo") === dt("id_tipo"))
-      .join(dc, dc("nome_categoria") === sl("Categoria") && dc("id_grupo") === dg("id_grupo"))
-      .join(cs, cs("nome_classificacao") === sl("Classificação"))
-      .join(dtmp, dtmp("ano") === sl("ano") && dtmp("mes") === sl("mes"))
+    val candidates = sl
+      .join(dims.paths, Seq("Tipo", "Grupo", "Categoria"))
+      .join(dims.classificacoes, Seq("Classificação"))
+      .join(dims.months, Seq("ano", "mes"))
       .select(
-        dt("id_tipo"), dg("id_grupo"), dc("id_categoria"),
-        dtmp("id_tempo"), cs("id_classificacao"),
+        col("id_tipo"), col("id_grupo"), col("id_categoria"),
+        col("id_tempo"), col("id_classificacao"),
         col("Descrição").as("descricao"),
         col("Valor").as("valor"),
         col("id_hash"),
-        sl("ano"), sl("mes"))
-    // strict parity: duplicate (ano, mes) dim_tempo rows (quirk 2) fan a
-    // staging row into N candidates; keep one per id_hash like the
-    // reference's ON CONFLICT DO NOTHING, deterministically (min id_tempo)
-    val candidates =
-      if (!strictQuirks) joined
-      else {
-        val w = Window.partitionBy(col("id_hash")).orderBy(col("id_tempo"))
-        joined.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-      }
+        col("ano"), col("mes"))
 
     val offset = catalog.maxId("fato_lancamento", "id_lancamento")
     val existing =
       if (!catalog.exists("fato_lancamento")) null
-      else {
-        // bounded driver collect: one row per distinct month in the batch
-        val months = sl.select(col("ano"), col("mes")).na.drop("any").distinct()
-          .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
-        existingFactForMerge(months)
-      }
+      else existingFactForMerge(dims.batchMonths)
     val delta = MergeIgnore.newRows(candidates, existing, Seq("id_hash"))
     // Size-aware id assignment (AQE-style, decided from table-format
     // FOOTER row counts — metadata only, no extra job): the delta is at
@@ -187,7 +316,6 @@ final class Warehouse(catalog: Catalog, strictQuirks: Boolean = false) {
     // cadence this pipeline serves) takes the one-job single-window
     // path; anything larger — a backfill, a migration — pays
     // assignScalable's two-pass scheme and keeps every task bounded.
-    val batchRows = catalog.rowCount("staging_lancamentos")
     val assigned =
       if (batchRows <= Warehouse.boundedIdBatchRows)
         SurrogateKeys.assignBounded(delta, "id_lancamento", Seq("id_hash"), offset)
@@ -219,7 +347,7 @@ final class Warehouse(catalog: Catalog, strictQuirks: Boolean = false) {
     // strictly contiguous (ano, mes) spans and the same row-group
     // clustering the range shuffle produced. That drops the
     // repartitionByRange (whose boundary SAMPLING re-executed the whole
-    // fact plan — five broadcast joins, the anti-join, the id window —
+    // fact plan — the lookup joins, the anti-join, the id window —
     // and forced a persist to avoid paying it twice), the persist, and
     // the extra shuffle: one job instead of three, identical rows and
     // ids. Single-task write of a ≤ boundedIdBatchRows batch is the
@@ -270,64 +398,14 @@ final class Warehouse(catalog: Catalog, strictQuirks: Boolean = false) {
     catalog.table("fato_lancamento").filter(pred)
   }
 
-  /** Shared dim-merge: anti-join existing, assign surrogate ids
-    * continuing from the stored max (SERIAL semantics), append.
-    *
-    * CONTRACT: `rows` must already be key-distinct — every loader above
-    * dedups at source (dim_tempo `dropDuplicates(ano, mes)`, the other
-    * four a `distinct()` over exactly their key columns), because the
-    * distinct doubles as the map-side reduction of a fact-scale batch
-    * down to vocabulary size. mergeDim therefore anti-joins directly
-    * instead of going through [[MergeIgnore.newRows]], whose defensive
-    * `dropDuplicates(keys)` would be a second full exchange on the same
-    * keys per loader per run — the optimizer collapses it only when the
-    * source distinct covers exactly the key columns
-    * (OPTIMIZATION_r19.md §3). */
-  private def mergeDim(table: String, rows: DataFrame, keys: Seq[String],
-                       idCol: String, orderBy: Seq[String]): Long = {
-    val offset = catalog.maxId(table, idCol)
-    // no distinct on the anti-join's existing side: anti-join semantics
-    // are duplicate-insensitive, existing dim keys are unique by the
-    // merge invariant anyway, and the distinct was one more exchange +
-    // AQE stage job per loader per rerun
-    val delta =
-      if (!catalog.exists(table)) rows
-      else rows.join(catalog.table(table).select(keys.map(col): _*),
-        keys, "left_anti")
-    val keyed = SurrogateKeys.assign(delta, idCol, orderBy, offset)
-      .select(Schemas.schemaOf(table).fieldNames.map(col): _*)
-    catalog.appendDelta(table, keyed)
-  }
-
-  /** The full build. The reference's only hard edges are
-    * tipo→grupo→categoria→fato, tempo→fato, classificacao→fato
-    * (app/etl.py:136-149 runs sequentially only by accident), so the
-    * two dims off the tipo chain (tempo, classificacao) run as parallel
-    * futures — concurrent Spark jobs interleave their stages and hide
-    * scheduling latency; each writes a different table, preserving
-    * single-writer-per-table discipline. The whole build runs inside
-    * [[Catalog.transaction]]: other catalog instances see either the
-    * previous warehouse state or the complete new one, never
-    * dims-without-fact. The body never returns or throws before both
-    * futures settle: a future still writing after the transaction ended
-    * would publish its dim outside it. Returns per-table appended row
-    * counts. */
+  /** The full build, sequentially: [[loadDims]], then [[loadFato]],
+    * inside one [[Catalog.transaction]], so other catalog instances see
+    * either the previous warehouse state or the complete new one, never
+    * dims-without-fact. Returns per-table appended row counts. */
   def run(): Map[String, Long] = catalog.transaction {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val tempoF = Future(loadDimTempo())
-    val clsF = Future(loadDimClassificacao())
-    val (tipo, grupo, categoria) =
-      try (loadDimTipo(), loadDimGrupo(), loadDimCategoria())
-      finally Seq(tempoF, clsF).foreach(Await.ready(_, Duration.Inf))
-    val tempo = Await.result(tempoF, Duration.Inf)
-    val cls = Await.result(clsF, Duration.Inf)
-    val fato = loadFato()
+    val dims = loadDims()
+    val fato = loadFato(dims)
     catalog.registerAll()
-    Map(
-      "dim_tempo" -> tempo, "dim_tipo" -> tipo, "dim_grupo" -> grupo,
-      "dim_categoria" -> categoria, "dim_classificacao" -> cls,
-      "fato_lancamento" -> fato)
+    dims.appended + ("fato_lancamento" -> fato)
   }
 }

@@ -197,14 +197,15 @@ class LedgerPipelineSpec extends SparkSpec {
   test("strictQuirks: a crashed run does not double-append months on the healing rerun") {
     // the reference's pandas-append runs inside a Postgres transaction —
     // an aborted upload leaves NO month rows. Our transaction-begin
-    // rollback must give the same story: crash after loadDimTempo, and
-    // the healing rerun appends each month exactly once.
+    // rollback must give the same story: crash after the dimension pass
+    // has appended the month, and the healing rerun appends each month
+    // exactly once.
     val dir = Files.createTempDirectory("ledger_strict_crash").toString
     val cat = new Catalog(spark, s"$dir/wh")
     val wh = new Warehouse(cat, strictQuirks = true)
     Ingest.run(cat, writeCsv(dir, "b.csv", batch1))
     intercept[RuntimeException](cat.transaction {
-      wh.loadDimTempo()
+      wh.loadDims()
       sys.error("executor lost")
     })
     val counts = wh.run()
@@ -213,36 +214,139 @@ class LedgerPipelineSpec extends SparkSpec {
       "aborted blind-append rows must roll back, not double up")
   }
 
-  test("a run that throws waits for its dim futures: an aborted load's dims stay unpublished") {
-    val dir = Files.createTempDirectory("ledger_abort_futures").toString
+  test("an aborted run publishes no dim: fresh readers and writer views agree") {
+    val dir = Files.createTempDirectory("ledger_abort").toString
     val cat = new Catalog(spark, s"$dir/wh")
     val wh = new Warehouse(cat)
     Ingest.run(cat, writeCsv(dir, "b1.csv", batch1))
     wh.run()
-    // corrupt dim_tipo: its one live commit dir is gone, so loadDimTipo's
-    // maxId fails at once, before any of its jobs run, while the
-    // dim_tempo future is still writing batch2's new month
-    val md = java.nio.file.Paths.get(s"$dir/wh/dim_tipo/_manifests")
-    val tipoDir = Files.readString(md.resolve("v1")).split("\n").filter(_.nonEmpty).head
-    val walk = Files.walk(java.nio.file.Paths.get(tipoDir))
+    // corrupt fato_lancamento: its one live commit dir is gone, so
+    // loadFato's maxId fails after the dimension pass has appended
+    // batch2's new month to dim_tempo inside the transaction
+    val md = java.nio.file.Paths.get(s"$dir/wh/fato_lancamento/_manifests")
+    val factDir = Files.readString(md.resolve("v1")).split("\n").filter(_.nonEmpty).head
+    val walk = Files.walk(java.nio.file.Paths.get(factDir))
     try walk.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
     finally walk.close()
     Ingest.run(cat, writeCsv(dir, "b2.csv", batch2))
-    // publish ends by registering the table's view: once dim_tempo's
-    // view is back, the dim_tempo future has finished
-    spark.catalog.dropTempView("dim_tempo")
     val e = intercept[IllegalStateException](wh.run())
     assert(e.getMessage.contains("live commit dir is missing"), e.getMessage)
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    while (!spark.catalog.tableExists("dim_tempo") && System.nanoTime() < deadline)
-      Thread.sleep(50)
-    assert(latest(s"$dir/wh", "dim_tempo") === Some(2), "the dim_tempo future never committed")
+    assert(latest(s"$dir/wh", "dim_tempo") === Some(2), "the dimension pass never appended the month")
     // the new month is only the aborted transaction's head: a fresh
-    // Catalog still reads the pre-run dim_tempo
+    // Catalog still reads the pre-run dim_tempo...
     val reader = new Catalog(spark, s"$dir/wh")
     assert(reader.snapshotVersions("dim_tempo") === 1,
       "the aborted run's dim_tempo was published outside its transaction")
     assert(reader.table("dim_tempo").select("mes").collect().map(_.getInt(0)).toSeq === Seq(1))
+    // ...and so does SQL over the writer's own session views
+    assert(spark.table("dim_tempo").select("mes").collect().map(_.getInt(0)).toSeq === Seq(1),
+      "the writer's dim_tempo view still reads the aborted head")
+    assert(spark.sql("select mes from dim_tempo").collect().map(_.getInt(0)).toSeq === Seq(1))
+  }
+
+  /** Every live row of every star table, ids included, in a stable order. */
+  private def star(cat: Catalog): Map[String, Seq[String]] =
+    graft.ledger.Schemas.tableNames.filter(_.matches("dim_.*|fato_.*"))
+      .map(t => t -> cat.table(t).collect().map(_.mkString("|")).sorted.toSeq).toMap
+
+  /** Live parquet files per star table, read from the manifests. */
+  private def liveFiles(root: String): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    graft.ledger.Schemas.tableNames.filter(_.matches("dim_.*|fato_.*")).map { t =>
+      t -> latest(root, t).toSeq.flatMap { v =>
+        Files.readString(java.nio.file.Paths.get(s"$root/$t/_manifests/v$v"))
+          .split("\n").filter(_.nonEmpty).toSeq
+      }.map { c =>
+        val walk = Files.walk(java.nio.file.Paths.get(c))
+        try walk.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+        finally walk.close()
+      }.sum
+    }.toMap
+  }
+
+  test("the vocabulary pass builds the per-table pipelines' star, ids included") {
+    val months = 1 to 36
+    def big(tag: String) = for (i <- 0 until Warehouse.singleTaskWriteRows.toInt + 500) yield {
+      val m = months(i % months.size)
+      s"""$tag $i,${Seq("Despesa", "Receita", "Investimento")(i % 3)},G${i % 7},C${i % 11},""" +
+        s"""Cl${i % 5},${"%02d".format((m - 1) % 12 + 1)}/${2020 + (m - 1) / 12},"${i % 900},${i % 100}""""
+    }
+    val batch3 = Seq( // new tipo/grupo/categoria/classificacao, repeats within itself
+      """Aluguel Março,Despesa,Moradia,Aluguel,Essencial,03/2024,"1.500,00"""",
+      """Feira,Despesa,Alimentação,Supermercado,Essencial,03/2024,"80,00"""",
+      """Feira,Despesa,Alimentação,Supermercado,Essencial,03/2024,"80,00"""",
+      """Dividendos,Investimento,Renda,Ações,Variável,02/2024,"300,00"""",
+      """Ärger,Ödland,Ürsprung,Σ,Ω,02/2024,"1,00"""",
+      // Spark orders strings by UTF-8 bytes, String.compareTo by UTF-16
+      // units: the two disagree on U+1F600 against U+FF21
+      """Emoji,Despesa,Moradia,😀,Essencial,03/2024,"1,00"""",
+      """Largo,Despesa,Moradia,Ａ,Essencial,03/2024,"2,00"""")
+    val unparseable = Seq(
+      """Pix,Despesa,Moradia,Aluguel,Essencial,04/2024,"10,00"""",
+      """Sem mês,Despesa,Lazer,Teatro,Supérfluo,13/2024,"20,00"""")
+    for (strict <- Seq(false, true)) {
+      val dir = Files.createTempDirectory("ledger_parity").toString
+      val (a, b) = (new Catalog(spark, s"$dir/a", compactEvery = 3),
+        new Catalog(spark, s"$dir/b", compactEvery = 3))
+      val (wa, wb) = (new Warehouse(a, strict), new ComposedWarehouse(b, strict))
+      def upload(step: String, rows: Seq[String]): Unit = {
+        val csv = writeCsv(dir, s"${step.replace(' ', '_')}.csv", rows)
+        Ingest.run(a, csv, strict = false)
+        Ingest.run(b, csv, strict = false)
+        assert(wa.run() === wb.run(), s"appended counts differ after $step (strict=$strict)")
+        assert(star(a) === star(b), s"star schema differs after $step (strict=$strict)")
+        assert(liveFiles(s"$dir/a") === liveFiles(s"$dir/b"), s"file layout differs after $step")
+      }
+      upload("first upload", batch1)
+      upload("overlapping upload", batch3)
+      upload("verbatim re-upload", batch3)
+      // Spark's default ANSI mode fails a Data that does not parse: both
+      // builds abort before publishing anything...
+      val csv = writeCsv(dir, "unparseable.csv", unparseable)
+      Seq[(Catalog, () => Map[String, Long])](a -> (() => wa.run()), b -> (() => wb.run()))
+        .foreach { case (c, run) =>
+          Ingest.run(c, csv, strict = false)
+          intercept[Exception](run())
+        }
+      assert(new Catalog(spark, s"$dir/a").snapshotVersions ===
+        new Catalog(spark, s"$dir/b").snapshotVersions)
+      assert(star(new Catalog(spark, s"$dir/a")) === star(new Catalog(spark, s"$dir/b")))
+      // ...and without it both drop the row's month and its fact row
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      try upload("unparseable Data", unparseable)
+      finally spark.conf.unset("spark.sql.ansi.enabled")
+      upload("backfill above singleTaskWriteRows", big("Hist"))
+      upload("backfill rerun", big("Hist"))
+    }
+  }
+
+  test("a vocabulary above the cap fails before anything is published") {
+    val dir = Files.createTempDirectory("ledger_cap").toString
+    val cat = new Catalog(spark, s"$dir/wh")
+    val wh = new Warehouse(cat)
+    val saved = Warehouse.vocabularyCap
+    try {
+      // batch1 holds 4 (Tipo, Grupo, Categoria) paths
+      Warehouse.vocabularyCap = 3
+      Ingest.run(cat, writeCsv(dir, "b1.csv", batch1))
+      val e = intercept[Warehouse.VocabularyTooLarge](wh.run())
+      assert(e.getMessage.contains("dim_categoria") && e.getMessage.contains("cap of 3"),
+        e.getMessage)
+      Seq("dim_tempo", "dim_tipo", "dim_grupo", "dim_categoria", "dim_classificacao",
+        "fato_lancamento").foreach(t => assert(latest(s"$dir/wh", t) === None, s"$t was written"))
+      // an existing dimension above the cap fails too: batch2's own
+      // vocabulary fits 3, the stored dim_categoria holds 4 rows
+      Warehouse.vocabularyCap = 4
+      wh.run()
+      val before = cat.snapshotVersions
+      Warehouse.vocabularyCap = 3
+      Ingest.run(cat, writeCsv(dir, "b2.csv", batch2))
+      val e2 = intercept[Warehouse.VocabularyTooLarge](wh.run())
+      assert(e2.getMessage.startsWith("dim_grupo holds 4 "), e2.getMessage)
+      assert(cat.snapshotVersions === before)
+      assert(before.forall { case (t, v) => latest(s"$dir/wh", t) === Some(v) },
+        "a table's head moved past the published snapshot")
+    } finally Warehouse.vocabularyCap = saved
   }
 
   test("hash-before-normalize: staging id_hash is computed on raw Valor") {

@@ -128,6 +128,46 @@ class PlanSpec extends SparkSpec {
     assert(scan.count() === 4, "pruned scan must read exactly one month")
   }
 
+  test("small-batch fact write: no shuffle from the staging scan to the writer") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("plan_factwrite").toString
+    val cat = new graft.ledger.Catalog(spark, s"$dir/wh")
+    val wh = new graft.ledger.Warehouse(cat)
+    def batch(months: Seq[Int], tag: String) = (for (m <- months; i <- 1 to 4) yield
+      (s"$tag $m-$i", "Despesa", "Moradia", "Aluguel", "Essencial", f"$m%02d/2024", s"$i,00"))
+      .toDF(graft.ledger.Schemas.requiredColumns: _*)
+    graft.ledger.Ingest.stage(cat, batch(1 to 3, "a"), strict = true)
+    wh.run()
+    // the second batch overlaps two months, so the anti-join has an
+    // existing side
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan.toString.split("== Initial Plan ==")(0))
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val write = try {
+      graft.ledger.Ingest.stage(cat, batch(2 to 4, "b"), strict = true)
+      assert(batch(2 to 4, "b").count() <= graft.ledger.Warehouse.singleTaskWriteRows)
+      assert(wh.run()("fato_lancamento") === 12)
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def find = { import scala.jdk.CollectionConverters._
+        plans.asScala.find(p => p.contains("fato_lancamento") && p.contains("Window")) }
+      while (find.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      find.getOrElse(fail("no fato_lancamento write plan was observed"))
+    } finally spark.listenerManager.unregister(listener)
+    // assignBounded's window funnels the delta into one partition; with
+    // no shuffle anywhere in the write plan, the partition-local sort
+    // appendDelta adds is a total sort and the single write task holds
+    // contiguous (ano, mes) spans
+    assert(shuffles(write) === 0, s"the small-batch fact write shuffles:\n$write")
+    assert(!write.contains("SortMergeJoin") && !write.contains("ShuffledHashJoin"),
+      s"a lookup or the existing side stopped broadcasting:\n$write")
+  }
+
   test("q87: the sketch is partial-aggregated; only k-sized buffers reach the merge") {
     val p = finalPlan("q87_heavy_hitters")
     assert(p.contains("partial_misra_gries"),
