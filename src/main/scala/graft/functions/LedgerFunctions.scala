@@ -61,6 +61,11 @@ object LedgerFunctions {
     * (app/etl.py:28; Postgres twin TO_DATE at app/etl.py:127-128). */
   def parseMonth(c: Column): Column = to_date(c, "MM/yyyy")
 
+  /** [[parseMonth]]'s parse, NULL instead of an error when `c` does not
+    * parse (under ANSI mode `to_date` raises): the ingest check that
+    * keeps such a row out of staging. */
+  def monthParses(c: Column): Column = try_to_timestamp(c, lit("MM/yyyy")).isNotNull
+
   /** F12/F13: calendar parts (app/etl.py:31-32). */
   def yearOf(c: Column): Column = year(c)
   def monthOf(c: Column): Column = month(c)

@@ -6,11 +6,12 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StructType}
 
 /** Parquet-backed warehouse catalog with MANIFEST-POINTER commits.
@@ -62,6 +63,9 @@ import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StructType}
   * ([[tableWhere]]) agree on columns. Every metadata answer (row
   * counts, id resume offsets, commit pruning) comes from [[footers]] /
   * [[dataFiles]], which fail loudly on a missing live commit dir.
+  * Commit dirs are write-once, so each instance reads a commit's
+  * footers once and resolves its scan once ([[footers]], [[scan]]);
+  * both memos drop a dir once it is no longer live.
   * Every write lands through [[writeCommit]], and every new version
   * goes out through [[publish]] (the v{N} claim, the `LATEST` flip, the
   * snapshot bump and the temp-view refresh, once per version). A
@@ -276,6 +280,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     // happens once, at the end
     if (!inTxn && snapshotScoped(t) && latestSnapshot.isDefined)
       publishSnapshot(single = Some(t -> next))
+    retain(t, dirs.toSet)
     register(t)
   }
 
@@ -299,6 +304,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     if (n > 0 || !dropEmpty) publish(t, base, kept :+ dir)
     else {
       deleteRecursively(Paths.get(dir))
+      forget(Set(dir))
       if (kept != commitsAt(t, base)) publish(t, base, kept)
     }
     n
@@ -531,6 +537,7 @@ final class Catalog(val spark: SparkSession, val root: String,
           if (tv > 0) atomicWrite(md, "LATEST", tv.toString)
           else Files.deleteIfExists(md.resolve("LATEST"))
           (tv + 1 to head).foreach(v => Files.deleteIfExists(md.resolve(s"v$v")))
+          retain(t, liveSet(t))
         }
       }
     }
@@ -583,6 +590,7 @@ final class Catalog(val spark: SparkSession, val root: String,
         latestVersion(t).exists(_ > published.getOrElse(t, 0)))
       if (stale) publishSnapshot() // rebuild from per-table heads
     }
+    allTables.foreach(t => retain(t, liveSet(t)))
     cleared
   }
 
@@ -603,11 +611,8 @@ final class Catalog(val spark: SparkSession, val root: String,
       else df.sortWithinPartitions((partitionBy ++ clusterBy).map(col): _*)
     val w = sorted.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir)
-    batchId.foreach { id =>
-      val marker = new HPath(dir, AppliedBatchIdMarker)
-      val out = marker.getFileSystem(spark.sessionState.newHadoopConf()).create(marker, true)
-      try out.write(id.toString.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    }
+    batchId.foreach(id => Files.write(Paths.get(dir, AppliedBatchIdMarker),
+      id.toString.getBytes(StandardCharsets.UTF_8)))
     dir
   }
 
@@ -618,9 +623,22 @@ final class Catalog(val spark: SparkSession, val root: String,
 
   /** Scan one commit dir under `schema` (inferred from its footers when
     * None). Partition columns (fact: ano/mes) come back through the
-    * per-commit basePath; pruning applies per scan. */
-  private def scan(dir: String, schema: Option[StructType] = None): DataFrame =
-    schema.fold(spark.read)(spark.read.schema).option("basePath", dir).parquet(dir)
+    * per-commit basePath; pruning applies per scan.
+    *
+    * A commit dir is write-once: [[writeCommit]] fills a fresh
+    * `c{N}_{uuid}` dir and nothing writes into it afterwards. So the
+    * resolved, already-listed relation is memoized per (dir, schema) and
+    * every call wraps it in a fresh plan with fresh attribute ids (what
+    * Spark's session catalog does for a cached catalog table): no
+    * second source resolution, existence check or directory listing. A
+    * dir that no longer exists is read again, which fails as any read of
+    * a missing path does. */
+  private def scan(dir: String, schema: Option[StructType] = None): DataFrame = {
+    def read() = schema.fold(spark.read)(spark.read.schema).option("basePath", dir).parquet(dir)
+    if (!Files.isDirectory(Paths.get(dir))) read()
+    else spark.baseRelationToDataFrame(scanMemo.computeIfAbsent((dir, schema), _ =>
+      read().queryExecution.analyzed match { case r: LogicalRelation => r.relation }))
+  }
 
   /** The schema a read of `t` at manifest `version` uses: the declared
     * schema, else the schema of the version's first commit. Tables
@@ -648,39 +666,73 @@ final class Catalog(val spark: SparkSession, val root: String,
   // ---------------------------------------------------------------------
   // the footer walker: every metadata answer is read from footers here
 
-  /** Parquet data files under the commit `dirs` (a file-system
-    * listing, no Spark job). A dir that is MISSING is corruption — external deletion
-    * or a vacuum race — never an empty commit: fail loudly, because a
-    * silently skipped commit would under-count rows, lower an id offset
-    * (minting duplicate surrogate ids) or prune rows that exist. */
-  private def dataFiles(dirs: Seq[String],
-                        conf: Configuration = spark.sessionState.newHadoopConf()): Seq[FileStatus] =
-    dirs.flatMap { dir =>
-      val p = new HPath(dir)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p))
-        throw new IllegalStateException(
-          s"live commit dir is missing: $dir — the manifest references " +
-            "files that no longer exist (external deletion or vacuum race)")
-      val it = fs.listFiles(p, true)
-      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-        .filter(_.getPath.getName.endsWith(".parquet")).toSeq
-    }
+  /** Parquet data files under the commit `dir`: a `java.nio` walk, no
+    * Spark job and no Hadoop listing (on a local file system without
+    * libhadoop, Hadoop's listing forks a process per file to read its
+    * permissions). */
+  private def dataFiles(dir: String): Seq[Path] = {
+    val found = Files.find(Paths.get(dir), Int.MaxValue,
+      (p, a) => a.isRegularFile && p.getFileName.toString.endsWith(".parquet"))
+    try found.iterator().asScala.toVector finally found.close()
+  }
 
   /** Footers of every data file under `dirs` — what a table format
-    * records at commit time. Opened in parallel (bounded by the common
-    * pool) because a partitioned append writes one file per directory
-    * (80 months = 80 footers) and the opens are independent reads; a
-    * serial loop would charge every append per-directory latency. */
+    * records at commit time. A commit dir is write-once (see [[scan]]),
+    * so each dir's footers are read once per instance and memoized;
+    * [[swap]] fills the memo when it counts the commit it just wrote.
+    * Unread dirs are opened in parallel (bounded by the common pool)
+    * because a partitioned append writes one file per directory (80
+    * months = 80 footers) and the opens are independent reads.
+    *
+    * Every call checks that each dir still exists. A MISSING dir is
+    * corruption — external deletion or a vacuum race — never an empty
+    * commit: fail loudly, because a silently skipped commit would
+    * under-count rows, lower an id offset (minting duplicate surrogate
+    * ids) or prune rows that exist. */
   private def footers(dirs: Seq[String]): Seq[ParquetMetadata] = {
     import scala.collection.parallel.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf()
-    dataFiles(dirs, conf).par.map { f =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
-      try reader.getFooter finally reader.close()
-    }.seq
+    dirs.find(d => !Files.isDirectory(Paths.get(d))).foreach { dir =>
+      throw new IllegalStateException(
+        s"live commit dir is missing: $dir — the manifest references " +
+          "files that no longer exist (external deletion or vacuum race)")
+    }
+    val known = dirs.flatMap(d => Option(footerMemo.get(d)).map(d -> _)).toMap
+    val unread = dirs.distinct.filterNot(known.contains)
+    val read = if (unread.isEmpty) Map.empty[String, Seq[ParquetMetadata]] else {
+      val conf = spark.sessionState.newHadoopConf()
+      val opened = unread.flatMap(d => dataFiles(d).map(d -> _)).par.map { case (d, f) =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new HPath(f.toUri), conf))
+        d -> (try reader.getFooter finally reader.close())
+      }.seq.groupMap(_._1)(_._2)
+      unread.map(d => d -> opened.getOrElse(d, Seq.empty)).toMap
+    }
+    read.foreach { case (d, fs) => footerMemo.put(d, fs) }
+    dirs.flatMap(d => known.getOrElse(d, read(d)))
   }
+
+  // the commit memos: write-once commit dirs, bounded to the live ones
+
+  private val footerMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, Seq[ParquetMetadata]]()
+  private val scanMemo =
+    new java.util.concurrent.ConcurrentHashMap[(String, Option[StructType]), BaseRelation]()
+
+  /** Drop every memo entry whose commit dir `gone` names. */
+  private def forget(gone: String => Boolean): Unit = {
+    footerMemo.keySet.removeIf(d => gone(d))
+    scanMemo.keySet.removeIf(k => gone(k._1))
+  }
+
+  /** Drop the memo entries of `t`'s commit dirs outside `live`. */
+  private def retain(t: String, live: Set[String]): Unit = {
+    val td = Paths.get(tableDir(t))
+    forget(d => !live(d) && Paths.get(d).getParent == td)
+  }
+
+  /** The commit dirs either memo holds, for spec observability. */
+  private[graft] def memoizedDirs: Set[String] =
+    footerMemo.keySet.asScala.toSet ++ scanMemo.keySet.asScala.map(_._1)
 
   private def rows(fs: Seq[ParquetMetadata]): Long =
     fs.iterator.flatMap(_.getBlocks.asScala).map(_.getRowCount).sum
@@ -939,18 +991,9 @@ final class Catalog(val spark: SparkSession, val root: String,
   /** The last micro-batch id folded into `table` by [[maintainAgg]],
     * read from the marker inside the live commit (metadata-only). */
   private[graft] def appliedBatchId(table: String): Option[Long] =
-    liveCommits(table).flatMap { dir =>
-      val marker = new HPath(dir, AppliedBatchIdMarker)
-      val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(marker)) None
-      else {
-        val in = fs.open(marker)
-        try {
-          val s = scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          Some(s.toLong)
-        } finally in.close()
-      }
-    }.sorted.lastOption
+    liveCommits(table).map(Paths.get(_, AppliedBatchIdMarker)).filter(Files.exists(_))
+      .map(p => new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toLong)
+      .sorted.lastOption
 
   /** The replay guard of [[maintainAgg]] and [[maintainKmv]]: `batchId`
     * (or a later one) is already folded into `table`. */
@@ -1113,15 +1156,21 @@ final class Catalog(val spark: SparkSession, val root: String,
       s"vacuum aborted for '$table': ${tags.sorted.mkString(", ")} in $md " +
         "may pin versions this vacuum would delete — move them out of " +
         "_manifests once their versions are no longer needed")
-    val live = (latestVersion(table).toSeq ++ snapshotVersions.get(table))
-      .flatMap(commitsAt(table, _)).map(p => Paths.get(p).getFileName.toString).toSet
+    val liveDirs = liveSet(table)
+    val live = liveDirs.map(p => Paths.get(p).getFileName.toString)
     val dead = children(Paths.get(tableDir(table)))
       .filter(p => Files.isDirectory(p))
       .filter(p => p.getFileName.toString != "_manifests")
       .filterNot(p => live(p.getFileName.toString))
     dead.foreach(deleteRecursively)
+    retain(table, liveDirs)
     dead.size
   }
+
+  /** Commit dirs `t` still needs: those of its LATEST manifest and of
+    * the published snapshot. */
+  private def liveSet(t: String): Set[String] =
+    (latestVersion(t).toSeq ++ snapshotVersions.get(t)).flatMap(commitsAt(t, _)).toSet
 
   private def deleteRecursively(p: Path): Unit = {
     if (Files.exists(p)) {

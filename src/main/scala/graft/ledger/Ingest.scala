@@ -51,7 +51,8 @@ object Ingest {
 
   /** Validate (strict = throw with the violation report, mirroring the
     * reference's hard stop at app/app.py:53-62), transform, overwrite
-    * staging. Permissive mode routes offending rows to
+    * staging. Permissive mode routes offending rows (a NULL required
+    * field, or a Data that is not a `MM/yyyy` month) to
     * `rejects_lancamentos` with the violated-column list (SURVEY
     * §1.4-7) instead of failing the batch. Returns the staged count,
     * read from the staging commit's footers (no re-scan of staging).
@@ -63,15 +64,11 @@ object Ingest {
         if (!v.ok()) throw Rejected(v.missingColumns, v.violations)
         raw
       } else {
-        val normalized = Validate.normalizeBlanks(raw)
-        val motivo = array_join(array_compact(array(
-          Schemas.requiredColumns.map(c => when(col(c).isNull, lit(c))): _*)), ",")
-        val rejected = normalized
-          .withColumn("motivo", motivo)
-          .filter(col("motivo") =!= "")
-          .select(Schemas.rejects.fieldNames.map(col): _*)
-        catalog.replace("rejects_lancamentos", rejected)
-        normalized.na.drop(Schemas.requiredColumns)
+        val checked = Validate.normalizeBlanks(raw)
+          .withColumn("motivo", array_join(array_compact(array(Validate.violated: _*)), ","))
+        catalog.replace("rejects_lancamentos",
+          checked.filter(col("motivo") =!= "").select(Schemas.rejects.fieldNames.map(col): _*))
+        checked.filter(col("motivo") === "").drop("motivo")
       }
     catalog.replace("staging_lancamentos", toStaging(clean))
   }

@@ -1,16 +1,18 @@
 package graft.ledger
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.LedgerFunctions.blankToNull
+import graft.functions.LedgerFunctions.{blankToNull, monthParses}
 
 /** Batch validation (reference app/app.py:25-62): a contract check on
   * the column set, then a null audit over the required columns with
   * ''/whitespace treated as null. The reference reports per-row,
   * per-column violations and hard-stops the upload; we return the
   * violations as a DataFrame (distributed — never collected unless the
-  * caller asks) and let the caller decide strict vs permissive.
+  * caller asks) and let the caller decide strict vs permissive. A Data
+  * that does not parse as `MM/yyyy` violates the contract too: the
+  * warehouse files every row under that month.
   */
 object Validate {
 
@@ -27,7 +29,14 @@ object Validate {
       (d, c) => d.withColumn(c, blankToNull(col(c))))
   }
 
-  /** Contract + null audit. `violations` has one row per offending
+  /** Per required column, its name when a row violates it: NULL, or for
+    * Data a value that does not parse as a month. Reads blank-normalized
+    * columns ([[normalizeBlanks]]). */
+  def violated: Seq[Column] = Schemas.requiredColumns.map { c =>
+    when(if (c == "Data") !monthParses(col(c)) else col(c).isNull, lit(c))
+  }
+
+  /** Contract + null and month audit. `violations` has one row per offending
     * (row, column): (linha BIGINT, coluna STRING) — mirroring the
     * reference's error report shape (app/app.py:53-59). Row numbers are
     * assigned by input file order via a monotonic id over the scan; they
@@ -39,10 +48,8 @@ object Validate {
       return Result(missing, df.sparkSession.emptyDataFrame)
     val normalized = normalizeBlanks(df)
     val withId = normalized.withColumn("__linha", monotonically_increasing_id())
-    val perCol = Schemas.requiredColumns.map(c =>
-      when(col(c).isNull, lit(c)))
     val violations = withId
-      .withColumn("coluna", explode(array_compact(array(perCol: _*))))
+      .withColumn("coluna", explode(array_compact(array(violated: _*))))
       .select(col("__linha").as("linha"), col("coluna"))
     Result(Seq.empty, violations)
   }

@@ -992,4 +992,106 @@ class CatalogSpec extends SparkSpec {
     assert(!cat.exists("dim_grupo"))
     assert(!Files.exists(Paths.get(s"$root/dim_grupo/_manifests")))
   }
+
+  /** A partitioned fact batch with ids `ids`, every row in (2024, mes). */
+  private def fatoBatch(ids: Seq[Long], mes: Int) =
+    ids.map(i => (i, 1, 1, 1, 1, 1, s"d$i", new java.math.BigDecimal(s"$i.00"), s"h$i", 2024, mes))
+      .toDF(Schemas.fatoLancamento.fieldNames: _*)
+      .withColumn("valor", org.apache.spark.sql.functions.col("valor")
+        .cast(org.apache.spark.sql.types.DecimalType(15, 2)))
+
+  /** Commit dirs named by `t`'s LATEST manifest under `root`. */
+  private def liveDirs(root: String, t: String): Set[String] =
+    latest(root, t).toSet[Int].flatMap(v =>
+      Files.readString(Paths.get(s"$root/$t/_manifests/v$v")).split("\n").filter(_.nonEmpty))
+
+  test("one instance's commit memos answer like a fresh Catalog and hold only live dirs") {
+    val root = Files.createTempDirectory("cat_memo").toString + "/wh"
+    val cat = new Catalog(spark, root, compactEvery = 3)
+    val ids = Seq("dim_tipo" -> "id_tipo", "fato_lancamento" -> "id_lancamento")
+    def tipo(from: Int, names: String*) =
+      names.zipWithIndex.map { case (n, i) => (from + i, n) }.toDF("id_tipo", "nome_tipo")
+    def check(step: String): Unit = {
+      val fresh = new Catalog(spark, root)
+      ids.foreach { case (t, id) =>
+        assert(cat.rowCount(t) === fresh.rowCount(t), s"$t rowCount after $step")
+        assert(cat.maxId(t, id) === fresh.maxId(t, id), s"$t maxId after $step")
+        assert(cat.table(t).collect().map(_.toString).sorted ===
+          fresh.table(t).collect().map(_.toString).sorted, s"$t rows after $step")
+        Seq((0L, 2L), (4L, 5L), (100L, 200L)).foreach { case (lo, hi) =>
+          assert(cat.commitsInRange(t, id, lo, hi) === fresh.commitsInRange(t, id, lo, hi),
+            s"$t commits in [$lo, $hi] after $step")
+        }
+      }
+      val live = ids.map(_._1).flatMap(liveDirs(root, _)).toSet
+      assert(cat.memoizedDirs.nonEmpty && cat.memoizedDirs.subsetOf(live),
+        s"memos hold dead dirs after $step: ${cat.memoizedDirs -- live}")
+    }
+    cat.appendDelta("dim_tipo", tipo(1, "a", "b", "c"))
+    cat.appendDelta("fato_lancamento", fatoBatch(Seq(1L, 2L), 1), Seq("ano", "mes"))
+    check("first appends")
+    cat.appendDelta("dim_tipo", tipo(4, "d", "e"))
+    cat.appendDelta("fato_lancamento", fatoBatch(Seq(4L, 5L), 2), Seq("ano", "mes"))
+    check("second appends")
+    cat.appendDelta("dim_tipo", tipo(6, "f"))
+    cat.appendDelta("fato_lancamento", fatoBatch(Seq(6L), 3), Seq("ano", "mes"))
+    assert(liveDirs(root, "dim_tipo").size === 1 && liveDirs(root, "fato_lancamento").size === 1)
+    check("auto-fold")
+    cat.replace("dim_tipo", tipo(1, "z"))
+    check("replace")
+    assert(cat.appendDelta("fato_lancamento", fatoBatch(Seq.empty, 1), Seq("ano", "mes")) === 0L)
+    check("an empty append, whose commit dir is deleted")
+    assert(cat.vacuum("dim_tipo") > 0 && cat.vacuum("fato_lancamento") > 0)
+    check("vacuum")
+  }
+
+  test("a live commit dir deleted after an instance memoized it still fails loudly") {
+    val root = Files.createTempDirectory("cat_memo_gone").toString + "/wh"
+    val cat = new Catalog(spark, root)
+    cat.appendDelta("dim_tipo", tipoDf("a", "b"))
+    cat.appendDelta("dim_tipo", Seq((3, "c")).toDF("id_tipo", "nome_tipo"))
+    assert(cat.rowCount("dim_tipo") === 3L && cat.table("dim_tipo").count() === 3L)
+    val gone = Paths.get(liveDirs(root, "dim_tipo").min)
+    val walk = Files.walk(gone)
+    try walk.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    finally walk.close()
+    Seq[Catalog => Any](_.rowCount("dim_tipo"), _.maxId("dim_tipo", "id_tipo")).foreach { f =>
+      val e = intercept[IllegalStateException](f(cat))
+      assert(e.getMessage.contains("live commit dir is missing"), e.getMessage)
+    }
+    // the same read error a fresh instance's scan raises
+    val e = intercept[org.apache.spark.sql.AnalysisException](cat.table("dim_tipo"))
+    val fresh = intercept[org.apache.spark.sql.AnalysisException](
+      new Catalog(spark, root).table("dim_tipo"))
+    assert(e.getCondition === "PATH_NOT_FOUND" && e.getMessage === fresh.getMessage)
+    intercept[org.apache.spark.sql.AnalysisException](cat.register("dim_tipo"))
+  }
+
+  test("rowCount, maxId and table over a partitioned table start no process") {
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("cat_nofork").toString + "/wh"
+    val writer = new Catalog(spark, root)
+    (1 to 3).foreach(m => writer.appendDelta("fato_lancamento",
+      fatoBatch(Seq(10L * m, 10L * m + 1), m).unionAll(fatoBatch(Seq(10L * m + 2), m + 3)),
+      Seq("ano", "mes")))
+    val rec = new jdk.jfr.Recording()
+    val out = Files.createTempFile("cat_nofork", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      val cat = new Catalog(spark, root)
+      assert(cat.rowCount("fato_lancamento") === 9L)
+      assert(cat.maxId("fato_lancamento", "id_lancamento") === 32L)
+      assert(cat.table("fato_lancamento").columns.length === 11)
+      rec.stop()
+      rec.dump(out)
+      val started = jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(_.getString("command"))
+      assert(started.isEmpty, s"processes started: ${started.mkString("; ")}")
+    } finally {
+      rec.close()
+      Files.deleteIfExists(out)
+    }
+  }
 }

@@ -300,21 +300,11 @@ class LedgerPipelineSpec extends SparkSpec {
       upload("first upload", batch1)
       upload("overlapping upload", batch3)
       upload("verbatim re-upload", batch3)
-      // Spark's default ANSI mode fails a Data that does not parse: both
-      // builds abort before publishing anything...
-      val csv = writeCsv(dir, "unparseable.csv", unparseable)
-      Seq[(Catalog, () => Map[String, Long])](a -> (() => wa.run()), b -> (() => wb.run()))
-        .foreach { case (c, run) =>
-          Ingest.run(c, csv, strict = false)
-          intercept[Exception](run())
-        }
-      assert(new Catalog(spark, s"$dir/a").snapshotVersions ===
-        new Catalog(spark, s"$dir/b").snapshotVersions)
-      assert(star(new Catalog(spark, s"$dir/a")) === star(new Catalog(spark, s"$dir/b")))
-      // ...and without it both drop the row's month and its fact row
-      spark.conf.set("spark.sql.ansi.enabled", "false")
-      try upload("unparseable Data", unparseable)
-      finally spark.conf.unset("spark.sql.ansi.enabled")
+      // ingest rejects a Data that does not parse, so under Spark's
+      // default ANSI mode both builds load the rest of the batch
+      upload("unparseable Data", unparseable)
+      assert(a.table("rejects_lancamentos").select("Data", "motivo").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSeq === Seq(("13/2024", "Data")))
       upload("backfill above singleTaskWriteRows", big("Hist"))
       upload("backfill rerun", big("Hist"))
     }
@@ -347,6 +337,24 @@ class LedgerPipelineSpec extends SparkSpec {
       assert(before.forall { case (t, v) => latest(s"$dir/wh", t) === Some(v) },
         "a table's head moved past the published snapshot")
     } finally Warehouse.vocabularyCap = saved
+  }
+
+  test("a Data that is not an MM/yyyy month: strict ingest reports it, permissive rejects it") {
+    val dir = Files.createTempDirectory("ledger_month").toString
+    val cat = new Catalog(spark, s"$dir/wh")
+    val csv = writeCsv(dir, "months.csv", Seq(
+      """Ok,Despesa,Moradia,Aluguel,Essencial,01/2024,"1,00"""",
+      """Mês 13,Despesa,Moradia,Aluguel,Essencial,13/2024,"2,00"""",
+      """Texto,Despesa,Moradia,Aluguel,Essencial,janeiro,"3,00"""",
+      """Sem data,Despesa,Moradia,Aluguel,Essencial, ,"4,00""""))
+    val ex = intercept[Ingest.Rejected](Ingest.run(cat, csv))
+    assert(ex.violations.collect().map(_.getString(1)).toSeq === Seq("Data", "Data", "Data"))
+    assert(Ingest.run(cat, csv, strict = false) === 1)
+    val rejects = cat.table("rejects_lancamentos").select("Descrição", "motivo").collect()
+      .map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    assert(rejects === Seq(("Mês 13", "Data"), ("Sem data", "Data"), ("Texto", "Data")))
+    // the staged batch builds under Spark's default ANSI mode
+    assert(new Warehouse(cat).run()("fato_lancamento") === 1)
   }
 
   test("hash-before-normalize: staging id_hash is computed on raw Valor") {
