@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
@@ -10,9 +11,11 @@ import graft.queries.CoreQueries
   * Dissects q68, the warehouse build, into its phases — staging ingest,
   * the dimension pass (one collect of the batch vocabulary and the
   * stored keys, then the non-empty dim writes), the fact merge, the
-  * view refresh, the rerun and the final read — with wall time AND
-  * Spark job counts per phase, so the "is it commit overhead or join
-  * work?" question has numbers.
+  * view refresh, the rerun and the final read — with wall time, Spark
+  * job counts and generated classes compiled per phase, so the "is it
+  * commit overhead or join work?" question has numbers. The compile
+  * count covers the whole JVM, driver and executor tasks; a class whose
+  * source is already in Spark's codegen cache is not compiled again.
   * The phases are the steps `Warehouse.run` makes, in its order.
   */
 object Profile {
@@ -29,10 +32,12 @@ object Profile {
 
     def phase[T](name: String)(f: => T): T = {
       val j0 = jobCount.get()
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       val r = f
       val dt = (System.nanoTime() - t0) / 1e9
-      println(f"PROF $name%-28s $dt%8.2f s  ${jobCount.get() - j0}%4d jobs")
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      println(f"PROF $name%-28s $dt%8.2f s  ${jobCount.get() - j0}%4d jobs  $compiles%4d compiles")
       r
     }
 

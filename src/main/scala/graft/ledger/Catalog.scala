@@ -9,9 +9,9 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StructType}
 
 /** Parquet-backed warehouse catalog with MANIFEST-POINTER commits.
@@ -58,25 +58,33 @@ import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StructType}
   *
   * '''One reader, one footer walker, one write tail, one publish''':
   * every DataFrame over commit dirs comes from [[read]], under the
-  * schema [[schemaAt]] resolves (declared, else the first commit's), so
+  * schema [[schemaOf]] resolves (declared, else the first commit's), so
   * reads, rewrites ([[compact]], [[deleteWhere]]) and pruned reads
-  * ([[tableWhere]]) agree on columns. Every metadata answer (row
-  * counts, id resume offsets, commit pruning) comes from [[footers]] /
-  * [[dataFiles]], which fail loudly on a missing live commit dir.
+  * ([[tableWhere]]) agree on columns. A read is ONE parquet scan over
+  * all the commits it covers, whatever their number: one relation over
+  * one file index that concatenates the commits' own listings, so a
+  * query's plan and generated code do not change when an append adds a
+  * commit, and `(ano, mes)` pruning applies inside every commit. Every
+  * metadata answer (row counts, id resume offsets, commit pruning)
+  * comes from [[footers]] / [[dataFiles]], which fail loudly on a
+  * missing live commit dir.
   * Commit dirs are write-once, so each instance reads a commit's
-  * footers once and resolves its scan once ([[footers]], [[scan]]);
-  * both memos drop a dir once it is no longer live.
+  * footers once and resolves its relation once ([[footers]],
+  * [[relation]]); both memos drop a dir once it is no longer live.
   * Every write lands through [[writeCommit]], and every new version
   * goes out through [[publish]] (the v{N} claim, the `LATEST` flip, the
-  * snapshot bump and the temp-view refresh, once per version). A
+  * snapshot bump and the temp-view refresh, once per version); a
+  * version whose read fails, such as commits of different partition
+  * layouts, is refused before its claim. Commit writes set file
+  * permissions through [[NioLocalFileSystem]], which starts no process. A
   * rewrite goes through [[swap]], so each public write only chooses
   * the commits it keeps and the frame it writes.
   *
   * Scale: dims stay tiny so their merge anti-joins broadcast; the fact
   * merge anti-joins on `id_hash` and its commits are partitioned by
   * (ano, mes), so month-sliced reads prune whole directories. Many
-  * small commits accumulate scan overhead — [[compact]] folds a table
-  * back to one commit (same manifest flip, fully atomic).
+  * small commits accumulate listing and file-open overhead — [[compact]]
+  * folds a table back to one commit (same manifest flip, fully atomic).
   *
   * @param compactEvery when > 0, [[appendDelta]] auto-folds a table back
   *                     to one commit whenever its live commit count
@@ -257,7 +265,8 @@ final class Catalog(val spark: SparkSession, val root: String,
     * It claims v{base+1} with
     * create-exclusive (the fence), flips LATEST via write-temp + atomic
     * rename, bumps the snapshot pointer for a direct write to a scoped
-    * table, and refreshes the table's temp view. Every published version
+    * table, and points the table's temp view at the new version's read,
+    * which it resolves before the claim. Every published version
     * passes through here exactly once; a write that publishes nothing
     * never calls it.
     *
@@ -269,6 +278,10 @@ final class Catalog(val spark: SparkSession, val root: String,
     * commit dirs from its list; with the base threaded through, the
     * stale writer collides on v{base+1} and fails loudly instead. */
   private def publish(t: String, base: Int, dirs: Seq[String]): Unit = {
+    // the new version's read, resolved before the claim: a version no
+    // read accepts (mixed partition layouts, a missing commit dir) is
+    // refused here instead of published
+    val view = read(t, dirs, dirs)
     val md = manifestDir(t)
     Files.createDirectories(md)
     val next = base + 1
@@ -281,7 +294,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     if (!inTxn && snapshotScoped(t) && latestSnapshot.isDefined)
       publishSnapshot(single = Some(t -> next))
     retain(t, dirs.toSet)
-    register(t)
+    view.createOrReplaceTempView(t)
   }
 
   /** The one rewrite step: `df` into a fresh commit ([[writeCommit]]),
@@ -609,7 +622,11 @@ final class Catalog(val spark: SparkSession, val root: String,
     val sorted =
       if (clusterBy.isEmpty) df
       else df.sortWithinPartitions((partitionBy ++ clusterBy).map(col): _*)
+    // NioLocalFileSystem sets each written file's and dir's permission
+    // without forking chmod; a cached FileSystem would ignore the impl
     val w = sorted.write.mode(SaveMode.Overwrite)
+      .option("fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .option("fs.file.impl.disable.cache", "true")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir)
     batchId.foreach(id => Files.write(Paths.get(dir, AppliedBatchIdMarker),
       id.toString.getBytes(StandardCharsets.UTF_8)))
@@ -621,46 +638,68 @@ final class Catalog(val spark: SparkSession, val root: String,
   // ---------------------------------------------------------------------
   // the commit reader: every DataFrame over commit dirs is built here
 
-  /** Scan one commit dir under `schema` (inferred from its footers when
-    * None). Partition columns (fact: ano/mes) come back through the
-    * per-commit basePath; pruning applies per scan.
+  /** The resolved, already-listed parquet relation of one commit dir
+    * under `schema` (inferred from its footers when None). Partition
+    * columns (fact: ano/mes) come back through the per-commit basePath.
     *
     * A commit dir is write-once: [[writeCommit]] fills a fresh
     * `c{N}_{uuid}` dir and nothing writes into it afterwards. So the
-    * resolved, already-listed relation is memoized per (dir, schema) and
-    * every call wraps it in a fresh plan with fresh attribute ids (what
-    * Spark's session catalog does for a cached catalog table): no
-    * second source resolution, existence check or directory listing. A
-    * dir that no longer exists is read again, which fails as any read of
-    * a missing path does. */
-  private def scan(dir: String, schema: Option[StructType] = None): DataFrame = {
-    def read() = schema.fold(spark.read)(spark.read.schema).option("basePath", dir).parquet(dir)
-    if (!Files.isDirectory(Paths.get(dir))) read()
-    else spark.baseRelationToDataFrame(scanMemo.computeIfAbsent((dir, schema), _ =>
-      read().queryExecution.analyzed match { case r: LogicalRelation => r.relation }))
+    * relation is memoized per (dir, schema): no second source
+    * resolution, existence check or directory listing. A dir that no
+    * longer exists is resolved again, which fails as any read of a
+    * missing path does. */
+  private def relation(dir: String, schema: Option[StructType]): HadoopFsRelation = {
+    def resolve() = schema.fold(spark.read)(spark.read.schema).option("basePath", dir)
+      .parquet(dir).queryExecution.analyzed match {
+        case r: LogicalRelation => r.relation.asInstanceOf[HadoopFsRelation]
+      }
+    if (!Files.isDirectory(Paths.get(dir))) resolve()
+    else relationMemo.computeIfAbsent((dir, schema), _ => resolve())
   }
 
-  /** The schema a read of `t` at manifest `version` uses: the declared
-    * schema, else the schema of the version's first commit. Tables
-    * outside the star contract (rollups, exports) exist only once
-    * written, so a missing one is a loud error, never a guess at a
-    * schema this catalog never declared. */
-  private def schemaAt(t: String, version: Int): StructType =
+  /** The schema a read of a version listing `live` uses: the declared
+    * schema, else the schema of `live`'s first commit. Tables outside
+    * the star contract (rollups, exports) exist only once written, so a
+    * missing one is a loud error, never a guess at a schema this catalog
+    * never declared. */
+  private def schemaOf(t: String, live: Seq[String]): StructType =
     Schemas.schemaOfOpt(t).getOrElse {
-      val commits = commitsAt(t, version)
-      require(commits.nonEmpty,
-        s"table '$t' has no declared schema and no committed data")
-      scan(commits.head).schema
+      require(live.nonEmpty, s"table '$t' has no declared schema and no committed data")
+      relation(live.head, None).schema
     }
 
-  /** Union of `commits` under [[schemaAt]]`(t, version)`, each selected
-    * in the schema's column order (the union is positional), or an
-    * empty frame of that schema. */
-  private def read(t: String, version: Int, commits: Seq[String]): DataFrame = {
-    val schema = schemaAt(t, version)
+  /** `t` at manifest `version`'s schema ([[schemaOf]] its commits). */
+  private def schemaAt(t: String, version: Int): StructType =
+    schemaOf(t, commitsAt(t, version))
+
+  /** `commits` (some or all of the version listing `live`) as ONE scan
+    * under [[schemaOf]]`(t, live)`, selected in the schema's column
+    * order, or an empty frame of that schema. The commits' memoized
+    * relations ([[relation]]) are composed into one
+    * [[Catalog.CommitsIndex]] that concatenates each commit's own
+    * (partition-pruned) file listing, so a query over the table has the
+    * same physical plan, and the same generated code, at any commit
+    * count. A commit with no data files (an empty partitioned write)
+    * adds no rows and takes no part; the others must share one
+    * partition layout, else the read fails naming each layout's dirs. */
+  private def read(t: String, live: Seq[String], commits: Seq[String]): DataFrame = {
+    val schema = schemaOf(t, live)
     if (commits.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else commits.map(c => scan(c, Some(schema)).select(schema.fieldNames.map(col): _*))
-      .reduce(_.unionAll(_))
+    else {
+      val all = commits.map(c => c -> relation(c, Some(schema)))
+      val filled = Some(all.filter(_._2.location.inputFiles.nonEmpty))
+        .filter(_.nonEmpty).getOrElse(all.take(1))
+      val layouts = filled.groupMap(_._2.partitionSchema)(_._1)
+      if (layouts.size > 1) throw new IllegalStateException(
+        s"table '$t' mixes partition layouts across its commits: " + layouts.map {
+          case (p, dirs) => s"(${p.fieldNames.mkString(", ")}) in ${dirs.mkString(", ")}"
+        }.mkString("; "))
+      val first = filled.head._2
+      spark.baseRelationToDataFrame(HadoopFsRelation(
+        Catalog.CommitsIndex(filled.map(_._2.location)), first.partitionSchema,
+        first.dataSchema, None, first.fileFormat, Map.empty)(spark))
+        .select(schema.fieldNames.map(col): _*)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -677,7 +716,7 @@ final class Catalog(val spark: SparkSession, val root: String,
   }
 
   /** Footers of every data file under `dirs` — what a table format
-    * records at commit time. A commit dir is write-once (see [[scan]]),
+    * records at commit time. A commit dir is write-once (see [[relation]]),
     * so each dir's footers are read once per instance and memoized;
     * [[swap]] fills the memo when it counts the commit it just wrote.
     * Unread dirs are opened in parallel (bounded by the common pool)
@@ -715,13 +754,13 @@ final class Catalog(val spark: SparkSession, val root: String,
 
   private val footerMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[ParquetMetadata]]()
-  private val scanMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Option[StructType]), BaseRelation]()
+  private val relationMemo =
+    new java.util.concurrent.ConcurrentHashMap[(String, Option[StructType]), HadoopFsRelation]()
 
   /** Drop every memo entry whose commit dir `gone` names. */
   private def forget(gone: String => Boolean): Unit = {
     footerMemo.keySet.removeIf(d => gone(d))
-    scanMemo.keySet.removeIf(k => gone(k._1))
+    relationMemo.keySet.removeIf(k => gone(k._1))
   }
 
   /** Drop the memo entries of `t`'s commit dirs outside `live`. */
@@ -732,7 +771,7 @@ final class Catalog(val spark: SparkSession, val root: String,
 
   /** The commit dirs either memo holds, for spec observability. */
   private[graft] def memoizedDirs: Set[String] =
-    footerMemo.keySet.asScala.toSet ++ scanMemo.keySet.asScala.map(_._1)
+    footerMemo.keySet.asScala.toSet ++ relationMemo.keySet.asScala.map(_._1)
 
   private def rows(fs: Seq[ParquetMetadata]): Long =
     fs.iterator.flatMap(_.getBlocks.asScala).map(_.getRowCount).sum
@@ -773,11 +812,11 @@ final class Catalog(val spark: SparkSession, val root: String,
     Some((mn, mx))
   }
 
-  /** Read a table (union of live commits), or an empty frame with the
-    * declared schema — [[read]] at the read-resolved version. */
+  /** Read a table (one scan over its live commits), or an empty frame
+    * with the declared schema — [[read]] at the read-resolved version. */
   def table(table: String): DataFrame = {
-    val v = readVersion(table).getOrElse(0)
-    read(table, v, commitsAt(table, v))
+    val live = liveCommits(table)
+    read(table, live, live)
   }
 
   def register(table: String): Unit =
@@ -834,7 +873,7 @@ final class Catalog(val spark: SparkSession, val root: String,
   def tableWhere(table: String, column: String, lo: Long, hi: Long): DataFrame = {
     val v = readVersion(table).getOrElse(0)
     requireIntegral(table, v, column, "tableWhere")
-    read(table, v, commitsInRange(table, column, lo, hi))
+    read(table, commitsAt(table, v), commitsInRange(table, column, lo, hi))
       .filter(col(column) >= lo && col(column) <= hi)
   }
 
@@ -1096,7 +1135,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     val affectedSet = affected.map(_._1).toSet
     val kept = live.filterNot(affectedSet)
     val before = affected.map { case (_, fs) => rows(fs) }.sum
-    val survivors = read(table, base, affected.map(_._1))
+    val survivors = read(table, live, affected.map(_._1))
       // keep NULLs: a negated BETWEEN would null-out and drop them
       .filter(col(column).isNull || col(column) < lo || col(column) > hi)
     // an empty rewrite dir is noise — EXCEPT when it is the table's
@@ -1127,7 +1166,8 @@ final class Catalog(val spark: SparkSession, val root: String,
     val base = writeBase(table)
     requireClusterableLayout(schemaAt(table, base), partitionBy, clusterBy)
     if (base == 0) return
-    val df = read(table, base, commitsAt(table, base))
+    val live = commitsAt(table, base)
+    val df = read(table, live, live)
     // numFiles > 0: coalesce before the sort — compaction's point is
     // fewer, larger files (small-file debt is what it repays), and the
     // within-partition sort then clusters across what were separate
@@ -1183,6 +1223,23 @@ final class Catalog(val spark: SparkSession, val root: String,
 }
 
 object Catalog {
+  /** One file index over several commit dirs: each commit's own index
+    * lists (and partition-prunes) its files, and the listings are
+    * concatenated. The commits share one partition schema ([[read]]
+    * checks it). A case class, so two reads over the same memoized
+    * commit indexes are the same relation (cache lookups and exchange
+    * reuse see one table). */
+  private final case class CommitsIndex(commits: Seq[FileIndex]) extends FileIndex {
+    def rootPaths: Seq[HPath] = commits.flatMap(_.rootPaths)
+    def listFiles(partitionFilters: Seq[Expression],
+                  dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      commits.flatMap(_.listFiles(partitionFilters, dataFilters))
+    def inputFiles: Array[String] = commits.flatMap(_.inputFiles).toArray
+    def refresh(): Unit = commits.foreach(_.refresh())
+    def sizeInBytes: Long = commits.map(_.sizeInBytes).sum
+    def partitionSchema: StructType = commits.head.partitionSchema
+  }
+
   /** Thrown when a writer loses the create-exclusive race for a
     * manifest or snapshot version file: the commit was NOT published
     * and must be retried against the new table state. */

@@ -1067,6 +1067,31 @@ class CatalogSpec extends SparkSpec {
     intercept[org.apache.spark.sql.AnalysisException](cat.register("dim_tipo"))
   }
 
+  /** Commands of the processes `body` starts, recorded in-process with
+    * JFR's `jdk.ProcessStart` event. */
+  private def processesStarted(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    val out = Files.createTempFile("cat_nofork", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      body
+      rec.stop()
+      rec.dump(out)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(_.getString("command"))
+    } finally {
+      rec.close()
+      Files.deleteIfExists(out)
+    }
+  }
+
+  /** A fact batch spread over months `m` and `m + 3` of 2024. */
+  private def spreadBatch(m: Int) =
+    fatoBatch(Seq(10L * m, 10L * m + 1), m).unionAll(fatoBatch(Seq(10L * m + 2), m + 3))
+
   test("rowCount, maxId and table over a partitioned table start no process") {
     import scala.jdk.CollectionConverters._
     val root = Files.createTempDirectory("cat_nofork").toString + "/wh"
@@ -1093,5 +1118,101 @@ class CatalogSpec extends SparkSpec {
       rec.close()
       Files.deleteIfExists(out)
     }
+  }
+
+  test("appendDelta (partitioned), replace and compact start no process and " +
+    "write the files and permission bits a plain parquet write does") {
+    import java.nio.file.attribute.PosixFilePermissions
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("cat_nofork_writes").toString
+    val cat = new Catalog(spark, s"$dir/wh")
+    cat.appendDelta("fato_lancamento", spreadBatch(1), Seq("ano", "mes"))
+    val started = processesStarted {
+      cat.appendDelta("fato_lancamento", spreadBatch(2), Seq("ano", "mes"))
+      cat.replace("dim_tipo", tipoDf("a", "b"))
+      cat.compact("fato_lancamento", Seq("ano", "mes"))
+    }
+    assert(started.isEmpty, s"processes started: ${started.mkString("; ")}")
+    assert(cat.rowCount("fato_lancamento") === 6L && cat.table("dim_tipo").count() === 2L)
+    // every file and dir under a commit, by name shape, with its bits
+    def layout(d: String): Map[(String, String), Int] = {
+      val walk = Files.walk(Paths.get(d))
+      try walk.iterator().asScala.toSeq.filter(_ != Paths.get(d)).map { p =>
+        (Paths.get(d).relativize(p).toString.replaceAll("part-\\d+-[0-9a-f-]+", "part"),
+          PosixFilePermissions.toString(Files.getPosixFilePermissions(p)))
+      }.groupBy(identity).map { case (k, v) => k -> v.size }
+      finally walk.close()
+    }
+    val plainFact = s"$dir/plain_fact"
+    cat.table("fato_lancamento").write.partitionBy("ano", "mes").parquet(plainFact)
+    val factCommit = liveDirs(s"$dir/wh", "fato_lancamento").head
+    val plainTipo = s"$dir/plain_tipo"
+    tipoDf("a", "b").write.parquet(plainTipo)
+    val tipoCommit = liveDirs(s"$dir/wh", "dim_tipo").head
+    assert(layout(factCommit).keySet === layout(plainFact).keySet)
+    assert(layout(factCommit).keys.exists(_._1.endsWith(".parquet.crc")))
+    assert(layout(tipoCommit) === layout(plainTipo))
+  }
+
+  test("table() is one file scan, with no union, at 1, 2 and 3 live commits") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val root = Files.createTempDirectory("cat_onescan").toString + "/wh"
+    val cat = new Catalog(spark, root)
+    object plans extends AdaptiveSparkPlanHelper
+    (1 to 3).foreach { m =>
+      cat.appendDelta("fato_lancamento", spreadBatch(m), Seq("ano", "mes"))
+      assert(liveDirs(root, "fato_lancamento").size === m)
+      val df = cat.table("fato_lancamento")
+      assert(df.count() === 3L * m)
+      val plan = df.queryExecution.executedPlan
+      assert(plans.collect(plan) { case s: FileSourceScanExec => s }.size === 1, plan.toString)
+      assert(!df.queryExecution.optimizedPlan.toString.contains("Union"), plan.toString)
+    }
+  }
+
+  test("a warmed aggregate over the fact compiles no new class after an append adds a commit") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.functions.{col, sum}
+    val root = Files.createTempDirectory("cat_codegen").toString + "/wh"
+    val cat = new Catalog(spark, root)
+    def refresh() = cat.table("fato_lancamento").groupBy("ano", "mes")
+      .agg(sum(col("valor")).as("total")).orderBy("ano", "mes").collect()
+    cat.appendDelta("fato_lancamento", spreadBatch(1), Seq("ano", "mes"))
+    refresh(); refresh()
+    cat.appendDelta("fato_lancamento", spreadBatch(2), Seq("ano", "mes"))
+    assert(liveDirs(root, "fato_lancamento").size === 2)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(refresh().length === 4)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled === 0L)
+  }
+
+  test("commits with different partition columns: the version is refused, " +
+    "a hand-listed one fails to read, and both errors name the dirs") {
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("cat_layouts").toString + "/wh"
+    val cat = new Catalog(spark, root)
+    val kv = Seq((1L, 1), (2L, 2)).toDF("id", "k")
+    cat.appendDelta("layouts", kv, partitionBy = Seq("k"))
+    val partitioned = liveDirs(root, "layouts").head
+    val e = intercept[IllegalStateException](cat.appendDelta("layouts", Seq((3L, 3)).toDF("id", "k")))
+    val flat = Files.list(Paths.get(s"$root/layouts")).iterator().asScala
+      .map(_.toString).find(d => d != partitioned && !d.endsWith("_manifests")).get
+    assert(e.getMessage.contains(s"(k) in $partitioned") && e.getMessage.contains(s"() in $flat"),
+      e.getMessage)
+    // refused before the claim: the table and its view still read version 1
+    assert(latest(root, "layouts") === Some(1))
+    assert(spark.table("layouts").count() === 2L && cat.table("layouts").count() === 2L)
+    // a version listing both (written by hand) fails every read
+    val md = Paths.get(s"$root/layouts/_manifests")
+    Files.writeString(md.resolve("v2"), s"$partitioned\n$flat")
+    Files.writeString(md.resolve("LATEST"), "2")
+    val r = intercept[IllegalStateException](new Catalog(spark, root).table("layouts"))
+    assert(r.getMessage.contains(partitioned) && r.getMessage.contains(flat), r.getMessage)
+    // a commit with no data files (an empty partitioned write) has no layout
+    cat.replace("fato_lancamento", fatoBatch(Seq.empty, 1), Seq("ano", "mes"))
+    assert(cat.appendDelta("fato_lancamento", spreadBatch(1), Seq("ano", "mes")) === 3L)
+    assert(liveDirs(root, "fato_lancamento").size === 2)
+    assert(cat.table("fato_lancamento").count() === 3L)
   }
 }

@@ -128,6 +128,34 @@ class PlanSpec extends SparkSpec {
     assert(scan.count() === 4, "pruned scan must read exactly one month")
   }
 
+  test("fact-merge existing side over 3 commits: only the batch month's files are read") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val dir = java.nio.file.Files.createTempDirectory("plan_factmerge3").toString
+    val cat = new graft.ledger.Catalog(spark, s"$dir/wh")
+    // one commit per month, as three monthly uploads leave the fact
+    for (mes <- 1 to 3) {
+      val rows = (1 to 4).map(i => ((mes * 10 + i).toLong, 1, 1, 1, 1, 1, s"d$mes-$i",
+        new java.math.BigDecimal(s"$i.00"), s"h$mes-$i", 2024, mes))
+      cat.appendDelta("fato_lancamento",
+        rows.toDF(graft.ledger.Schemas.fatoLancamento.fieldNames: _*)
+          .withColumn("valor", org.apache.spark.sql.functions.col("valor")
+            .cast(org.apache.spark.sql.types.DecimalType(15, 2))),
+        partitionBy = Seq("ano", "mes"))
+    }
+    val monthFiles = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/wh/fato_lancamento"))
+      .filter(p => p.toString.contains("/mes=2/") && p.toString.endsWith(".parquet")).count()
+    assert(monthFiles > 0)
+    val scan = new graft.ledger.Warehouse(cat).existingFactForMerge(Seq((2024, 2)))
+    assert(scan.collect().length === 4)
+    object plans extends AdaptiveSparkPlanHelper
+    val scans = plans.collect(scan.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    assert(scans.size === 1, scan.queryExecution.executedPlan.toString)
+    assert(scans.head.metrics("numPartitions").value === 1L)
+    assert(scans.head.metrics("numFiles").value === monthFiles)
+  }
+
   test("small-batch fact write: no shuffle from the staging scan to the writer") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("plan_factwrite").toString
