@@ -40,18 +40,25 @@ import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StructType}
   * an orphan `v{N}` (LATEST never flipped) that blocks the next claim —
   * [[recover]] clears it once no writer is live.
   *
-  * '''Warehouse-level atomicity''': the six star-schema tables commit
-  * individually, so without more a crash mid-[[Warehouse.run]] would
-  * publish dims without the fact. [[transaction]] wraps a multi-table
-  * load: inside it, per-table LATEST advances as usual (the writer
-  * reads its own writes), but OTHER catalog instances resolve the
-  * snapshot-scoped tables through `<root>/_snapshots/LATEST`, a single
-  * pointer mapping every warehouse table to a manifest version, flipped
-  * once after the body succeeds. A crash anywhere inside the body
-  * leaves the published snapshot untouched — readers never observe a
-  * half-built load; the next successful run heals by idempotent merge.
-  * Non-transactional writes to snapshot-scoped tables bump the snapshot
-  * immediately after their table commit, keeping the pointer current.
+  * '''Warehouse-level atomicity''': tables commit individually, so
+  * without more a crash mid-[[Warehouse.run]] would publish dims
+  * without the fact. [[transaction]] wraps a multi-table load: inside
+  * it, per-table LATEST advances as usual (the writer reads its own
+  * writes), but everyone else resolves tables through
+  * `<root>/_snapshots/LATEST`, one pointer mapping tables to manifest
+  * versions, which the transaction advances once, for the tables its
+  * body published, after the body succeeds. A crash anywhere inside
+  * the body leaves the published snapshot untouched, and the next
+  * transaction begin rolls back every table the body moved.
+  *
+  * '''One visibility rule''', the same for every table under the root
+  * and every instance ([[visibleVersion]]): a table the snapshot covers
+  * reads at its entry; a table it does not cover reads at its head,
+  * except while an INFLIGHT marker (a transaction in flight, or a
+  * crashed one) stands, when it reads at the version the marker
+  * recorded at begin (none, if the table did not exist then). A direct
+  * write advances the snapshot whenever its head is not already what
+  * readers resolve: the table is covered, or a marker stands.
   *
   * Every table is also registered as a temp view so the full
   * `spark.sql` surface works over the warehouse (SURVEY §3.3).
@@ -97,77 +104,6 @@ import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StructType}
 final class Catalog(val spark: SparkSession, val root: String,
                     val compactEvery: Int = 0) {
 
-  /** Tables covered by the warehouse-level snapshot pointer: the star
-    * schema that [[Warehouse.run]] must publish atomically. Staging and
-    * rejects are batch scratch — per-table commits are the right
-    * granularity there. */
-  private val baseSnapshotScoped: Set[String] = Set(
-    "dim_tempo", "dim_tipo", "dim_grupo", "dim_categoria",
-    "dim_classificacao", "fato_lancamento")
-
-  /** Tables registered into snapshot scope beyond the star schema
-    * ([[registerSnapshotScoped]]) — e.g. an export's data+manifest pair
-    * that must flip together. Concurrent set: registration may race a
-    * reader thread resolving scope. */
-  private val extraSnapshotScoped =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def snapshotScoped(t: String): Boolean =
-    baseSnapshotScoped(t) || extraSnapshotScoped.contains(t)
-
-  /** Every snapshot-scoped table, base + registered, in stable order. */
-  private def scopedTables: Seq[String] =
-    (baseSnapshotScoped ++ extraSnapshotScoped.asScala).toSeq.sorted
-
-  /** Extend snapshot scope to `tables`: their commits inside a
-    * [[transaction]] stay invisible until the single snapshot flip,
-    * their begin-state is recorded in INFLIGHT (so a crashed
-    * transaction rolls them back too), and direct commits bump the
-    * snapshot pointer like any star-schema table. The mechanism
-    * [[graft.operators.ShardedExport.export]] needs for its
-    * "data + manifest appear together or not at all" contract —
-    * without scope, each replace flips that table's LATEST
-    * immediately and a reader between the two replaces sees new data
-    * with the old manifest.
-    *
-    * Scope is per-instance: a reader wanting the atomic view of
-    * registered tables must register the same names (otherwise it
-    * reads their per-table LATEST). A table that already exists with
-    * a head the published snapshot does not cover is migrated in with
-    * a single-table snapshot bump — but ONLY a head that is provably
-    * committed: a head ABOVE an existing snapshot entry is the
-    * crashed-transaction shape that [[recoverTransaction]] owns and
-    * is left alone here, and when an INFLIGHT marker RECORDS the
-    * table, the current head may be the marker-owner's uncommitted
-    * write (first-ever export crashed between its data and manifest
-    * replaces, new process re-runs the export — registration here
-    * precedes transaction-begin recovery). Bumping the raw head in
-    * that state would publish the aborted version AND floor
-    * [[rollbackScopedHeads]] at it, permanently blessing data no
-    * transaction committed. Instead the bump uses the marker's
-    * RECORDED begin version for that table (committed by
-    * construction: begin rolls back any prior crash before recording)
-    * — or nothing, if the table didn't exist at begin. Idempotent
-    * (and re-runnable after recovery: the bump re-fires for a scoped
-    * table that still lacks a snapshot entry); not allowed inside a
-    * transaction. */
-  def registerSnapshotScoped(tables: String*): Unit = {
-    require(!inTxn, "cannot change snapshot scope inside a transaction")
-    val inflight = snapDir.resolve("INFLIGHT")
-    val recorded: Map[String, Int] =
-      if (Files.exists(inflight)) readInflight(inflight)._2 else Map.empty
-    tables.foreach { t =>
-      extraSnapshotScoped.add(t)
-      if (!baseSnapshotScoped(t) && latestSnapshot.isDefined &&
-          !snapshotVersions.contains(t)) {
-        val committedHead =
-          if (recorded.contains(t)) Some(recorded(t)).filter(_ > 0)
-          else latestVersion(t)
-        committedHead.foreach(v => publishSnapshot(single = Some(t -> v)))
-      }
-    }
-  }
-
   /** AtomicBoolean, not a @volatile check-then-act: two threads racing
     * [[transaction]] on the same instance must leave exactly one inside
     * (the loser fails loudly like every other race in this class), never
@@ -206,27 +142,39 @@ final class Catalog(val spark: SparkSession, val root: String,
       val Array(t, v) = line.split(' '); t -> v.toInt
     }.toMap
 
-  /** The manifest version a READ of `t` resolves to: the writer inside
-    * a transaction (and any table outside snapshot scope, or before the
-    * first snapshot) reads per-table LATEST; everyone else reads the
-    * published snapshot for scoped tables. */
-  private def readVersion(t: String): Option[Int] =
-    if (inTxn || !snapshotScoped(t)) latestVersion(t)
-    else snapshotVersions.get(t).orElse(
-      if (latestSnapshot.isEmpty) latestVersion(t) else None)
+  private def inflightPath: Path = snapDir.resolve("INFLIGHT")
 
-  /** The base version a WRITE builds on and claims over. Inside a
-    * transaction (and for unscoped tables, and before the first
-    * snapshot) that is the per-table head. A DIRECT write to a scoped
-    * table bases on the PUBLISHED snapshot instead: if a crashed or
-    * live transaction has advanced the head beyond the snapshot, the
-    * direct write's claim collides with that head's version file and
-    * fails loudly — it must never silently build on (and then publish)
-    * rows no transaction ever committed. */
-  private def writeBase(t: String): Int =
-    if (inTxn || !snapshotScoped(t) || latestSnapshot.isEmpty)
-      latestVersion(t).getOrElse(0)
-    else snapshotVersions.getOrElse(t, 0)
+  /** The INFLIGHT marker's owner and begin-state, if a marker stands. */
+  private def inflight: Option[(String, Map[String, Int])] =
+    try Some(readInflight(inflightPath))
+    catch { case _: java.nio.file.NoSuchFileException => None }
+
+  /** Every table under the root: each dir holding a `_manifests` dir. */
+  private def tables: Seq[String] =
+    children(Paths.get(root)).filter(p => Files.isDirectory(p.resolve("_manifests")))
+      .map(_.getFileName.toString).sorted
+
+  /** The version everyone outside a transaction resolves `t` to: its
+    * snapshot entry; else, while an INFLIGHT marker stands, the version
+    * the marker recorded at begin (a table the transaction created has
+    * none); else its head. */
+  private def visibleVersion(t: String): Option[Int] =
+    snapshotVersions.get(t).orElse(inflight match {
+      case Some((_, begun)) => begun.get(t).filter(_ > 0)
+      case None => latestVersion(t)
+    })
+
+  /** The manifest version a READ of `t` resolves to: the writer inside
+    * a transaction reads its own writes at the head. */
+  private def readVersion(t: String): Option[Int] =
+    if (inTxn) latestVersion(t) else visibleVersion(t)
+
+  /** The base version a WRITE builds on and claims over: the read
+    * version. A direct write therefore never builds on a head that a
+    * crashed or live transaction advanced: its claim collides with that
+    * head's version file and fails loudly instead of publishing rows no
+    * transaction committed. */
+  private def writeBase(t: String): Int = readVersion(t).getOrElse(0)
 
   /** Commit dirs (absolute paths) recorded in manifest version `v`;
     * version 0 (no table yet) has none. */
@@ -264,8 +212,9 @@ final class Catalog(val spark: SparkSession, val root: String,
   /** The one publish step: `dirs` become the table's version base+1.
     * It claims v{base+1} with
     * create-exclusive (the fence), flips LATEST via write-temp + atomic
-    * rename, bumps the snapshot pointer for a direct write to a scoped
-    * table, and points the table's temp view at the new version's read,
+    * rename, advances the snapshot for a direct write whose head readers
+    * do not already resolve, and points the table's temp view at the
+    * new version's read,
     * which it resolves before the claim. Every published version
     * passes through here exactly once; a write that publishes nothing
     * never calls it.
@@ -288,11 +237,12 @@ final class Catalog(val spark: SparkSession, val root: String,
     claimVersionFile(md, s"v$next", dirs.mkString("\n"),
       s"table $t version $next")
     atomicWrite(md, "LATEST", next.toString)
-    // keep the warehouse pointer current for direct (non-transactional)
-    // writes to scoped tables; inside a transaction the single flip
-    // happens once, at the end
-    if (!inTxn && snapshotScoped(t) && latestSnapshot.isDefined)
-      publishSnapshot(single = Some(t -> next))
+    // a direct write is visible once readers resolve its version: at the
+    // head already, unless the snapshot covers the table or a marker
+    // stands (checked after the flip: see transaction's begin); inside
+    // a transaction the snapshot advances once, at the end
+    if (!inTxn && (snapshotVersions.contains(t) || inflight.isDefined))
+      publishSnapshot(Map(t -> next))
     retain(t, dirs.toSet)
     view.createOrReplaceTempView(t)
   }
@@ -375,32 +325,23 @@ final class Catalog(val spark: SparkSession, val root: String,
     } finally Files.deleteIfExists(tmp)
   }
 
-  /** Flip the snapshot pointer atomically. At a transaction end
-    * (`single = None`) every scoped table's current LATEST is recorded
-    * — correct there, because the transaction body owns all of them.
-    * For a direct single-table commit, ONLY that table advances over
-    * the previously published map: rebuilding from per-table LATEST
-    * would republish commits left behind by an aborted transaction on
-    * OTHER tables, exposing exactly the half-built state the snapshot
-    * exists to hide.
+  /** Advance the snapshot: the tables in `advance` move to their given
+    * versions over the published map, every other entry stays. A table
+    * is never re-published from its head here: a head may be rows an
+    * aborted transaction left behind.
     *
     * The s{N+1} claim is tied to the SAME observed base N the map was
     * built from (the publish() fence pattern); losing the claim race
     * means another writer published meanwhile, so the map is rebuilt
-    * over THEIR snapshot and the claim retried — a concurrent bump to a
-    * different table merges instead of silently vanishing. */
-  private def publishSnapshot(single: Option[(String, Int)] = None): Unit = {
+    * over THEIR snapshot and the claim retried — a concurrent advance of
+    * a different table merges instead of silently vanishing. */
+  private def publishSnapshot(advance: Map[String, Int]): Unit = {
     Files.createDirectories(snapDir)
     var attempts = 0
     var done = false
     while (!done) {
       val base = latestSnapshot.getOrElse(0)
-      val versions = single match {
-        case Some((t, v)) =>
-          (if (base == 0) Map.empty[String, Int] else snapshotVersionsAt(base)) + (t -> v)
-        case None =>
-          scopedTables.flatMap(t => latestVersion(t).map(t -> _)).toMap
-      }
+      val versions = (if (base == 0) Map.empty[String, Int] else snapshotVersionsAt(base)) ++ advance
       val body = versions.toSeq.sorted.map { case (t, v) => s"$t $v" }.mkString("\n")
       try {
         claimVersionFile(snapDir, s"s${base + 1}", body, s"snapshot ${base + 1}")
@@ -409,116 +350,104 @@ final class Catalog(val spark: SparkSession, val root: String,
       } catch {
         case e: Catalog.ConcurrentWriteException =>
           attempts += 1
-          if (attempts > 5) throw new IllegalStateException(single match {
-            case Some((t, _)) =>
-              s"table $t's commit IS published, but the snapshot bump kept " +
-                s"losing the claim race — the snapshot pointer is stale for $t " +
-                "(run recover() once no writer is live; it re-syncs the pointer)"
-            case None =>
-              "the transaction's snapshot publish kept losing the claim race — " +
-                "the transaction is NOT visible; its INFLIGHT marker remains, so " +
-                "the next transaction begin will roll it back (run recover() to " +
-                "clear orphan s-file claims once no writer is live)"
-          }, e)
+          if (attempts > 5) throw new IllegalStateException(
+            s"the snapshot advance of ${advance.keys.toSeq.sorted.mkString(", ")} kept " +
+              "losing the claim race. A transaction's tables stay unpublished (its " +
+              "INFLIGHT marker remains, so its next begin rolls them back); a direct " +
+              "write's table stays behind the snapshot until recover() runs once no " +
+              "writer is live", e)
       }
     }
   }
 
   /** Run a multi-table load with warehouse-level atomicity: the body's
     * per-table commits stay invisible to other catalog instances until
-    * the single snapshot flip after it returns. The writer itself reads
-    * its own in-progress writes (loaders are chained). Not reentrant;
-    * one transaction at a time per instance.
+    * the single snapshot advance after it returns, which moves exactly
+    * the tables whose heads the body moved. The writer itself reads its
+    * own in-progress writes (loaders are chained). Not reentrant; one
+    * transaction at a time per instance.
     *
-    * BEGIN semantics: the per-table head versions are recorded in an
-    * INFLIGHT marker before the body runs; if a previous transaction
-    * crashed (marker still present), every scoped head is first rolled
-    * back to the versions that marker recorded. Without this, the new
-    * body would read and build on never-published rows: merge-based
-    * loaders would merely skip work, but a non-merging path
-    * (strictQuirks dim_tempo blind append) would append the aborted
-    * batch a SECOND time — a state the reference's Postgres
-    * transactions could never produce. Rolling back to the recorded
-    * begin-state (not to the snapshot) keeps legitimate
-    * pre-first-snapshot direct writes intact. Crash-recovery runs at
-    * the next transaction begin; direct appendDelta calls between a
-    * crash and that begin build on the unpublished head — route loads
-    * through transactions (Warehouse.run does).
+    * BEGIN semantics: the head version of every table under the root is
+    * recorded in an INFLIGHT marker before the body runs; if a previous
+    * transaction of this instance crashed (its marker still present),
+    * every table is first rolled back to the versions that marker
+    * recorded, and a table that did not exist then to nonexistence.
+    * Without this, the new body would read and build on never-published
+    * rows: merge-based loaders would merely skip work, but a non-merging
+    * path (strictQuirks dim_tempo blind append) would append the aborted
+    * batch a SECOND time — a state the reference's Postgres transactions
+    * could never produce. While the marker stands, a table the snapshot
+    * does not cover reads at its recorded version ([[visibleVersion]]),
+    * so even the first transaction under a root is atomic. The heads are
+    * read again after the marker is written: a direct write that flipped
+    * its head before the marker existed did not advance the snapshot, so
+    * the marker records where it landed and no rollback can undo it.
     *
     * A body that throws leaves the temp views of its session reading the
-    * published snapshot again: each [[publish]] inside the body pointed
+    * published state again: each [[publish]] inside the body pointed
     * its table's view at the in-transaction head, so on the way out every
-    * scoped table's view is re-registered from the snapshot (dropped, if
-    * the snapshot has no such table or it cannot be read) before the
-    * failure is rethrown. */
+    * table the body moved has its view re-registered (dropped, if no
+    * version is visible or it cannot be read) before the failure is
+    * rethrown. */
   def transaction[T](body: => T): T = {
     require(inTxnFlag.compareAndSet(false, true),
       "transaction already in progress on this Catalog instance " +
         "(not reentrant; one transaction per instance at a time)")
     try {
       Files.createDirectories(snapDir)
-      val inflight = snapDir.resolve("INFLIGHT")
-      if (Files.exists(inflight)) {
+      inflight.foreach { case (owner, begun) =>
         // whose marker? Our own instance's ⇒ our previous transaction
         // crashed mid-body: heal automatically. Anyone else's ⇒ either a
         // LIVE writer (rolling it back would corrupt both transactions
         // silently) or a dead one — we cannot tell from here, so fail
         // loudly and let the operator call recoverTransaction() once the
         // other writer is confirmed dead.
-        val (owner, _) = readInflight(inflight)
         if (owner != instanceId)
           throw new Catalog.ConcurrentWriteException(
-            s"another writer's transaction is in flight at $inflight " +
+            s"another writer's transaction is in flight at $inflightPath " +
               "(or a crashed one left it behind — run recoverTransaction() " +
               "after confirming no writer is live)")
-        rollbackToInflight(inflight)
+        rollback(begun)
       }
-      // the snapshot must exist BEFORE the body commits anything: without
-      // one, scoped reads fall back to per-table LATEST and a crash
-      // mid-FIRST-load would expose the half-built schema — the only
-      // window where the atomicity promise used to be void. The initial
-      // snapshot freezes whatever bootstrap state exists (usually empty).
-      if (latestSnapshot.isEmpty) publishSnapshot()
-      // every scoped table is recorded, absent ones as version 0: a
-      // crashed transaction that CREATED a registered table must roll
-      // it back to nonexistence, even when the recovering instance has
-      // a different registration set (rollback iterates the union of
-      // its own scope and the marker's recorded tables)
-      val beginState = (s"owner $instanceId" +: scopedTables
-        .map(t => s"$t ${latestVersion(t).getOrElse(0)}")).mkString("\n")
+      def heads = tables.map(t => t -> latestVersion(t).getOrElse(0)).toMap
       // atomic write: a crash mid-write must never leave a truncated
       // marker (a half-recorded state would roll tables back too far)
-      atomicWrite(snapDir, "INFLIGHT", beginState)
-      val out = body
-      publishSnapshot()
-      // crash between publish and this delete is benign: the next begin
-      // rolls "back" to versions that equal the published heads (no-op)
-      Files.deleteIfExists(inflight)
-      out
-    } catch {
-      case NonFatal(e) =>
-        inTxnFlag.set(false)
-        scopedTables.foreach { t =>
-          try if (readVersion(t).isDefined) register(t) else spark.catalog.dropTempView(t)
-          catch {
-            case NonFatal(r) =>
-              spark.catalog.dropTempView(t)
-              e.addSuppressed(r)
+      def record(state: Map[String, Int]): Unit = atomicWrite(snapDir, "INFLIGHT",
+        (s"owner $instanceId" +: state.toSeq.sorted.map { case (t, v) => s"$t $v" }).mkString("\n"))
+      val first = heads
+      record(first)
+      val begun = heads
+      if (begun != first) record(begun)
+      def moved = heads.filter { case (t, v) => v != begun.getOrElse(t, 0) }
+      try {
+        val out = body
+        publishSnapshot(moved)
+        // crash between publish and this delete is benign: the next begin
+        // rolls "back" to versions that the published entries floor
+        Files.deleteIfExists(inflightPath)
+        out
+      } catch {
+        case NonFatal(e) =>
+          inTxnFlag.set(false)
+          moved.keys.foreach { t =>
+            try if (readVersion(t).isDefined) register(t) else spark.catalog.dropTempView(t)
+            catch {
+              case NonFatal(r) =>
+                spark.catalog.dropTempView(t)
+                e.addSuppressed(r)
+            }
           }
-        }
-        throw e
+          throw e
+      }
     } finally inTxnFlag.set(false)
   }
 
   /** Explicit crash recovery for a transaction started by ANOTHER
-    * catalog instance: rolls scoped heads back to the marker's recorded
+    * catalog instance: rolls every table back to the marker's recorded
     * begin-state and clears the marker. Call only after confirming no
     * writer is live. Returns true if a marker was cleared. */
-  def recoverTransaction(): Boolean = {
-    val inflight = snapDir.resolve("INFLIGHT")
-    if (!Files.exists(inflight)) false
-    else { rollbackToInflight(inflight); true }
-  }
+  def recoverTransaction(): Boolean =
+    inflight.exists { case (_, begun) => rollback(begun); true }
 
   /** The INFLIGHT marker: its owner line, then the begin-state. */
   private def readInflight(p: Path): (String, Map[String, Int]) = {
@@ -527,24 +456,19 @@ final class Catalog(val spark: SparkSession, val root: String,
     (owner, nameVersions(ls.drop(1)))
   }
 
-  private def rollbackToInflight(inflight: Path): Unit = {
-    val (_, recorded) = readInflight(inflight)
-    rollbackScopedHeads(recorded)
-    Files.deleteIfExists(inflight)
-  }
-
-  /** Roll every scoped table's LATEST back to `target` (absent table →
-    * no version at all), deleting the now-orphaned manifest claims so
-    * the next commit can re-claim those versions. Orphan DATA dirs stay
-    * until [[vacuum]]. The published snapshot is a floor: a table
-    * legitimately committed-and-published AFTER the marker was written
-    * (a direct write between the crash and this recovery) must never be
-    * rolled below what readers already resolve. */
-  private def rollbackScopedHeads(target: Map[String, Int]): Unit = {
+  /** Roll every table's LATEST back to `begun` (a table absent from it
+    * → no version at all), deleting the now-orphaned manifest claims so
+    * the next commit can re-claim those versions, then clear the
+    * INFLIGHT marker. Orphan DATA dirs stay until [[vacuum]]. The
+    * published snapshot is a floor: a table legitimately
+    * committed-and-published AFTER the marker was written (a direct
+    * write between the crash and this recovery) must never be rolled
+    * below what readers already resolve. */
+  private def rollback(begun: Map[String, Int]): Unit = {
     val published = snapshotVersions
-    (scopedTables ++ target.keys).distinct.foreach { t =>
+    (tables ++ begun.keys).distinct.foreach { t =>
       latestVersion(t).foreach { head =>
-        val tv = math.max(target.getOrElse(t, 0), published.getOrElse(t, 0))
+        val tv = math.max(begun.getOrElse(t, 0), published.getOrElse(t, 0))
         if (head > tv) {
           val md = manifestDir(t)
           if (tv > 0) atomicWrite(md, "LATEST", tv.toString)
@@ -554,6 +478,7 @@ final class Catalog(val spark: SparkSession, val root: String,
         }
       }
     }
+    Files.deleteIfExists(inflightPath)
   }
 
   /** Stable identity of this catalog instance, recorded in INFLIGHT so
@@ -567,14 +492,14 @@ final class Catalog(val spark: SparkSession, val root: String,
     * no writer is live — from a supervisor, not a racing writer.
     *
     * Also heals the stale-snapshot crash window: a direct write that
-    * flipped its table's LATEST but crashed before the snapshot bump
-    * leaves the pointer behind the head, and every later direct write
-    * to that table bases on the stale snapshot, collides with the
-    * already-published v{N}, and fails — a state only a snapshot
-    * re-sync can clear. Re-syncing from per-table heads is safe exactly
-    * when no INFLIGHT marker exists: with a marker, heads above the
-    * snapshot may be an aborted transaction's unpublished writes, which
-    * [[recoverTransaction]] (rollback, not publish) owns. */
+    * flipped its table's LATEST but crashed before advancing the
+    * snapshot leaves the table's entry behind its head, and every later
+    * direct write to that table bases on the stale entry, collides with
+    * the already-published v{N}, and fails — a state only advancing the
+    * entry can clear. That is safe exactly when no INFLIGHT marker
+    * exists: with a marker, heads above the snapshot may be an aborted
+    * transaction's unpublished writes, which [[recoverTransaction]]
+    * (rollback, not publish) owns; recover() leaves the marker alone. */
   def recover(): Int = {
     def clean(dir: Path, latest: Int, prefix: String): Int = {
       val orphans = children(dir).map(_.getFileName.toString).filter { n =>
@@ -587,23 +512,15 @@ final class Catalog(val spark: SparkSession, val root: String,
       orphans.foreach(n => Files.deleteIfExists(dir.resolve(n)))
       orphans.size
     }
-    // every table that HAS a manifest dir, not just the declared star
-    // schema: registered snapshot-scope tables (exports) and undeclared
-    // appendDelta tables crash like any other, and an orphan claim
-    // above their LATEST blocks every future commit until cleared
-    val allTables: Seq[String] = (Schemas.tableNames ++ children(Paths.get(root))
-      .filter(p => Files.isDirectory(p) && Files.exists(p.resolve("_manifests")))
-      .map(_.getFileName.toString)).distinct
-    val cleared = allTables.map(t =>
+    val all = tables
+    val cleared = all.map(t =>
       clean(manifestDir(t), latestVersion(t).getOrElse(0), "v")).sum +
       clean(snapDir, latestSnapshot.getOrElse(0), "s")
-    if (!Files.exists(snapDir.resolve("INFLIGHT")) && latestSnapshot.isDefined) {
-      val published = snapshotVersions
-      val stale = scopedTables.exists(t =>
-        latestVersion(t).exists(_ > published.getOrElse(t, 0)))
-      if (stale) publishSnapshot() // rebuild from per-table heads
+    if (inflight.isEmpty) {
+      val stale = snapshotVersions.flatMap { case (t, v) => latestVersion(t).filter(_ > v).map(t -> _) }
+      if (stale.nonEmpty) publishSnapshot(stale)
     }
-    allTables.foreach(t => retain(t, liveSet(t)))
+    all.foreach(t => retain(t, liveSet(t)))
     cleared
   }
 
@@ -633,7 +550,12 @@ final class Catalog(val spark: SparkSession, val root: String,
     dir
   }
 
-  def exists(table: String): Boolean = latestVersion(table).isDefined
+  /** `table` has a version this instance reads (the rule [[table]]
+    * follows), or a head this instance's own failed transaction left,
+    * which its next transaction begin rolls back. */
+  def exists(table: String): Boolean =
+    readVersion(table).isDefined ||
+      inflight.exists(_._1 == instanceId) && latestVersion(table).isDefined
 
   // ---------------------------------------------------------------------
   // the commit reader: every DataFrame over commit dirs is built here
@@ -1181,7 +1103,7 @@ final class Catalog(val spark: SparkSession, val root: String,
   def rowCount(table: String): Long = rows(footers(liveCommits(table)))
 
   /** Delete commit dirs referenced by neither the LATEST manifest nor
-    * the published snapshot (crashed writers, replaced/compacted
+    * the version readers resolve (crashed writers, replaced/compacted
     * history). Assumes no reader is pinned to an older version — run
     * from the single writer, like compaction in any MVCC table format.
     *
@@ -1208,9 +1130,9 @@ final class Catalog(val spark: SparkSession, val root: String,
   }
 
   /** Commit dirs `t` still needs: those of its LATEST manifest and of
-    * the published snapshot. */
+    * the version readers resolve ([[visibleVersion]]). */
   private def liveSet(t: String): Set[String] =
-    (latestVersion(t).toSeq ++ snapshotVersions.get(t)).flatMap(commitsAt(t, _)).toSet
+    (latestVersion(t).toSeq ++ visibleVersion(t)).flatMap(commitsAt(t, _)).toSet
 
   private def deleteRecursively(p: Path): Unit = {
     if (Files.exists(p)) {

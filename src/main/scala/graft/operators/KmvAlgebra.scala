@@ -10,11 +10,10 @@ import graft.expressions.KmvMinima
   * sketches in one grouped pass over a live corpus; this operator takes
   * sketches that already EXIST as tables (a [[graft.ledger.Catalog
   * .maintainKmv]] rollup, a [[graft.streaming.Streams
-  * .maintainedKmvStream]] output, two time-traveled versions of the
-  * same rollup, two different tables' rollups) and answers the overlap
-  * question WITHOUT touching either corpus: per key, distinct
-  * estimates for each side, the union, the intersection, and the
-  * Jaccard — all from two k-long arrays.
+  * .maintainedKmvStream]] output, two different tables' rollups) and
+  * answers the overlap question WITHOUT touching either corpus: per
+  * key, distinct estimates for each side, the union, the
+  * intersection, and the Jaccard — all from two k-long arrays.
   *
   * Shuffle shape: ONE full-outer join on the keys of two
   * groups-×-(k+ε)-sized tables — corpus size appears nowhere. A key

@@ -50,21 +50,14 @@ object ShardedExport {
 
   /** Write the export: data table partitioned by shard + its manifest
     * table, committed in ONE catalog transaction — both appear
-    * atomically or neither does. The two tables are first registered
-    * into the catalog's snapshot scope ([[Catalog.registerSnapshotScoped]]):
-    * without scope each replace flips that table's LATEST immediately,
-    * so a concurrent reader between the two replaces would see new
-    * data with the old manifest, and a crash between them would leave
-    * that mismatch permanently. With scope, both commits ride the
-    * transaction's single snapshot flip, and a crash before the flip
-    * rolls both back at the next transaction begin. A concurrent
-    * READER gets the atomic view by registering the same two names on
-    * its own catalog instance. Returns the committed manifest (read
-    * back through the catalog). */
+    * atomically or neither does. A reader on any catalog instance sees
+    * the old pair until the transaction's single snapshot advance, and
+    * a crash between the two replaces rolls both back at the next
+    * transaction begin. Returns the committed manifest (read back
+    * through the catalog). */
   def export(cat: Catalog, dataTable: String, manifestTable: String,
              df: DataFrame, orderCols: Seq[String], shardSize: Long,
              byteCol: String): DataFrame = {
-    cat.registerSnapshotScoped(dataTable, manifestTable)
     // ContiguousIds.assign materializes via zipWithIndex, so the shard
     // assignment is computed once here and both writes read that frame
     val sharded = withShards(df, orderCols, shardSize)

@@ -359,7 +359,7 @@ object Streams {
     * (q153/q154/q156): each micro-batch's survivors EXTEND the
     * committed export — example ids continue from the committed max,
     * shards keep filling where the last batch stopped, and the data +
-    * manifest pair flips in ONE snapshot-scoped catalog transaction
+    * manifest pair flips in ONE catalog transaction
     * per batch (the [[graft.operators.ShardedExport]] contract,
     * maintained incrementally).
     *
@@ -392,16 +392,14 @@ object Streams {
     * shard, so the merge cost is manifest-sized, never a corpus
     * rescan.
     *
-    * WHY the whole body runs inside `catalog.transaction` (round-13
-    * advice, medium): transaction-begin rolls back a SELF-OWNED
-    * crashed marker before anything reads committed state. With the
-    * reads outside, a crash mid-FIRST-batch (head v1, no snapshot
-    * entry) left every restart seeing `exists = true` but
-    * `catalog.table` throwing — the stream wedged on state its own
-    * begin-time recovery would have healed. Another instance's marker
-    * still fails loudly (`ConcurrentWriteException` → operator runs
-    * `recoverTransaction()`), exactly the cross-instance contract
-    * CatalogSpec pins.
+    * WHY the whole body runs inside `catalog.transaction`:
+    * transaction-begin rolls back a SELF-OWNED crashed marker before
+    * anything reads committed state, so the batch after a crash
+    * mid-batch reads and extends only what was committed, and the
+    * aborted batch's heads are gone before it writes. Another
+    * instance's marker still fails loudly (`ConcurrentWriteException`
+    * → operator runs `recoverTransaction()`), exactly the
+    * cross-instance contract CatalogSpec pins.
     *
     * Equals the one-shot batch export
     * ([[graft.operators.ShardedExport.export]] of
@@ -430,7 +428,6 @@ object Streams {
                           salt: String, orderCols: Seq[String],
                           shardSize: Long, byteCol: String): StreamingQuery = {
     val sourcesTable = s"${dataTable}_sources"
-    catalog.registerSnapshotScoped(dataTable, manifestTable, sourcesTable)
     val blocked = broadcast(blocklist.toDF("blocked_source"))
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -513,7 +510,7 @@ object Streams {
     * verdict table (decode succeeded and agreed with declared
     * metadata; carries the modality quality gate's `keep`) and the
     * QUARANTINE table (payload didn't decode, or metadata lied —
-    * with the reason), both committed in ONE snapshot-scoped
+    * with the reason), both committed in ONE catalog
     * transaction so an auditor never sees a batch half-ingested. A
     * rotten row must quarantine, never kill the stream — the batch
     * analytics operators (`decodeImageStats` etc.) keep the abort
@@ -536,7 +533,6 @@ object Streams {
   def mediaIngestStream(media: DataFrame, catalog: Catalog,
                         verdictTable: String, quarantineTable: String,
                         checkpointDir: String): StreamingQuery = {
-    catalog.registerSnapshotScoped(verdictTable, quarantineTable)
     media.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())

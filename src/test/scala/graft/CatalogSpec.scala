@@ -675,7 +675,7 @@ class CatalogSpec extends SparkSpec {
       .select(schema0.fieldNames.map(org.apache.spark.sql.functions.col): _*)))
   }
 
-  test("recover() clears orphan claims on registered export tables, not " +
+  test("recover() clears orphan claims on export tables, not " +
       "just the star schema") {
     val dir = Files.createTempDirectory("cat_recover_export").toString
     val cat = new Catalog(spark, s"$dir/wh")
@@ -756,10 +756,8 @@ class CatalogSpec extends SparkSpec {
     graft.operators.ShardedExport.export(cat,
       "export_docs", "export_manifest", docs,
       Seq("lang", "doc_id"), shardSize = 4L, byteCol = "n_chars")
-    // the atomic view is snapshot-scoped: a consumer registers the same
-    // pair on its own instance (export() registered them on the writer)
+    // the atomic view needs nothing of a consumer: any instance reads it
     val reader = new Catalog(spark, s"$dir/wh")
-    reader.registerSnapshotScoped("export_docs", "export_manifest")
     def readerDocs(): Long = reader.table("export_docs").count()
     def readerManifestDocs(): Long = reader.table("export_manifest")
       .agg(org.apache.spark.sql.functions.sum("n_docs")).head().getLong(0)
@@ -796,21 +794,17 @@ class CatalogSpec extends SparkSpec {
     assert(readerDocs() === 6L && readerManifestDocs() === 6L)
   }
 
-  test("registerSnapshotScoped during a foreign crash never publishes the " +
-      "aborted head: re-running a crashed first export recovers cleanly") {
-    // Round-13 advice (medium): first-ever export crashes between its
-    // data and manifest replaces; a NEW process re-runs the export.
-    // ShardedExport.export registers the pair BEFORE transaction-begin
-    // recovery can run, and the pre-fix migration bump published the
-    // crashed writer's uncommitted data head (no snapshot entry existed
-    // to trip the head-above-snapshot guard) — exposing new data under
-    // no/old manifest AND flooring rollbackScopedHeads at the aborted
-    // version, permanently blessing it.
+  test("a foreign crash never publishes the aborted head: " +
+      "re-running a crashed first export recovers cleanly") {
+    // first-ever export crashes between its data and manifest
+    // replaces; a NEW process re-runs the export. Nothing may publish
+    // the crashed writer's uncommitted data head (no snapshot entry
+    // exists to fence it): that would expose new data under no/old
+    // manifest AND floor the rollback at the aborted version.
     val dir = Files.createTempDirectory("cat_reg_crash").toString
     val docs = (0L until 8L).map(i => (i, s"l${i % 2}", 100L + i))
       .toDF("doc_id", "lang", "n_chars")
     val a = new Catalog(spark, s"$dir/wh")
-    a.registerSnapshotScoped("export_docs", "export_manifest")
     intercept[RuntimeException](a.transaction {
       a.replace("export_docs", graft.operators.ShardedExport.withShards(
         docs, Seq("lang", "doc_id"), 4L), partitionBy = Seq("shard"))
@@ -839,15 +833,14 @@ class CatalogSpec extends SparkSpec {
       "export_docs", "export_manifest", docs,
       Seq("lang", "doc_id"), shardSize = 4L, byteCol = "n_chars")
     val reader = new Catalog(spark, s"$dir/wh")
-    reader.registerSnapshotScoped("export_docs", "export_manifest")
     assert(reader.table("export_docs").count() === 8L)
     assert(reader.table("export_manifest")
       .agg(org.apache.spark.sql.functions.sum("n_docs"))
       .head().getLong(0) === 8L)
   }
 
-  test("cross-instance recovery: a fresh instance with EMPTY extra scope " +
-      "rolls back a crashed writer's registered export tables") {
+  test("cross-instance recovery: a fresh instance " +
+      "rolls back a crashed writer's export tables") {
     // Round-12 verdict #4: the doc-comment promises rollback works even
     // when the RECOVERING instance never registered the export pair —
     // the INFLIGHT marker's recorded tables drive the rollback union.
@@ -868,8 +861,7 @@ class CatalogSpec extends SparkSpec {
         .manifest(a.table("export_docs"), "n_chars"))
       throw new RuntimeException("crash before the flip")
     })
-    // instance B: brand-new process, no registerSnapshotScoped call at
-    // all — its own scope is just the base star-schema tables
+    // instance B: brand-new process, no state of its own
     val b = new Catalog(spark, s"$dir/wh")
     assert(b.recoverTransaction())
     // BOTH export tables rolled back to the committed v1 pair
@@ -877,7 +869,6 @@ class CatalogSpec extends SparkSpec {
       Paths.get(s"$dir/wh/$t/_manifests/LATEST"))).trim.toInt
     assert(head("export_docs") === 1 && head("export_manifest") === 1)
     val reader = new Catalog(spark, s"$dir/wh")
-    reader.registerSnapshotScoped("export_docs", "export_manifest")
     assert(reader.table("export_docs").count() === 8L)
     assert(reader.table("export_manifest")
       .agg(org.apache.spark.sql.functions.sum("n_docs"))
@@ -1068,19 +1059,24 @@ class CatalogSpec extends SparkSpec {
   }
 
   /** Commands of the processes `body` starts, recorded in-process with
-    * JFR's `jdk.ProcessStart` event. */
+    * JFR's `jdk.ProcessStart` event. Spark's executor-metrics heartbeat
+    * runs `getconf PAGESIZE` once per JVM from `ProcfsMetricsGetter`,
+    * whenever it first fires; that one start, told apart by its stack,
+    * is not the body's. */
   private def processesStarted(body: => Unit): Seq[String] = {
     import scala.jdk.CollectionConverters._
     val rec = new jdk.jfr.Recording()
     val out = Files.createTempFile("cat_nofork", ".jfr")
     try {
-      rec.enable("jdk.ProcessStart")
+      rec.enable("jdk.ProcessStart").withStackTrace()
       rec.start()
       body
       rec.stop()
       rec.dump(out)
       jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala.toSeq
         .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .filterNot(e => Option(e.getStackTrace).exists(_.getFrames.asScala.exists(
+          _.getMethod.getType.getName.startsWith("org.apache.spark.executor.ProcfsMetricsGetter"))))
         .map(_.getString("command"))
     } finally {
       rec.close()
@@ -1093,31 +1089,18 @@ class CatalogSpec extends SparkSpec {
     fatoBatch(Seq(10L * m, 10L * m + 1), m).unionAll(fatoBatch(Seq(10L * m + 2), m + 3))
 
   test("rowCount, maxId and table over a partitioned table start no process") {
-    import scala.jdk.CollectionConverters._
     val root = Files.createTempDirectory("cat_nofork").toString + "/wh"
     val writer = new Catalog(spark, root)
     (1 to 3).foreach(m => writer.appendDelta("fato_lancamento",
       fatoBatch(Seq(10L * m, 10L * m + 1), m).unionAll(fatoBatch(Seq(10L * m + 2), m + 3)),
       Seq("ano", "mes")))
-    val rec = new jdk.jfr.Recording()
-    val out = Files.createTempFile("cat_nofork", ".jfr")
-    try {
-      rec.enable("jdk.ProcessStart")
-      rec.start()
+    val started = processesStarted {
       val cat = new Catalog(spark, root)
       assert(cat.rowCount("fato_lancamento") === 9L)
       assert(cat.maxId("fato_lancamento", "id_lancamento") === 32L)
       assert(cat.table("fato_lancamento").columns.length === 11)
-      rec.stop()
-      rec.dump(out)
-      val started = jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala
-        .filter(_.getEventType.getName == "jdk.ProcessStart")
-        .map(_.getString("command"))
-      assert(started.isEmpty, s"processes started: ${started.mkString("; ")}")
-    } finally {
-      rec.close()
-      Files.deleteIfExists(out)
     }
+    assert(started.isEmpty, s"processes started: ${started.mkString("; ")}")
   }
 
   test("appendDelta (partitioned), replace and compact start no process and " +
@@ -1214,5 +1197,105 @@ class CatalogSpec extends SparkSpec {
     assert(cat.appendDelta("fato_lancamento", spreadBatch(1), Seq("ano", "mes")) === 3L)
     assert(liveDirs(root, "fato_lancamento").size === 2)
     assert(cat.table("fato_lancamento").count() === 3L)
+  }
+
+  test("a side table written in a transaction that throws stays invisible " +
+      "to a fresh reader, and the writer's next transaction rolls it back") {
+    val root = Files.createTempDirectory("cat_side").toString + "/wh"
+    val writer = new Catalog(spark, root)
+    writer.replace("side_t", Seq((1L, "a")).toDF("id", "v"))
+    intercept[RuntimeException](writer.transaction {
+      writer.appendDelta("side_t", Seq((2L, "b"), (3L, "c")).toDF("id", "v"))
+      sys.error("crash after the side write")
+    })
+    assert(latest(root, "side_t") === Some(2))
+    assert(new Catalog(spark, root).table("side_t").count() === 1L)
+    writer.transaction { () }
+    assert(latest(root, "side_t") === Some(1))
+    assert(new Catalog(spark, root).table("side_t").count() === 1L)
+  }
+
+  test("after a crashed export transaction, any reader sees the committed pair") {
+    val root = Files.createTempDirectory("cat_export_reader").toString + "/wh"
+    val cat = new Catalog(spark, root)
+    val docs = (0L until 8L).map(i => (i, s"l${i % 2}", 100L + i))
+      .toDF("doc_id", "lang", "n_chars")
+    graft.operators.ShardedExport.export(cat, "export_docs", "export_manifest", docs,
+      Seq("lang", "doc_id"), shardSize = 4L, byteCol = "n_chars")
+    intercept[RuntimeException](cat.transaction {
+      cat.replace("export_docs", graft.operators.ShardedExport.withShards(
+        docs.filter($"doc_id" < 4), Seq("lang", "doc_id"), 4L), partitionBy = Seq("shard"))
+      throw new RuntimeException("crash between data and manifest")
+    })
+    val reader = new Catalog(spark, root)
+    assert(reader.table("export_docs").count() === 8L)
+    assert(reader.table("export_manifest").agg(org.apache.spark.sql.functions.sum("n_docs"))
+      .head().getLong(0) === 8L)
+  }
+
+  test("seen from another instance, exists and table agree on tables a crashed " +
+      "transaction created") {
+    val root = Files.createTempDirectory("cat_exists").toString + "/wh"
+    val writer = new Catalog(spark, root)
+    intercept[RuntimeException](writer.transaction {
+      writer.replace("created_t", Seq((1L, "a")).toDF("id", "v"))
+      writer.replace("dim_tipo", tipoDf("a"))
+      sys.error("crash")
+    })
+    val other = new Catalog(spark, root)
+    assert(!other.exists("created_t"))
+    intercept[IllegalArgumentException](other.table("created_t"))
+    assert(!other.exists("dim_tipo"))
+    assert(other.table("dim_tipo").count() === 0L)
+    // once the crash is recovered, both name what a direct write commits
+    assert(other.recoverTransaction())
+    other.replace("created_t", Seq((5L, "e")).toDF("id", "v"))
+    assert(other.exists("created_t") && new Catalog(spark, root).exists("created_t"))
+    assert(new Catalog(spark, root).table("created_t").as[(Long, String)].collect().toSeq ===
+      Seq((5L, "e")))
+  }
+
+  test("a root with per-table heads and no snapshot entry for them reads the same " +
+      "rows from a fresh instance and then takes a Warehouse.run") {
+    import graft.ledger.{Ingest, Warehouse}
+    def rows(cat: Catalog, t: String) = cat.table(t).collect().map(_.mkString("|")).sorted.toSeq
+    def csv(lines: (String, String, String)*) = lines.map { case (d, data, valor) =>
+      (d, "Despesa", "Moradia", "Aluguel", "Essencial", data, valor)
+    }.toDF(Schemas.requiredColumns: _*)
+    val staged = Seq("staging_lancamentos", "rejects_lancamentos")
+    // without a snapshot (direct writes only), and with one that covers
+    // only the star schema a Warehouse.run published
+    for (warehouseFirst <- Seq(false, true)) {
+      val root = Files.createTempDirectory("cat_heads").toString + "/wh"
+      val w = new Catalog(spark, root)
+      if (warehouseFirst) {
+        Ingest.stage(w, csv(("Jan", "01/2024", "1,00")), strict = true)
+        new Warehouse(w).run()
+      }
+      // a permissive ingest: one staged row, one rejected (no Data)
+      Ingest.stage(w, csv(("Fev", "02/2024", "2,00"), ("Sem data", null, "3,00")), strict = false)
+      val snaps = Paths.get(s"$root/_snapshots")
+      if (warehouseFirst) {
+        val n = Files.readString(snaps.resolve("LATEST")).trim.toInt
+        val body = Files.readString(snaps.resolve(s"s$n")).split("\n")
+          .filterNot(l => staged.exists(t => l.startsWith(s"$t ")))
+        Files.writeString(snaps.resolve(s"s${n + 1}"), body.mkString("\n"))
+        Files.writeString(snaps.resolve("LATEST"), s"${n + 1}")
+        assert(new Catalog(spark, root).snapshotVersions.keySet.intersect(staged.toSet).isEmpty)
+      } else {
+        assert(Files.notExists(snaps), "a direct write made a snapshot")
+      }
+      val fresh = new Catalog(spark, root)
+      staged.foreach(t => assert(rows(fresh, t) === rows(w, t), t))
+      assert(fresh.table("staging_lancamentos").count() === 1L)
+      assert(fresh.table("rejects_lancamentos").count() === 1L)
+      new Warehouse(fresh).run()
+      val after = new Catalog(spark, root)
+      assert(after.table("fato_lancamento").count() === (if (warehouseFirst) 2L else 1L))
+      staged.foreach(t => assert(rows(after, t) === rows(w, t), t))
+      assert(after.snapshotVersions.keySet ===
+        Set("dim_tempo", "dim_tipo", "dim_grupo", "dim_categoria", "dim_classificacao",
+          "fato_lancamento"))
+    }
   }
 }

@@ -702,8 +702,6 @@ class StreamsSpec extends SparkSpec {
     import spark.implicits._
     val dir = Files.createTempDirectory("stream_export_heal").toString
     val cat = new Catalog(spark, s"$dir/wh")
-    cat.registerSnapshotScoped(
-      "export_docs_h", "export_manifest_h", "export_docs_h_sources")
     // forge the crash shape on disk: a transaction that appended the
     // table's v1 and died before publishing
     val boom = intercept[RuntimeException](cat.transaction {
