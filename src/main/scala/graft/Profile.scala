@@ -9,13 +9,14 @@ import graft.queries.CoreQueries
 /** Scratch profiler for hot queries (not part of the driver contract).
   *
   * Dissects q68, the warehouse build, into its phases — staging ingest,
-  * the dimension pass (one collect of the batch vocabulary and the
-  * stored keys, then the non-empty dim writes), the fact merge, the
-  * view refresh, the rerun and the final read — with wall time, Spark
-  * job counts and generated classes compiled per phase, so the "is it
-  * commit overhead or join work?" question has numbers. The compile
-  * count covers the whole JVM, driver and executor tasks; a class whose
-  * source is already in Spark's codegen cache is not compiled again.
+  * the dimension pass (one collect of the batch vocabulary, the stored
+  * keys from the catalog's rows, then the non-empty dim writes), the
+  * fact merge, the view refresh, the rerun and the final read — with
+  * wall time, Spark job counts and generated classes compiled per
+  * phase, so the "is it commit overhead or join work?" question has
+  * numbers. The compile count covers the whole JVM, driver and executor
+  * tasks; a class whose source is already in Spark's codegen cache is
+  * not compiled again.
   * The phases are the steps `Warehouse.run` makes, in its order.
   */
 object Profile {

@@ -77,7 +77,10 @@ import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StructType}
   * missing live commit dir.
   * Commit dirs are write-once, so each instance reads a commit's
   * footers once and resolves its relation once ([[footers]],
-  * [[relation]]); both memos drop a dir once it is no longer live.
+  * [[relation]]), and keeps the rows of every commit it wrote from
+  * driver-held rows ([[appendRows]], carried through a [[compact]] of
+  * such commits alone), which [[rows]] answers without a read; the
+  * memos drop a dir once it is no longer live.
   * Every write lands through [[writeCommit]], and every new version
   * goes out through [[publish]] (the v{N} claim, the `LATEST` flip, the
   * snapshot bump and the temp-view refresh, once per version); a
@@ -249,7 +252,9 @@ final class Catalog(val spark: SparkSession, val root: String,
 
   /** The one rewrite step: `df` into a fresh commit ([[writeCommit]]),
     * its rows counted from the new commit's footers, published over
-    * `base` as `kept` plus the new commit. With `dropEmpty`, a zero-row
+    * `base` as `kept` plus the new commit. `held`, the rows of `df`
+    * when the driver holds them, is memoized under the new commit
+    * ([[rows]]). With `dropEmpty`, a zero-row
     * commit is deleted instead and `kept` alone is published — or
     * nothing, when `kept` is exactly `base`'s commits. Returns the
     * written row count. */
@@ -257,13 +262,15 @@ final class Catalog(val spark: SparkSession, val root: String,
                    partitionBy: Seq[String] = Seq.empty,
                    clusterBy: Seq[String] = Seq.empty,
                    batchId: Option[Long] = None,
-                   dropEmpty: Boolean = false): Long = {
+                   dropEmpty: Boolean = false,
+                   held: Option[Seq[Row]] = None): Long = {
     val dir = writeCommit(t, df, partitionBy, clusterBy, batchId)
+    held.foreach(heldMemo.put(dir, _))
     // exact count from the written files' parquet FOOTERS: metadata
     // only, no second data scan and no extra Spark job (an observed
     // write metric can over-count under stage retries or speculative
     // execution; a read-back count re-scans the data)
-    val n = rows(footers(Seq(dir)))
+    val n = footerRows(footers(Seq(dir)))
     if (n > 0 || !dropEmpty) publish(t, base, kept :+ dir)
     else {
       deleteRecursively(Paths.get(dir))
@@ -678,11 +685,14 @@ final class Catalog(val spark: SparkSession, val root: String,
     new java.util.concurrent.ConcurrentHashMap[String, Seq[ParquetMetadata]]()
   private val relationMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Option[StructType]), HadoopFsRelation]()
+  /** The rows of each commit written from driver-held rows. */
+  private val heldMemo = new java.util.concurrent.ConcurrentHashMap[String, Seq[Row]]()
 
   /** Drop every memo entry whose commit dir `gone` names. */
   private def forget(gone: String => Boolean): Unit = {
     footerMemo.keySet.removeIf(d => gone(d))
     relationMemo.keySet.removeIf(k => gone(k._1))
+    heldMemo.keySet.removeIf(d => gone(d))
   }
 
   /** Drop the memo entries of `t`'s commit dirs outside `live`. */
@@ -691,11 +701,12 @@ final class Catalog(val spark: SparkSession, val root: String,
     forget(d => !live(d) && Paths.get(d).getParent == td)
   }
 
-  /** The commit dirs either memo holds, for spec observability. */
+  /** The commit dirs any memo holds, for spec observability. */
   private[graft] def memoizedDirs: Set[String] =
-    footerMemo.keySet.asScala.toSet ++ relationMemo.keySet.asScala.map(_._1)
+    footerMemo.keySet.asScala.toSet ++ relationMemo.keySet.asScala.map(_._1) ++
+      heldMemo.keySet.asScala
 
-  private def rows(fs: Seq[ParquetMetadata]): Long =
+  private def footerRows(fs: Seq[ParquetMetadata]): Long =
     fs.iterator.flatMap(_.getBlocks.asScala).map(_.getRowCount).sum
 
   /** [min, max] of an integral column over the populated row groups of
@@ -739,6 +750,17 @@ final class Catalog(val spark: SparkSession, val root: String,
   def table(table: String): DataFrame = {
     val live = liveCommits(table)
     read(table, live, live)
+  }
+
+  /** The rows [[table]] reads: the memoized rows of the live commits
+    * written from driver-held rows, and the other live commits (another
+    * instance's, or a fold that did not carry its rows) in one read. */
+  private[graft] def rows(table: String): Seq[Row] = {
+    val live = liveCommits(table)
+    val held = live.map(d => d -> Option(heldMemo.get(d)))
+    val unheld = held.collect { case (d, None) => d }
+    held.flatMap(_._2).flatten ++
+      (if (unheld.isEmpty) Seq.empty else read(table, live, unheld).collect().toSeq)
   }
 
   def register(table: String): Unit =
@@ -978,7 +1000,18 @@ final class Catalog(val spark: SparkSession, val root: String,
     * clustering when it rewrites. */
   def appendDelta(table: String, delta: DataFrame,
                   partitionBy: Seq[String] = Seq.empty,
-                  clusterBy: Seq[String] = Seq.empty): Long = {
+                  clusterBy: Seq[String] = Seq.empty): Long =
+    append(table, delta, partitionBy, clusterBy, held = None)
+
+  /** [[appendDelta]] of driver-held `rows` of a declared table, as one
+    * commit of one file in their order; [[rows]] answers them from
+    * memory while the commit is live. */
+  private[graft] def appendRows(table: String, rows: Seq[Row]): Long =
+    append(table, spark.createDataFrame(rows.asJava, Schemas.schemaOf(table)).coalesce(1),
+      Seq.empty, Seq.empty, Some(rows))
+
+  private def append(table: String, delta: DataFrame, partitionBy: Seq[String],
+                     clusterBy: Seq[String], held: Option[Seq[Row]]): Long = {
     // layout args are validated BEFORE anything is written: the
     // auto-compaction pass below reuses them, and a require thrown from
     // inside compact() would surface AFTER this append's commit already
@@ -990,7 +1023,8 @@ final class Catalog(val spark: SparkSession, val root: String,
     // instead of silently dropping it from the list
     val base = writeBase(table)
     val baseDirs = commitsAt(table, base)
-    val n = swap(table, base, baseDirs, delta, partitionBy, clusterBy, dropEmpty = true)
+    val n = swap(table, base, baseDirs, delta, partitionBy, clusterBy, dropEmpty = true,
+      held = held)
     if (n > 0 && compactEvery > 0 && baseDirs.size + 1 >= compactEvery)
       compact(table, partitionBy, clusterBy)
     n
@@ -1056,7 +1090,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     if (affected.isEmpty) return 0L
     val affectedSet = affected.map(_._1).toSet
     val kept = live.filterNot(affectedSet)
-    val before = affected.map { case (_, fs) => rows(fs) }.sum
+    val before = affected.map { case (_, fs) => footerRows(fs) }.sum
     val survivors = read(table, live, affected.map(_._1))
       // keep NULLs: a negated BETWEEN would null-out and drop them
       .filter(col(column).isNull || col(column) < lo || col(column) > hi)
@@ -1090,17 +1124,19 @@ final class Catalog(val spark: SparkSession, val root: String,
     if (base == 0) return
     val live = commitsAt(table, base)
     val df = read(table, live, live)
+    // a fold of commits whose rows are all memoized holds those rows
+    val held = live.flatMap(d => Option(heldMemo.get(d)))
     // numFiles > 0: coalesce before the sort — compaction's point is
     // fewer, larger files (small-file debt is what it repays), and the
     // within-partition sort then clusters across what were separate
     // tiny files
     swap(table, base, Seq.empty, if (numFiles > 0) df.coalesce(numFiles) else df,
-      partitionBy, clusterBy)
+      partitionBy, clusterBy, held = Option.when(held.size == live.size)(held.flatten))
   }
 
   /** Live row count from parquet footers only — metadata reads, no
     * Spark job. */
-  def rowCount(table: String): Long = rows(footers(liveCommits(table)))
+  def rowCount(table: String): Long = footerRows(footers(liveCommits(table)))
 
   /** Delete commit dirs referenced by neither the LATEST manifest nor
     * the version readers resolve (crashed writers, replaced/compacted

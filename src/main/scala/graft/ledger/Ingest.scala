@@ -34,16 +34,16 @@ object Ingest {
     * id_hash, then money normalization — in exactly the reference's
     * order (app/app.py:65-67: fillna, hash, THEN normalize).
     */
-  def toStaging(df: DataFrame): DataFrame = {
-    val filled = Validate.normalizeBlanks(df)
-      .withColumn("Valor", coalesce(col("Valor"), lit("0")))
-    filled
+  def toStaging(df: DataFrame): DataFrame = fromNormalized(Validate.normalizeBlanks(df))
+
+  /** [[toStaging]] of a frame whose blanks are already null. */
+  private def fromNormalized(df: DataFrame): DataFrame =
+    df.withColumn("Valor", coalesce(col("Valor"), lit("0")))
       .withColumn("id_hash", ledgerHash(
         col("Tipo"), col("Grupo"), col("Categoria"),
         col("Data"), col("Descrição"), col("Valor")))
       .withColumn("Valor", parseBrazilianMoney(col("Valor")).cast(DecimalType(15, 2)))
       .select(Schemas.stagingSchema.fieldNames.map(col): _*)
-  }
 
   /** Full ingestion of one CSV file: [[readCsv]], then [[stage]]. */
   def run(catalog: Catalog, csvPath: String, strict: Boolean = true): Long =
@@ -58,18 +58,18 @@ object Ingest {
     * read from the staging commit's footers (no re-scan of staging).
     */
   def stage(catalog: Catalog, raw: DataFrame, strict: Boolean): Long = {
-    val clean =
+    val staged =
       if (strict) {
         val v = Validate(raw)
         if (!v.ok()) throw Rejected(v.missingColumns, v.violations)
-        raw
+        toStaging(raw)
       } else {
         val checked = Validate.normalizeBlanks(raw)
           .withColumn("motivo", array_join(array_compact(array(Validate.violated: _*)), ","))
         catalog.replace("rejects_lancamentos",
           checked.filter(col("motivo") =!= "").select(Schemas.rejects.fieldNames.map(col): _*))
-        checked.filter(col("motivo") === "").drop("motivo")
+        fromNormalized(checked.filter(col("motivo") === "").drop("motivo"))
       }
-    catalog.replace("staging_lancamentos", toStaging(clean))
+    catalog.replace("staging_lancamentos", staged)
   }
 }

@@ -20,13 +20,12 @@ object Validate {
     def ok(): Boolean = missingColumns.isEmpty && violations.isEmpty
   }
 
-  /** Normalize blanks to null on the required columns (app/app.py:34-36).
-    * Other columns pass through untouched.
+  /** Normalize blanks to null on the required columns (app/app.py:34-36),
+    * in one projection. Other columns pass through untouched.
     */
   def normalizeBlanks(df: DataFrame): DataFrame = {
     val present = df.columns.toSet
-    Schemas.requiredColumns.filter(present).foldLeft(df)(
-      (d, c) => d.withColumn(c, blankToNull(col(c))))
+    df.withColumns(Schemas.requiredColumns.filter(present).map(c => c -> blankToNull(col(c))).toMap)
   }
 
   /** Per required column, its name when a row violates it: NULL, or for

@@ -1,7 +1,5 @@
 package graft.ledger
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,14 +15,15 @@ import graft.operators.{MergeIgnore, SurrogateKeys}
   * Dimensions are vocabulary-sized (a few tipos, grupos, categorias
   * and classificações, one row per month), so [[loadDims]] resolves all
   * five on the driver in one pass: one collect reads the batch's
-  * vocabulary from staging (bounded by [[Warehouse.vocabularyCap]])
-  * together with the existing dimension keys, each merge-ignore delta
+  * vocabulary from staging (bounded by [[Warehouse.vocabularyCap]]),
+  * the existing dimension keys come from the rows the catalog holds
+  * for the commits it wrote ([[Catalog.rows]]), each merge-ignore delta
   * is computed in memory, and only a non-empty one is written, as one
-  * commit of one file.
+  * commit of one file whose rows the catalog keeps.
   * Surrogate keys keep SERIAL semantics (SURVEY §1.3): dense, resumed
   * from the footer max id, numbered in key order under Spark's binary
   * UTF-8 string order. [[loadFato]] stays one DataFrame pipeline:
-  * staging joined to the batch's driver-built id lookups, then
+  * staging's ids looked up in the batch's driver-built maps, then
   * merge-ignore on `id_hash`.
   *
   * Documented divergence (SURVEY §1.4-2): `dim_tempo` merges on
@@ -84,12 +83,13 @@ object Warehouse {
         s"vocabulary cap of $cap; the load wrote nothing")
 
   /** What the dimension pass hands the fact: the rows appended to each
-    * dimension, and the batch vocabulary's surrogate ids as lookups —
-    * (Tipo, Grupo, Categoria) paths, Classificação values and (ano,
-    * mes) months. */
+    * dimension, and the batch vocabulary's surrogate ids — (Tipo, Grupo,
+    * Categoria) path → (id_tipo, id_grupo, id_categoria), Classificação
+    * → id_classificacao and (ano, mes) → id_tempo. */
   private[graft] final case class Dims(appended: Map[String, Long], batchRows: Long,
-                                       paths: DataFrame, classificacoes: DataFrame,
-                                       months: DataFrame, batchMonths: Seq[(Int, Int)])
+                                       paths: Map[(String, String, String), (Int, Int, Int)],
+                                       classificacoes: Map[String, Int],
+                                       months: Map[(Int, Int), Int])
 
   /** The batch's distinct (Tipo, Grupo, Categoria) paths (a component
     * may be null), non-null Classificação values, and months by (ano,
@@ -105,9 +105,9 @@ object Warehouse {
                                     tempo: Map[(Int, Int), Int],
                                     classificacao: Map[String, Int])
 
-  /** The row layout of [[Warehouse.readKeys]]. */
+  /** The row layout of [[Warehouse.readKeys]]'s vocabulary. */
   private val keyLayout = StructType(Seq(
-    "set" -> StringType, "id" -> IntegerType, "parent" -> IntegerType,
+    "set" -> StringType,
     "name" -> StringType, "grupo" -> StringType, "categoria" -> StringType,
     "ano" -> IntegerType, "mes" -> IntegerType, "semana" -> IntegerType,
     "data_inicio" -> DateType, "data_fim" -> DateType
@@ -139,10 +139,11 @@ final class Warehouse(catalog: Catalog, strictQuirks: Boolean = false) {
     if (batchRows <= singleTaskWriteRows) df.coalesce(1) else df
 
   /** The five dimensions (reference app/etl.py:20-102) in one pass: the
-    * batch vocabulary and the existing keys are collected
-    * ([[readKeys]]), each dimension's new keys get ids in the
-    * reference's dependency order (tipo → grupo → categoria, then tempo
-    * and classificação), and only the non-empty deltas are written. A
+    * batch vocabulary is collected and the existing keys are taken from
+    * the catalog's rows ([[readKeys]]), each dimension's new keys get ids
+    * in the reference's dependency order (tipo → grupo → categoria, then
+    * tempo and classificação), and only the non-empty deltas are written,
+    * through the catalog's held-rows append ([[Catalog.appendRows]]). A
     * Tipo, Grupo or Categoria that is null stops its path at the level
     * above it; ingest never stages one. */
   private[graft] def loadDims(): Dims = {
@@ -169,31 +170,27 @@ final class Warehouse(catalog: Catalog, strictQuirks: Boolean = false) {
     ).map { case (t, rows) =>
       // one commit of one file, rows in id order, as the DataFrame
       // window wrote it; an empty delta runs no write job
-      t -> (if (rows.isEmpty) 0L
-            else catalog.appendDelta(t,
-              catalog.spark.createDataFrame(rows.asJava, Schemas.schemaOf(t)).coalesce(1)))
+      t -> (if (rows.isEmpty) 0L else catalog.appendRows(t, rows))
     }.toMap
-    import catalog.spark.implicits._
     Dims(appended, batchRows,
-      paths = resolved.map { case (t, g, c, gid) => (t, g, c, tipo(t), gid, categoria((gid, c))) }
-        .toDF("Tipo", "Grupo", "Categoria", "id_tipo", "id_grupo", "id_categoria"),
-      classificacoes = v.classificacoes.map(c => (c, cls(c))).toDF("Classificação", "id_classificacao"),
-      months = v.months.keys.toSeq.map { case k @ (a, m) => (a, m, tempo(k)) }
-        .toDF("ano", "mes", "id_tempo"),
-      batchMonths = v.months.keys.toSeq)
+      paths = resolved.map { case (t, g, c, gid) =>
+        (t, g, c) -> (tipo(t), gid, categoria((gid, c))) }.toMap,
+      classificacoes = v.classificacoes.map(c => c -> cls(c)).toMap,
+      months = v.months.keys.map(k => k -> tempo(k)).toMap)
   }
 
-  /** The batch's vocabulary and every existing dimension key, read in
-    * one collect of rows laid out as [[keyLayout]]:
+  /** The batch's vocabulary, read in one collect of rows laid out as
+    * [[keyLayout]]:
     *
     *  - `set` "path": a distinct (Tipo, Grupo, Categoria) in (`name`,
     *    `grupo`, `categoria`); a component may be null;
     *  - `set` "classificacao": a distinct Classificação in `name`;
     *  - `set` "month": a distinct (`ano`, `mes`) with its `dim_tempo`
     *    columns;
-    *  - `set` = a dimension table: one stored row's `id`, its key in
-    *    `name` (and `parent`, the grupo's id_tipo or the categoria's
-    *    id_grupo) or in (`ano`, `mes`).
+    *
+    * and every existing dimension key, from [[Catalog.rows]]: no read
+    * for the commits this warehouse's catalog wrote, one collect per
+    * dimension that has others.
     *
     * The vocabulary explodes each staging row into one row per set with
     * the other sets' columns null, so one distinct yields each set on
@@ -204,10 +201,14 @@ final class Warehouse(catalog: Catalog, strictQuirks: Boolean = false) {
     * bound: three sets of at most `cap` rows fit in `3 * cap`, so a
     * result of `3 * cap + 1` rows has a set above the cap, and every set
     * of a smaller result is complete. Each stored dimension is bounded
-    * by its footer row count before the read. A blind-appended
+    * by its footer row count before any read. A blind-appended
     * `dim_tempo` key maps to its min id. */
   private def readKeys(batchRows: Long): (Vocabulary, Existing) = {
     val cap = vocabularyCap
+    Seq("dim_tipo", "dim_grupo", "dim_categoria", "dim_tempo", "dim_classificacao").foreach { t =>
+      val n = catalog.rowCount(t)
+      if (n > cap) throw new VocabularyTooLarge(t, n, cap)
+    }
     val set = col("set")
     val d = col("d")
     def in(s: String, c: Column): Column = when(set === s, c)
@@ -226,40 +227,27 @@ final class Warehouse(catalog: Catalog, strictQuirks: Boolean = false) {
       // a set keeps the rows whose leading key is non-null: a row with
       // no Tipo yields no dimension, a Data that does not parse no month
       .filter(col("name").isNotNull || col("ano").isNotNull)
-    val stored = Seq(
-      "dim_tipo" -> Seq("id" -> "id_tipo", "name" -> "nome_tipo"),
-      "dim_grupo" -> Seq("id" -> "id_grupo", "parent" -> "id_tipo", "name" -> "nome_grupo"),
-      "dim_categoria" -> Seq("id" -> "id_categoria", "parent" -> "id_grupo",
-        "name" -> "nome_categoria"),
-      "dim_tempo" -> Seq("id" -> "id_tempo", "ano" -> "ano", "mes" -> "mes"),
-      "dim_classificacao" -> Seq("id" -> "id_classificacao", "name" -> "nome_classificacao")
-    ).filter { case (t, _) => catalog.exists(t) }.map { case (t, cols) =>
-      val n = catalog.rowCount(t)
-      if (n > cap) throw new VocabularyTooLarge(t, n, cap)
-      catalog.table(t).select(keyRow(("set" -> lit(t)) +: cols.map { case (k, c) => k -> col(c) }: _*): _*)
-    }
-    val sets = (funnel(vocabulary, batchRows).distinct().limit(3 * cap + 1) +: stored)
-      .reduce(_ union _)
+    val sets = funnel(vocabulary, batchRows).distinct().limit(3 * cap + 1)
       .collect()
       .groupBy(_.getString(0))
-    def rows(s: String): Seq[Row] = sets.getOrElse(s, Array.empty[Row]).toSeq
     def vocab(s: String, dimension: String): Seq[Row] = {
-      val r = rows(s)
+      val r = sets.getOrElse(s, Array.empty[Row]).toSeq
       if (r.size > cap) throw new VocabularyTooLarge(dimension, r.size, cap)
       r
     }
+    // a stored row is its id, then its key
     def ids[K](t: String)(key: Row => K): Map[K, Int] =
-      rows(t).groupMapReduce(key)(_.getInt(1))(math.min)
+      catalog.rows(t).groupMapReduce(key)(_.getInt(0))(math.min)
     (Vocabulary(
-      vocab("path", "dim_categoria").map(r => (r.getString(3), r.getString(4), r.getString(5))),
-      vocab("classificacao", "dim_classificacao").map(_.getString(3)),
-      vocab("month", "dim_tempo").map(r => (r.getInt(6), r.getInt(7)) -> r.toSeq.drop(6)).toMap),
+      vocab("path", "dim_categoria").map(r => (r.getString(1), r.getString(2), r.getString(3))),
+      vocab("classificacao", "dim_classificacao").map(_.getString(1)),
+      vocab("month", "dim_tempo").map(r => (r.getInt(4), r.getInt(5)) -> r.toSeq.drop(4)).toMap),
       Existing(
-        ids("dim_tipo")(_.getString(3)),
-        ids("dim_grupo")(r => (r.getInt(2), r.getString(3))),
-        ids("dim_categoria")(r => (r.getInt(2), r.getString(3))),
-        ids("dim_tempo")(r => (r.getInt(6), r.getInt(7))),
-        ids("dim_classificacao")(_.getString(3))))
+        ids("dim_tipo")(_.getString(1)),
+        ids("dim_grupo")(r => (r.getInt(1), r.getString(2))),
+        ids("dim_categoria")(r => (r.getInt(1), r.getString(2))),
+        ids("dim_tempo")(r => (r.getInt(1), r.getInt(2))),
+        ids("dim_classificacao")(_.getString(1))))
   }
 
   /** Merge-ignore on the driver: the batch keys `existing` lacks (all of
@@ -276,30 +264,39 @@ final class Warehouse(catalog: Catalog, strictQuirks: Boolean = false) {
     (added.toMap ++ existing, added)
   }
 
-  /** fato_lancamento (reference app/etl.py:105-133): staging joined to
-    * the batch's id lookups, then merge-ignore on id_hash against the
-    * existing fact, pruned to the (ano, mes) partitions present in the
-    * batch. Under `strictQuirks` the month lookup already holds the min
-    * id_tempo of a duplicated month, so each staging row joins once.
+  /** fato_lancamento (reference app/etl.py:105-133): each staging row's
+    * ids looked up in the batch's maps, then merge-ignore on id_hash
+    * against the existing fact, pruned to the (ano, mes) partitions
+    * present in the batch. A row whose path, Classificação or month has
+    * no id is dropped, as an inner join drops it. Under `strictQuirks`
+    * the month map already holds the min id_tempo of a duplicated month.
     *
-    * The lookups and the existing side are small, so Catalyst
-    * broadcasts them; a batch of at most
-    * [[Warehouse.singleTaskWriteRows]] rows streams through them in one
-    * partition, so the dedup, the anti-join and the id window plan no
-    * shuffle and the write is the merge's only other job.
+    * The maps are literals in the plan (`element_at` over a map sized
+    * by the batch vocabulary), so no lookup is scanned or broadcast;
+    * the existing side is small, so Catalyst broadcasts it. A lookup
+    * compares the row's key with the map's keys one by one, so the cost
+    * grows with rows × paths: trivial at ledger vocabularies (tens of
+    * paths), but it overtakes a hash join at about a thousand. A batch of
+    * at most [[Warehouse.singleTaskWriteRows]] rows streams through in
+    * one partition, so the dedup, the anti-join and the id window plan
+    * no shuffle and the write is the merge's only other job.
     */
   private[graft] def loadFato(dims: Dims): Long = {
     val batchRows = dims.batchRows
     val sl = funnel(staging, batchRows).withColumn("__d", parseMonth(col("Data")))
       .withColumn("ano", yearOf(col("__d")).cast("int"))
       .withColumn("mes", monthOf(col("__d")).cast("int"))
+    // tuple-keyed maps take struct keys with the tuple's field names
+    def key(cs: String*): Column =
+      struct(cs.zipWithIndex.map { case (c, i) => col(c).as(s"_${i + 1}") }: _*)
+    val path = element_at(typedLit(dims.paths), key("Tipo", "Grupo", "Categoria"))
+    val cls = element_at(typedLit(dims.classificacoes), col("Classificação"))
+    val month = element_at(typedLit(dims.months), key("ano", "mes"))
     val candidates = sl
-      .join(dims.paths, Seq("Tipo", "Grupo", "Categoria"))
-      .join(dims.classificacoes, Seq("Classificação"))
-      .join(dims.months, Seq("ano", "mes"))
+      .filter(path.isNotNull && cls.isNotNull && month.isNotNull)
       .select(
-        col("id_tipo"), col("id_grupo"), col("id_categoria"),
-        col("id_tempo"), col("id_classificacao"),
+        path("_1").as("id_tipo"), path("_2").as("id_grupo"), path("_3").as("id_categoria"),
+        month.as("id_tempo"), cls.as("id_classificacao"),
         col("Descrição").as("descricao"),
         col("Valor").as("valor"),
         col("id_hash"),
@@ -308,7 +305,7 @@ final class Warehouse(catalog: Catalog, strictQuirks: Boolean = false) {
     val offset = catalog.maxId("fato_lancamento", "id_lancamento")
     val existing =
       if (!catalog.exists("fato_lancamento")) null
-      else existingFactForMerge(dims.batchMonths)
+      else existingFactForMerge(dims.months.keys.toSeq)
     val delta = MergeIgnore.newRows(candidates, existing, Seq("id_hash"))
     // Size-aware id assignment (AQE-style, decided from table-format
     // FOOTER row counts — metadata only, no extra job): the delta is at

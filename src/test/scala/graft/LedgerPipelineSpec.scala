@@ -264,6 +264,23 @@ class LedgerPipelineSpec extends SparkSpec {
     }.toMap
   }
 
+  /** Per live fact commit, in manifest order: its `ano=/mes=` dirs and
+    * its parquet file count. */
+  private def factLayout(root: String): Seq[(Set[String], Int)] = {
+    import scala.jdk.CollectionConverters._
+    latest(root, "fato_lancamento").toSeq.flatMap { v =>
+      Files.readString(java.nio.file.Paths.get(s"$root/fato_lancamento/_manifests/v$v"))
+        .split("\n").filter(_.nonEmpty).toSeq
+    }.map { c =>
+      val commit = java.nio.file.Paths.get(c)
+      val walk = Files.walk(commit)
+      val files = try walk.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+        .map(f => commit.relativize(f.getParent).toString).toVector
+      finally walk.close()
+      (files.toSet, files.size)
+    }
+  }
+
   test("the vocabulary pass builds the per-table pipelines' star, ids included") {
     val months = 1 to 36
     def big(tag: String) = for (i <- 0 until Warehouse.singleTaskWriteRows.toInt + 500) yield {
@@ -295,7 +312,19 @@ class LedgerPipelineSpec extends SparkSpec {
         Ingest.run(b, csv, strict = false)
         assert(wa.run() === wb.run(), s"appended counts differ after $step (strict=$strict)")
         assert(star(a) === star(b), s"star schema differs after $step (strict=$strict)")
-        assert(liveFiles(s"$dir/a") === liveFiles(s"$dir/b"), s"file layout differs after $step")
+        assert(liveFiles(s"$dir/a") - "fato_lancamento" ===
+          liveFiles(s"$dir/b") - "fato_lancamento",
+          s"dimension file layout differs after $step")
+        // the fact's file count depends on the range sampler's seed, so
+        // compare what the layout is for: the same month dirs per commit,
+        // and a range split into `tasks` contiguous spans cuts at most
+        // tasks - 1 months in two
+        val (la, lb) = (factLayout(s"$dir/a"), factLayout(s"$dir/b"))
+        assert(la.map(_._1) === lb.map(_._1), s"fact month dirs differ after $step")
+        val tasks = spark.conf.get("spark.sql.shuffle.partitions").toInt
+        for ((months, files) <- la ++ lb)
+          assert(files <= tasks + months.size - 1,
+            s"a fact commit holds $files files over ${months.size} months after $step")
       }
       upload("first upload", batch1)
       upload("overlapping upload", batch3)
@@ -426,5 +455,145 @@ class LedgerPipelineSpec extends SparkSpec {
         val months = batch.map(_.split(",")(5).take(2).toInt).distinct
         assert(perDir === months.map(m => s"ano=2024/mes=$m" -> 1).toMap)
       }
+  }
+
+  /** `body`'s result and the tables under `root` that the queries it
+    * ran scanned, read from the relations of their optimized plans. */
+  private def scanned[T](root: String)(body: => T): (T, Set[String]) = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.optimizedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe.optimizedPlan)
+    }
+    // the listener bus delivers in order: the queries of `body` are the
+    // ones that arrive between two sentinel queries
+    val tag = java.util.UUID.randomUUID().toString.take(8)
+    def sentinel(name: String): Int = {
+      spark.range(1).toDF(s"${name}_$tag").collect()
+      def at = plans.asScala.toSeq.indexWhere(_.output.exists(_.name == s"${name}_$tag"))
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (at < 0 && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(at >= 0, s"the $name sentinel never arrived")
+      at
+    }
+    spark.listenerManager.register(listener)
+    val (out, ran) = try {
+      val from = sentinel("start")
+      val r = body
+      (r, plans.asScala.toSeq.slice(from + 1, sentinel("end")))
+    } finally spark.listenerManager.unregister(listener)
+    val dirs = ran.flatMap(_.collectWithSubqueries {
+      case l: LogicalRelation => l.relation
+    }).flatMap {
+      case h: HadoopFsRelation => h.location.rootPaths.map(_.toUri.getPath)
+      case _ => Nil
+    }
+    val under = java.nio.file.Paths.get(root)
+    (out, dirs.filter(_.startsWith(root + "/"))
+      .map(d => under.relativize(java.nio.file.Paths.get(d)).getName(0).toString).toSet)
+  }
+
+  private val dims = Seq("dim_tipo", "dim_grupo", "dim_categoria", "dim_tempo", "dim_classificacao")
+
+  /** `cat.rows(t)` and `cat.table(t)` hold the same rows, as multisets;
+    * returns the tables `rows` scanned. */
+  private def rowsMatchTable(cat: Catalog, t: String, step: String): Set[String] = {
+    val (held, scans) = scanned(cat.root)(cat.rows(t))
+    def lines(rows: Seq[org.apache.spark.sql.Row]) = rows.map(_.mkString("|")).sorted
+    assert(lines(held) === lines(cat.table(t).collect().toSeq),
+      s"$t: rows differ from the table's after $step")
+    scans
+  }
+
+  test("Catalog.rows: memoized commits, folds of them, strict blind appends") {
+    for (strict <- Seq(false, true)) {
+      val dir = Files.createTempDirectory("ledger_rows").toString
+      val cat = new Catalog(spark, s"$dir/wh", compactEvery = 2)
+      val wh = new Warehouse(cat, strict)
+      def upload(step: String, rows: Seq[String]): Unit = {
+        Ingest.run(cat, writeCsv(dir, s"$step.csv", rows))
+        wh.run()
+        dims.foreach(t => assert(rowsMatchTable(cat, t, step).isEmpty,
+          s"$t: rows read a commit this catalog wrote from held rows after $step"))
+      }
+      upload("first", batch1)
+      // batch2 adds a month, a grupo and a categoria: with compactEvery
+      // = 2 each of those dimensions folds right after the append
+      upload("second", batch2)
+      Seq("dim_tempo", "dim_grupo", "dim_categoria").foreach(t =>
+        assert(cat.rowCount(t) > 0 && latest(s"$dir/wh", t).contains(3), s"$t did not fold"))
+      // under strictQuirks the re-upload blind-appends the month again
+      upload("re-upload", batch2)
+      val months = cat.table("dim_tempo").count()
+      assert(months === (if (strict) 3 else 2), s"strict=$strict")
+    }
+  }
+
+  test("Catalog.rows reads another instance's commits; the next run mints no duplicate key") {
+    val dir = Files.createTempDirectory("ledger_rows_foreign").toString
+    val cat = new Catalog(spark, s"$dir/wh")
+    val wh = new Warehouse(cat)
+    Ingest.run(cat, writeCsv(dir, "b1.csv", batch1))
+    wh.run()
+    // another instance appends a new tipo (and grupo, categoria) through
+    // the per-table pipelines
+    val other = new Catalog(spark, s"$dir/wh")
+    val csv = writeCsv(dir, "b3.csv", Seq(
+      """Dividendos,Investimento,Renda,Ações,Variável,02/2024,"300,00""""))
+    Ingest.run(other, csv)
+    assert(new ComposedWarehouse(other).run()("dim_tipo") === 1)
+    assert(rowsMatchTable(cat, "dim_tipo", "the foreign append") === Set("dim_tipo"))
+    Ingest.run(cat, csv)
+    assert(wh.run().values.sum === 0)
+    dims.foreach { t =>
+      val rows = cat.table(t).collect()
+      assert(rows.map(_.get(0)).distinct.length === rows.length, s"$t holds a duplicate id")
+      assert(rows.map(_.toSeq.tail).distinct.length === rows.length, s"$t holds a duplicate key")
+    }
+  }
+
+  test("a rolled-back transaction leaves no memoized dir behind") {
+    val dir = Files.createTempDirectory("ledger_rows_abort").toString
+    val root = s"$dir/wh"
+    val cat = new Catalog(spark, root)
+    val wh = new Warehouse(cat)
+    Ingest.run(cat, writeCsv(dir, "b1.csv", batch1))
+    wh.run()
+    def live(t: String): Set[String] = latest(root, t).toSeq.flatMap { v =>
+      Files.readString(java.nio.file.Paths.get(s"$root/$t/_manifests/v$v"))
+        .split("\n").filter(_.nonEmpty)
+    }.toSet
+    val before = dims.map(t => t -> live(t)).toMap
+    Ingest.run(cat, writeCsv(dir, "b2.csv", batch2))
+    intercept[RuntimeException](cat.transaction {
+      wh.loadDims()
+      sys.error("executor lost")
+    })
+    val aborted = dims.flatMap(t => live(t) -- before(t)).toSet
+    assert(aborted.nonEmpty && aborted.subsetOf(cat.memoizedDirs))
+    cat.transaction(()) // rolls the aborted heads back
+    assert(dims.forall(t => live(t) === before(t)))
+    assert((cat.memoizedDirs intersect aborted).isEmpty,
+      s"rolled-back dirs still memoized: ${cat.memoizedDirs intersect aborted}")
+    dims.foreach(t => assert(rowsMatchTable(cat, t, "the rollback").isEmpty))
+  }
+
+  test("a steady-state upload scans no dimension table") {
+    val dir = Files.createTempDirectory("ledger_no_dim_scan").toString
+    val cat = new Catalog(spark, s"$dir/wh")
+    val wh = new Warehouse(cat)
+    Ingest.run(cat, writeCsv(dir, "b1.csv", batch1))
+    wh.run()
+    for ((step, rows) <- Seq("new month" -> batch2, "re-upload" -> batch2)) {
+      Ingest.run(cat, writeCsv(dir, s"${step.replace(' ', '_')}.csv", rows))
+      val (appended, tables) = scanned(cat.root)(wh.run())
+      assert(appended("fato_lancamento") === (if (step == "re-upload") 0 else 3))
+      assert(tables.filter(_.startsWith("dim_")).isEmpty, s"the $step scanned $tables")
+      assert(tables === Set("staging_lancamentos", "fato_lancamento"), s"the $step scanned $tables")
+    }
   }
 }

@@ -193,7 +193,12 @@ class PlanSpec extends SparkSpec {
     // contiguous (ano, mes) spans
     assert(shuffles(write) === 0, s"the small-batch fact write shuffles:\n$write")
     assert(!write.contains("SortMergeJoin") && !write.contains("ShuffledHashJoin"),
-      s"a lookup or the existing side stopped broadcasting:\n$write")
+      s"the existing side stopped broadcasting:\n$write")
+    // the id lookups are map literals: the month-pruned existing fact is
+    // the one broadcast, and no driver-built relation is scanned
+    assert("BroadcastExchange".r.findAllMatchIn(write).size === 1,
+      s"the fact write broadcasts other than the existing fact:\n$write")
+    assert(!write.contains("LocalTableScan"), s"the fact write scans a local relation:\n$write")
   }
 
   test("q87: the sketch is partial-aggregated; only k-sized buffers reach the merge") {
